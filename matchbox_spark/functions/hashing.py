@@ -75,11 +75,6 @@ def prep_for_hash(item: bytes | bool | str | int | float | bytearray) -> bytes:
     raise ValueError(f"Cannot hash value of type {type(item)}")
 
 
-def hash_data(data) -> bytes:
-    """SHA-256 digest of a single scalar."""
-    return HASH_FUNC(prep_for_hash(data)).digest()
-
-
 def hash_values(*values) -> bytes:
     """Order-insensitive combined hash of several scalars."""
     sorted_vals = sorted(values)
@@ -164,14 +159,6 @@ def row_hash_expr(
     if method == "xxhash64":
         return F.xxhash64(concat)
     raise ValueError(f"Unsupported hash method: {method}")
-
-
-def with_row_hash(
-    df: DataFrame, columns: list[str] | None = None, out: str = "hash"
-) -> DataFrame:
-    """Attach an H1 row-hash column over ``columns`` (default: all, sorted)."""
-    cols = sorted(df.columns) if columns is None else columns
-    return df.withColumn(out, row_hash_expr(df.schema, cols))
 
 
 def leaf_set_hash_expr(leaves_col: Column) -> Column:

@@ -110,18 +110,6 @@ def tokens_expr(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != "")
 
 
-def bpe_ish_tokens_expr(col: Column | str) -> Column:
-    """Regex token split: words, numbers, and single punctuation marks.
-
-    A BPE-style pre-tokeniser approximation: `\\p{L}+` runs, digit runs, and
-    individual non-space symbols each count as a token.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    # insert boundaries around non-alphanumeric runs, then split on spaces
-    spaced = F.regexp_replace(c, r"([^\sA-Za-z0-9]|\d+)", r" $1 ")
-    return F.filter(F.split(spaced, r"\s+"), lambda t: t != "")
-
-
 def token_count_expr(col: Column | str) -> Column:
     return F.size(tokens_expr(col))
 
@@ -356,11 +344,6 @@ def normalize_text_expr(col: Column | str) -> Column:
 def fingerprint_expr(col: Column | str) -> Column:
     """SHA-256 hex fingerprint of the normalised text."""
     return F.sha2(normalize_text_expr(col), 256)
-
-
-def token_hash16_expr(tok: Column) -> Column:
-    """First 16 bits of sha256(token) as an int — SimHash feature hash."""
-    return F.conv(F.substring(F.sha2(tok, 256), 1, 4), 16, 10).cast("int")
 
 
 def winnowing_fingerprints_expr(

@@ -84,18 +84,6 @@ def cosine_expr(
     return F.when(den > 0, num / den).otherwise(F.lit(0.0))
 
 
-def l2_expr(a: Column | str, b: Column | str) -> Column:
-    pa = _c(a).cast("array<double>")
-    pb = _c(b).cast("array<double>")
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(pa, pb, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def sign_bucket_expr(vec: Column | str, dims: list[int]) -> Column:
     """LSH bucket key: sign bits of the chosen dimensions packed into a long.
 

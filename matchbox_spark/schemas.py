@@ -1,4 +1,4 @@
-"""Fixed inter-stage transfer schemas and schema-subset validation.
+"""Fixed inter-stage transfer schemas.
 
 Re-expresses the reference's Arrow wire schemas
 (/root/reference/src/matchbox/common/arrow.py:13-70) as Spark StructTypes.
@@ -72,32 +72,6 @@ SCHEMA_EVAL_SAMPLES = T.StructType(
 )
 
 
-class SchemaMismatchError(ValueError):
-    """Raised when a DataFrame does not carry a required schema subset."""
-
-
-def check_schema_subset(expected: T.StructType, actual: T.StructType) -> None:
-    """Require every expected field (name + dataType) to exist in ``actual``.
-
-    Field order and extra columns are ignored, mirroring the reference's
-    subset check (arrow.py:88-104). Nullability is not compared — Spark
-    nullability is advisory.
-    """
-    actual_by_name = {f.name: f.dataType for f in actual.fields}
-    missing: list[str] = []
-    wrong: list[str] = []
-    for field in expected.fields:
-        got = actual_by_name.get(field.name)
-        if got is None:
-            missing.append(field.name)
-        elif got != field.dataType:
-            wrong.append(f"{field.name}: expected {field.dataType}, got {got}")
-    if missing or wrong:
-        raise SchemaMismatchError(
-            f"schema mismatch — missing: {missing}, wrong types: {wrong}"
-        )
-
-
 def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Cast/select a DataFrame to exactly ``schema`` (order + types)."""
     from pyspark.sql import functions as F
@@ -105,8 +79,3 @@ def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
-
-
-def empty_df(spark, schema: T.StructType) -> DataFrame:
-    """An empty DataFrame with the given schema."""
-    return spark.createDataFrame([], schema)

@@ -9,6 +9,7 @@
    the clusters mirror, resolver insert via the contains mirror with G4
    expansion) produce a byte-identical catalog to the distributed paths
    on the full multi-source stacked-resolver pipeline shape.
+4. The driver-path inserts submit a pinned number of Spark jobs per call.
 """
 
 import pytest
@@ -192,38 +193,48 @@ def test_contains_mirror_matches_table(spark, sf_dir):
     assert cmirror == rows
 
 
-def _overlap_catalogs(spark):
-    """Two source inserts whose index HASHES overlap (h2, h3 shared):
-    the second insert must reuse the existing cluster ids for the shared
-    hashes and only mint ids for the new one — the rev-lookup branch of
-    the mirror path that distinct-field pipelines never exercise."""
+def _hash_index(spark, rows):
+    """A source index ``(hash, keys)`` over sha256 digests of the labels."""
     import hashlib
 
     import pandas as pd
 
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "hash": [hashlib.sha256(h.encode()).digest() for h, _ in rows],
+                "keys": [list(k) for _, k in rows],
+            }
+        ),
+        "hash binary, keys array<string>",
+    )
+
+
+# streamed by the third step of _overlap_catalogs(delta=True): h1 and h4
+# are already clusters of srcA/srcB, h5 is new; c5 repeats within its array
+_OVERLAP_DELTA = [("h1", ["c1"]), ("h4", ["c4"]), ("h5", ["c5", "c5x", "c5"])]
+
+
+def _overlap_catalogs(spark, delta=False):
+    """Two source inserts whose index HASHES overlap (h2, h3 shared):
+    the second insert must reuse the existing cluster ids for the shared
+    hashes and only mint ids for the new one — the rev-lookup branch of
+    the mirror path that distinct-field pipelines never exercise. With
+    ``delta``, a third step streams :data:`_OVERLAP_DELTA` through
+    ``insert_source_index_delta`` (merge mode: reuse across steps, mint
+    for the rest)."""
     from matchbox_spark.plans.catalog import Catalog
-
-    def digest(s):
-        return hashlib.sha256(s.encode()).digest()
-
-    def index(rows):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "hash": [digest(h) for h, _ in rows],
-                    "keys": [list(k) for _, k in rows],
-                }
-            ),
-            "hash binary, keys array<string>",
-        )
 
     cat = Catalog(spark)
     cat.insert_source_index(
-        "srcA", index([("h1", ["a1"]), ("h2", ["a2", "a2x"]), ("h3", ["a3"])])
+        "srcA",
+        _hash_index(spark, [("h1", ["a1"]), ("h2", ["a2", "a2x"]), ("h3", ["a3"])]),
     )
     cat.insert_source_index(
-        "srcB", index([("h2", ["b2"]), ("h3", ["b3"]), ("h4", ["b4"])])
+        "srcB", _hash_index(spark, [("h2", ["b2"]), ("h3", ["b3"]), ("h4", ["b4"])])
     )
+    if delta:
+        cat.insert_source_index_delta("srcC", _hash_index(spark, _OVERLAP_DELTA))
     return cat
 
 
@@ -237,6 +248,127 @@ def test_overlapping_hash_insert_local_matches_distributed(spark, monkeypatch):
     dist = _overlap_catalogs(spark)
     assert dist._driver_cluster_hashes is None
     assert local_state == _catalog_state(dist)
+
+
+def test_overlapping_hash_delta_insert_local_matches_distributed(
+    spark, monkeypatch
+):
+    """Merge mode over overlapping hashes: the streamed step reuses the ids
+    other steps minted, mints only h5, and a replay of the same delta
+    appends nothing — on the driver path and the distributed path alike."""
+
+    def run():
+        cat = _overlap_catalogs(spark, delta=True)
+        state = _catalog_state(cat)
+        parts = {k: len(v) for k, v in cat._parts.items()}
+        cat.insert_source_index_delta("srcC", _hash_index(spark, _OVERLAP_DELTA))
+        assert _catalog_state(cat) == state  # replay is idempotent
+        return cat, state, parts
+
+    local, local_state, parts = run()
+    assert local._driver_cluster_hashes is not None  # stayed on the mirror path
+    assert local._driver_step_keys is not None
+    assert {k: len(v) for k, v in local._parts.items()} == parts  # no append
+    assert len(local_state["clusters"]) == 5  # h1/h4 reused, only h5 minted
+    assert sorted(k for _, s, k in local_state["cluster_keys"] if s == "srcC") == [
+        "c1", "c4", "c5", "c5x"
+    ]
+
+    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "0")
+    dist, dist_state, _ = run()
+    assert dist._driver_cluster_hashes is None
+    assert local_state == dist_state
+
+
+def test_index_driver_budget_rejects_malformed_value(spark, monkeypatch):
+    """The driver-path byte budget fails closed: a malformed override is an
+    error, not a silent fall-back to the default budget."""
+    from matchbox_spark.plans.catalog import Catalog
+
+    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "256MB")
+    cat = Catalog(spark)
+    with pytest.raises(ValueError):
+        cat.insert_source_index("srcA", _hash_index(spark, [("h1", ["a1"])]))
+    with pytest.raises(ValueError):
+        cat.insert_source_index_delta("srcA", _hash_index(spark, [("h1", ["a1"])]))
+
+
+def _job_counter(spark, monkeypatch, names):
+    """Run every call of the named ``Catalog`` methods under its own job
+    group. Returns a function giving, per method, the number of Spark jobs
+    each call submitted (in call order)."""
+    import uuid
+
+    from matchbox_spark.plans.catalog import Catalog
+
+    sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    groups = {n: [] for n in names}
+    for name in names:
+
+        def wrapper(self, *args, _fn=getattr(Catalog, name), _name=name, **kw):
+            group = f"jobcount-{uuid.uuid4().hex}"
+            # a streaming batch runs on the query's thread, which carries
+            # the query's own job group: restore it, do not clear it
+            saved = [(p, sc.getLocalProperty(p)) for p in props]
+            sc.setJobGroup(group, _name)
+            try:
+                return _fn(self, *args, **kw)
+            finally:
+                for p, v in saved:
+                    sc.setLocalProperty(p, v)
+                groups[_name].append(group)
+
+        monkeypatch.setattr(Catalog, name, wrapper)
+
+    def counts():
+        # job starts reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        return {
+            n: [len(tracker.getJobIdsForGroup(g)) for g in gs]
+            for n, gs in groups.items()
+        }
+
+    return counts
+
+
+def test_driver_insert_job_counts(spark, monkeypatch):
+    """Jobs per call of the driver-path inserts on live mirrors: one
+    collect per source-index insert (bulk or merge mode) and none for a
+    resolver insert whose assignments the driver union-find produced."""
+    import hashlib
+
+    import pandas as pd
+
+    counts = _job_counter(
+        spark,
+        monkeypatch,
+        [
+            "insert_source_index",
+            "insert_source_index_delta",
+            "insert_resolver_clusters",
+        ],
+    )
+    cat = _overlap_catalogs(spark, delta=True)
+    apdf = pd.DataFrame(
+        {"parent_id": [1, 1, 2, 2, 2], "child_id": sorted(cat._driver_cluster_hashes)}
+    )
+    assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
+    assigns._mb_local_pdf = apdf  # as the driver union-find attaches it
+    cat.insert_resolver_clusters(
+        "res", assigns, fingerprint=hashlib.sha256(b"res").digest()
+    )
+    assert cat._driver_contains  # the resolver insert stayed driver-side
+    assert counts() == {
+        "insert_source_index": [1, 1],
+        "insert_source_index_delta": [1],
+        "insert_resolver_clusters": [0],
+    }
 
 
 def _delta_stream_catalog(spark, tmp_path, name):
@@ -286,10 +418,10 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
     spark, tmp_path, monkeypatch
 ):
     """The r13 driver twins for the streaming delta inserts
-    (_insert_source_index_delta_local, insert_model_edges_delta's mirror
-    path, _merge_resolver_clusters_delta_local, the driver star edges and
-    the pandas CC shortcut) produce a byte-identical catalog to the
-    distributed loop they replace."""
+    (_index_insert_local in merge mode, insert_model_edges_delta's mirror
+    path, merge_resolver_clusters_delta over _hierarchy_insert_local, the
+    driver star edges and the pandas CC shortcut) produce a byte-identical
+    catalog to the distributed loop they replace."""
     local = _delta_stream_catalog(spark, tmp_path, "twin")
     cat = local
     assert cat._driver_cluster_hashes is not None  # twins stayed live
@@ -336,6 +468,31 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
     assert local_state == _catalog_state(dist)
 
 
+def test_streaming_delta_insert_job_counts(spark, tmp_path, monkeypatch):
+    """Jobs per micro-batch of the streaming catalog inserts in the 3-batch
+    delta-link loop: two for the batch-index collect (its groupBy runs as
+    a shuffle-map job plus the collect job under adaptive execution) and
+    none for the edge and claim merges, which stay on the mirrors."""
+    counts = _job_counter(
+        spark,
+        monkeypatch,
+        [
+            "insert_source_index_delta",
+            "insert_source_index_delta_mapped",
+            "insert_model_edges_delta",
+            "merge_resolver_clusters_delta",
+        ],
+    )
+    cat = _delta_stream_catalog(spark, tmp_path, "jobs")
+    assert cat._driver_rc is not None  # every batch stayed driver-side
+    assert counts() == {
+        "insert_source_index_delta": [],
+        "insert_source_index_delta_mapped": [2, 2, 2],
+        "insert_model_edges_delta": [0, 0, 0],
+        "merge_resolver_clusters_delta": [0, 0, 0],
+    }
+
+
 def test_resolver_assignments_mirror_path_matches_join(spark, sf_dir):
     """The r13 mirror-native resolver_assignments (one LocalRelation built
     from the claim + contains mirrors, replacing the contains⋈claims join
@@ -352,7 +509,7 @@ def test_resolver_assignments_mirror_path_matches_join(spark, sf_dir):
         # legitimately empty one (sf0.001's dedupe_supp yields zero pairs,
         # so resolve_supp claims nothing); an absent key would push the
         # step onto the join fallback forever (r14 fix, catalog.py
-        # _insert_resolver_clusters_local empty branch)
+        # insert_resolver_clusters registers the empty claim set)
         assert step in cat._driver_rc
         mirror_rows = {
             (r.leaf_id, r.root_id)
