@@ -12,25 +12,40 @@ batch operators (same hash recipe, same catalog semantics), and exactly-once
 state comes from checkpointing + the idempotence of the catalog's delta
 inserts (replaying a batch appends nothing).
 
-Scale shape per micro-batch:
+`incremental_index_stream` runs only the index phase: O(delta) state
+appends; the accumulated ``clusters``/``cluster_keys`` tables are only
+*read* (two anti-joins), never rewritten.
 
-- **Indexing** (`incremental_index_stream`): O(delta) state appends; the
-  accumulated ``clusters``/``cluster_keys`` tables are only *read* (two
-  anti-joins), never rewritten.
-- **Resolution** (`incremental_resolve_stream`): with ``blocking_fields``
-  set, only rows sharing a blocking value with the batch are re-linked
-  (delta-link); previously resolved components are carried as star edges
-  (one synthetic edge per member — O(touched), not O(past edges)) so a
-  bridging record can still merge clusters formed in earlier batches. New
-  edges APPEND into the persisted edge set. Models whose blocking values
-  are COMPUTED rather than raw fields (LSH band keys — ``MinHashDeduper``,
-  ``SimHashDeduper``) declare ``delta_block_keys`` instead: each leaf's
-  keys persist once into the catalog's ``block_keys`` index and a batch
-  prunes accumulated state with one semi-join, so signatures are never
-  recomputed over state. Without either contract the model re-runs over
-  all accumulated rows (general-correct for non-monotone models;
-  documented O(accumulated) per batch, amortisable via
-  ``resolve_cadence``).
+`incremental_resolve_stream` picks one ROUTE before the stream starts:
+
+- ``pairs`` — a field-blocked model declaring ``delta_pairwise_contract``
+  (e.g. ``NaiveDeduper``) keeps a driver map ``tuple → member ids`` and
+  emits exactly each batch's old×new ∪ new×new pairs (optimization r14).
+  The map retires to ``fields`` for the rest of the run when it cannot stay
+  complete: a resumed run, prior catalog state, a dead index twin, or a
+  batch over the driver budget.
+- ``fields`` — raw blocking fields (``blocking_fields`` or the model's
+  ``delta_blocking_fields``): the model re-runs only over accumulated rows
+  sharing a blocking value with the batch (delta-link).
+- ``keys`` — computed blocking values (LSH band keys — ``MinHashDeduper``,
+  ``SimHashDeduper`` declare ``delta_block_keys``): each leaf's keys
+  persist once into the catalog's ``block_keys`` index and a batch prunes
+  accumulated state with one semi-join, so signatures are never recomputed
+  over state.
+- ``full`` — no delta contract: the model re-runs over all accumulated
+  rows (general-correct for non-monotone models; O(accumulated) per batch
+  by design), optionally only on every ``resolve_cadence``-th batch.
+
+Every micro-batch runs the same phases: guard (skip an empty batch, refuse
+a resumed checkpoint against a step-less catalog) → index → edges for the
+route → delta tail → serving refresh. The delta tail is shared by the three
+delta routes: append the new edges (``insert_model_edges_delta``) → star
+edges for the prior components the batch can touch (one synthetic edge per
+member — O(touched), not O(past edges) — so a bridging record still merges
+clusters formed in earlier batches) → connected components over (edges ∪
+stars) → claim merge (``merge_resolver_clusters_delta``) → free the
+batch-local checkpoints. ``full`` replaces edges + tail with one model +
+resolver rebuild.
 
 Checkpoint/state coupling: the streaming checkpoint is durable but a
 ``Catalog(spark)`` without a path is not. Resuming a checkpoint against a
@@ -50,9 +65,15 @@ from pyspark.sql.streaming import StreamingQuery
 from matchbox_spark.functions.hashing import row_hash_expr
 from matchbox_spark.operators.lsh_linkers import AUTO
 from matchbox_spark.plans.catalog import Catalog
-from matchbox_spark.plans.resolvers import _free_checkpoint
+from matchbox_spark.plans.resolvers import (
+    _driver_cc_edge_limit,
+    _free_checkpoint,
+)
 
 logger = logging.getLogger(__name__)
+
+_EDGES = "left_id long, right_id long, score float"
+_PANDAS_DTYPES = {"long": "int64", "float": "float32"}
 
 
 def _guard_checkpoint_state(catalog: Catalog, step: str, batch_id: int) -> None:
@@ -83,6 +104,64 @@ def _guard_checkpoint_state(catalog: Catalog, step: str, batch_id: int) -> None:
         )
 
 
+def _start_stream(
+    stream: DataFrame,
+    catalog: Catalog,
+    step: str,
+    body,
+    checkpoint_dir: str,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """Start ``stream`` with ``body(batch, batch_id, from_start)`` run on
+    every NON-EMPTY micro-batch, after the checkpoint guard.
+
+    ``from_start`` says whether this run witnessed batch 0; a run that did
+    not is a resumed checkpoint, checked against ``step``'s catalog state
+    before its first non-empty batch runs."""
+    run = {"from_start": False}
+
+    def _process(batch: DataFrame, batch_id: int) -> None:
+        if batch_id == 0:
+            run["from_start"] = True
+        if batch.isEmpty():
+            return
+        if not run["from_start"]:
+            _guard_checkpoint_state(catalog, step, batch_id)
+        body(batch, batch_id, run["from_start"])
+
+    writer = stream.writeStream.foreachBatch(_process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _local_frame(spark, schema: str, *columns) -> DataFrame:
+    """A LocalRelation over ``columns`` (one sequence per field of the
+    ``"name type, ..."`` ``schema``) that carries its pandas frame as
+    ``_mb_local_pdf`` — the catalog's driver twins and the CC pandas
+    shortcut read it without a Spark job."""
+    import pandas as pd
+
+    fields = [f.split() for f in schema.split(", ")]
+    pdf = pd.DataFrame(
+        {
+            name: pd.array(col, dtype=_PANDAS_DTYPES[kind])
+            for (name, kind), col in zip(fields, columns)
+        }
+    )
+    df = spark.createDataFrame(pdf, schema)
+    df._mb_local_pdf = pdf
+    return df
+
+
+def _raw_fields(source_step: str, fields: list[str]) -> list[str]:
+    """Queried-space field names (``"{source_step}_a"``) → raw batch columns."""
+    prefix = f"{source_step}_"
+    return [f[len(prefix):] if f.startswith(prefix) else f for f in fields]
+
+
 def _index_batch(
     catalog: Catalog,
     step: str,
@@ -93,13 +172,13 @@ def _index_batch(
 ):
     """H1-hash a batch, group to a content index, merge append-only (U6).
 
-    With ``value_fields`` (the r14 delta-pair map path) the per-hash FIRST
-    of each named field rides the same collect, string-cast for stable
-    driver-side equality — legal because the fields are part of the hashed
-    content (caller gates ``value_fields ⊆ index_fields``), so they are
-    constant within a hash group. Returns the catalog's mapped batch index
-    (a pandas frame with assigned ``cluster_id``) in that mode, or None
-    when the driver twin cannot run — the caller must then re-call without
+    With ``value_fields`` (the ``pairs`` route) the per-hash FIRST of each
+    named field rides the same collect, string-cast for stable driver-side
+    equality — legal because the fields are part of the hashed content
+    (the route gates ``value_fields ⊆ index_fields``), so they are constant
+    within a hash group. Returns the catalog's mapped batch index (a pandas
+    frame with assigned ``cluster_id``) in that mode, or None when the
+    driver twin cannot run — the caller must then re-call without
     ``value_fields`` (nothing was inserted)."""
     cols = [
         row_hash_expr(batch.schema, sorted(index_fields)).alias("hash"),
@@ -141,23 +220,12 @@ def incremental_index_stream(
     Per-batch state cost is O(batch); accumulated state is never rewritten.
     """
 
-    run = {"from_start": False}  # did THIS run witness batch 0?
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch_id == 0:
-            run["from_start"] = True
-        if batch.isEmpty():
-            return
-        if not run["from_start"]:
-            _guard_checkpoint_state(catalog, step, batch_id)
+    def _index(batch: DataFrame, batch_id: int, from_start: bool) -> None:
         _index_batch(catalog, step, batch, key_field, index_fields)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_stream(
+        stream, catalog, step, _index, checkpoint_dir, trigger_available_now
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _touched_star_edges(
@@ -169,12 +237,18 @@ def _touched_star_edges(
     batch's blocked superset — the only rows a block-local model can link
     this batch, hence the only leaves through which an existing component
     can gain an edge. Components intersecting that set compress to one
-    ``(min_leaf, leaf)`` star edge per member; everything else is untouched
-    and is neither read into the CC nor rewritten. Returns ``(star_edges,
+    ``(min_leaf, leaf)`` star edge per member; everything else is neither
+    read into the CC nor rewritten. Returns ``(star_edges,
     touched_root_ids)`` — the roots are eagerly materialised (they are the
     retirement candidates after the merge) — or ``(None, None)`` before the
-    step first exists. Per-batch cost: one semi-join over the assignment
-    map plus O(touched members) star rows; never O(all resolved entities).
+    step first exists.
+
+    Per-batch cost: on the driver path (live claim + contains mirrors) no
+    Spark job beyond the bounded leaf collect (none when the caller
+    attaches the leaves), but Python work proportional to the claim and
+    contains mirrors — every claimed root of the step is sorted and its
+    leaves scanned each batch. On the distributed path, one semi-join over
+    the assignment map plus O(touched members) star rows.
     """
     if resolver_step not in catalog.steps:
         return None, None
@@ -193,59 +267,34 @@ def _touched_star_edges(
     rcmirror = getattr(catalog, "_driver_rc", None)
     kmirror = getattr(catalog, "_driver_contains", None)
     if rcmirror is not None and kmirror is not None:
-        from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
-
         spark = batch_leaves.sparkSession
         limit = _driver_cc_edge_limit(spark)
         # count-then-collect, not limit(n+1).toPandas(): the limit probe
         # funnels through CollectLimitExec's single partition and converts
         # single-threaded (~3x slower at ~900k rows — same measurement as
-        # _collect_edges_if_small); both call sites pass frames derived
+        # _collect_edges_if_small); every route passes frames derived
         # from eagerly-checkpointed batch state, so the count is one cheap
-        # job and the collect stays a parallel Arrow transfer. A caller
-        # that already holds the leaves driver-side (the r14 delta-pair
-        # map path) attaches them as _mb_local_pdf — zero jobs then.
+        # job and the collect stays a parallel Arrow transfer. The pairs
+        # route already holds the leaves driver-side and attaches them as
+        # _mb_local_pdf — zero jobs then.
         pdf = getattr(batch_leaves, "_mb_local_pdf", None)
         if pdf is None and batch_leaves.count() <= limit:
             pdf = batch_leaves.toPandas()
         if pdf is not None and len(pdf) <= limit:
-            import pandas as pd
-
             leafset = {int(v) for v in pdf[pdf.columns[0]].tolist()}
-            rc_set = rcmirror.get(resolver_step, set())
-            star_rows: list[tuple[int, int]] = []
             troots: list[int] = []
-            for r in sorted(rc_set):
+            lefts: list[int] = []
+            rights: list[int] = []
+            for r in sorted(rcmirror.get(resolver_step, set())):
                 leaves = kmirror.get(r, ())
                 if any(l in leafset for l in leaves):
                     troots.append(r)
                     rep = min(leaves)
-                    star_rows.extend(
-                        (rep, leaf) for leaf in leaves if leaf != rep
-                    )
-            tr_pdf = pd.DataFrame(
-                {"root_id": pd.array(troots, dtype="int64")}
-            )
-            touched_roots = spark.createDataFrame(tr_pdf, "root_id long")
-            touched_roots._mb_local_pdf = tr_pdf
-            st_pdf = pd.DataFrame(
-                {
-                    "left_id": pd.array(
-                        [s[0] for s in star_rows], dtype="int64"
-                    ),
-                    "right_id": pd.array(
-                        [s[1] for s in star_rows], dtype="int64"
-                    ),
-                    "score": pd.array(
-                        [1.0] * len(star_rows), dtype="float32"
-                    ),
-                }
-            )
-            stars = spark.createDataFrame(
-                st_pdf, "left_id long, right_id long, score float"
-            )
-            stars._mb_local_pdf = st_pdf
-            return stars, touched_roots
+                    others = [leaf for leaf in leaves if leaf != rep]
+                    lefts.extend([rep] * len(others))
+                    rights.extend(others)
+            stars = _local_frame(spark, _EDGES, lefts, rights, [1.0] * len(lefts))
+            return stars, _local_frame(spark, "root_id long", troots)
 
     from matchbox_spark.plans.query import resolver_assignments
 
@@ -277,18 +326,39 @@ def _touched_star_edges(
     return stars, touched_roots
 
 
-def _delta_pair_batch(
-    catalog: Catalog,
-    model_step: str,
-    resolver_step: str,
-    resolver_method,
-    bidx,
-    dcontract: dict,
-    dmap: dict,
-    spark,
-) -> bool:
-    """One micro-batch through the driver block map (optimization r14,
-    guide §1.2 "the distributed algorithm" / §2.4 remove shuffles outright).
+def _pair_contract(model, source_step, stream, index_fields) -> dict | None:
+    """The ``pairs`` route's gate: the model's pairwise contract (edges =
+    all distinct-id pairs within equal non-null unique-field tuples, fixed
+    score) with its fields part of the hashed index content (so their
+    per-hash values ride the index collect) and of types with stable
+    driver-side equality under a string cast (floats excluded: Spark's
+    groupBy normalises NaN and -0.0, the cast does not). None when any
+    part fails."""
+    probe = getattr(model, "delta_pairwise_contract", None)
+    contract = probe() if callable(probe) else None
+    if not contract:
+        return None
+    raw = _raw_fields(source_step, contract["fields"])
+    dtypes = dict(stream.dtypes)
+    stable = {"tinyint", "smallint", "int", "bigint", "string", "boolean", "date"}
+    if not raw or not set(raw) <= set(index_fields):
+        return None
+    if not all(
+        f in dtypes and (dtypes[f] in stable or dtypes[f].startswith("decimal"))
+        for f in raw
+    ):
+        return None
+    return {
+        "raw": raw,
+        "score": float(contract["score"]),
+        "cap": contract["max_group_size"],
+    }
+
+
+def _delta_pair_batch(bidx, contract: dict, pmap: dict, spark):
+    """The ``pairs`` route's edges for one micro-batch, from the driver
+    block map (optimization r14, guide §1.2 "the distributed algorithm" /
+    §2.4 remove shuffles outright).
 
     Under the model's :meth:`delta_pairwise_contract` (edges = every
     unordered distinct-id pair within a group of equal non-null
@@ -296,43 +366,37 @@ def _delta_pair_batch(
     touch one of its own rows — old×old pairs were created by the batch
     that delivered the later old row. So instead of rebuilding the
     O(accumulated) blocked superset and re-expanding every touched group's
-    full pair set per batch, keep a driver map ``tuple → member ids`` and
-    emit exactly the delta pairs (old×new ∪ new×new per block):
+    full pair set per batch, keep a driver map ``tuple → member ids``
+    (``pmap``) and emit exactly the delta pairs (old×new ∪ new×new per
+    block):
 
-    - ``new_edges`` equals the distributed branch's post-anti-join delta
-      by the contract (and still flows through
-      ``insert_model_edges_delta``'s anti-join, which makes batch replay a
-      no-op exactly as before);
-    - ``batch_leaves`` (the touched blocks' member union) is a SUBSET of
-      the distributed OR-superset that still contains every component
+    - the edges equal the ``fields`` route's post-anti-join delta by the
+      contract (and still flow through ``insert_model_edges_delta``'s
+      anti-join, which makes batch replay a no-op exactly as before);
+    - the leaves (the touched blocks' member union) are a SUBSET of the
+      ``fields`` route's OR-superset that still contains every component
       that can gain an edge (edges only form inside tuple blocks), and a
       root starred under the wider set but untouched by any edge re-forms
       to its own content-addressed id — byte-identical terminal state;
     - CC input = delta pairs ∪ stars: every old×old pair's endpoints are
       members of a prior (hence starred) component, so connectivity —
-      and therefore the assignments — matches the distributed branch.
+      and therefore the assignments — matches the ``fields`` route.
 
     ``max_group_size`` transfers: the moment a block's accumulated
-    distinct-member count exceeds the cap, the distributed branch drops
-    the whole group from that batch's pair output (earlier appends
-    persist) — the map path stops emitting at the same boundary.
+    distinct-member count exceeds the cap, the ``fields`` route drops the
+    whole group from that batch's pair output (earlier appends persist) —
+    the map stops emitting at the same boundary.
 
     Budget: pairs emitted this batch and total mapped members both bound
-    by the CC driver edge limit. Returns False BEFORE any mutation when a
-    batch would blow it — the caller falls back to the distributed
-    blocked-superset branch and retires the map for the rest of the run.
+    by the CC driver edge limit. Returns ``(edges, edges_pdf, leaves,
+    frames)`` for the delta tail, or None BEFORE any mutation when a batch
+    would blow the budget — the caller then retires the map to ``fields``.
     """
-    import pandas as pd
-
-    from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
-
     limit = _driver_cc_edge_limit(spark)
-    blocks: dict = dmap["blocks"]
-    cap = dcontract["cap"]
+    blocks: dict = pmap["blocks"]
+    cap = contract["cap"]
     ids = bidx["cluster_id"].tolist()
-    valcols = [
-        bidx[f"_bv_{i}"].tolist() for i in range(len(dcontract["raw"]))
-    ]
+    valcols = [bidx[f"_bv_{i}"].tolist() for i in range(len(contract["raw"]))]
 
     # phase 1 — no mutation: the batch's new member ids per block, pair
     # count, and the budget check
@@ -357,8 +421,8 @@ def _delta_pair_batch(
         if not pend or g < 2 or (cap is not None and g > cap):
             continue
         total += n_old * len(pend) + len(pend) * (len(pend) - 1) // 2
-    if total > limit or dmap["rows"] + n_new_members > limit:
-        return False
+    if total > limit or pmap["rows"] + n_new_members > limit:
+        return None
 
     # phase 2 — mutate the map, emit exactly the delta pairs
     lefts: list[int] = []
@@ -380,46 +444,104 @@ def _delta_pair_batch(
                     lefts.append(nid)
                     rights.append(oid)
         s.update(pend)
-    dmap["rows"] += n_new_members
+    pmap["rows"] += n_new_members
 
-    epdf = pd.DataFrame(
-        {
-            "left_id": pd.array(lefts, dtype="int64"),
-            "right_id": pd.array(rights, dtype="int64"),
-            "score": pd.array(
-                [dcontract["score"]] * len(lefts), dtype="float32"
-            ),
-        }
+    edges = _local_frame(
+        spark, _EDGES, lefts, rights, [contract["score"]] * len(lefts)
     )
-    new_edges = spark.createDataFrame(
-        epdf, "left_id long, right_id long, score float"
-    )
-    new_edges._mb_local_pdf = epdf
-    new_edges._mb_driver_resident = True
-    catalog.insert_model_edges_delta(model_step, new_edges)
-
     leaf_set: set = set()
     for vals in touched:
         leaf_set.update(blocks.get(vals) or ())
-    bl_pdf = pd.DataFrame(
-        {"leaf_id": pd.array(sorted(leaf_set), dtype="int64")}
+    leaves = _local_frame(spark, "leaf_id long", sorted(leaf_set))
+    edges._mb_driver_resident = leaves._mb_driver_resident = True
+    return edges, edges._mb_local_pdf, leaves, ()
+
+
+def _field_edges(model, data, batch, blocking_fields, source_step):
+    """The ``fields`` route's edges: the model over accumulated rows sharing
+    ANY blocking value with the batch (OR semantics — a conservative
+    superset, correct for both tuple-blocked and multi-pass per-field
+    models). Returns ``(edges, edges_pdf, leaves, frames)``."""
+    raw = _raw_fields(source_step, blocking_fields)
+    # one collect_set job + an OR-of-isin filter (optimization r13)
+    # instead of per-field distinct + broadcast-semi-join + union +
+    # dropDuplicates — the same batch blocking values the old path
+    # broadcast now drive a plain filter, so the superset checkpoint
+    # below is one scan+join+filter with no union/dedup exchange and no
+    # per-field job. Row-identical: OR of memberships == the
+    # deduplicated union of per-field semi-joins, and isin's
+    # null-in-data handling (NULL → filter drops) matches the
+    # semi-join's null-key behaviour. A batch whose distinct value set is
+    # too large for an expression literal falls back to the semi-join
+    # shape — the value set is exactly what the old path collected into
+    # its broadcasts.
+    sets = batch.agg(
+        *[F.collect_set(r).alias(q) for q, r in zip(blocking_fields, raw)]
+    ).collect()[0]
+    if sum(len(sets[q]) for q in blocking_fields) <= 100_000:
+        cond = None
+        for q in blocking_fields:
+            if sets[q]:
+                c = F.col(q).isin(list(sets[q]))
+                cond = c if cond is None else (cond | c)
+        data = data.where(cond if cond is not None else F.lit(False))
+    else:
+        parts = []
+        for q, r in zip(blocking_fields, raw):
+            vals = batch.select(F.col(r).alias(q)).distinct()
+            parts.append(data.join(F.broadcast(vals), q, "left_semi"))
+        data = parts[0]
+        for part in parts[1:]:
+            data = data.unionByName(part)
+        if len(parts) > 1:
+            data = data.dropDuplicates()
+    # materialise the superset ONCE: both the model and the leaves consume
+    # it, and without the pin each would re-run the query_data join +
+    # per-field filter over the accumulated index (the dominant per-batch
+    # scan)
+    data = data.localCheckpoint(eager=True)
+    edges, epdf = _collect_edges_if_small(model.dedupe(data))
+    leaves = data.select(F.col("id").alias("leaf_id")).distinct()
+    return edges, epdf, leaves, (data,)
+
+
+def _block_key_edges(catalog, model, model_step, data, batch, index_fields):
+    """The ``keys`` route's edges: the batch's block keys — O(batch) to
+    compute, a pure function of batch content, so replay-safe — select the
+    accumulated leaves the model could touch via one semi-join on the
+    persisted key index. Returns ``(edges, edges_pdf, leaves, frames)``."""
+    id_col = getattr(getattr(model, "settings", None), "id", None) or "id"
+    batch_hashes = batch.select(
+        row_hash_expr(batch.schema, sorted(index_fields)).alias("cluster_hash")
+    ).distinct()
+    batch_leaf_ids = (
+        catalog.clusters.join(batch_hashes, "cluster_hash", "left_semi")
+        .select(F.col("cluster_id").alias(id_col))
+        .localCheckpoint(eager=True)
     )
-    batch_leaves = spark.createDataFrame(bl_pdf, "leaf_id long")
-    batch_leaves._mb_local_pdf = bl_pdf
-    batch_leaves._mb_driver_resident = True
-    stars, touched_roots = _touched_star_edges(
-        catalog, resolver_step, batch_leaves
+    batch_rows = data.join(batch_leaf_ids, id_col, "left_semi").localCheckpoint(
+        eager=True
     )
-    cc_edges = _attach_cc_pdf(
-        new_edges if stars is None else new_edges.unionByName(stars),
-        epdf,
-        stars,
+    batch_keys = model.delta_block_keys(batch_rows).localCheckpoint(eager=True)
+    # persist the batch leaves' keys FIRST (insert-if-absent per leaf), so
+    # the touched semi-join below sees the batch itself
+    catalog.insert_block_keys_delta(
+        model_step,
+        batch_keys.select(F.col(id_col).alias("leaf_id"), "block_key"),
     )
-    assignments = resolver_method.compute_clusters({model_step: cc_edges})
-    catalog.merge_resolver_clusters_delta(
-        resolver_step, assignments, candidate_roots=touched_roots
+    touched_leaves = (
+        catalog.block_keys.where(F.col("step") == model_step)
+        .join(batch_keys.select("block_key").distinct(), "block_key", "left_semi")
+        .select("leaf_id")
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-    return True
+    data = data.join(
+        touched_leaves.select(F.col("leaf_id").alias(id_col)), id_col, "left_semi"
+    ).localCheckpoint(eager=True)
+    edges, epdf = _collect_edges_if_small(model.dedupe(data))
+    frames = (batch_leaf_ids, batch_rows, batch_keys, touched_leaves, data)
+    return edges, epdf, touched_leaves, frames
 
 
 def _collect_edges_if_small(edges: DataFrame):
@@ -435,8 +557,6 @@ def _collect_edges_if_small(edges: DataFrame):
     and costs no further jobs. Over-budget or non-canonical edges keep
     the eager-checkpoint shape unchanged. Returns ``(frame, pdf | None)``.
     """
-    from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
-
     spark = edges.sparkSession
     ckpt = edges.localCheckpoint(eager=True)
     fields = ckpt.schema.fields
@@ -476,10 +596,62 @@ def _attach_cc_pdf(cc_edges, epdf, stars):
     return cc_edges
 
 
+def _delta_tail(
+    catalog: Catalog,
+    source_step: str,
+    resolver_method,
+    routed: tuple,
+    fallbacks0: int,
+    batch_id: int,
+) -> None:
+    """The delta routes' shared tail for one batch. ``routed`` is the
+    route's ``(edges, edges_pdf, leaves, frames)``: append the edges, star
+    the prior components holding one of ``leaves``, run CC over (edges ∪
+    stars), merge the claims, then free the batch-local checkpoints
+    (``frames``, the edges and the touched roots)."""
+    edges, epdf, leaves, frames = routed
+    model_step = f"{source_step}_model"
+    resolver_step = f"{source_step}_resolve"
+    catalog.insert_model_edges_delta(model_step, edges)
+    # only components holding a leaf the model could touch this batch are
+    # starred, recomputed, and (if merged away) retired
+    stars, touched_roots = _touched_star_edges(catalog, resolver_step, leaves)
+    cc_edges = _attach_cc_pdf(
+        edges if stars is None else edges.unionByName(stars), epdf, stars
+    )
+    assignments = resolver_method.compute_clusters({model_step: cc_edges})
+    catalog.merge_resolver_clusters_delta(
+        resolver_step, assignments, candidate_roots=touched_roots
+    )
+    # batch-local checkpoints are dead once the batch's catalog deltas are
+    # materialised (the catalog eagerly checkpoints its own copies); free
+    # them now — otherwise every micro-batch leaves one set of cached
+    # blocks behind until a driver GC happens to run (round 10, same
+    # lifecycle fix as CC rounds). That assumes every catalog delta
+    # checkpointed its OWN copy: if any _ckpt fell back to the raw plan
+    # (rare AQE planning bug), a stored part still references these frames
+    # and freeing them would truncate lineage unrecoverably, so the frees
+    # are deferred to driver GC — and said so, or a long-running stream's
+    # lingering blocks look like the pre-r10 leak instead of this skip.
+    local = [f for f in (*frames, edges, touched_roots) if f is not None]
+    if catalog._ckpt_fallbacks == fallbacks0:
+        for frame in local:
+            _free_checkpoint(frame)
+    else:
+        logger.warning(
+            "batch %s: skipped freeing %d batch-local checkpoints "
+            "(catalog checkpoint fallbacks %d -> %d); blocks are "
+            "released by driver GC",
+            batch_id,
+            len(local),
+            fallbacks0,
+            catalog._ckpt_fallbacks,
+        )
+
+
 def _full_resolve(
     catalog: Catalog,
-    model_step: str,
-    resolver_step: str,
+    source_step: str,
     data: DataFrame,
     model,
     resolver_method,
@@ -488,6 +660,8 @@ def _full_resolve(
     """One full-recompute pass: re-run the model over every accumulated row
     and rebuild the model + resolver steps — O(state), the general-correct
     refresh for models whose scores drift as data accumulates."""
+    model_step = f"{source_step}_model"
+    resolver_step = f"{source_step}_resolve"
     edges = model.dedupe(data).localCheckpoint(eager=True)
     catalog.drop_step(model_step)
     catalog.insert_model_edges(model_step, edges, fingerprint=tag)
@@ -497,6 +671,43 @@ def _full_resolve(
     assignments = resolver_method.compute_clusters({model_step: cc_edges})
     catalog.steps.pop(resolver_step, None)
     catalog.insert_resolver_clusters(resolver_step, assignments, fingerprint=tag)
+
+
+def _source_data(spark, catalog, source_step, key_field, index_fields, location):
+    """The model's input: the accumulated rows of ``source_step`` (the
+    source at ``location`` inner-joined against the catalog's ingested
+    keys, so rows from not-yet-processed files drop out)."""
+    from matchbox_spark.plans.query import QueryConfig, query_data
+    from matchbox_spark.sources.source import SourceConfig
+
+    cfg = SourceConfig(
+        name=source_step,
+        location=location,
+        key_field=key_field,
+        index_fields=index_fields,
+    )
+    return query_data(spark, catalog, QueryConfig(sources=[cfg]))
+
+
+def _refresh_serving(matcher, catalog, source_step, key_field, batch=None):
+    """Keep the interactive lookup warm: patch ``matcher``'s cached
+    projection with just ``batch``'s changed clusters (delta routes —
+    merges only enter through batch rows), or fully re-materialise it when
+    ``batch`` is None (full recompute — any score may have drifted)."""
+    if matcher is None:
+        return
+    from matchbox_spark.plans.query import unified_query
+
+    plan = unified_query(
+        catalog, [f"{source_step}_resolve"], [source_step], level="key"
+    )
+    touched = None
+    if batch is not None:
+        touched = batch.select(
+            F.lit(source_step).alias("source"),
+            F.col(key_field).cast("string").alias("key"),
+        ).distinct()
+    matcher.refresh(plan, touched)
 
 
 def finalize_resolve(
@@ -519,36 +730,41 @@ def finalize_resolve(
     one O(state) pass at close instead of one per batch. Refreshes
     ``serving_matcher`` fully when given.
     """
-    from matchbox_spark.plans.query import (
-        QueryConfig,
-        query_data,
-        unified_query,
+    data = _source_data(
+        spark, catalog, source_step, key_field, index_fields, source_location
     )
-    from matchbox_spark.sources.source import SourceConfig
-
-    model_step = f"{source_step}_model"
-    resolver_step = f"{source_step}_resolve"
-    cfg = SourceConfig(
-        name=source_step,
-        location=source_location,
-        key_field=key_field,
-        index_fields=index_fields,
-    )
-    data = query_data(spark, catalog, QueryConfig(sources=[cfg]))
     _full_resolve(
-        catalog,
-        model_step,
-        resolver_step,
-        data,
-        model,
-        resolver_method,
-        tag=b"finalize",
+        catalog, source_step, data, model, resolver_method, tag=b"finalize"
     )
-    if serving_matcher is not None:
-        plan = unified_query(
-            catalog, [resolver_step], [source_step], level="key"
-        )
-        serving_matcher.refresh(plan, None)
+    _refresh_serving(serving_matcher, catalog, source_step, key_field)
+
+
+def _choose_route(
+    model, blocking_fields, auto_delta, stream, catalog, source_step, index_fields
+):
+    """The stream's route, chosen once before it starts, as ``(route,
+    blocking_fields, pair_contract)``. An explicit ``blocking_fields`` wins;
+    with ``auto_delta`` a model declaring ``delta_blocking_fields`` or
+    ``delta_block_keys`` routes to ``fields`` or ``keys``; anything else is
+    ``full``. A ``fields`` route whose model passes the pair-contract gate
+    becomes ``pairs`` when the catalog holds no prior state for any of the
+    stream's steps — the map is complete only then (pre-stream rows are
+    invisible to it)."""
+    if blocking_fields is None and auto_delta:
+        probe = getattr(model, "delta_blocking_fields", None)
+        if callable(probe):
+            blocking_fields = probe()
+        elif callable(getattr(model, "delta_block_keys", None)):
+            # computed-blocking contract (LSH-family): the model can state,
+            # per row, the block keys under which it can ever form an edge
+            return "keys", None, None
+    if not blocking_fields:
+        return "full", None, None
+    contract = _pair_contract(model, source_step, stream, index_fields)
+    steps = (source_step, f"{source_step}_model", f"{source_step}_resolve")
+    if contract is None or any(s in catalog.steps for s in steps):
+        return "fields", blocking_fields, None
+    return "pairs", blocking_fields, contract
 
 
 def incremental_resolve_stream(
@@ -567,44 +783,28 @@ def incremental_resolve_stream(
     resolve_cadence: int = 1,
 ) -> StreamingQuery:
     """Streaming entity resolution: every micro-batch ingests new rows and
-    refreshes the model + resolver state.
+    refreshes the model + resolver state. The route (``pairs``, ``fields``,
+    ``keys`` or ``full``) is chosen once, before the stream starts, and each
+    batch runs the phases listed in the module docstring.
 
     ``source_location`` is the batch-readable path of the stream's data
     (the model re-query joins it against the catalog's ingested keys — the
     inner join means rows from not-yet-processed files drop out, so the
     per-batch model sees exactly the accumulated state).
 
-    Per batch: (1) content-index the batch into ``source_step`` (append-only
-    delta insert); (2) derive scored edges; (3) refresh the resolver step so
-    queries serve clusters over everything ingested so far — streaming ER
-    the reference (batch-only) leaves open.
-
-    **Delta-link mode** (``blocking_fields`` set — names as they appear in
-    the queried/qualified space, e.g. ``"s_grp"``; raw batch columns are
-    recovered by stripping the ``"{source_step}_"`` prefix, so blocking
-    fields must pass through cleaning unchanged): step (2) runs the model
-    ONLY over accumulated rows that share a blocking value with the batch —
-    everything else is pruned by a broadcast semi-join — and appends the
-    resulting edges via the idempotent delta insert. Step (3) runs connected
-    components over (new edges ∪ prior star edges), so merges across old
-    clusters (a bridging record) still happen, at O(batch blocks + resolved
-    entities) per batch instead of O(accumulated corpus). Requires a
+    ``blocking_fields`` (names as they appear in the queried/qualified
+    space, e.g. ``"s_grp"``; raw batch columns are recovered by stripping
+    the ``"{source_step}_"`` prefix, so blocking fields must pass through
+    cleaning unchanged) selects the ``fields`` route — or ``pairs`` when the
+    model also declares ``delta_pairwise_contract``. The model then runs
+    ONLY over accumulated rows that share a blocking value with the batch,
+    and CC runs over (new edges ∪ prior star edges), at O(batch blocks +
+    touched members) per batch instead of O(accumulated corpus). Requires a
     deterministic model whose edges depend only on rows within a block
     (true for blocking-style dedupers/linkers).
 
-    **Full mode**: the model re-runs over ALL indexed data and the
-    model/resolver steps are dropped and re-inserted — O(accumulated state)
-    per batch by design, the general-correct path for models whose scores
-    change as data accumulates (e.g. EM-trained).
-
-    **Computed-blocking delta-link** (a model declaring
-    ``delta_block_keys(data) -> (id, block_key)``, e.g. ``MinHashDeduper``
-    — an LSH band key is a blocking value computed from the row's own
-    content, not a raw field): each batch leaf's keys persist once into the
-    catalog's ``block_keys`` index, the batch's keys compute O(batch), and
-    one semi-join on ``block_key`` selects the accumulated leaves the model
-    could touch. Per-batch model work is O(touched blocks); signatures are
-    never recomputed over accumulated state. Correct for models whose edge
+    The ``keys`` route (a model declaring ``delta_block_keys(data) -> (id,
+    block_key)``, e.g. ``MinHashDeduper``) is correct for models whose edge
     existence requires a shared block key and whose per-row keys depend
     only on that row (true for MinHash/SimHash banding).
 
@@ -612,38 +812,30 @@ def incremental_resolve_stream(
     declares block-locality — a ``delta_blocking_fields()`` method
     returning queried-space field names, e.g. ``NaiveDeduper``, or a
     ``delta_block_keys`` method, e.g. ``MinHashDeduper`` — is routed
-    through the matching delta path automatically when the caller passes no
-    ``blocking_fields``, because for such models delta and full modes
-    provably produce the same terminal clusters and only delta-link stays
-    flat as state accumulates. Pass ``auto_delta=False`` to force the full
-    recompute anyway (e.g. to exercise the general path).
+    through the matching delta route automatically when the caller passes
+    no ``blocking_fields``, because for such models delta and full routes
+    provably produce the same terminal clusters and only the delta routes
+    stay flat as state accumulates. Pass ``auto_delta=False`` to force the
+    full recompute anyway (e.g. to exercise the general path).
 
-    In delta mode every per-batch state mutation is an O(touched) APPEND:
-    ``clusters``/``contains``/``cluster_keys``/``model_edges`` move
+    On the delta routes every per-batch state mutation is an O(touched)
+    APPEND: ``clusters``/``contains``/``cluster_keys``/``model_edges`` move
     append-only, new resolver claims append, and claims for merged-away
     roots retire via the catalog's tombstone overlay
     (:meth:`~matchbox_spark.plans.catalog.Catalog.merge_resolver_clusters_delta`)
     — nothing is rewritten per batch; tombstones fold in amortised.
 
-    **Cadenced full mode** (``resolve_cadence=N`` with N > 1, full mode
-    only): indexing still runs every batch (O(delta)), but the O(state)
-    model+resolver recompute runs only on every Nth batch — the cost lever
-    for genuinely-global models at scale, trading bounded staleness (up to
-    N-1 batches) for an N× cut in amortised recompute. Served clusters
-    between recomputes reflect the last resolve; call
-    :func:`finalize_resolve` after the stream drains to make the terminal
-    state exact. Ignored in delta mode, which is already flat per batch.
+    **Full route** (no delta contract, or ``auto_delta=False``): the model
+    re-runs over ALL indexed data and the model/resolver steps are dropped
+    and re-inserted — the general-correct path for models whose scores
+    change as data accumulates (e.g. EM-trained). With ``resolve_cadence=N``
+    (N > 1) indexing still runs every batch but the O(state) recompute runs
+    only on every Nth batch — trading bounded staleness (up to N-1 batches)
+    for an N× cut in amortised recompute. Served clusters between
+    recomputes reflect the last resolve; call :func:`finalize_resolve`
+    after the stream drains to make the terminal state exact. The cadence
+    is ignored on the delta routes, which are already flat per batch.
     """
-    from matchbox_spark.plans.query import (
-        QueryConfig,
-        query_data,
-        unified_query,
-    )
-    from matchbox_spark.sources.source import SourceConfig
-
-    model_step = f"{source_step}_model"
-    resolver_step = f"{source_step}_resolve"
-
     # corpus-derived ('auto') LSH parameters freeze from the FIRST corpus a
     # model sees — in a stream that is micro-batch 1, the one slice that is
     # NO proxy for the eventual corpus (a 1k-doc first batch would freeze
@@ -665,363 +857,59 @@ def incremental_resolve_stream(
             "auto_simhash_bits / auto_embedding_bucket_dims against the "
             "expected corpus)"
         )
-
-    use_block_keys = False
-    if blocking_fields is None and auto_delta:
-        probe = getattr(model, "delta_blocking_fields", None)
-        if callable(probe):
-            blocking_fields = probe()
-        elif callable(getattr(model, "delta_block_keys", None)):
-            # computed-blocking contract (LSH-family): the model can state,
-            # per row, the block keys under which it can ever form an edge
-            use_block_keys = True
-
+    route, blocking_fields, contract = _choose_route(
+        model, blocking_fields, auto_delta, stream, catalog, source_step, index_fields
+    )
     if resolve_cadence < 1:
         raise ValueError("resolve_cadence must be >= 1")
+    pmap = {"blocks": {}, "rows": 0}  # the pairs route's driver block map
 
-    # r14 delta-pair map path: a field-blocked model declaring the
-    # pairwise contract (edges = all distinct-id pairs within equal
-    # non-null unique-field tuples, fixed score) streams through a driver
-    # block map — each batch emits only its old×new ∪ new×new pairs and
-    # never rebuilds the O(accumulated) blocked superset. Gated on: the
-    # contract fields being part of the hashed index content (so their
-    # per-hash values ride the index collect) and their types having
-    # stable driver-side equality under a string cast (floats excluded:
-    # Spark's groupBy normalises NaN and -0.0, the cast does not).
-    dcontract = None
-    dmap = {"live": None, "blocks": {}, "rows": 0}
-    if blocking_fields and not use_block_keys:
-        _pw = getattr(model, "delta_pairwise_contract", None)
-        _c = _pw() if callable(_pw) else None
-        if _c:
-            _prefix = f"{source_step}_"
-            _raw = [
-                f[len(_prefix):] if f.startswith(_prefix) else f
-                for f in _c["fields"]
-            ]
-            _dt = dict(stream.dtypes)
-            _ok = {"tinyint", "smallint", "int", "bigint", "string",
-                   "boolean", "date"}
-            if (
-                _raw
-                and set(_raw) <= set(index_fields)
-                and all(
-                    f in _dt
-                    and (_dt[f] in _ok or _dt[f].startswith("decimal"))
-                    for f in _raw
-                )
-            ):
-                dcontract = {
-                    "raw": _raw,
-                    "score": float(_c["score"]),
-                    "cap": _c["max_group_size"],
-                }
-
-    run = {"from_start": False}  # did THIS run witness batch 0?
-
-    def _refresh_serving(batch: DataFrame) -> None:
-        if serving_matcher is None:
-            return
-        # keep the interactive lookup warm: patch the matcher's cached
-        # projection with just this batch's changed clusters (delta
-        # mode — merges only enter through batch rows) or fully
-        # re-materialise (full mode — any score may have drifted)
-        plan = unified_query(
-            catalog, [resolver_step], [source_step], level="key"
-        )
-        touched = (
-            batch.select(
-                F.lit(source_step).alias("source"),
-                F.col(key_field).cast("string").alias("key"),
-            ).distinct()
-            if (blocking_fields or use_block_keys)
-            else None
-        )
-        serving_matcher.refresh(plan, touched)
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        if batch_id == 0:
-            run["from_start"] = True
-        if batch.isEmpty():
-            return
-        if not run["from_start"]:
-            _guard_checkpoint_state(catalog, source_step, batch_id)
-        # freeing the batch-local checkpoints below assumes every catalog
-        # delta eagerly checkpointed its OWN copy; if any _ckpt fell back
-        # to the raw plan (rare AQE planning bug), a stored part still
-        # references these frames — freeing them would truncate lineage
-        # unrecoverably, so on fallback we skip the frees for this batch
-        # (pre-r10 behaviour: blocks linger until a driver GC)
+    def _resolve(batch: DataFrame, batch_id: int, from_start: bool) -> None:
+        nonlocal route
+        spark = batch.sparkSession
         fallbacks0 = catalog._ckpt_fallbacks
         bidx = None
-        if dcontract is not None and dmap["live"] is not False:
-            if dmap["live"] is None:
-                # the map is complete only if this run witnessed batch 0
-                # against a catalog holding no prior state for any of the
-                # stream's steps (pre-stream rows would be invisible to it)
-                dmap["live"] = run["from_start"] and not any(
-                    s in catalog.steps
-                    for s in (source_step, model_step, resolver_step)
-                )
-            if dmap["live"]:
-                bidx = _index_batch(
-                    catalog,
-                    source_step,
-                    batch,
-                    key_field,
-                    index_fields,
-                    value_fields=dcontract["raw"],
-                )
-                if bidx is None:
-                    # index twin dead (mirror invalidated / over-budget):
-                    # the map misses this batch's members — retire it
-                    dmap["live"] = False
+        if route == "pairs" and from_start:
+            bidx = _index_batch(
+                catalog,
+                source_step,
+                batch,
+                key_field,
+                index_fields,
+                value_fields=contract["raw"],
+            )
         if bidx is None:
             _index_batch(catalog, source_step, batch, key_field, index_fields)
-
-        if (
-            not blocking_fields
-            and not use_block_keys
-            and resolve_cadence > 1
-            and batch_id % resolve_cadence != 0
-        ):
-            # cadenced full mode: index-only batch — the O(state) recompute
-            # waits for the next cadence tick (or finalize_resolve); the
-            # serving matcher keeps the last resolve's projection
-            return
-
+        if route == "full" and batch_id % resolve_cadence:
+            return  # cadenced index-only batch: serving keeps the last resolve
+        routed = None
         if bidx is not None:
-            if _delta_pair_batch(
-                catalog,
-                model_step,
-                resolver_step,
-                resolver_method,
-                bidx,
-                dcontract,
-                dmap,
-                batch.sparkSession,
-            ):
-                _refresh_serving(batch)
-                return
-            # batch blew the driver budget BEFORE any map mutation: the
-            # blocked-superset branch below handles it distributed, and
-            # the (now incomplete-going-forward) map retires for the run
-            dmap["live"] = False
-
-        cfg = SourceConfig(
-            name=source_step,
-            location=source_location,
-            key_field=key_field,
-            index_fields=index_fields,
-        )
-        data = query_data(
-            batch.sparkSession, catalog, QueryConfig(sources=[cfg])
-        )
-
-        if blocking_fields:
-            # OR semantics: keep accumulated rows sharing ANY blocking value
-            # with the batch — a conservative superset that is correct for
-            # both tuple-blocked and multi-pass (per-field) models
-            prefix = f"{source_step}_"
-            raw = [
-                f[len(prefix):] if f.startswith(prefix) else f
-                for f in blocking_fields
-            ]
-            # one collect_set job + an OR-of-isin filter (optimization r13)
-            # instead of per-field distinct + broadcast-semi-join + union +
-            # dropDuplicates — the same batch blocking values the old path
-            # broadcast now drive a plain filter, so the superset
-            # checkpoint below is one scan+join+filter with no union/dedup
-            # exchange and no per-field job. Row-identical: OR of
-            # memberships == the deduplicated union of per-field
-            # semi-joins, and isin's null-in-data handling (NULL → filter
-            # drops) matches the semi-join's null-key behaviour. A batch
-            # whose distinct value set is too large for an expression
-            # literal falls back to the semi-join shape — the value set is
-            # exactly what the old path collected into its broadcasts.
-            sets = batch.agg(
-                *[F.collect_set(r).alias(q) for q, r in zip(blocking_fields, raw)]
-            ).collect()[0]
-            vals_by_field = {q: sets[q] for q in blocking_fields}
-            if sum(len(v) for v in vals_by_field.values()) <= 100_000:
-                cond = None
-                for q in blocking_fields:
-                    vals = vals_by_field[q]
-                    if not vals:
-                        continue
-                    c = F.col(q).isin(list(vals))
-                    cond = c if cond is None else (cond | c)
-                data = data.where(cond if cond is not None else F.lit(False))
+            routed = _delta_pair_batch(bidx, contract, pmap, spark)
+        if routed is None and route == "pairs":
+            # the map misses rows from here on — a resumed run cannot
+            # rebuild it, a dead index twin (mirror invalidated / over
+            # budget) left this batch out, or the batch was over the driver
+            # budget (found BEFORE any map mutation) — so it retires and
+            # this batch and the rest of the run take the fields route
+            route = "fields"
+        if routed is None:
+            data = _source_data(
+                spark, catalog, source_step, key_field, index_fields, source_location
+            )
+            if route == "full":
+                tag = f"b{batch_id}".encode()
+                _full_resolve(catalog, source_step, data, model, resolver_method, tag)
+            elif route == "fields":
+                routed = _field_edges(model, data, batch, blocking_fields, source_step)
             else:
-                touched_parts = []
-                for q, r in zip(blocking_fields, raw):
-                    vals = batch.select(F.col(r).alias(q)).distinct()
-                    touched_parts.append(
-                        data.join(F.broadcast(vals), q, "left_semi")
-                    )
-                data = touched_parts[0]
-                for part in touched_parts[1:]:
-                    data = data.unionByName(part)
-                if len(touched_parts) > 1:
-                    data = data.dropDuplicates()
-            # materialise the superset ONCE: both the model and the
-            # batch_leaves set below consume it, and without the pin each
-            # would re-run the query_data join + per-field semi-joins over
-            # the accumulated index (the dominant per-batch scan)
-            data = data.localCheckpoint(eager=True)
-            new_edges, epdf = _collect_edges_if_small(model.dedupe(data))
-            catalog.insert_model_edges_delta(model_step, new_edges)
-            _batch_locals = [data, new_edges]
-            # only components holding a leaf the model could touch this
-            # batch are starred, recomputed, and (if merged away) retired —
-            # per-batch resolver work is O(batch blocks + touched members),
-            # not O(all resolved entities)
-            batch_leaves = data.select(F.col("id").alias("leaf_id")).distinct()
-            stars, touched_roots = _touched_star_edges(
-                catalog, resolver_step, batch_leaves
-            )
-            cc_edges = _attach_cc_pdf(
-                new_edges if stars is None else new_edges.unionByName(stars),
-                epdf,
-                stars,
-            )
-            assignments = resolver_method.compute_clusters(
-                {model_step: cc_edges}
-            )
-            catalog.merge_resolver_clusters_delta(
-                resolver_step, assignments, candidate_roots=touched_roots
-            )
-            # free batch-local checkpoints (see the use_block_keys branch)
-            if catalog._ckpt_fallbacks == fallbacks0:
-                for frame in _batch_locals + [touched_roots]:
-                    if frame is not None:
-                        _free_checkpoint(frame)
-            else:
-                # a checkpoint fell back to AQE-cached plans mid-batch:
-                # freeing now could drop blocks a fallback plan still
-                # references, so the frees are deferred to driver GC — say
-                # so, or a long-running stream's lingering blocks look like
-                # the pre-r10 leak instead of this deliberate skip
-                logger.warning(
-                    "batch %s: skipped freeing %d batch-local checkpoints "
-                    "(catalog checkpoint fallbacks %d -> %d); blocks are "
-                    "released by driver GC",
-                    batch_id,
-                    sum(
-                        f is not None
-                        for f in _batch_locals + [touched_roots]
-                    ),
-                    fallbacks0,
-                    catalog._ckpt_fallbacks,
+                routed = _block_key_edges(
+                    catalog, model, f"{source_step}_model", data, batch, index_fields
                 )
-        elif use_block_keys:
-            # computed-blocking delta-link (LSH-family models): the batch's
-            # block keys — O(batch) to compute, a pure function of batch
-            # content, so replay-safe — select the accumulated leaves the
-            # model could touch via one semi-join on the persisted key index
-            id_col = getattr(
-                getattr(model, "settings", None), "id", None
-            ) or "id"
-            batch_hashes = batch.select(
-                row_hash_expr(batch.schema, sorted(index_fields)).alias(
-                    "cluster_hash"
-                )
-            ).distinct()
-            batch_leaf_ids = (
-                catalog.clusters.join(batch_hashes, "cluster_hash", "left_semi")
-                .select(F.col("cluster_id").alias(id_col))
-                .localCheckpoint(eager=True)
+        if routed is not None:
+            _delta_tail(
+                catalog, source_step, resolver_method, routed, fallbacks0, batch_id
             )
-            batch_rows = data.join(
-                batch_leaf_ids, id_col, "left_semi"
-            ).localCheckpoint(eager=True)
-            batch_keys = model.delta_block_keys(batch_rows).localCheckpoint(
-                eager=True
-            )
-            # persist the batch leaves' keys FIRST (insert-if-absent per
-            # leaf), so the touched semi-join below sees the batch itself
-            catalog.insert_block_keys_delta(
-                model_step,
-                batch_keys.select(
-                    F.col(id_col).alias("leaf_id"), "block_key"
-                ),
-            )
-            touched_leaves = (
-                catalog.block_keys.where(F.col("step") == model_step)
-                .join(
-                    batch_keys.select("block_key").distinct(),
-                    "block_key",
-                    "left_semi",
-                )
-                .select("leaf_id")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            data = data.join(
-                touched_leaves.select(F.col("leaf_id").alias(id_col)),
-                id_col,
-                "left_semi",
-            ).localCheckpoint(eager=True)
-            new_edges, epdf = _collect_edges_if_small(model.dedupe(data))
-            catalog.insert_model_edges_delta(model_step, new_edges)
-            stars, touched_roots = _touched_star_edges(
-                catalog, resolver_step, touched_leaves
-            )
-            cc_edges = _attach_cc_pdf(
-                new_edges if stars is None else new_edges.unionByName(stars),
-                epdf,
-                stars,
-            )
-            assignments = resolver_method.compute_clusters(
-                {model_step: cc_edges}
-            )
-            catalog.merge_resolver_clusters_delta(
-                resolver_step, assignments, candidate_roots=touched_roots
-            )
-            # batch-local checkpoints are dead once the batch's catalog
-            # deltas are materialised (the catalog eagerly checkpoints its
-            # own copies); free them now — otherwise every micro-batch
-            # leaves one set of cached blocks behind until a driver GC
-            # happens to run (round 10, same lifecycle fix as CC rounds)
-            _locals = (
-                batch_leaf_ids,
-                batch_rows,
-                batch_keys,
-                touched_leaves,
-                data,
-                new_edges,
-                touched_roots,
-            )
-            if catalog._ckpt_fallbacks == fallbacks0:
-                for frame in _locals:
-                    if frame is not None:
-                        _free_checkpoint(frame)
-            else:
-                logger.warning(
-                    "batch %s: skipped freeing %d batch-local checkpoints "
-                    "(catalog checkpoint fallbacks %d -> %d); blocks are "
-                    "released by driver GC",
-                    batch_id,
-                    sum(f is not None for f in _locals),
-                    fallbacks0,
-                    catalog._ckpt_fallbacks,
-                )
-        else:
-            _full_resolve(
-                catalog,
-                model_step,
-                resolver_step,
-                data,
-                model,
-                resolver_method,
-                tag=f"b{batch_id}".encode(),
-            )
+        touched = None if route == "full" else batch
+        _refresh_serving(serving_matcher, catalog, source_step, key_field, touched)
 
-        _refresh_serving(batch)
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_stream(stream, catalog, source_step, _resolve, checkpoint_dir)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from matchbox_spark.plans.catalog import Catalog
@@ -417,14 +418,38 @@ def test_delta_link_bridging_record_merges_old_clusters(spark, tmp_path):
     assert cat.model_edges.where(F.col("step") == "s_model").count() == 5
 
 
-def test_checkpoint_resume_against_fresh_catalog_raises(spark, tmp_path):
+def _guarded_stream(entry, spark, src, cat, ckpt, max_files=None):
+    """Start ``entry`` (the index or the resolve stream) over the parquet
+    batch directories under ``src``, as step ``s`` keyed by ``key``."""
+    from matchbox_spark.operators.dedupers import NaiveDeduper
+    from matchbox_spark.plans.resolvers import Components
+    from matchbox_spark.streaming.incremental import incremental_resolve_stream
+
+    reader = spark.readStream.schema("key string, name string").option(
+        "recursiveFileLookup", "true"
+    )
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    stream = reader.parquet(str(src))
+    if entry == "index":
+        return incremental_index_stream(
+            stream, cat, "s", key_field="key", index_fields=["name"],
+            checkpoint_dir=ckpt,
+        )
+    return incremental_resolve_stream(
+        stream, cat, "s", key_field="key", index_fields=["name"],
+        model=NaiveDeduper(id="id", unique_fields=["s_name"]),
+        resolver_method=Components(method="auto"),
+        checkpoint_dir=ckpt,
+        source_location=str(src / "*" / "*.parquet"),
+    )
+
+
+@pytest.mark.parametrize("entry", ["index", "resolve"])
+def test_checkpoint_resume_against_fresh_catalog_raises(spark, tmp_path, entry):
     """ADVICE: a durable checkpoint replayed onto an empty catalog must
-    fail fast, not silently resolve only post-restart batches."""
-    import pytest
-
-    from matchbox_spark.plans.catalog import Catalog
-    from matchbox_spark.streaming import incremental_index_stream
-
+    fail fast, not silently resolve only post-restart batches — through
+    either entry point's copy of the guard."""
     src = tmp_path / "in"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
@@ -432,38 +457,26 @@ def test_checkpoint_resume_against_fresh_catalog_raises(spark, tmp_path):
     spark.createDataFrame([("k1", "x")], schema).write.parquet(str(src / "b1"))
 
     cat = Catalog(spark)
-    stream = spark.readStream.schema(schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(str(src))
-    incremental_index_stream(
-        stream, cat, "s", key_field="key", index_fields=["name"],
-        checkpoint_dir=ckpt,
-    ).awaitTermination(120)
+    _guarded_stream(entry, spark, src, cat, ckpt).awaitTermination(120)
 
     # new data + same checkpoint, but a FRESH catalog: batch_id > 0 with no
     # step state → the guard raises inside foreachBatch
     spark.createDataFrame([("k2", "y")], schema).write.parquet(str(src / "b2"))
     fresh = Catalog(spark)
-    q = incremental_index_stream(
-        spark.readStream.schema(schema).option(
-            "recursiveFileLookup", "true"
-        ).parquet(str(src)),
-        fresh, "s", key_field="key", index_fields=["name"],
-        checkpoint_dir=ckpt,
-    )
+    q = _guarded_stream(entry, spark, src, fresh, ckpt)
     with pytest.raises(Exception, match="no state for step"):
         q.awaitTermination(120)
 
 
-def test_empty_leading_batches_do_not_trip_checkpoint_guard(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["index", "resolve"])
+def test_empty_leading_batches_do_not_trip_checkpoint_guard(
+    spark, tmp_path, entry
+):
     """A run that witnesses batch 0 may accumulate any number of EMPTY
     leading micro-batches (Kafka startingOffsets=latest, availableNow
     before files exist) — the first non-empty batch then has batch_id > 0
     with a step-less catalog, which must NOT be mistaken for a resumed
     checkpoint with lost state."""
-    from matchbox_spark.plans.catalog import Catalog
-    from matchbox_spark.streaming import incremental_index_stream
-
     src = tmp_path / "in"
     src.mkdir()
     schema = "key string, name string"
@@ -473,15 +486,8 @@ def test_empty_leading_batches_do_not_trip_checkpoint_guard(spark, tmp_path):
     spark.createDataFrame([("k2", "y")], schema).write.parquet(str(src / "b2"))
 
     cat = Catalog(spark)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q = incremental_index_stream(
-        stream, cat, "s", key_field="key", index_fields=["name"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
+    q = _guarded_stream(
+        entry, spark, src, cat, str(tmp_path / "ckpt"), max_files=1
     )
     assert q.awaitTermination(240)
     assert q.exception() is None
