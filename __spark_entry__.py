@@ -199,7 +199,7 @@ def _sum6(col, dec=None):
     (round(x,6)::decimal(18,6)*1e6)::long`` holds whenever x sits within
     float error of a ≤6-dp grid point (all monetary columns and their
     products) and is verified bitwise per call-site query at all three
-    SFs (tools/verify_sum6.py); off-grid terms keep their explicit
+    SFs (tests/test_sum6_sweep.py); off-grid terms keep their explicit
     ``dec`` hook and the decimal path. The long split moves to base 2^20
     (arithmetic shift + mask — two's-complement exact for negatives, no
     division): low ∈ [0, 2^20) sums exactly to ~8.8e12 rows/group,

@@ -323,8 +323,8 @@ def threshold_sweep(
     import numpy as np
 
     from matchbox_spark.plans.resolvers import (
-        _cc_driver_arrays,
         _driver_cc_edge_limit,
+        connected_components_numpy,
     )
 
     import pyarrow as pa
@@ -440,7 +440,7 @@ def threshold_sweep(
             mask = sc >= float(t)
             n_model = tp = 0
             if mask.any() and len(pa_idx):
-                nodes, comps = _cc_driver_arrays(src[mask], dst[mask])
+                nodes, comps = connected_components_numpy(src[mask], dst[mask])
                 # nodes ⊆ full_nodes, both distinct: exact positions
                 slot = np.searchsorted(full_nodes, nodes)
                 comp_full = np.full(nfull + 1, -1, np.int64)

@@ -116,17 +116,14 @@ def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     )
 
 
+# Distinct-shingle cap for the bitset Jaccard path; 0 forces the posting path.
+_JACCARD_BITSET_VOCAB = 4096
+
+
 def _bitset_jaccard(spark, sh, threshold, max_shingle_freq, cores):
     """Bitmask-intersection Jaccard (see ngram_jaccard_pairs) — returns
     None when the gates say the posting path is the right shape."""
-    import os
-
-    try:
-        cap = int(
-            os.environ.get("MATCHBOX_SPARK_JACCARD_BITSET_VOCAB", "4096")
-        )
-    except ValueError:
-        cap = 4096
+    cap = _JACCARD_BITSET_VOCAB
     if cap <= 0:
         return None
     vc_rows = (
@@ -223,7 +220,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
-    spread_pairs: bool | None = None,
 ) -> DataFrame:
     """Pairs with shingle-set Jaccard ≥ threshold.
 
@@ -245,14 +241,14 @@ def ngram_jaccard_pairs(
     its own posting task, exactly the rows the former join emitted in
     that shingle's partition — the freq cap is the guard in both shapes.
 
-    ``spread_pairs`` (optimization r13, guide §2.5 — the explode side of
+    Spread pairs (optimization r13, guide §2.5 — the explode side of
     input skew, which AQE cannot see): the posting table is one row per
     DISTINCT shingle, so its byte size never reflects the quadratic pair
     fan-out it feeds — AQE coalesces the posting exchange by those tiny
     bytes (~1 partition on a dense-vocabulary corpus), which then runs the
     entire Σ freq² expansion AND the partial count aggregate on one core
-    (measured: 14.4 of d2's 17.1 s at sf0.1 in that single task). With the
-    default on, the expansion splits between its two generators: the
+    (measured: 14.4 of d2's 17.1 s at sf0.1 in that single task). So
+    the expansion splits between its two generators: the
     per-position tail slices compute map-side, round-robin-repartition
     across the session's cores, and explode after the exchange — a
     length-L posting's L·(L−1)/2 pairs now spread over L tasks, so even a
@@ -262,15 +258,10 @@ def ngram_jaccard_pairs(
     at any scale: one extra exchange carrying exactly the tail arrays —
     the same elements the count exchange already moves — i.e. ≤1× the
     operator's existing shuffle volume, bounded by ``max_shingle_freq``
-    like the fan-out itself; a sparse-vocabulary corpus whose postings are
-    short can turn it off.
+    like the fan-out itself.
     """
-    from matchbox_spark.operators.dedupers import _tail_slice_explode
-
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    if spread_pairs is None:
-        spread_pairs = True
     sh = _doc_shingles(df, id_col, text_col, n)
 
     # Dense-vocabulary escape (optimization r14, guide §1.2 "the
@@ -282,8 +273,8 @@ def ngram_jaccard_pairs(
     # shuffle + a pair-keyed count aggregate (measured at sf0.1's 931-
     # shingle corpus: 36.5M expansion rows → 12.5M cross pairs × 15-long
     # AND/popcount; interleaved warm A/B ~3× faster, identical output).
-    # Gates keep it honest at scale: the vocabulary must fit the cap (env-
-    # overridable) AND the cross-pair count × the mask width in 64-bit
+    # Gates keep it honest at scale: the vocabulary must fit the cap
+    # (_JACCARD_BITSET_VOCAB) AND the cross-pair count × the mask width in 64-bit
     # words must not exceed 8× the posting fan-out (a huge sparse corpus
     # or a very wide mask keeps the posting path; both quantities derive
     # from the same probe). The probe's cost is one linear aggregate —
@@ -308,22 +299,19 @@ def ngram_jaccard_pairs(
             .agg(F.count("*").alias("sz"))
         )
     big = posts.where(F.size("members") >= 2)
-    if spread_pairs:
-        expanded = (
-            big.select("members", F.posexplode("members").alias("i", "lid"))
-            .select(
-                "lid",
-                F.slice(
-                    F.col("members"),
-                    F.col("i") + 2,
-                    F.size("members") - F.col("i") - 1,
-                ).alias("tail"),
-            )
-            .repartition(cores)
-            .select("lid", F.explode("tail").alias("rid"))
+    expanded = (
+        big.select("members", F.posexplode("members").alias("i", "lid"))
+        .select(
+            "lid",
+            F.slice(
+                F.col("members"),
+                F.col("i") + 2,
+                F.size("members") - F.col("i") - 1,
+            ).alias("tail"),
         )
-    else:
-        expanded = _tail_slice_explode(big).select("lid", "rid")
+        .repartition(cores)
+        .select("lid", F.explode("tail").alias("rid"))
+    )
     inter = (
         expanded
         .groupBy(F.col("lid").alias("doc_a"), F.col("rid").alias("doc_b"))

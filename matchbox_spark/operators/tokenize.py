@@ -108,24 +108,15 @@ def _apply_merge(
     )
 
 
-def _bpe_driver_vocab_max() -> int:
-    """Vocab-row budget for the driver BPE twin (optimization r14).
-
-    The working vocabulary is bounded by ``top_words`` BY CONSTRUCTION, so
-    when that bound is small the whole merge loop — pair counts, argmax,
-    greedy rewrite — runs on driver lists in microseconds instead of
-    2 Spark jobs + a parquet round-trip PER MERGE (measured: t13's 3-merge
-    train+encode spent 4.4 s in spark.read.parquet footer reads alone).
-    Everything is integer/string arithmetic: Python replays the SQL
-    semantics exactly (UTF-8 byte order == code-point order for the
-    tie-breaks). 0 disables the twin (the byte-identity tests use this).
-    """
-    import os
-
-    try:
-        return int(os.environ.get("MATCHBOX_SPARK_BPE_DRIVER_VOCAB", "100000"))
-    except ValueError:
-        return 100_000
+# Vocab-row budget for the driver BPE twin (optimization r14). The working
+# vocabulary is bounded by ``top_words`` BY CONSTRUCTION, so when that bound
+# is small the whole merge loop — pair counts, argmax, greedy rewrite — runs
+# on driver lists in microseconds instead of 2 Spark jobs + a parquet
+# round-trip PER MERGE (measured: t13's 3-merge train+encode spent 4.4 s in
+# spark.read.parquet footer reads alone). Everything is integer/string
+# arithmetic: Python replays the SQL semantics exactly (UTF-8 byte order ==
+# code-point order for the tie-breaks). 0 disables the twin.
+_BPE_DRIVER_VOCAB = 100_000
 
 
 def _vocab_rows_py(docs: DataFrame, text_col: str, top_words: int):
@@ -188,9 +179,9 @@ def bpe_train(
     import tempfile
 
     spark = docs.sparkSession
-    if top_words <= _bpe_driver_vocab_max():
+    if top_words <= _BPE_DRIVER_VOCAB:
         # driver twin: one vocabulary job, then the merge loop on lists
-        # (see _bpe_driver_vocab_max); identical outputs pinned in pytest
+        # (see _BPE_DRIVER_VOCAB); identical outputs pinned in pytest
         vocab_py = _vocab_rows_py(docs, text_col, top_words)
         merges_py: list[tuple[int, str, str, int]] = []
         for it in range(n_merges):
@@ -292,7 +283,7 @@ def bpe_encode(
     import tempfile
 
     spark = docs.sparkSession
-    if top_words <= _bpe_driver_vocab_max():
+    if top_words <= _BPE_DRIVER_VOCAB:
         # driver twin (see bpe_train): one vocabulary job, the rank-ordered
         # single-pass rewrites on lists, one LocalRelation back
         vocab_py = _vocab_rows_py(docs, text_col, top_words)

@@ -98,16 +98,9 @@ def _is_driver_resident(df: DataFrame) -> bool:
     return out
 
 
-def _index_driver_budget() -> int:
-    """Byte budget for the driver source-index kernel, checked against the
-    optimizer's size estimate for the index plan: 256 MB by default.
-    ``MATCHBOX_SPARK_INDEX_DRIVER_BYTES`` overrides it, and 0 forces the
-    distributed path. A malformed override raises ``ValueError`` instead of
-    silently running on the default budget."""
-    override = os.environ.get("MATCHBOX_SPARK_INDEX_DRIVER_BYTES")
-    if override:
-        return max(0, int(override))
-    return 256 << 20
+# Byte budget for the driver source-index kernel, checked against the
+# optimizer's size estimate for the index plan; 0 forces the distributed path.
+_INDEX_DRIVER_BYTES = 256 << 20
 
 
 def _streaming_meta(kind: str) -> dict:
@@ -1036,13 +1029,14 @@ class Catalog:
 
         Returns None, having done nothing, when a mirror it needs is dead
         or the optimizer's size estimate for ``index`` exceeds
-        :func:`_index_driver_budget` — the estimate is read driver-side, so
-        the decision costs no job and a 100 TB index never collects.
+        :data:`_INDEX_DRIVER_BYTES` (256 MB) — the estimate is read
+        driver-side, so the decision costs no job and a 100 TB index never
+        collects.
         Otherwise returns the collected index as pandas, with its
         ``cluster_id`` column unless the fingerprint gate skipped the step;
         in merge mode the extra columns of ``index`` (e.g. per-hash
         blocking values) ride along."""
-        limit = _index_driver_budget()
+        limit = _INDEX_DRIVER_BYTES
         cmirror = self._driver_cluster_hashes
         skmirror = self._driver_step_keys
         if limit <= 0 or cmirror is None or (merge and skmirror is None):

@@ -3,9 +3,10 @@
 Two interchangeable engines behind one ``ResolverMethod`` surface
 (reference semantics: resolvers/components.py:36-64, transform.py:12-64):
 
-- **Driver union-find** (G1): exact DisjointSet with path compression + union
-  by rank. Right answer for edge sets that fit on the driver (the reference's
-  only implementation).
+- **Driver CC**: exact vectorized label propagation over the collected edge
+  arrays (``connected_components_numpy``), for edge sets that fit on the
+  driver — the reference's only path, where it is a union-find (G1; kept
+  here as ``DisjointSet``, the semantic baseline the tests pin against).
 - **Distributed alternating-star CC**: the large-star/small-star DataFrame
   algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
   2014 — a public algorithm). O(log n) rounds, every round two shuffles,
@@ -143,15 +144,6 @@ def _free_checkpoint(df: DataFrame) -> None:
         logger.debug("checkpoint free skipped", exc_info=True)
 
 
-def _edge_signature(edges: DataFrame) -> tuple[int, int]:
-    """(count, xor-hash) of an edge set — cheap convergence check."""
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("x"),
-    ).collect()[0]
-    return int(row["n"]), int(row["x"])
-
-
 def _materialize_with_signature(
     edges: DataFrame, disk_only: bool = False
 ) -> tuple[DataFrame, tuple[int, int]]:
@@ -230,24 +222,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+_cc_edge_limit: int | None = None
+
+
 def _driver_cc_edge_limit(spark) -> int:
-    """Edge cap for the driver union-find escape, sized by memory rather
-    than a magic constant: ~500 bytes/edge of worst-case Python dict
-    overhead against a quarter of the budget, floored at 2M so small
-    drivers still take the fast path for graphs the reference itself
-    handled driver-side, capped at 50M.
+    """Edge cap for the driver CC, sized by memory rather than a magic
+    constant: ~500 bytes/edge of worst-case driver overhead against a
+    quarter of the budget, floored at 2M so small drivers still take the
+    fast path for graphs the reference itself handled driver-side, capped
+    at 50M.
 
-    The collected pandas frame and union-find dict live in the PYTHON
-    driver process, whose footprint the JVM heap setting does not bound —
-    so the budget is min(spark.driver.memory, free system memory right
-    now), and the ``MATCHBOX_SPARK_CC_EDGE_LIMIT`` env var overrides the
-    whole derivation for operators who know better.
+    The collected pandas frame and CC arrays live in the PYTHON driver
+    process, whose footprint the JVM heap setting does not bound — so the
+    budget is min(spark.driver.memory, free system memory). It is derived
+    on the first call and reused for the rest of the process, so every
+    gate (and every streaming batch) sees the same cap.
     """
-    import os
-
-    override = os.environ.get("MATCHBOX_SPARK_CC_EDGE_LIMIT")
-    if override:
-        return max(0, int(override))
+    global _cc_edge_limit
+    if _cc_edge_limit is not None:
+        return _cc_edge_limit
     try:
         mem = spark.conf.get("spark.driver.memory", "4g") or "4g"
         units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -268,13 +261,13 @@ def _driver_cc_edge_limit(spark) -> int:
         budget = min(heap, avail.get("MemAvailable", avail.get("MemTotal", heap)))
     except OSError:  # non-Linux: fall back to the heap figure
         budget = heap
-    return max(2_000_000, min(50_000_000, budget // 4 // 500))
+    _cc_edge_limit = max(2_000_000, min(50_000_000, budget // 4 // 500))
+    return _cc_edge_limit
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    checkpoint_every: int = 1,
     strategy: str = "auto",
     driver_edge_limit: int | None = None,
 ) -> DataFrame:
@@ -285,12 +278,14 @@ def connected_components(
     isolated vertices must be unioned in by the caller (an edge list cannot
     carry them).
 
-    ``strategy='auto'`` (default) runs the exact driver union-find when the
-    deduped edge count fits the memory-derived cap — the count is free (it
-    rides the materialisation job's Observation), and star contraction's ~6
-    fixed-overhead shuffle rounds dwarf a single Arrow collect on small
-    graphs. ``'distributed'`` forces the large-star/small-star rounds (the
-    100 TB path; what the stress harness pins).
+    ``strategy='auto'`` (default) runs the exact driver CC
+    (:func:`connected_components_numpy`) when the deduped edge count fits
+    ``driver_edge_limit`` (None: the memory-derived cap; 0: never) — the
+    count is free (it rides the materialisation job's Observation), and
+    star contraction's ~6 fixed-overhead shuffle rounds dwarf a single
+    Arrow collect on small graphs. ``'distributed'`` forces the
+    large-star/small-star rounds (the 100 TB path; what the stress harness
+    pins).
     """
     spark = edges.sparkSession
     # initial materialisation keeps the default (memory-first) level: it
@@ -306,34 +301,34 @@ def connected_components(
         return spark.createDataFrame([], "id long, component long")
 
     if strategy == "auto":
-        limit = driver_edge_limit or _driver_cc_edge_limit(spark)
+        limit = (
+            _driver_cc_edge_limit(spark)
+            if driver_edge_limit is None
+            else driver_edge_limit
+        )
         if sig[0] <= limit:
             import pandas as pd
 
             pdf = e.toPandas()
-            mapping = _cc_driver_mapping(
+            nodes, comps = connected_components_numpy(
                 pdf["src"].to_numpy(), pdf["dst"].to_numpy()
             )
-            lab = pd.DataFrame(mapping.items(), columns=["id", "component"])
-            return spark.createDataFrame(
-                lab.astype("int64"), "id long, component long"
-            )
+            lab = pd.DataFrame({"id": nodes, "component": comps})
+            return spark.createDataFrame(lab, "id long, component long")
 
-    for it in range(max_iter):
-        e2 = _small_star(_large_star(e))
-        if checkpoint_every and it % checkpoint_every == 0:
-            # DISK_ONLY: round state is read exactly once (by the next
-            # round) — memory-resident checkpoint blocks of superseded
-            # rounds are pure heap pressure at large edge counts
-            e2, new_sig = _materialize_with_signature(e2, disk_only=True)
-            # round k's checkpoint is eagerly on disk → round k−1 (or the
-            # initial edge set) is dead; free it NOW instead of waiting
-            # for a driver GC, so live round state is bounded at ~2 rounds
-            # whatever the round count (only safe because e2 no longer
-            # references e — _free_checkpoint no-ops on chained plans)
-            _free_checkpoint(e)
-        else:
-            new_sig = _edge_signature(e2)
+    for _ in range(max_iter):
+        # DISK_ONLY: round state is read exactly once (by the next
+        # round) — memory-resident checkpoint blocks of superseded
+        # rounds are pure heap pressure at large edge counts
+        e2, new_sig = _materialize_with_signature(
+            _small_star(_large_star(e)), disk_only=True
+        )
+        # round k's checkpoint is eagerly on disk → round k−1 (or the
+        # initial edge set) is dead; free it NOW instead of waiting
+        # for a driver GC, so live round state is bounded at ~2 rounds
+        # whatever the round count (only safe because e2 no longer
+        # references e — _free_checkpoint no-ops on chained plans)
+        _free_checkpoint(e)
         e = e2
         if new_sig == sig:
             break
@@ -358,49 +353,6 @@ def connected_components_driver(edge_rows: Iterable[tuple[int, int]]) -> dict[in
         for node in comp:
             out[node] = m
     return out
-
-
-# Below this edge count the dict union-find wins in practice: the numpy
-# path allocates several 2|E|-element arrays that glibc/numpy serve via
-# mmap, and on first-touch-lazy VMs the page faults cost more than the
-# vectorization saves (measured: dict stable at ~0.65 s for 900k edges;
-# numpy 0.3 s warm but 1.7-7 s on fault-heavy runs). Past a few million
-# edges the asymptotic win dominates the fault cost.
-# Crossover re-measured in round 12 (steady-state, best-of-3 per size):
-# the vectorized path wins 2-2.5x at every size from 50k edges up
-# (50k: 14 vs 35 ms; 400k: 130 vs 319 ms; 900k: 318 vs 602 ms); below
-# that both are <35 ms and the dict avoids pandas.factorize setup. The
-# old 2M threshold came from a one-off first-call-in-process measurement
-# that box-load noise inflated (re-runs show no structural first-call
-# penalty at these sizes).
-_NUMPY_CC_MIN_EDGES = 50_000
-
-
-def _cc_driver_mapping(src, dst) -> dict[int, int]:
-    """Driver CC over integer edge arrays: node → min member id.
-
-    Picks the dict union-find below ``_NUMPY_CC_MIN_EDGES`` (tiny graphs,
-    avoids vectorization setup) and the vectorized path at or above it
-    (2-10× faster); both are pinned semantically identical."""
-    if len(src) >= _NUMPY_CC_MIN_EDGES:
-        nodes, comps = connected_components_numpy(src, dst)
-        return dict(zip(nodes.tolist(), comps.tolist()))
-    return connected_components_driver(zip(src.tolist(), dst.tolist()))
-
-
-def _cc_driver_arrays(src, dst):
-    """Array-shaped twin of :func:`_cc_driver_mapping` — ``(nodes,
-    comps)`` int64 arrays, skipping the dict round-trip the vectorized
-    path would otherwise pay (r13: the flagship's 450k-node graph spent
-    ~0.1 s re-materialising arrays through a dict)."""
-    import numpy as np
-
-    if len(src) >= _NUMPY_CC_MIN_EDGES:
-        return connected_components_numpy(src, dst)
-    mapping = connected_components_driver(zip(src.tolist(), dst.tolist()))
-    nodes = np.fromiter(mapping.keys(), np.int64, len(mapping))
-    comps = np.fromiter(mapping.values(), np.int64, len(mapping))
-    return nodes, comps
 
 
 def connected_components_numpy(src, dst):
@@ -547,7 +499,11 @@ class Components(ResolverMethod):
         method = s.method
         pdf = None
         if method == "auto":
-            limit = s.driver_edge_limit or _driver_cc_edge_limit(spark)
+            limit = (
+                _driver_cc_edge_limit(spark)
+                if s.driver_edge_limit is None
+                else s.driver_edge_limit
+            )
             # driver-resident shortcut (optimization r13): when every
             # model's edge frame already lives on the driver (the streaming
             # delta-link collects each batch's bounded edge set), threshold
@@ -608,11 +564,10 @@ class Components(ResolverMethod):
             logger.info("Components: auto → %s union-find", method)
 
         if method == "driver":
-            # Arrow-batched collect (one transfer) + size-adaptive driver
-            # CC (round 11: dict union-find below ~2M edges for stable
-            # latency, vectorized above — identical node → min-member
-            # semantics, pinned in pytest). No pre-distinct: CC absorbs
-            # duplicate edges for free, and skipping it saves a shuffle.
+            # Arrow-batched collect (one transfer) + the vectorized driver
+            # CC (node → min-member semantics identical to DisjointSet,
+            # pinned in pytest). No pre-distinct: CC absorbs duplicate
+            # edges for free, and skipping it saves a shuffle.
             import numpy as np
             import pandas as pd
 
@@ -636,7 +591,7 @@ class Components(ResolverMethod):
                 )
                 assignments._mb_local_pdf = empty
                 return assignments
-            nodes, comps = _cc_driver_arrays(
+            nodes, comps = connected_components_numpy(
                 pdf["src"].to_numpy(), pdf["dst"].to_numpy()
             )
             # the data is driver-resident by definition of this path — the

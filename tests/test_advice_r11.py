@@ -65,12 +65,14 @@ def test_pair_suffixes_alias_detection_ignores_string_literals():
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_encode_reaps_intermediates_and_cleanup_handle(spark, monkeypatch):
+def test_bpe_encode_reaps_intermediates_and_cleanup_handle(
+    spark, force_distributed
+):
     from matchbox_spark.operators import tokenize as tk
 
     # this pins the PARQUET round-trip path's disk reaping (r11); the r14
     # driver twin never touches disk, so force the distributed branch
-    monkeypatch.setenv("MATCHBOX_SPARK_BPE_DRIVER_VOCAB", "0")
+    force_distributed("bpe")
     docs = spark.createDataFrame(
         [("low low lower lowest",), ("low lower newest",)], ["text"]
     )

@@ -196,11 +196,12 @@ def test_threshold_sweep_max_edges_sampling_deterministic(spark):
         threshold_sweep(edges, judgements, expansion, ts, max_edges=0)
 
 
-def test_threshold_sweep_driver_matches_distributed(spark, monkeypatch):
+def test_threshold_sweep_driver_matches_distributed(spark, force_distributed):
     """The r13 driver fast path (vectorized same-component membership over
-    the net pairs) must emit exactly the distributed loop's rows. The env
-    override forces the distributed branch (limit 0 → the probe always
-    overflows); the default path on this fixture takes the driver branch."""
+    the net pairs) must emit exactly the distributed loop's rows. Forcing
+    the ``cc`` gate selects the distributed branch (limit 0 → the probe
+    always overflows); the default path on this fixture takes the driver
+    branch."""
     from matchbox_spark.eval import threshold_sweep
 
     edges, judgements, expansion = _sweep_fixture(spark)
@@ -208,7 +209,7 @@ def test_threshold_sweep_driver_matches_distributed(spark, monkeypatch):
     driver = sorted(
         threshold_sweep(edges, judgements, expansion, ts).collect()
     )
-    monkeypatch.setenv("MATCHBOX_SPARK_CC_EDGE_LIMIT", "0")
+    force_distributed("cc")
     dist = sorted(
         threshold_sweep(edges, judgements, expansion, ts).collect()
     )

@@ -163,7 +163,7 @@ def _catalog_state(cat):
 
 
 def test_local_and_distributed_catalog_paths_byte_identical(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir, force_distributed
 ):
     # local paths live (default): mirrors survive the whole pipeline
     local_dag = _linked_catalog(spark, sf_dir)
@@ -172,7 +172,7 @@ def test_local_and_distributed_catalog_paths_byte_identical(
     local_state = _catalog_state(local_dag.catalog)
 
     # force every insert through the distributed branches
-    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "0")
+    force_distributed("index")
     dist_dag = _linked_catalog(spark, sf_dir)
     assert dist_dag.catalog._driver_cluster_hashes is None
     dist_state = _catalog_state(dist_dag.catalog)
@@ -238,20 +238,22 @@ def _overlap_catalogs(spark, delta=False):
     return cat
 
 
-def test_overlapping_hash_insert_local_matches_distributed(spark, monkeypatch):
+def test_overlapping_hash_insert_local_matches_distributed(
+    spark, force_distributed
+):
     local = _overlap_catalogs(spark)
     assert local._driver_cluster_hashes is not None  # stayed on the mirror path
     local_state = _catalog_state(local)
     assert len(local_state["clusters"]) == 4  # h2/h3 reused, only h4 minted
 
-    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "0")
+    force_distributed("index")
     dist = _overlap_catalogs(spark)
     assert dist._driver_cluster_hashes is None
     assert local_state == _catalog_state(dist)
 
 
 def test_overlapping_hash_delta_insert_local_matches_distributed(
-    spark, monkeypatch
+    spark, force_distributed
 ):
     """Merge mode over overlapping hashes: the streamed step reuses the ids
     other steps minted, mints only h5, and a replay of the same delta
@@ -274,23 +276,10 @@ def test_overlapping_hash_delta_insert_local_matches_distributed(
         "c1", "c4", "c5", "c5x"
     ]
 
-    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "0")
+    force_distributed("index")
     dist, dist_state, _ = run()
     assert dist._driver_cluster_hashes is None
     assert local_state == dist_state
-
-
-def test_index_driver_budget_rejects_malformed_value(spark, monkeypatch):
-    """The driver-path byte budget fails closed: a malformed override is an
-    error, not a silent fall-back to the default budget."""
-    from matchbox_spark.plans.catalog import Catalog
-
-    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "256MB")
-    cat = Catalog(spark)
-    with pytest.raises(ValueError):
-        cat.insert_source_index("srcA", _hash_index(spark, [("h1", ["a1"])]))
-    with pytest.raises(ValueError):
-        cat.insert_source_index_delta("srcA", _hash_index(spark, [("h1", ["a1"])]))
 
 
 def _job_counter(spark, monkeypatch, names):
@@ -415,7 +404,7 @@ def _delta_stream_catalog(spark, tmp_path, name):
 
 
 def test_streaming_delta_twins_byte_identical_to_distributed(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, force_distributed
 ):
     """The r13 driver twins for the streaming delta inserts
     (_index_insert_local in merge mode, insert_model_edges_delta's mirror
@@ -461,8 +450,7 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
     assert mirror_pairs == edge_rows
 
     # force the legacy distributed loop end to end and compare
-    monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "0")
-    monkeypatch.setenv("MATCHBOX_SPARK_CC_EDGE_LIMIT", "0")
+    force_distributed("index", "cc")
     dist = _delta_stream_catalog(spark, tmp_path, "dist")
     assert dist._driver_cluster_hashes is None  # loop went distributed
     assert local_state == _catalog_state(dist)

@@ -140,7 +140,7 @@ def test_edge_mirror_packed_matches_structured(spark, tmp_path):
 
 
 @pytest.mark.parametrize("cap", [None, 3])
-def test_bitset_jaccard_matches_posting_path(spark, monkeypatch, cap):
+def test_bitset_jaccard_matches_posting_path(spark, force_distributed, cap):
     """ngram_jaccard_pairs' r14 dense-vocabulary bitmask path must emit
     exactly the posting path's rows — including under max_shingle_freq
     (dropped stop-shingles leave both intersections and sizes)."""
@@ -157,14 +157,13 @@ def test_bitset_jaccard_matches_posting_path(spark, monkeypatch, cap):
             (r["doc_a"], r["doc_b"], r["jaccard"]) for r in out.collect()
         )
 
-    monkeypatch.delenv("MATCHBOX_SPARK_JACCARD_BITSET_VOCAB", raising=False)
     bitset = run()
-    monkeypatch.setenv("MATCHBOX_SPARK_JACCARD_BITSET_VOCAB", "0")
+    force_distributed("jaccard")
     posting = run()
     assert bitset == posting
 
 
-def test_bpe_driver_twin_matches_distributed(spark, monkeypatch):
+def test_bpe_driver_twin_matches_distributed(spark, force_distributed):
     """bpe_train/bpe_encode's r14 driver twin must reproduce the parquet
     round-trip path row for row — merges (order, pairs, counts), the
     it = -1 surviving-symbol total, and every word's final segmentation."""
@@ -182,9 +181,8 @@ def test_bpe_driver_twin_matches_distributed(spark, monkeypatch):
         )
         return rows, seg
 
-    monkeypatch.delenv("MATCHBOX_SPARK_BPE_DRIVER_VOCAB", raising=False)
     driver_rows, driver_seg = run()
-    monkeypatch.setenv("MATCHBOX_SPARK_BPE_DRIVER_VOCAB", "0")
+    force_distributed("bpe")
     dist_rows, dist_seg = run()
     assert driver_rows == dist_rows
     assert driver_seg == dist_seg
@@ -192,7 +190,7 @@ def test_bpe_driver_twin_matches_distributed(spark, monkeypatch):
 
 @pytest.mark.parametrize("cap", [None, 3])
 def test_delta_pair_map_matches_distributed_with_cap(
-    spark, tmp_path, monkeypatch, cap
+    spark, tmp_path, force_distributed, cap
 ):
     """The r14 driver block-map path must produce byte-identical terminal
     model edges to the forced-distributed blocked-superset branch — with
@@ -212,19 +210,15 @@ def test_delta_pair_map_matches_distributed_with_cap(
         [(4, "A", "u4"), (5, "A", "u5"), (6, "B", "u6")],
     ]
 
-    def run(name, force_distributed):
+    def run(name, distributed):
         data_dir = tmp_path / f"data_{name}"
         data_dir.mkdir()
         for rows in batches:
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(data_dir))
-        if force_distributed:
-            monkeypatch.setenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", "0")
-        else:
-            monkeypatch.delenv(
-                "MATCHBOX_SPARK_INDEX_DRIVER_BYTES", raising=False
-            )
+        if distributed:
+            force_distributed("index")
         cat = Catalog(spark)
         stream = (
             spark.readStream.schema(schema)
@@ -245,7 +239,6 @@ def test_delta_pair_map_matches_distributed_with_cap(
             source_location=str(data_dir),
         )
         q.awaitTermination(600)
-        monkeypatch.delenv("MATCHBOX_SPARK_INDEX_DRIVER_BYTES", raising=False)
         edges = {
             (r["left_id"], r["right_id"], r["score"])
             for r in cat.model_edges.where(F.col("step") == "s_model").collect()
@@ -259,8 +252,8 @@ def test_delta_pair_map_matches_distributed_with_cap(
         return edges, claims
 
     tag = "none" if cap is None else f"cap{cap}"
-    e_map, c_map = run(f"map_{tag}", force_distributed=False)
-    e_dist, c_dist = run(f"dist_{tag}", force_distributed=True)
+    e_map, c_map = run(f"map_{tag}", distributed=False)
+    e_dist, c_dist = run(f"dist_{tag}", distributed=True)
     assert e_map == e_dist
     assert c_map == c_dist
     assert e_map  # both modes produced pairs (batch-1 A pair, B pair)

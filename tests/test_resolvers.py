@@ -129,13 +129,52 @@ def test_auto_cc_respects_explicit_edge_limit(spark):
     assert got.count() == 65
 
 
-def test_driver_cc_edge_limit_env_override(spark, monkeypatch):
+def test_zero_driver_edge_limit_goes_distributed(spark, caplog):
+    """``driver_edge_limit=0`` means "never the driver", not "unset"."""
+    import logging
+
+    edges = [(1, 2), (2, 3), (10, 11)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = connected_components(df, driver_edge_limit=0)
+    plan = got._jdf.queryExecution().logical().toString()
+    assert not plan.startswith("LocalRelation")
+    assert {r["id"]: r["component"] for r in got.collect()} == (
+        connected_components_driver(edges)
+    )
+
+    scored = spark.createDataFrame(
+        [(a, b, 1.0) for a, b in edges],
+        "left_id long, right_id long, score float",
+    )
+    with caplog.at_level(logging.INFO, logger="matchbox_spark.plans.resolvers"):
+        out = Components(driver_edge_limit=0).compute_clusters({"m": scored})
+    assert "Components: auto → distributed union-find" in caplog.messages
+    assert _components_from_assignments(out) == {
+        frozenset({1, 2, 3}),
+        frozenset({10, 11}),
+    }
+
+
+def test_driver_cc_edge_limit_derived_once(spark, monkeypatch):
+    """The memory-derived CC budget lies in [2M, 50M] and is derived once
+    per process: a later call reads neither /proc/meminfo nor the conf."""
+    import builtins
+
     from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
 
     derived = _driver_cc_edge_limit(spark)
     assert 2_000_000 <= derived <= 50_000_000
-    monkeypatch.setenv("MATCHBOX_SPARK_CC_EDGE_LIMIT", "1234")
-    assert _driver_cc_edge_limit(spark) == 1234
+
+    opened = []
+    real_open = builtins.open
+
+    def tracking_open(file, *args, **kwargs):
+        opened.append(str(file))
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", tracking_open)
+    assert _driver_cc_edge_limit(spark) == derived
+    assert "/proc/meminfo" not in opened
 
 
 def test_numpy_cc_matches_dict_union_find():
@@ -165,3 +204,19 @@ def test_numpy_cc_matches_dict_union_find():
         np.empty(0, np.int64), np.empty(0, np.int64)
     )
     assert len(nodes) == 0 and len(comps) == 0
+    # tiny and edge-case inputs: a single edge, a lone self-loop, duplicate
+    # edges, negative ids and ids past 32 bits
+    big = 1 << 40
+    for edges in (
+        [(7, 3)],
+        [(5, 5)],
+        [(1, 2), (1, 2), (2, 1), (3, 4), (3, 4)],
+        [(-5, 2), (2, -9), (-1, -1), (-7, 0)],
+        [(big + 3, 1 << 32), (1 << 32, 1), (big, -big)],
+    ):
+        src = np.array([a for a, _ in edges], np.int64)
+        dst = np.array([b for _, b in edges], np.int64)
+        nodes, comps = connected_components_numpy(src, dst)
+        assert dict(zip(nodes.tolist(), comps.tolist())) == (
+            connected_components_driver(edges)
+        )

@@ -3,10 +3,10 @@
 The r13 long-carried decimal-sum fast path takes per-row micros as
 ``floor(x*1e6 + 0.5)`` instead of the round→decimal chain; the two agree
 exactly when x is within float error of a ≤6-dp grid point — true of
-every default-grid call site. tools/verify_sum6.py proves this manually;
-this test enumerates the call sites FROM SOURCE so any NEW `_sum6` query
-is swept automatically, and compares both accumulation paths bitwise
-(``DataFrame.equals`` — exact values, no tolerance) on real testdata.
+every default-grid call site. This test enumerates the call sites FROM
+SOURCE so any NEW `_sum6` query is swept automatically, and compares both
+accumulation paths bitwise (``DataFrame.equals`` — exact values, no
+tolerance) on real testdata, at any SF through ``SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations

@@ -85,9 +85,42 @@ import sys
 _RUNNER = r"""
 import sys, time
 root, sf, n = sys.argv[1], sys.argv[2], int(sys.argv[3])
-sys.path.insert(0, root); sys.path.insert(0, root + "/tools")
-from probe_j7 import run_pipeline
+sys.path.insert(0, root)
+from pyspark.sql import functions as F
+from matchbox_spark.operators.dedupers import NaiveDeduper
+from matchbox_spark.plans.catalog import Catalog
+from matchbox_spark.plans.dag import DAG
+from matchbox_spark.plans.query import QueryConfig, unified_query
+from matchbox_spark.plans.resolvers import Components
 from matchbox_spark.session import get_spark
+from matchbox_spark.sources.source import SourceConfig
+
+def run_pipeline(spark, sf):
+    t0 = time.monotonic()
+    dag = DAG(spark, Catalog(spark))
+    src = SourceConfig(
+        name="cust",
+        location=f"{sf}/customer.parquet",
+        key_field="c_custkey",
+        index_fields=["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
+    )
+    dag.source(src)
+    dag.model(
+        "dedupe",
+        NaiveDeduper(
+            id="id", unique_fields=["cust_c_nationkey", "cust_c_mktsegment"]
+        ),
+        QueryConfig(sources=[src]),
+    )
+    dag.resolver("resolve", Components(method="auto"), model_inputs=["dedupe"])
+    dag.run()
+    ids = unified_query(
+        dag.catalog, dag.resolver_lineage("resolve"), ["cust"], level="key"
+    ).withColumn("custkey", F.col("key").cast("long"))
+    rep = ids.groupBy("id").agg(F.min("custkey").alias("entity_rep"))
+    cnt = ids.join(rep, "id").select("key", "entity_rep").count()
+    return time.monotonic() - t0, cnt
+
 spark = get_spark(master="local[32]", shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 run_pipeline(spark, sf)  # untimed warmup
