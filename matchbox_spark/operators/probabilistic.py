@@ -292,7 +292,6 @@ def _bound_levenshtein(sql: str) -> str:
             pos = m.start() + len(new)
         else:
             pos = j
-    return s
 
 
 def splink_sql_to_spark(sql: str, pair_suffixes: bool = False) -> str:

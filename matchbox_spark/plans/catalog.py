@@ -98,9 +98,23 @@ def _is_driver_resident(df: DataFrame) -> bool:
     return out
 
 
-# Byte budget for the driver source-index kernel, checked against the
-# optimizer's size estimate for the index plan; 0 forces the distributed path.
+# Byte budget for the driver catalog kernels: checked against the optimizer's
+# size estimate for a source index, and against a table's row count when its
+# mirror rebuilds (Catalog.mirror); 0 forces the distributed path.
 _INDEX_DRIVER_BYTES = 256 << 20
+
+
+def _pack_pairs(left, right) -> np.ndarray | None:
+    """``(left << 32) | right`` as uint64 keys, whose integer order is the
+    lexicographic pair order (integer sorts and searches run ~5-10x a
+    structured (l, r) array's); None when an id is outside [0, 2^32)."""
+    l64 = np.asarray(left, dtype="int64")
+    r64 = np.asarray(right, dtype="int64")
+    if len(l64) and (
+        min(l64.min(), r64.min()) < 0 or max(l64.max(), r64.max()) >= 1 << 32
+    ):
+        return None
+    return (l64.astype(np.uint64) << np.uint64(32)) | r64.astype(np.uint64)
 
 
 def _streaming_meta(kind: str) -> dict:
@@ -163,43 +177,9 @@ class Catalog:
         self._assign_temp: DataFrame | None = None
         self._contains_empty = True
         self._clusters_empty = True
-        # Complete driver-side mirror of the clusters table content
-        # (cluster_id → cluster_hash), maintained ONLY while every clusters
-        # mutation went through a driver-local insert (which already holds
-        # the rows it appends). Lets the local resolver insert resolve leaf
-        # hashes and the exists-check by dict lookup — zero Spark jobs —
-        # instead of two broadcast semi-join collects. Any other clusters
-        # mutation (distributed insert, snapshot re-point)
-        # invalidates it to None via _append/_commit/_load; lookups then
-        # fall back to the distributed jobs. Invariant: non-None ⇒ the dict
-        # equals the full clusters table, so a dict miss IS a table miss.
-        # A fresh catalog is empty, so the empty dict IS a complete mirror.
-        self._driver_cluster_hashes: dict[int, bytes] | None = {}
-        # Same contract for contains (root → sorted leaf tuple): complete
-        # while every contains mutation was a driver-local resolver insert.
-        # Lets the local resolver path G4-expand root children driver-side
-        # instead of falling to the distributed hierarchy insert.
-        self._driver_contains: dict[int, tuple[int, ...]] | None = {}
-        # Same contract for cluster_keys, per source step (step → set of
-        # (cluster_id, key) pairs): complete while every cluster_keys
-        # mutation was driver-local. Lets the streaming source-index delta
-        # insert answer its pair-level insert-if-absent anti-join by set
-        # lookup. Non-None ⇒ it covers EVERY step with rows.
-        self._driver_step_keys: dict[str, set] | None = {}
-        # Same contract for resolver claims, per resolver step (step → set
-        # of claimed cluster_ids AS THE VIEW SHOWS THEM, i.e. appends minus
-        # tombstones): complete while every resolver_clusters mutation was
-        # driver-local. Lets the streaming merge delta answer its claim
-        # anti-join and lets _touched_star_edges rebuild prior assignments
-        # driver-side.
-        self._driver_rc: dict[str, set] | None = {}
-        # Same contract for model edges, per model step (step → SORTED
-        # structured numpy array of (left_id, right_id) pairs): complete
-        # while every model_edges mutation was driver-local. Lets the
-        # streaming edge delta insert answer its pair-level anti-join with
-        # one vectorized searchsorted. Size-capped by the driver CC edge
-        # budget — an over-cap step invalidates the dict.
-        self._driver_step_edges: dict | None = {}
+        # table name → driver copy of the table, or None for a refused
+        # rebuild: a cache of the table, see mirror()
+        self._mirrors: dict[str, object] = {}
         # step values known to have rows, per step-keyed table — lets inserts
         # take the pure-append path instead of a filter-rewrite. A catalog
         # loaded from disk can't know, so it pessimistically rewrites.
@@ -505,11 +485,6 @@ class Catalog:
         cat._max_id = int(row["m"] or 0)
         cat._clusters_empty = int(row["n"]) == 0
         cat._contains_empty = cat.contains.limit(1).isEmpty()
-        cat._driver_cluster_hashes = None  # disk content: mirrors unknown
-        cat._driver_contains = None
-        cat._driver_step_keys = None
-        cat._driver_rc = None
-        cat._driver_step_edges = None
         cat._loaded_from_disk = True
         return cat
 
@@ -570,11 +545,6 @@ class Catalog:
         self._max_id = int(row["m"] or 0)
         self._clusters_empty = int(row["n"]) == 0
         self._contains_empty = self.contains.limit(1).isEmpty()
-        self._driver_cluster_hashes = None  # disk content: mirrors unknown
-        self._driver_contains = None
-        self._driver_step_keys = None
-        self._driver_rc = None
-        self._driver_step_edges = None
         self._loaded_from_disk = True
 
     # -- helpers -------------------------------------------------------------
@@ -617,20 +587,8 @@ class Catalog:
         compacted base, under the old _COMPACT_WIDTH bound in practice
         (the bound remains as a backstop for pathological weight states).
         """
-        if name == "clusters":
-            # blanket invalidation of the driver clusters mirror:
-            # _cluster_ids_local re-sets/extends it right after its own
-            # append (it holds the appended rows), every other mutator
-            # drops it here so no path can forget
-            self._driver_cluster_hashes = None
-        elif name == "contains":
-            self._driver_contains = None  # same contract
-        elif name == "cluster_keys":
-            self._driver_step_keys = None  # same contract
-        elif name == "resolver_clusters":
-            self._driver_rc = None  # same contract
-        elif name == "model_edges":
-            self._driver_step_edges = None  # same contract
+        if self._mirrors.get(name) is not None:
+            del self._mirrors[name]  # stale; a refusal stands, appends only grow
         if not materialised and not _is_driver_resident(delta):
             # driver-resident deltas have no lineage worth truncating, and
             # checkpointing would throw away their exact size estimate
@@ -679,16 +637,7 @@ class Catalog:
         Append paths should use ``_append``; this exists for the rare
         filter-out-a-step mutations and external callers (streaming merge).
         """
-        if name == "clusters":
-            self._driver_cluster_hashes = None  # see _append
-        elif name == "contains":
-            self._driver_contains = None
-        elif name == "cluster_keys":
-            self._driver_step_keys = None
-        elif name == "resolver_clusters":
-            self._driver_rc = None
-        elif name == "model_edges":
-            self._driver_step_edges = None
+        self._mirrors.pop(name, None)  # the table may shrink: forget refusals too
         self._parts[name] = [self._ckpt(df, eager=False)]
         self._part_weights[name] = [1 << 30]  # fully-compacted run
 
@@ -725,6 +674,92 @@ class Catalog:
             },
             _RESOLVER,
         )
+
+    def mirror(self, *names: str, rebuild: bool = True) -> tuple | None:
+        """Driver copies of the tables ``names``, all of them or None.
+
+        A mirror is a cache of its table. ``_append`` and ``_commit`` drop
+        the table's entry, and a fresh, loaded or reopened catalog has
+        none. A miss rebuilds the copy with one collect when the table fits
+        :data:`_INDEX_DRIVER_BYTES` (0: never), sized at its row count —
+        ``_max_id`` for ``clusters`` (ids are dense from 1), one count job
+        otherwise; ``model_edges`` must also fit the driver CC edge cap and
+        hold ids below 2^32. A refusal is remembered (a None entry) until
+        the table can shrink — appends only grow it, so only ``_commit`` or
+        a reload clears it. Every size is checked before anything is
+        collected, so a call that returns None collects nothing.
+        ``rebuild=False`` builds only copies that cost no job (tables known
+        empty): for kernels that merely append rows they hold. Such a
+        kernel updates the copy in place and puts it back right after its
+        own append.
+
+        Copies: ``clusters`` cluster_id → cluster_hash; ``contains`` root →
+        sorted leaf tuple; ``cluster_keys`` source → {(cluster_id, key)};
+        ``resolver_clusters`` step → {cluster_id} as the view shows them
+        (appends minus tombstones), with an entry for every resolver step;
+        ``model_edges`` step → sorted :func:`_pack_pairs` keys."""
+        from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
+
+        if _INDEX_DRIVER_BYTES <= 0 or any(
+            n in self._mirrors and self._mirrors[n] is None for n in names
+        ):
+            return None
+        rows: dict[str, int | None] = {}  # per missing copy; None: unknown
+        for n in names:
+            if n not in self._mirrors:
+                empty = not self._parts[n] or (n == "contains" and self._contains_empty)
+                rows[n] = self._max_id if n == "clusters" else 0 if empty else None
+        if not rebuild and any(r != 0 for r in rows.values()):
+            return None
+        frames = {
+            n: self.resolver_clusters if n == "resolver_clusters" else self._table(n)
+            for n in rows
+        }
+        for n in sorted(rows, key=lambda n: rows[n] is None):  # free sizes first
+            if rows[n] is None:  # one job: an RDD count has no exchange stage
+                rows[n] = frames[n]._jdf.queryExecution().toRdd().count()
+            row_bytes = 8 + frames[n]._jdf.schema().defaultSize()
+            if rows[n] * row_bytes > _INDEX_DRIVER_BYTES or (
+                n == "model_edges" and rows[n] > _driver_cc_edge_limit(self.spark)
+            ):
+                self._mirrors[n] = None
+                return None
+        for n in rows:
+            pdf = frames[n].toPandas() if rows[n] else None
+            self._mirrors[n] = self._copy_of(n, pdf)
+        copies = tuple(self._mirrors[n] for n in names)
+        return None if any(c is None for c in copies) else copies
+
+    def _copy_of(self, name: str, pdf):
+        """The driver copy of table ``name`` from its collected rows
+        (``pdf`` None: the table is empty); None when ``model_edges`` holds
+        an id :func:`_pack_pairs` refuses."""
+        # by name: a reopened table reads its partition column last
+        names = [f.split()[0] for f in _SCHEMAS[name].split(", ")]
+        cols = [] if pdf is None else [pdf[c].tolist() for c in names]
+        rows = list(zip(*cols))
+        out: dict = {}
+        if name == "clusters":
+            return {i: bytes(h) for i, h in rows}
+        if name == "contains":
+            for root, leaf in sorted(rows):
+                out.setdefault(root, []).append(leaf)
+            return {root: tuple(leaves) for root, leaves in out.items()}
+        if name == "model_edges":
+            for step, group in () if pdf is None else pdf.groupby("step"):
+                packed = _pack_pairs(group["left_id"], group["right_id"])
+                if packed is None:
+                    return None
+                out[step] = np.unique(packed)
+            return out
+        if name == "resolver_clusters":
+            out = {s: set() for s, m in self.steps.items() if m["type"] == "resolver"}
+            for step, cid in rows:
+                out.setdefault(step, set()).add(cid)
+            return out
+        for cid, source, key in rows:  # cluster_keys
+            out.setdefault(source, set()).add((cid, key))
+        return out
 
     # Digest-prefix bucket: the first two bytes of a hash digest are uniform,
     # so fixed-width buckets on them give balanced ORDERED ranges with zero
@@ -805,8 +840,8 @@ class Catalog:
         what ``dense_index`` over digest-prefix buckets and per-bucket
         BinaryType windows gives the distributed paths. Their rows append
         to ``clusters`` as one LocalRelation (no job) and extend the
-        mirror, which stays complete across the append."""
-        cmirror = self._driver_cluster_hashes
+        mirror, which the caller got from :meth:`mirror`."""
+        cmirror = self._mirrors["clusters"]
         want = set(hashes)
         id_of = {h: i for i, h in cmirror.items() if h in want}
         new = sorted(want.difference(id_of))
@@ -824,10 +859,10 @@ class Catalog:
                 materialised=True,
             )
             cmirror.update(zip(minted, new))
+            self._mirrors["clusters"] = cmirror
             id_of.update(zip(new, minted))
             self._max_id += len(new)
             self._clusters_empty = False
-        self._driver_cluster_hashes = cmirror
         return id_of
 
     def _fingerprint_gate(self, step: str, fingerprint: bytes) -> bool:
@@ -1027,20 +1062,16 @@ class Catalog:
         LocalRelations (no jobs), which also lets every downstream join
         against ``clusters``/``cluster_keys`` broadcast.
 
-        Returns None, having done nothing, when a mirror it needs is dead
-        or the optimizer's size estimate for ``index`` exceeds
-        :data:`_INDEX_DRIVER_BYTES` (256 MB) — the estimate is read
-        driver-side, so the decision costs no job and a 100 TB index never
-        collects.
+        Returns None, having done nothing, when the optimizer's size
+        estimate for ``index`` exceeds :data:`_INDEX_DRIVER_BYTES` (256 MB)
+        — the estimate is read driver-side, so the decision costs no job
+        and a 100 TB index never collects — or when :meth:`mirror` has no
+        copy of a table it needs (``clusters``; ``cluster_keys`` in merge
+        mode).
         Otherwise returns the collected index as pandas, with its
         ``cluster_id`` column unless the fingerprint gate skipped the step;
         in merge mode the extra columns of ``index`` (e.g. per-hash
         blocking values) ride along."""
-        limit = _INDEX_DRIVER_BYTES
-        cmirror = self._driver_cluster_hashes
-        skmirror = self._driver_step_keys
-        if limit <= 0 or cmirror is None or (merge and skmirror is None):
-            return None
         if not merge and self._step_has_rows("cluster_keys", "source", step):
             return None
         try:
@@ -1049,8 +1080,11 @@ class Catalog:
             )
         except Exception:  # noqa: BLE001 — estimation only; general path
             return None
-        if est > limit:
+        need = ("clusters", "cluster_keys") if merge else ("clusters",)
+        if est > _INDEX_DRIVER_BYTES or self.mirror(*need) is None:
             return None
+        # bulk mode only appends keys it holds: it keeps a copy that exists
+        kcopy = self.mirror("cluster_keys", rebuild=merge)
 
         rest = [c for c in index.columns if c != "hash"] if merge else ["keys"]
         index = index.select(F.col("hash").alias("cluster_hash"), *rest)
@@ -1070,7 +1104,7 @@ class Catalog:
 
         hash_bytes = [bytes(b) for b in pdf["cluster_hash"]]
         id_of = self._cluster_ids_local(hash_bytes)
-        seen = skmirror.setdefault(step, set()) if merge else set()
+        seen = kcopy[0].setdefault(step, set()) if merge else set()
         key_ids: list[int] = []
         key_vals: list = []
         for hb, keys in zip(hash_bytes, pdf["keys"].tolist()):
@@ -1092,12 +1126,10 @@ class Catalog:
                 ),
                 materialised=True,
             )
-        if skmirror is not None:
-            # the append invalidated the keys mirror; the step's pair set
-            # grew by exactly the appended rows, so it is complete again
+        if kcopy is not None:  # the step's pairs grew by the appended rows
             seen.update(zip(key_ids, key_vals))
-            skmirror[step] = seen
-            self._driver_step_keys = skmirror
+            kcopy[0][step] = seen
+            self._mirrors["cluster_keys"] = kcopy[0]
         self._step_rows["cluster_keys"].add(step)
         self.steps[step] = meta
         pdf["cluster_id"] = [id_of[h] for h in hash_bytes]
@@ -1112,7 +1144,7 @@ class Catalog:
         blocking values — ride along). The streaming delta-pair path
         (optimization r14) consumes the mapping to maintain its driver
         block map without any further jobs. Returns None whenever the
-        kernel cannot run (dead mirror / over-budget delta); the caller
+        kernel cannot run (no table copy / over-budget delta); the caller
         must then fall back to :meth:`insert_source_index_delta`, which
         re-checks the cheap gates and takes the distributed branch.
         """
@@ -1184,63 +1216,29 @@ class Catalog:
 
         Driver fast path (optimization r13): when the edges are already
         driver-resident (the streaming delta-link collects each batch's
-        edge set under the CC driver budget anyway) and the per-step edge
-        mirror is live, the pair anti-join is a set lookup and the append
-        a LocalRelation — zero extra jobs. The mirror is capped by the
-        same budget; a step outgrowing it invalidates the mirror BEFORE
-        mutating, so this batch and all later ones take the distributed
-        branch below.
+        edge set under the CC driver budget anyway) and :meth:`mirror` has
+        a copy of ``model_edges``, the pair anti-join is one vectorized
+        search of the step's sorted pair keys and the append a
+        LocalRelation — zero extra jobs. The copy is capped by the same
+        budget and holds ids below 2^32; a step outgrowing the cap or a
+        batch with a larger id refuses the copy BEFORE mutating, so this
+        batch and later ones take the distributed branch below until the
+        table can shrink.
         """
         epdf = getattr(edges, "_mb_local_pdf", None)
-        emirror = self._driver_step_edges
-        if epdf is not None and emirror is not None:
+        got = None if epdf is None else self.mirror("model_edges")
+        if got is not None:
             from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
 
-            # the mirror is a SORTED array of packed uint64 pair keys
-            # ((l << 32) | r) per step while every id fits 32 bits —
-            # integer sorts/searches run ~5-10x the structured void-dtype
-            # buffer compares np.unique/searchsorted pay on an (l, r)
-            # record array (measured 1.7 s of an st7 run at sf0.1, r14).
-            # Ids past 32 bits fall back to the structured dtype; the
-            # lexicographic (l, r) order and the packed-key order agree,
-            # so both representations answer membership identically.
+            emirror = got[0]
             acc = emirror.get(step)
             n_acc = 0 if acc is None else len(acc)
-            if n_acc + len(epdf) > _driver_cc_edge_limit(self.spark):
-                self._driver_step_edges = None
+            pairs = _pack_pairs(epdf["left_id"], epdf["right_id"])
+            if pairs is None or n_acc + len(pairs) > _driver_cc_edge_limit(self.spark):
+                self._mirrors["model_edges"] = None  # refused: 64-bit id or over cap
             else:
-                l64 = epdf["left_id"].to_numpy(dtype="int64")
-                r64 = epdf["right_id"].to_numpy(dtype="int64")
-                packable = len(l64) == 0 or (
-                    l64.min(initial=0) >= 0
-                    and r64.min(initial=0) >= 0
-                    and l64.max(initial=0) < (1 << 32)
-                    and r64.max(initial=0) < (1 << 32)
-                )
-                if acc is not None and acc.dtype == np.uint64 and not packable:
-                    # unpack the mirror once: ids outgrew 32 bits mid-step
-                    acc = np.empty(
-                        n_acc, dtype=np.dtype([("l", "<i8"), ("r", "<i8")])
-                    )
-                    acc["l"] = (emirror[step] >> np.uint64(32)).astype("int64")
-                    acc["r"] = (
-                        emirror[step] & np.uint64(0xFFFFFFFF)
-                    ).astype("int64")
-                    emirror[step] = acc
-                if packable and (acc is None or acc.dtype == np.uint64):
-                    pairs = (l64.astype(np.uint64) << np.uint64(32)) | r64.astype(
-                        np.uint64
-                    )
-                else:
-                    pairs = np.empty(
-                        len(epdf), dtype=np.dtype([("l", "<i8"), ("r", "<i8")])
-                    )
-                    pairs["l"] = l64
-                    pairs["r"] = r64
                 if n_acc:
-                    pos = np.minimum(
-                        np.searchsorted(acc, pairs), n_acc - 1
-                    )
+                    pos = np.minimum(np.searchsorted(acc, pairs), n_acc - 1)
                     keep = np.nonzero(acc[pos] != pairs)[0]
                 else:
                     keep = np.arange(len(pairs))
@@ -1256,24 +1254,17 @@ class Catalog:
                         _EDGES,
                     )
                     self._append("model_edges", delta, materialised=True)
-                    # merge the sorted delta into the sorted mirror in one
+                    # merge the sorted delta into the sorted copy in one
                     # O(acc + delta) pass: np.unique(concatenate) re-sorted
                     # the FULL accumulated edge array every micro-batch
                     # (O(E log E) — optimization r14). `add` is disjoint
                     # from `acc` by the keep filter, so the insert is the
                     # exact merge.
                     add = np.unique(pairs[keep])
-                    if n_acc:
-                        merged = np.insert(
-                            acc, np.searchsorted(acc, add), add
-                        )
-                    else:
-                        merged = add
-                    emirror[step] = merged
-                # the append invalidated the mirror; the step entry was
-                # merged with exactly the appended delta, so it is
-                # complete (and sorted) again
-                self._driver_step_edges = emirror
+                    emirror[step] = (
+                        np.insert(acc, np.searchsorted(acc, add), add) if n_acc else add
+                    )
+                    self._mirrors["model_edges"] = emirror
                 self._step_rows["model_edges"].add(step)
                 self.steps[step] = _streaming_meta("model")
                 return
@@ -1397,22 +1388,19 @@ class Catalog:
 
         Driver path: when the resolver's auto probe already ran union-find
         on the driver (``assignments`` is a LocalRelation), the fingerprint
-        is precomputed and the whole hierarchy so far is driver-mirrored,
+        is precomputed and :meth:`mirror` has copies of ``clusters`` and
+        ``contains`` (rebuilt if they fit its budget),
         :meth:`_hierarchy_insert_local` content-addresses with ZERO Spark
-        jobs instead of ~18 serial AQE stage-jobs of distributed groupBys —
-        the j7 serial-action floor VERDICT r10 flagged. Scale-safe by
-        construction: the data volume is bounded by the resolver's own
-        driver-path decision, and the mirrors exist only while every prior
-        mutation was itself driver-local. :meth:`_hierarchy_insert` stays
-        the general case.
+        jobs beyond any rebuild, instead of ~18 serial AQE stage-jobs of
+        distributed groupBys — the j7 serial-action floor VERDICT r10
+        flagged. Scale-safe by construction: the assignments are bounded by
+        the resolver's own driver-path decision and the copies by the
+        catalog's budget. :meth:`_hierarchy_insert` stays the general case.
         """
         self._release_assign_temp()  # deferred from a prior lazy assignment
         apdf = getattr(assignments, "_mb_local_pdf", None)
-        local = (
-            fingerprint is not None
-            and self._driver_contains is not None
-            and self._driver_cluster_hashes is not None
-            and (apdf is not None or _is_local_plan(assignments))
+        local = fingerprint is not None and (
+            apdf is not None or _is_local_plan(assignments)
         )
         if not local:
             # caches (not checkpoints): reused by several derivations below,
@@ -1435,7 +1423,9 @@ class Catalog:
         if skip:
             assignments.unpersist()
             return
-
+        # the copies rebuild only for a step the gate lets through
+        if local and self.mirror("clusters", "contains") is None:
+            local, assignments = False, assignments.persist()
         if local:
             if apdf is None:
                 apdf = assignments.toPandas()  # LocalRelation: Arrow, driver-side
@@ -1447,22 +1437,20 @@ class Catalog:
                 .select(F.lit(step).alias("step"), F.col("root").alias("cluster_id"))
                 .dropDuplicates()
             )
-        rcmirror = self._driver_rc
+        # the driver path only appends claims it holds: keep a copy current
+        rccopy = self.mirror("resolver_clusters", rebuild=False) if local else None
         if self._step_has_rows("resolver_clusters", "step", step):
             self._commit_resolver_clusters(
                 self.resolver_clusters.where(F.col("step") != step).unionByName(rc)
             )
         elif not local or claims:
             self._append("resolver_clusters", rc, materialised=local)
-        if local and rcmirror is not None:
-            # re-establish the claim mirror after the mutation (which
-            # blanket-invalidates): the step's claims are exactly
-            # ``claims`` — an all-singleton step registers an empty set, so
-            # resolver_assignments stays on the mirror-native path — and
-            # every other step's VIEW content is unchanged (folded-in
-            # tombstones were already subtracted from it)
-            rcmirror[step] = set(claims)
-            self._driver_rc = rcmirror
+        if rccopy is not None:
+            # the step's claims are exactly ``claims`` — an all-singleton
+            # step registers an empty set, so resolver_assignments stays on
+            # the copy — and every other step's view content is unchanged
+            rccopy[0][step] = set(claims)
+            self._mirrors["resolver_clusters"] = rccopy[0]
         self._step_rows["resolver_clusters"].add(step)
         self.steps[step] = {
             "type": "resolver",
@@ -1587,9 +1575,10 @@ class Catalog:
         return batch_contains
 
     def _hierarchy_insert_local(self, apdf) -> list[tuple[int, int]]:
-        """Driver twin of :meth:`_hierarchy_insert` over the complete
-        contains and clusters mirrors, for assignments the driver
-        union-find produced (``apdf``: pandas ``parent_id, child_id``):
+        """Driver twin of :meth:`_hierarchy_insert` over the ``contains``
+        and ``clusters`` copies the caller got from :meth:`mirror`, for
+        assignments the driver union-find produced (``apdf``: pandas
+        ``parent_id, child_id``):
         ZERO Spark jobs where the distributed core runs its expansion, hash
         and anti-join stages. The appends are LocalRelations.
 
@@ -1604,8 +1593,8 @@ class Catalog:
         rows are already present and identical by content addressing.
         Returns the batch's sorted ``(root, leaf)`` rows, root != leaf,
         pre-existing roots included."""
-        kmirror = self._driver_contains
-        cmirror = self._driver_cluster_hashes
+        kmirror = self._mirrors["contains"]
+        cmirror = self._mirrors["clusters"]
         parents: dict[int, set[int]] = {}
         for p, c in zip(apdf["parent_id"].tolist(), apdf["child_id"].tolist()):
             parents.setdefault(int(p), set()).add(int(c))
@@ -1640,13 +1629,12 @@ class Catalog:
                 self._local_df({"root": rows[:, 0], "leaf": rows[:, 1]}, _CONTAINS),
                 materialised=True,
             )
-            # keep the contains mirror complete across the append it just
-            # invalidated; the rows are sorted, so each root's leaves are too
+            # the rows are sorted, so each root's leaves are too
             per_root: dict[int, list[int]] = {}
             for r, leaf in contains_rows:
                 per_root.setdefault(r, []).append(leaf)
             kmirror.update((r, tuple(ls)) for r, ls in per_root.items())
-            self._driver_contains = kmirror
+            self._mirrors["contains"] = kmirror
             self._contains_empty = False
         return batch_rows
 
@@ -1680,18 +1668,15 @@ class Catalog:
         """
         apdf = getattr(assignments, "_mb_local_pdf", None)
         rpdf = getattr(candidate_roots, "_mb_local_pdf", None)
-        rcmirror = self._driver_rc
         # driver path (optimization r13): with the driver CC escape the
         # assignments and candidate roots are already on the driver, and the
-        # mirrors hold what the distributed path's three eager checkpoints
-        # per micro-batch re-derive — ZERO Spark jobs, same outcome
-        local = (
-            apdf is not None
-            and (candidate_roots is None or rpdf is not None)
-            and self._driver_cluster_hashes is not None
-            and self._driver_contains is not None
-            and rcmirror is not None
-        )
+        # table copies hold what the distributed path's three eager
+        # checkpoints per micro-batch re-derive — ZERO Spark jobs, same outcome
+        got = None
+        if apdf is not None and (candidate_roots is None or rpdf is not None):
+            got = self.mirror("clusters", "contains", "resolver_clusters")
+        local = got is not None
+        rcmirror = got[2] if local else None
         if local:
             quiet = apdf.empty
         else:
@@ -1707,15 +1692,14 @@ class Catalog:
             # limit-1 job replaces the full hierarchy insert + three eager
             # checkpoints of empty frames, and the delta ledgers do not grow
             # an empty entry per idle micro-batch. The step still registers
-            # in the claim mirror, so a quiet FIRST batch keeps it
-            # mirror-native.
+            # in the claim copy, so a quiet FIRST batch keeps it on the copy.
             if rcmirror is not None:
                 rcmirror.setdefault(step, set())
             self.steps[step] = _streaming_meta("resolver")
             return
         retired = None
         if local:
-            # the claim mirror tracks the VIEW (appends minus tombstones),
+            # the claim copy tracks the VIEW (appends minus tombstones),
             # so the claim anti-join and the retirement are set algebra
             formed = {r for r, _ in self._hierarchy_insert_local(apdf)}
             stepset = rcmirror.setdefault(step, set())
@@ -1771,12 +1755,10 @@ class Catalog:
             if len(self._rc_tombstones) > _COMPACT_WIDTH:
                 # ≥ 2^12 retirement batches of tiered runs — effectively a
                 # backstop; save() folds tombstones into the base anyway.
-                # The view's content — hence the claim mirror — is unchanged
+                # The view's content — hence the claim copy — is unchanged
                 self._commit_resolver_clusters(self.resolver_clusters)
-        if local:
-            # the mutations blanket-invalidated the claim mirror; its step
-            # entry moved by exactly the appended and retired claims
-            self._driver_rc = rcmirror
+        if local:  # the step entry moved by the appended and retired claims
+            self._mirrors["resolver_clusters"] = rcmirror
         self.steps[step] = _streaming_meta("resolver")
 
     # -- admin ---------------------------------------------------------------

@@ -65,10 +65,12 @@ def resolver_assignments(catalog: Catalog, resolver_step: str) -> DataFrame:
     j7b lineage query).
 
     Mirror-native path (optimization r13, guide §1.2 "the distributed
-    algorithm"): while the catalog's claim + contains mirrors are live
-    (every resolver/contains mutation so far was driver-local), the map
-    IS {(leaf, root) : root ∈ claims[step], leaf ∈ contains[root]} — so
-    it uploads as ONE LocalRelation instead of a contains⋈claims join.
+    algorithm"): when ``Catalog.mirror`` holds driver copies of the claims
+    and ``contains``, the map IS {(leaf, root) : root ∈ claims[step], leaf ∈
+    contains[root]} — so it uploads as ONE LocalRelation instead of a
+    contains⋈claims join. A query reads the copies the catalog's kernels
+    keep but does not rebuild them: a rebuild is a count and a collect per
+    table, which a read-only catalog would pay per open.
     This is not only cheaper, it avoids a quadratic plan blow-up the
     join shape hits on deep lineages: Catalyst pushes the broadcast
     LeftSemi below the contains part-Union, so a d-level catalog's
@@ -78,16 +80,12 @@ def resolver_assignments(catalog: Catalog, resolver_step: str) -> DataFrame:
     an 8 GB heap OOM at 65,536 keys — vs 3/level for the pre-mirror
     sort-merge shape, whose single shuffle stayed ABOVE the union). The
     LocalRelation path is O(1) scans per level with no join at all.
-    Identical rows by mirror completeness; a dead mirror (distributed or
-    disk-loaded catalog) or a fan-out above the row cap falls through to
-    the join, so warehouse-scale catalogs are untouched."""
-    rcmirror = getattr(catalog, "_driver_rc", None)
-    kmirror = getattr(catalog, "_driver_contains", None)
-    if (
-        rcmirror is not None
-        and kmirror is not None
-        and resolver_step in rcmirror
-    ):
+    Identical rows, since a copy equals its table; tables over the
+    catalog's budget or a fan-out above the row cap fall through to the
+    join, so warehouse-scale catalogs are untouched."""
+    copies = catalog.mirror("resolver_clusters", "contains", rebuild=False)
+    if copies is not None and resolver_step in copies[0]:
+        rcmirror, kmirror = copies
         rc_set = rcmirror[resolver_step]
         total = sum(len(kmirror.get(r, ())) for r in rc_set)
         if total <= 5_000_000:

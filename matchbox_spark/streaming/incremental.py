@@ -243,30 +243,32 @@ def _touched_star_edges(
     retirement candidates after the merge) — or ``(None, None)`` before the
     step first exists.
 
-    Per-batch cost: on the driver path (live claim + contains mirrors) no
-    Spark job beyond the bounded leaf collect (none when the caller
-    attaches the leaves), but Python work proportional to the claim and
-    contains mirrors — every claimed root of the step is sorted and its
+    Per-batch cost: on the driver path (the catalog's claim and contains
+    copies) no Spark job beyond the bounded leaf collect (none when the
+    caller attaches the leaves), but Python work proportional to the
+    claims and contains — every claimed root of the step is sorted and its
     leaves scanned each batch. On the distributed path, one semi-join over
     the assignment map plus O(touched members) star rows.
     """
     if resolver_step not in catalog.steps:
         return None, None
 
-    # Driver fast path (optimization r13): while the catalog's claim +
-    # contains mirrors are live (every resolver mutation so far was
-    # driver-local), the prior assignment map IS {(root, leaf) for root in
-    # claims[step] for leaf in contains_mirror[root]} — so one bounded
+    # Driver fast path (optimization r13): with the catalog's driver copies
+    # of the claims and contains, the prior assignment map IS {(root, leaf)
+    # for root in claims[step] for leaf in contains[root]} — so one bounded
     # collect of the batch-leaf ids (the same size-adaptive budget the CC
     # escape uses; an over-budget blocked superset falls through to the
     # distributed semi-joins) replaces the touched-roots checkpoint job,
     # and the stars + roots upload as LocalRelations that the catalog's
     # merge twin consumes without further jobs. Same semantics row for
     # row: touched = claimed roots whose leaf set intersects the batch
-    # leaves; stars = (min leaf, other leaf) per touched root.
-    rcmirror = getattr(catalog, "_driver_rc", None)
-    kmirror = getattr(catalog, "_driver_contains", None)
-    if rcmirror is not None and kmirror is not None:
+    # leaves; stars = (min leaf, other leaf) per touched root. The copies
+    # are asked for with clusters, as the merge that follows asks: a
+    # refused clusters copy then keeps both distributed, instead of
+    # rebuilding the claims and contains here every batch.
+    copies = catalog.mirror("clusters", "contains", "resolver_clusters")
+    if copies is not None:
+        _, kmirror, rcmirror = copies
         spark = batch_leaves.sparkSession
         limit = _driver_cc_edge_limit(spark)
         # count-then-collect, not limit(n+1).toPandas(): the limit probe
@@ -887,10 +889,11 @@ def incremental_resolve_stream(
             routed = _delta_pair_batch(bidx, contract, pmap, spark)
         if routed is None and route == "pairs":
             # the map misses rows from here on — a resumed run cannot
-            # rebuild it, a dead index twin (mirror invalidated / over
-            # budget) left this batch out, or the batch was over the driver
-            # budget (found BEFORE any map mutation) — so it retires and
-            # this batch and the rest of the run take the fields route
+            # rebuild it, the index twin could not run (no table copy /
+            # over budget) and left this batch out, or the batch was over
+            # the driver budget (found BEFORE any map mutation) — so it
+            # retires and this batch and the rest of the run take the
+            # fields route
             route = "fields"
         if routed is None:
             data = _source_data(

@@ -10,6 +10,10 @@
    expansion) produce a byte-identical catalog to the distributed paths
    on the full multi-source stacked-resolver pipeline shape.
 4. The driver-path inserts submit a pinned number of Spark jobs per call.
+5. The driver mirrors are a cache of their tables: after a distributed
+   step or a reopen they rebuild (equal to their tables) and put the next
+   driver-CC resolver insert back on the driver kernel; an over-budget
+   table is size-checked once.
 """
 
 import pytest
@@ -87,9 +91,11 @@ def test_weighted_linker_rescue_same_pairs(spark):
     assert got == {(k[0], k[1], v) for k, v in exp.items()}
 
 
-def _linked_catalog(spark, sf_dir):
+def _linked_catalog(spark, sf_dir, cat=None, cust_edge_limit=None, link=True):
     """The j7b linked-DAG shape: two sources, per-source dedupe resolvers,
-    a cross-source linker, a stacked top resolver."""
+    a cross-source linker, a stacked top resolver — run on ``cat`` (default
+    a fresh catalog). ``cust_edge_limit`` is the first resolver's public
+    ``driver_edge_limit``; ``link=False`` stops before the linker."""
     from matchbox_spark.operators.dedupers import NaiveDeduper
     from matchbox_spark.operators.linkers import DeterministicLinker
     from matchbox_spark.plans.catalog import Catalog
@@ -98,7 +104,7 @@ def _linked_catalog(spark, sf_dir):
     from matchbox_spark.plans.resolvers import Components
     from matchbox_spark.sources.source import SourceConfig
 
-    dag = DAG(spark, Catalog(spark))
+    dag = DAG(spark, Catalog(spark) if cat is None else cat)
     custx = SourceConfig(
         name="custx",
         location=f"{sf_dir}/customer.parquet",
@@ -120,13 +126,20 @@ def _linked_catalog(spark, sf_dir):
         ),
         QueryConfig(sources=[custx]),
     )
-    dag.resolver("resolve_cust", Components(method="auto"), ["dedupe_cust"])
+    dag.resolver(
+        "resolve_cust",
+        Components(method="auto", driver_edge_limit=cust_edge_limit),
+        ["dedupe_cust"],
+    )
     dag.model(
         "dedupe_supp",
         NaiveDeduper(id="id", unique_fields=["suppx_s_nationkey"]),
         QueryConfig(sources=[suppx]),
     )
     dag.resolver("resolve_supp", Components(method="auto"), ["dedupe_supp"])
+    if not link:
+        dag.run()
+        return dag
     dag.model(
         "link_cs",
         DeterministicLinker(
@@ -147,9 +160,14 @@ def _linked_catalog(spark, sf_dir):
 
 def _catalog_state(cat):
     """Canonical content of every catalog table + step fingerprints."""
+    from matchbox_spark.plans.catalog import _SCHEMAS
+
     state = {"steps": {k: v.get("fingerprint") for k, v in cat.steps.items()}}
     for name in cat._table_names():
-        df = getattr(cat, name)
+        # schema column order: a reopened table reads its partition column last
+        df = getattr(cat, name).select(
+            *[f.split()[0] for f in _SCHEMAS[name].split(", ")]
+        )
         rows = [
             tuple(
                 v.hex() if isinstance(v, (bytes, bytearray)) else v
@@ -167,14 +185,14 @@ def test_local_and_distributed_catalog_paths_byte_identical(
 ):
     # local paths live (default): mirrors survive the whole pipeline
     local_dag = _linked_catalog(spark, sf_dir)
-    assert local_dag.catalog._driver_cluster_hashes is not None
-    assert local_dag.catalog._driver_contains is not None
+    assert local_dag.catalog._mirrors.get("clusters") is not None
+    assert local_dag.catalog._mirrors.get("contains") is not None
     local_state = _catalog_state(local_dag.catalog)
 
     # force every insert through the distributed branches
     force_distributed("index")
     dist_dag = _linked_catalog(spark, sf_dir)
-    assert dist_dag.catalog._driver_cluster_hashes is None
+    assert dist_dag.catalog._mirrors.get("clusters") is None
     dist_state = _catalog_state(dist_dag.catalog)
 
     assert local_state == dist_state
@@ -183,12 +201,12 @@ def test_local_and_distributed_catalog_paths_byte_identical(
 def test_contains_mirror_matches_table(spark, sf_dir):
     dag = _linked_catalog(spark, sf_dir)
     cat = dag.catalog
-    mirror = cat._driver_contains
+    mirror = cat._mirrors["contains"]
     table = {}
     for r in cat.contains.collect():
         table.setdefault(r["root"], []).append(r["leaf"])
     assert mirror == {k: tuple(sorted(v)) for k, v in table.items()}
-    cmirror = cat._driver_cluster_hashes
+    cmirror = cat._mirrors["clusters"]
     rows = {r["cluster_id"]: bytes(r["cluster_hash"]) for r in cat.clusters.collect()}
     assert cmirror == rows
 
@@ -242,13 +260,13 @@ def test_overlapping_hash_insert_local_matches_distributed(
     spark, force_distributed
 ):
     local = _overlap_catalogs(spark)
-    assert local._driver_cluster_hashes is not None  # stayed on the mirror path
+    assert local._mirrors.get("clusters") is not None  # stayed on the mirror path
     local_state = _catalog_state(local)
     assert len(local_state["clusters"]) == 4  # h2/h3 reused, only h4 minted
 
     force_distributed("index")
     dist = _overlap_catalogs(spark)
-    assert dist._driver_cluster_hashes is None
+    assert dist._mirrors.get("clusters") is None
     assert local_state == _catalog_state(dist)
 
 
@@ -268,8 +286,8 @@ def test_overlapping_hash_delta_insert_local_matches_distributed(
         return cat, state, parts
 
     local, local_state, parts = run()
-    assert local._driver_cluster_hashes is not None  # stayed on the mirror path
-    assert local._driver_step_keys is not None
+    assert local._mirrors.get("clusters") is not None  # stayed on the mirror path
+    assert local._mirrors.get("cluster_keys") is not None
     assert {k: len(v) for k, v in local._parts.items()} == parts  # no append
     assert len(local_state["clusters"]) == 5  # h1/h4 reused, only h5 minted
     assert sorted(k for _, s, k in local_state["cluster_keys"] if s == "srcC") == [
@@ -278,7 +296,7 @@ def test_overlapping_hash_delta_insert_local_matches_distributed(
 
     force_distributed("index")
     dist, dist_state, _ = run()
-    assert dist._driver_cluster_hashes is None
+    assert dist._mirrors.get("clusters") is None
     assert local_state == dist_state
 
 
@@ -345,14 +363,14 @@ def test_driver_insert_job_counts(spark, monkeypatch):
     )
     cat = _overlap_catalogs(spark, delta=True)
     apdf = pd.DataFrame(
-        {"parent_id": [1, 1, 2, 2, 2], "child_id": sorted(cat._driver_cluster_hashes)}
+        {"parent_id": [1, 1, 2, 2, 2], "child_id": sorted(cat._mirrors["clusters"])}
     )
     assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
     assigns._mb_local_pdf = apdf  # as the driver union-find attaches it
     cat.insert_resolver_clusters(
         "res", assigns, fingerprint=hashlib.sha256(b"res").digest()
     )
-    assert cat._driver_contains  # the resolver insert stayed driver-side
+    assert cat._mirrors["contains"]  # the resolver insert stayed driver-side
     assert counts() == {
         "insert_source_index": [1, 1],
         "insert_source_index_delta": [1],
@@ -413,10 +431,10 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
     catalog to the distributed loop they replace."""
     local = _delta_stream_catalog(spark, tmp_path, "twin")
     cat = local
-    assert cat._driver_cluster_hashes is not None  # twins stayed live
-    assert cat._driver_step_keys is not None
-    assert cat._driver_rc is not None
-    assert cat._driver_step_edges is not None
+    assert cat._mirrors.get("clusters") is not None  # twins stayed live
+    assert cat._mirrors.get("cluster_keys") is not None
+    assert cat._mirrors.get("resolver_clusters") is not None
+    assert cat._mirrors.get("model_edges") is not None
     local_state = _catalog_state(cat)
 
     # mirror completeness: each mirror equals its table / view
@@ -424,35 +442,31 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
         (r["cluster_id"], r["key"])
         for r in cat.cluster_keys.where(F.col("source") == "s").collect()
     }
-    assert cat._driver_step_keys["s"] == keys_rows
+    assert cat._mirrors["cluster_keys"]["s"] == keys_rows
     rc_rows = {
         r["cluster_id"]
         for r in cat.resolver_clusters.where(
             F.col("step") == "s_resolve"
         ).collect()
     }
-    assert cat._driver_rc["s_resolve"] == rc_rows
+    assert cat._mirrors["resolver_clusters"]["s_resolve"] == rc_rows
     edge_rows = {
         (r["left_id"], r["right_id"])
         for r in cat.model_edges.where(F.col("step") == "s_model").collect()
     }
     import numpy as np
 
-    acc = cat._driver_step_edges["s_model"]
-    if acc.dtype == np.uint64:
-        # r14 mirror format: packed (l << 32) | r keys while ids fit 32 bits
-        mirror_pairs = {
-            (int(v >> np.uint64(32)), int(v & np.uint64(0xFFFFFFFF)))
-            for v in acc
-        }
-    else:
-        mirror_pairs = {(int(p["l"]), int(p["r"])) for p in acc}
+    acc = cat._mirrors["model_edges"]["s_model"]
+    # packed (l << 32) | r keys
+    mirror_pairs = {
+        (int(v >> np.uint64(32)), int(v & np.uint64(0xFFFFFFFF))) for v in acc
+    }
     assert mirror_pairs == edge_rows
 
     # force the legacy distributed loop end to end and compare
     force_distributed("index", "cc")
     dist = _delta_stream_catalog(spark, tmp_path, "dist")
-    assert dist._driver_cluster_hashes is None  # loop went distributed
+    assert dist._mirrors.get("clusters") is None  # loop went distributed
     assert local_state == _catalog_state(dist)
 
 
@@ -472,7 +486,8 @@ def test_streaming_delta_insert_job_counts(spark, tmp_path, monkeypatch):
         ],
     )
     cat = _delta_stream_catalog(spark, tmp_path, "jobs")
-    assert cat._driver_rc is not None  # every batch stayed driver-side
+    # every batch stayed driver-side
+    assert cat._mirrors.get("resolver_clusters") is not None
     assert counts() == {
         "insert_source_index_delta": [],
         "insert_source_index_delta_mapped": [2, 2, 2],
@@ -481,7 +496,9 @@ def test_streaming_delta_insert_job_counts(spark, tmp_path, monkeypatch):
     }
 
 
-def test_resolver_assignments_mirror_path_matches_join(spark, sf_dir):
+def test_resolver_assignments_mirror_path_matches_join(
+    spark, sf_dir, force_distributed
+):
     """The r13 mirror-native resolver_assignments (one LocalRelation built
     from the claim + contains mirrors, replacing the contains⋈claims join
     whose broadcast-semi pushdown below the part-Union went quadratic on
@@ -490,27 +507,217 @@ def test_resolver_assignments_mirror_path_matches_join(spark, sf_dir):
 
     dag = _linked_catalog(spark, sf_dir)
     cat = dag.catalog
-    assert cat._driver_rc is not None
-    nonempty = 0
-    for step in ("resolve_cust", "resolve_supp", "resolve_link"):
+    assert cat._mirrors.get("resolver_clusters") is not None
+    steps = ("resolve_cust", "resolve_supp", "resolve_link")
+    mirror = {}
+    for step in steps:
         # EVERY driver-local insert registers its step — including a
         # legitimately empty one (sf0.001's dedupe_supp yields zero pairs,
         # so resolve_supp claims nothing); an absent key would push the
-        # step onto the join fallback forever (r14 fix, catalog.py
+        # step onto the join fallback (r14 fix, catalog.py
         # insert_resolver_clusters registers the empty claim set)
-        assert step in cat._driver_rc
-        mirror_rows = {
+        assert step in cat._mirrors["resolver_clusters"]
+        mirror[step] = {
             (r.leaf_id, r.root_id)
             for r in resolver_assignments(cat, step).collect()
         }
-        saved = cat._driver_rc
-        cat._driver_rc = None
+    # the join path: no copy, and none rebuilt
+    force_distributed("index")
+    cat._mirrors.pop("resolver_clusters")
+    nonempty = 0
+    for step in steps:
+        mirror_rows = mirror[step]
         join_rows = {
             (r.leaf_id, r.root_id)
             for r in resolver_assignments(cat, step).collect()
         }
-        cat._driver_rc = saved
         assert mirror_rows == join_rows
         nonempty += bool(mirror_rows)
     # the mirror path must be exercised with real rows somewhere
     assert nonempty >= 2
+
+
+@pytest.fixture(scope="module")
+def healed(spark, sf_dir, tmp_path_factory):
+    """Linked catalogs whose driver mirrors must heal, each with the Spark
+    jobs of every ``insert_resolver_clusters`` call of its final run: the
+    first resolver went distributed through the public
+    ``Components(driver_edge_limit=0)``; a saved catalog reopened with
+    ``Catalog(spark, path)``; one reopened with ``Catalog.load_tables``.
+    The reopened ones run the whole DAG again, so their first two resolver
+    steps are fingerprint-skipped and the linker is new."""
+    from matchbox_spark.plans.catalog import Catalog
+
+    tmp = tmp_path_factory.mktemp("healed")
+    db = "mbspark_test_healed"
+    out = {}
+    with pytest.MonkeyPatch.context() as mp:
+        counts = _job_counter(spark, mp, ["insert_resolver_clusters"])
+
+        def run(name, **kw):
+            before = len(counts()["insert_resolver_clusters"])
+            cat = _linked_catalog(spark, sf_dir, **kw).catalog
+            out[name] = (cat, counts()["insert_resolver_clusters"][before:])
+
+        run("distributed_first", cust_edge_limit=0)
+        path = str(tmp / "cat")
+        saved = _linked_catalog(spark, sf_dir, cat=Catalog(spark, path), link=False)
+        saved.catalog.save()
+        run("reopened", cat=Catalog(spark, path))
+        first = _linked_catalog(spark, sf_dir, link=False).catalog
+        first.save_as_tables(db, n_buckets=4, location=str(tmp / "wh"))
+        run("load_tables", cat=Catalog.load_tables(spark, db))
+    yield out
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_healed_mirrors_keep_resolver_inserts_on_driver(
+    spark, sf_dir, healed, force_distributed
+):
+    """After a distributed resolver or a reopen, the next driver-CC
+    resolver insert rebuilds the clusters and contains mirrors (one
+    collect; one count and one collect) and runs the driver kernel, and
+    every catalog ends byte-identical to the all-driver and the
+    all-distributed builds."""
+    driver = _catalog_state(_linked_catalog(spark, sf_dir).catalog)
+    force_distributed("index", "cc")
+    forced = {
+        limit: _catalog_state(
+            _linked_catalog(spark, sf_dir, cust_edge_limit=limit).catalog
+        )
+        for limit in (None, 0)
+    }
+    assert forced[None] == driver
+    for kind, (cat, jobs) in healed.items():
+        # the reopened runs skip both dedupe resolvers on their fingerprint
+        # before inserting; the distributed-first run inserts its first
+        # resolver distributed
+        after = jobs[1:] if kind == "distributed_first" else jobs
+        assert after and all(n <= 3 for n in after), (kind, jobs)
+        state = _catalog_state(cat)
+        # step fingerprints derive from the step config, which the public
+        # driver_edge_limit is part of; the tables do not depend on it
+        assert state == forced[0 if kind == "distributed_first" else None], kind
+        assert {**state, "steps": None} == {**driver, "steps": None}, kind
+
+
+def _assert_mirrors_match_tables(cat):
+    """Every driver copy equals its table: claims as the view shows them
+    (appends minus tombstones), edge keys sorted and unique."""
+    import numpy as np
+
+    clusters, contains, keys, claims, edges = cat.mirror(
+        "clusters", "contains", "cluster_keys", "resolver_clusters", "model_edges"
+    )
+    assert clusters == {
+        r["cluster_id"]: bytes(r["cluster_hash"]) for r in cat.clusters.collect()
+    }
+    leaves = {}
+    for r in cat.contains.collect():
+        leaves.setdefault(r["root"], []).append(r["leaf"])
+    assert contains == {k: tuple(sorted(v)) for k, v in leaves.items()}
+    want = {}
+    for r in cat.cluster_keys.collect():
+        want.setdefault(r["source"], set()).add((r["cluster_id"], r["key"]))
+    assert keys == want
+    want = {s: set() for s, m in cat.steps.items() if m["type"] == "resolver"}
+    for r in cat.resolver_clusters.collect():
+        want[r["step"]].add(r["cluster_id"])
+    assert claims == want
+    want = {}
+    for r in cat.model_edges.collect():
+        want.setdefault(r["step"], set()).add((r["left_id"], r["right_id"]))
+    for acc in edges.values():
+        assert (np.diff(acc.astype("float64")) > 0).all()
+    got = {
+        s: {(int(v >> np.uint64(32)), int(v & np.uint64(0xFFFFFFFF))) for v in acc}
+        for s, acc in edges.items()
+    }
+    assert got == want
+
+
+def test_healed_mirrors_match_tables(spark, tmp_path, healed):
+    """Mirrors rebuilt on a miss equal their tables: on the healed linked
+    catalogs (clusters and contains rebuilt then kept by the driver
+    resolver insert; keys, claims and edges rebuilt here), and on a
+    streaming catalog with retired claims, kept per batch and then
+    rebuilt from scratch."""
+    for cat, _ in healed.values():
+        _assert_mirrors_match_tables(cat)
+    cat = _delta_stream_catalog(spark, tmp_path, "heal")
+    assert cat._rc_tombstones  # the view subtracts retired claims
+    _assert_mirrors_match_tables(cat)
+    cat._mirrors.clear()
+    _assert_mirrors_match_tables(cat)
+
+
+def _local_edges(spark, rows):
+    """Driver-resident scored edges, as the streaming delta-link hands them
+    to ``insert_model_edges_delta``."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "left_id": pd.array([r[0] for r in rows], dtype="int64"),
+            "right_id": pd.array([r[1] for r in rows], dtype="int64"),
+            "score": pd.array([1.0] * len(rows), dtype="float32"),
+        }
+    )
+    df = spark.createDataFrame(pdf, "left_id long, right_id long, score float")
+    df._mb_local_pdf = pdf
+    return df
+
+
+def test_over_budget_table_is_size_checked_once(
+    spark, tmp_path, monkeypatch, force_distributed
+):
+    """A reopened catalog whose tables exceed the driver budget refuses
+    their mirrors and remembers it, so its inserts submit only the jobs of
+    the distributed branches — every reopened catalog's path before
+    mirrors healed — plus one size check. The clusters refusal is read
+    from the id watermark (no job); the edge table is sized by one row
+    count, paid on the first of three edge inserts only."""
+    import hashlib
+
+    import pandas as pd
+
+    from matchbox_spark.plans import catalog as catalog_mod
+    from matchbox_spark.plans.catalog import Catalog
+
+    path = str(tmp_path / "cat")
+    cat = Catalog(spark, path)
+    cat.insert_source_index(
+        "s", _hash_index(spark, [(f"h{i}", [f"k{i}"]) for i in range(200)])
+    )
+    cat.insert_model_edges_delta(
+        "m", _local_edges(spark, [(i, i + 1) for i in range(1, 151)])
+    )
+    cat.save()
+
+    def run():
+        cat = Catalog(spark, path)
+        for b in range(3):
+            cat.insert_source_index_delta(
+                "s", _hash_index(spark, [(f"x{b}", [f"y{b}"]), (f"h{b}", [f"k{b}"])])
+            )
+            apdf = pd.DataFrame(
+                {"parent_id": [1, 1], "child_id": [2 * b + 1, 2 * b + 2]}
+            )
+            assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
+            assigns._mb_local_pdf = apdf
+            cat.insert_resolver_clusters(
+                f"r{b}", assigns, fingerprint=hashlib.sha256(bytes([b])).digest()
+            )
+            cat.insert_model_edges_delta("m", _local_edges(spark, [(b, 300 + b)]))
+        return cat
+
+    # the size checks run inside mirror(), under its own job group
+    counts = _job_counter(spark, monkeypatch, ["mirror"])
+    # above each batch's size estimate, below each table's size
+    monkeypatch.setattr(catalog_mod, "_INDEX_DRIVER_BYTES", 5000)
+    over = run()
+    assert over._mirrors == {"clusters": None, "model_edges": None}
+    checks = counts()["mirror"]
+    assert len(checks) == 9 and sum(checks) == 1
+    force_distributed("index")
+    assert _catalog_state(over) == _catalog_state(run())

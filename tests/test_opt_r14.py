@@ -7,8 +7,8 @@ Each test pins an r14 change's CORRECTNESS contract:
 - exact_cosine_pairs' BNLJ condition no longer contains the similarity
   fold (the r13 passenger column was column-pruned away; the r14
   nondeterministic wrapper survives optimization);
-- the packed-uint64 edge mirror answers membership identically to the
-  structured representation across batches;
+- the packed-uint64 edge mirror answers membership across batches, and an
+  id past 32 bits drops it for the distributed branch;
 - the streaming delta-pair map path honours max_group_size exactly like
   the distributed blocked-superset branch (stop emitting the moment the
   accumulated group crosses the cap; earlier pairs persist).
@@ -90,7 +90,8 @@ def test_exact_cosine_pairs_condition_has_no_fold(spark):
 
 def test_edge_mirror_packed_matches_structured(spark, tmp_path):
     """insert_model_edges_delta's packed-uint64 mirror must anti-join
-    replayed pairs exactly like the structured representation."""
+    replayed pairs exactly; an id past 32 bits drops the mirror, and the
+    distributed branch keeps answering the same way."""
     import numpy as np
     import pandas as pd
 
@@ -113,7 +114,7 @@ def test_edge_mirror_packed_matches_structured(spark, tmp_path):
         return df
 
     cat.insert_model_edges_delta("m", edges([(1, 2), (3, 4)]))
-    acc = cat._driver_step_edges["m"]
+    acc = cat._mirrors["model_edges"]["m"]
     assert acc.dtype == np.uint64  # small ids pack
     # replay + one new pair: only the new pair appends
     cat.insert_model_edges_delta("m", edges([(1, 2), (5, 6)]))
@@ -122,17 +123,16 @@ def test_edge_mirror_packed_matches_structured(spark, tmp_path):
         for r in cat.model_edges.where(F.col("step") == "m").collect()
     }
     assert got == {(1, 2), (3, 4), (5, 6)}
-    # an id past 32 bits unpacks the mirror and keeps answering correctly
+    # an id past 32 bits drops the mirror and keeps answering correctly
     big = 1 << 40
     cat.insert_model_edges_delta("m", edges([(big, big + 1), (1, 2)]))
-    acc = cat._driver_step_edges["m"]
-    assert acc.dtype != np.uint64
+    assert cat._mirrors.get("model_edges") is None
     got = {
         (r["left_id"], r["right_id"])
         for r in cat.model_edges.where(F.col("step") == "m").collect()
     }
     assert got == {(1, 2), (3, 4), (5, 6), (big, big + 1)}
-    # replay after the unpack still appends nothing
+    # replay after the drop still appends nothing
     cat.insert_model_edges_delta("m", edges([(big, big + 1), (3, 4)]))
     assert (
         cat.model_edges.where(F.col("step") == "m").count() == 4
