@@ -848,7 +848,7 @@ def _flagship_dag(spark, sf):
         NaiveDeduper(id="id", unique_fields=["cust_c_nationkey", "cust_c_mktsegment"]),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="auto"), model_inputs=["dedupe"])
+    dag.resolver("resolve", Components(), model_inputs=["dedupe"])
     dag.run()
     dag._flagship_src = src
     _FLAGSHIP_CACHE[key] = dag
@@ -960,13 +960,13 @@ def _linked_dag(spark, sf):
         ),
         QueryConfig(sources=[custx]),
     )
-    dag.resolver("resolve_cust", Components(method="auto"), ["dedupe_cust"])
+    dag.resolver("resolve_cust", Components(), ["dedupe_cust"])
     dag.model(
         "dedupe_supp",
         NaiveDeduper(id="id", unique_fields=["suppx_s_nationkey"]),
         QueryConfig(sources=[suppx]),
     )
-    dag.resolver("resolve_supp", Components(method="auto"), ["dedupe_supp"])
+    dag.resolver("resolve_supp", Components(), ["dedupe_supp"])
     # cross-source link over RESOLVED entities: BUILDING-segment customer
     # entities join supplier entities of the same nation, so only some
     # keys are re-resolved at the top level — the rest must fall through
@@ -983,7 +983,7 @@ def _linked_dag(spark, sf):
         QueryConfig(sources=[custx], resolvers=["resolve_cust"]),
         QueryConfig(sources=[suppx], resolvers=["resolve_supp"]),
     )
-    dag.resolver("resolve_link", Components(method="auto"), ["link_cs"])
+    dag.resolver("resolve_link", Components(), ["link_cs"])
     dag.run()
     _FLAGSHIP_CACHE[key] = dag
     return dag
@@ -3188,7 +3188,7 @@ def _collection_fixture(spark, sf):
         dag.model(
             "dedupe", ND(id="id", unique_fields=fields), QueryConfig(sources=[src])
         )
-        dag.resolver("resolve", Components(method="auto"), model_inputs=["dedupe"])
+        dag.resolver("resolve", Components(), model_inputs=["dedupe"])
         dag.run()
 
     store = CollectionStore(spark)
@@ -3829,7 +3829,7 @@ def st7_incremental_resolve(spark, sf):
         model=NaiveDeduper(
             id="id", unique_fields=["cust_c_nationkey", "cust_c_mktsegment"]
         ),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=tempfile.mkdtemp(prefix="mbspark_st7_ckpt_"),
         source_location=f"{tmp}/data",
     )

@@ -11,12 +11,13 @@ Two interchangeable engines behind one ``ResolverMethod`` surface
   algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
   2014 — a public algorithm). O(log n) rounds, every round two shuffles,
   lineage cut with ``localCheckpoint`` so plans don't grow. This is the
-  100 TB path; 'auto' switches on edge count.
+  100 TB path.
 
-Both produce identical component *sets*; assignments label components with
-dense 1-based ordinals ordered by each component's minimum member id, which
-makes the output deterministic (the reference's enumeration order is dict
-order — set-equivalent).
+``connected_components`` alone picks between them, on the edge count
+against ``driver_edge_limit``. Both produce identical component *sets*;
+assignments label components with dense 1-based ordinals ordered by each
+component's minimum member id, which makes the output deterministic (the
+reference's enumeration order is dict order — set-equivalent).
 """
 
 from __future__ import annotations
@@ -268,54 +269,52 @@ def _driver_cc_edge_limit(spark) -> int:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    strategy: str = "auto",
     driver_edge_limit: int | None = None,
 ) -> DataFrame:
     """Connected components: returns ``(id, component)`` — component = min
-    member id.
+    member id. The one place that picks the driver or distributed CC.
 
-    ``edges`` needs columns ``src``/``dst`` (long). Nodes appearing only as
-    isolated vertices must be unioned in by the caller (an edge list cannot
-    carry them).
+    ``edges`` needs columns ``src``/``dst`` (long). A self-loop yields no
+    component, and nodes appearing only as isolated vertices must be
+    unioned in by the caller (an edge list cannot carry them).
 
-    ``strategy='auto'`` (default) runs the exact driver CC
-    (:func:`connected_components_numpy`) when the deduped edge count fits
-    ``driver_edge_limit`` (None: the memory-derived cap; 0: never) — the
-    count is free (it rides the materialisation job's Observation), and
-    star contraction's ~6 fixed-overhead shuffle rounds dwarf a single
-    Arrow collect on small graphs. ``'distributed'`` forces the
-    large-star/small-star rounds (the 100 TB path; what the stress harness
-    pins).
+    An edge set of at most ``driver_edge_limit`` rows (None: the
+    memory-derived cap; 0: always distributed) runs the exact driver CC
+    (:func:`connected_components_numpy`). Its rows come from the frame's
+    attached ``_mb_local_pdf`` copy when it has one (zero jobs), else from
+    one bounded ``limit(limit + 1)`` collect that is both the size probe
+    and the driver collect. The driver result is a bare ``LocalRelation``
+    carrying its pandas copy as ``_mb_local_pdf``. Larger edge sets run
+    the large-star/small-star rounds (the 100 TB path).
     """
     spark = edges.sparkSession
+    limit = (
+        _driver_cc_edge_limit(spark)
+        if driver_edge_limit is None
+        else driver_edge_limit
+    )
+    pdf = getattr(edges, "_mb_local_pdf", None)
+    if pdf is None:
+        pdf = edges.select("src", "dst").limit(limit + 1).toPandas()
+    if len(pdf) <= limit:
+        import pandas as pd
+
+        src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+        loop = src == dst
+        nodes, comps = connected_components_numpy(src[~loop], dst[~loop])
+        lab = pd.DataFrame({"id": nodes, "component": comps})
+        out = spark.createDataFrame(lab, "id long, component long")
+        out._mb_local_pdf = lab
+        return out
+
     # initial materialisation keeps the default (memory-first) level: it
-    # is ONE resident copy freed with `e`, and the driver-collect path
-    # reads it immediately — only the LOOP's superseded rounds accumulate,
-    # so only those go DISK_ONLY
+    # is ONE resident copy freed with `e` — only the LOOP's superseded
+    # rounds accumulate, so only those go DISK_ONLY
     e, sig = _materialize_with_signature(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    if sig[0] == 0:
-        return spark.createDataFrame([], "id long, component long")
-
-    if strategy == "auto":
-        limit = (
-            _driver_cc_edge_limit(spark)
-            if driver_edge_limit is None
-            else driver_edge_limit
-        )
-        if sig[0] <= limit:
-            import pandas as pd
-
-            pdf = e.toPandas()
-            nodes, comps = connected_components_numpy(
-                pdf["src"].to_numpy(), pdf["dst"].to_numpy()
-            )
-            lab = pd.DataFrame({"id": nodes, "component": comps})
-            return spark.createDataFrame(lab, "id long, component long")
-
     for _ in range(max_iter):
         # DISK_ONLY: round state is read exactly once (by the next
         # round) — memory-resident checkpoint blocks of superseded
@@ -438,18 +437,13 @@ def add_resolver_method(cls: type) -> type:
 class ComponentsSettings:
     # per-model score thresholds; unset models default to 0.0
     thresholds: dict[str, float] = field(default_factory=dict)
-    # 'auto' | 'driver' | 'distributed'
-    method: str = "auto"
-    # auto switches to distributed above this many edges; None derives the
-    # cap from driver memory (same sizing as connected_components auto)
-    driver_edge_limit: int | None = None
+    # the only CC path setting: connected_components runs on the driver up
+    # to this many unioned edges (None: the memory-derived cap; 0: always
+    # distributed). Left out of the repr, so the resolver's fingerprint
+    # does not depend on which path computed the same clusters
+    driver_edge_limit: int | None = field(default=None, repr=False, compare=False)
 
     def validate_inputs(self, model_names: Iterable[str]) -> None:
-        if self.method not in ("auto", "driver", "distributed"):
-            raise ValueError(
-                f"unknown Components method {self.method!r}: expected "
-                "'auto', 'driver', or 'distributed'"
-            )
         invalid = set(self.thresholds) - set(model_names)
         if invalid:
             raise RuntimeError(f"Unknown models in thresholds: {invalid}")
@@ -478,6 +472,12 @@ class Components(ResolverMethod):
     settings_class = ComponentsSettings
 
     def compute_clusters(self, model_edges: Mapping[str, DataFrame]) -> DataFrame:
+        """Threshold each model's edges, union them, and cluster them with
+        :func:`connected_components` (which picks the driver or distributed
+        path); then rank the components into dense parent ids 1..k."""
+        import numpy as np
+        import pandas as pd
+
         s = self.settings
         s.validate_inputs(model_edges.keys())
 
@@ -490,134 +490,63 @@ class Components(ResolverMethod):
             unioned = e if unioned is None else unioned.union(e)
         if unioned is None:
             raise ValueError("no model edges given")
-        # no persist/checkpoint here: each consumer reads the (already
-        # materialised upstream) edge deltas exactly once — the auto probe is
-        # one collect job, and the distributed path materialises its own
-        # working set immediately
-
-        spark = unioned.sparkSession
-        method = s.method
-        pdf = None
-        if method == "auto":
-            limit = (
-                _driver_cc_edge_limit(spark)
-                if s.driver_edge_limit is None
-                else s.driver_edge_limit
-            )
-            # driver-resident shortcut (optimization r13): when every
-            # model's edge frame already lives on the driver (the streaming
-            # delta-link collects each batch's bounded edge set), threshold
-            # and union in pandas — zero probe job. The float32 scores cast
-            # to float64 before comparing, exactly Spark's promotion for
-            # `float >= double-literal`, so the kept set is identical.
-            local_parts = []
+        # no persist/checkpoint here: the probe reads the (already
+        # materialised upstream) edges once, and the distributed path
+        # materialises its own working set immediately.
+        # Driver-resident shortcut (optimization r13): when every model's
+        # edge frame already lives on the driver (the streaming delta-link
+        # collects each batch's bounded edge set), threshold and union in
+        # pandas too, so connected_components runs no probe job. The
+        # float32 scores cast to float64 before comparing, exactly Spark's
+        # promotion for `float >= double-literal`, so the kept set is
+        # identical; Spark SQL orders NaN above every double, so a
+        # NaN-scored edge passes `score >= t` and is kept explicitly.
+        if all(hasattr(e, "_mb_local_pdf") for e in model_edges.values()):
+            empty = np.empty(0, np.int64)
+            cols = [pd.DataFrame({"src": empty, "dst": empty})]
             for name, edges in model_edges.items():
-                p = getattr(edges, "_mb_local_pdf", None)
-                if p is None:
-                    local_parts = None
-                    break
-                local_parts.append((p, float(s.thresholds.get(name, 0.0))))
-            if local_parts is not None:
-                import numpy as np
-                import pandas as pd
-
-                cols = []
-                for p, t in local_parts:
-                    if len(p):
-                        # Spark SQL orders NaN above every double, so a
-                        # NaN-scored edge passes `score >= t` distributed;
-                        # numpy compares NaN False — keep them explicitly
-                        s = p["score"].to_numpy().astype("float64")
-                        m = (s >= t) | np.isnan(s)
-                        cols.append(
-                            pd.DataFrame(
-                                {
-                                    "src": p["left_id"].to_numpy()[m],
-                                    "dst": p["right_id"].to_numpy()[m],
-                                }
-                            )
+                p = edges._mb_local_pdf
+                if len(p):
+                    sc = p["score"].to_numpy().astype("float64")
+                    m = (sc >= float(s.thresholds.get(name, 0.0))) | np.isnan(sc)
+                    cols.append(
+                        pd.DataFrame(
+                            {
+                                "src": p["left_id"].to_numpy()[m],
+                                "dst": p["right_id"].to_numpy()[m],
+                            }
                         )
-                pdf = (
-                    pd.concat(cols, ignore_index=True)
-                    if cols
-                    else pd.DataFrame(
-                        {
-                            "src": pd.array([], dtype="int64"),
-                            "dst": pd.array([], dtype="int64"),
-                        }
                     )
-                )
-                if len(pdf) <= limit:
-                    method = "driver"
-                else:
-                    method, pdf = "distributed", None
-            else:
-                # single-job probe: pull at most limit+1 edges — fits → that
-                # IS the driver collect (no separate count pass); overflows →
-                # go distributed (the count job told us nothing we'd reuse
-                # anyway)
-                probe = unioned.limit(limit + 1).toPandas()
-                if len(probe) <= limit:
-                    method, pdf = "driver", probe
-                else:
-                    method = "distributed"
-            logger.info("Components: auto → %s union-find", method)
+            unioned._mb_local_pdf = pd.concat(cols, ignore_index=True)
 
-        if method == "driver":
-            # Arrow-batched collect (one transfer) + the vectorized driver
-            # CC (node → min-member semantics identical to DisjointSet,
-            # pinned in pytest). No pre-distinct: CC absorbs duplicate
-            # edges for free, and skipping it saves a shuffle.
-            import numpy as np
-            import pandas as pd
-
-            if pdf is None:
-                pdf = unioned.toPandas()
-            if len(pdf) == 0:
-                # mark the empty result driver-resident too (r13): without
-                # the marker an all-singleton model (zero edges) pushed the
-                # resolver insert down the DISTRIBUTED branch — ~15 serial
-                # stage-jobs to insert nothing, and the catalog's driver
-                # mirrors (hence every later local insert) were lost
-                empty = pd.DataFrame(
-                    {
-                        "parent_id": pd.array([], dtype="int64"),
-                        "child_id": pd.array([], dtype="int64"),
-                    }
-                )
-                assignments = conform(
-                    spark.createDataFrame(empty, "parent_id long, child_id long"),
-                    SCHEMA_CLUSTERS,
-                )
-                assignments._mb_local_pdf = empty
-                return assignments
-            nodes, comps = connected_components_numpy(
-                pdf["src"].to_numpy(), pdf["dst"].to_numpy()
-            )
-            # the data is driver-resident by definition of this path — the
-            # dense parent-id ranking happens here too (sorted components →
-            # 1..k), one Arrow upload of the final assignments, zero
-            # shuffles/windows on the cluster
-            uniq, rank_inv = np.unique(comps, return_inverse=True)
+        labels = connected_components(
+            unioned, driver_edge_limit=s.driver_edge_limit
+        )
+        lab = getattr(labels, "_mb_local_pdf", None)
+        logger.info(
+            "Components: auto → %s union-find",
+            "distributed" if lab is None else "driver",
+        )
+        if lab is not None:
+            # driver result: dense parent-id ranking in numpy (sorted
+            # components → 1..k) and one Arrow upload of the assignments.
+            # The pandas copy rides along, empty or not: the catalog's
+            # local insert reads it instead of re-collecting the plan
+            _, rank = np.unique(lab["component"].to_numpy(), return_inverse=True)
             local = pd.DataFrame(
                 {
-                    "parent_id": (rank_inv + 1).astype("int64"),
-                    "child_id": nodes,
+                    "parent_id": (rank + 1).astype("int64"),
+                    "child_id": lab["id"].to_numpy(),
                 }
             )
             assignments = conform(
-                spark.createDataFrame(local), SCHEMA_CLUSTERS
+                unioned.sparkSession.createDataFrame(
+                    local, "parent_id long, child_id long"
+                ),
+                SCHEMA_CLUSTERS,
             )
-            # driver-resident marker: the catalog's local insert path reads
-            # this pandas frame directly instead of re-analysing and
-            # re-collecting the LocalRelation plan (one less plan analysis
-            # + one less job per resolver step)
             assignments._mb_local_pdf = local
             return assignments
-
-        # the resolver's own probe already decided this graph exceeds the
-        # driver — don't let connected_components re-probe (and re-collect)
-        labels = connected_components(unioned, strategy="distributed")
 
         # dense deterministic parent ids 1..k ordered by component minimum —
         # distributed zip-with-index (range partition + per-partition row

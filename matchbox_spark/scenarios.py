@@ -138,7 +138,7 @@ def scenario(
             NaiveDeduper(id="id", unique_fields=["crn_crn"]),
             QueryConfig(sources=[crn]),
         )
-        dag.resolver("resolve_crn", Components(method="auto"), ["dedupe_crn"])
+        dag.resolver("resolve_crn", Components(), ["dedupe_crn"])
         resolver = "resolve_crn"
     if name in ("link", "mega"):
         dag.model(
@@ -152,7 +152,7 @@ def scenario(
             QueryConfig(sources=[cdms]),
         )
         dag.resolver(
-            "resolve_linked", Components(method="auto"), ["link_crn_cdms"]
+            "resolve_linked", Components(), ["link_crn_cdms"]
         )
         resolver = "resolve_linked"
     if name == "scored_dedupe":
@@ -169,9 +169,7 @@ def scenario(
             )
             dag.resolver(
                 f"resolver_scored_{sname}",
-                Components(
-                    method="auto", thresholds={f"scored_{sname}": 0.5}
-                ),
+                Components(thresholds={f"scored_{sname}": 0.5}),
                 [f"scored_{sname}"],
             )
         resolver = "resolver_scored_crn"
@@ -220,7 +218,7 @@ def scenario(
             )
             dag.resolver(
                 f"resolver_alt_{i}",
-                Components(method="auto", thresholds={f"alt_dedupe_{i}": 0.5}),
+                Components(thresholds={f"alt_dedupe_{i}": 0.5}),
                 [f"alt_dedupe_{i}"],
             )
         resolver = "resolver_alt_0"
@@ -277,7 +275,7 @@ def scenario(
             )
             dag.resolver(
                 f"resolver_naive_{sname}",
-                Components(method="auto"),
+                Components(),
                 [f"naive_{sname}"],
             )
         resolver = "resolver_naive_foo_a"

@@ -75,7 +75,7 @@ def store_with_run(spark, tmp_path_factory, crn_parquet):
         NaiveDeduper(id="id", unique_fields=["crn_crn"]),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="driver"), ["dedupe"])
+    dag.resolver("resolve", Components(), ["dedupe"])
     dag.run()
     coll.save()
 

@@ -47,7 +47,7 @@ def _run_pipeline(spark, run, crn_parquet, dedupe_fields):
         NaiveDeduper(id="id", unique_fields=dedupe_fields),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="driver"), model_inputs=["dedupe"])
+    dag.resolver("resolve", Components(), model_inputs=["dedupe"])
     dag.run()
     return dag
 

@@ -48,7 +48,7 @@ def _build_dag(spark, crn_parquet) -> DAG:
         QueryConfig(sources=[src]),
     )
     dag.resolver(
-        "resolve_crn", Components(method="driver"), model_inputs=["dedupe_crn"]
+        "resolve_crn", Components(), model_inputs=["dedupe_crn"]
     )
     dag._src = src
     return dag
@@ -318,7 +318,7 @@ def test_fast_then_distributed_resolver_content_addressing(spark, crn_parquet):
     duplicate contains rows, both steps claiming the same cluster ids."""
     dag = _build_dag(spark, crn_parquet)
     dag.resolver(
-        "resolve_again", Components(method="driver"),
+        "resolve_again", Components(),
         model_inputs=["dedupe_crn"],
     )
     dag.run()

@@ -31,7 +31,7 @@ def built(spark, tmp_path_factory):
         NaiveDeduper(id="id", unique_fields=["crn_crn"]),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="driver"), ["dedupe"])
+    dag.resolver("resolve", Components(), ["dedupe"])
     dag.run()
     return dag, kit
 

@@ -53,7 +53,7 @@ def test_naive_dedupe_recovers_crn_entities(spark, kit):
     assert got == crn.expected_pairs(id_map)
 
     # resolve → cluster key-sets equal ground truth entity key-sets
-    assignments = Components(method="driver").compute_clusters({"m": edges})
+    assignments = Components().compute_clusters({"m": edges})
     inv = {v: k for k, v in id_map.items()}
     produced: dict[int, set[str]] = {}
     for r in assignments.collect():

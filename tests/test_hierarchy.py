@@ -47,7 +47,7 @@ def built(spark, tmp_path_factory):
         NaiveDeduper(id="id", unique_fields=["crn_crn"]),
         QueryConfig(sources=[crn]),
     )
-    dag.resolver("resolve_crn", Components(method="driver"), ["dedupe_crn"])
+    dag.resolver("resolve_crn", Components(), ["dedupe_crn"])
     dag.model(
         "link_crn_cdms",
         DeterministicLinker(
@@ -60,7 +60,7 @@ def built(spark, tmp_path_factory):
     # test_e2e_dag.py:278-282) — dedupe structure arrives through the root
     # ids and is recovered by G4 leaf expansion at insert; lineage to
     # resolve_crn flows through the link model's query dependencies
-    dag.resolver("resolve_linked", Components(method="driver"), ["link_crn_cdms"])
+    dag.resolver("resolve_linked", Components(), ["link_crn_cdms"])
     dag.run()
     return dag, kit, crn, cdms
 

@@ -128,7 +128,7 @@ def _linked_catalog(spark, sf_dir, cat=None, cust_edge_limit=None, link=True):
     )
     dag.resolver(
         "resolve_cust",
-        Components(method="auto", driver_edge_limit=cust_edge_limit),
+        Components(driver_edge_limit=cust_edge_limit),
         ["dedupe_cust"],
     )
     dag.model(
@@ -136,7 +136,7 @@ def _linked_catalog(spark, sf_dir, cat=None, cust_edge_limit=None, link=True):
         NaiveDeduper(id="id", unique_fields=["suppx_s_nationkey"]),
         QueryConfig(sources=[suppx]),
     )
-    dag.resolver("resolve_supp", Components(method="auto"), ["dedupe_supp"])
+    dag.resolver("resolve_supp", Components(), ["dedupe_supp"])
     if not link:
         dag.run()
         return dag
@@ -153,7 +153,7 @@ def _linked_catalog(spark, sf_dir, cat=None, cust_edge_limit=None, link=True):
         QueryConfig(sources=[custx], resolvers=["resolve_cust"]),
         QueryConfig(sources=[suppx], resolvers=["resolve_supp"]),
     )
-    dag.resolver("resolve_link", Components(method="auto"), ["link_cs"])
+    dag.resolver("resolve_link", Components(), ["link_cs"])
     dag.run()
     return dag
 
@@ -413,7 +413,7 @@ def _delta_stream_catalog(spark, tmp_path, name):
         key_field="k",
         index_fields=["a", "u"],
         model=NaiveDeduper(id="id", unique_fields=["s_a"]),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
         source_location=str(data_dir),
     )
@@ -581,24 +581,17 @@ def test_healed_mirrors_keep_resolver_inserts_on_driver(
     all-distributed builds."""
     driver = _catalog_state(_linked_catalog(spark, sf_dir).catalog)
     force_distributed("index", "cc")
-    forced = {
-        limit: _catalog_state(
-            _linked_catalog(spark, sf_dir, cust_edge_limit=limit).catalog
-        )
-        for limit in (None, 0)
-    }
-    assert forced[None] == driver
+    forced = _catalog_state(_linked_catalog(spark, sf_dir).catalog)
+    assert forced == driver
     for kind, (cat, jobs) in healed.items():
         # the reopened runs skip both dedupe resolvers on their fingerprint
         # before inserting; the distributed-first run inserts its first
         # resolver distributed
         after = jobs[1:] if kind == "distributed_first" else jobs
         assert after and all(n <= 3 for n in after), (kind, jobs)
-        state = _catalog_state(cat)
-        # step fingerprints derive from the step config, which the public
-        # driver_edge_limit is part of; the tables do not depend on it
-        assert state == forced[0 if kind == "distributed_first" else None], kind
-        assert {**state, "steps": None} == {**driver, "steps": None}, kind
+        # the driver_edge_limit a resolver was built with is not part of
+        # its fingerprint, so every state equals the forced build's in full
+        assert _catalog_state(cat) == forced, kind
 
 
 def _assert_mirrors_match_tables(cat):

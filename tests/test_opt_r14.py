@@ -234,7 +234,7 @@ def test_delta_pair_map_matches_distributed_with_cap(
             model=NaiveDeduper(
                 id="id", unique_fields=["s_a"], max_group_size=cap
             ),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
             source_location=str(data_dir),
         )

@@ -125,7 +125,7 @@ def test_component_edge_generator_invariants(spark, n_nodes, comp_frac, extra_fr
     assert mn <= edges.count() <= mx
     # any threshold below the score floor recovers EXACTLY the planted
     # clustering (the reference's component-count invariant)
-    assignments = Components(method="driver", thresholds={"m": 0.5}).compute_clusters(
+    assignments = Components(thresholds={"m": 0.5}).compute_clusters(
         {"m": edges}
     )
     got = {}

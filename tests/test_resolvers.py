@@ -1,4 +1,4 @@
-"""Resolver tests: union-find vs distributed CC equivalence, thresholds."""
+"""Resolver tests: union-find vs driver and distributed CC, thresholds."""
 
 from __future__ import annotations
 
@@ -37,7 +37,7 @@ def test_components_resolver_thresholds(spark):
         [(1, 2, 0.9), (2, 3, 0.4), (4, 5, 0.95)],
         "left_id long, right_id long, score float",
     )
-    resolver = Components(thresholds={"a": 0.5}, method="driver")
+    resolver = Components(thresholds={"a": 0.5})
     out = resolver.compute_clusters({"a": edges_a})
     assert _components_from_assignments(out) == {
         frozenset({1, 2}),
@@ -51,7 +51,7 @@ def test_components_resolver_thresholds(spark):
 def test_components_multi_model_union(spark):
     a = spark.createDataFrame([(1, 2, 1.0)], "left_id long, right_id long, score float")
     b = spark.createDataFrame([(2, 3, 1.0)], "left_id long, right_id long, score float")
-    out = Components(method="driver").compute_clusters({"a": a, "b": b})
+    out = Components().compute_clusters({"a": a, "b": b})
     assert _components_from_assignments(out) == {frozenset({1, 2, 3})}
 
 
@@ -61,68 +61,72 @@ def test_components_unknown_threshold_model(spark):
         Components(thresholds={"nope": 0.5}).compute_clusters({"a": a})
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_distributed_cc_matches_union_find(spark, seed):
+def _random_graph(seed):
     rng = random.Random(seed)
-    nodes = list(range(200))
-    edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(150)
+    return [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+
+
+# (left, right, score) rows per input; edges scoring under 0.5 are dropped
+_CC_CASES = {
+    **{
+        f"random{seed}": [(a, b, 0.9) for a, b in _random_graph(seed)]
+        for seed in range(3)
+    },
+    "chain256": [(i, i + 1, 0.9) for i in range(256)],
+    # node 5 has only a self-loop: it joins no component on either path
+    "self_loop": [(1, 2, 0.9), (5, 5, 0.9), (3, 4, 0.9)],
+    "duplicates": [(1, 2, 0.9), (2, 1, 0.9), (1, 2, 0.9), (3, 4, 0.9), (3, 4, 0.9)],
+    # Spark SQL orders NaN above every double: a NaN score passes the threshold
+    "nan_score": [(1, 2, float("nan")), (3, 4, 0.9), (5, 6, 0.1)],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CC_CASES))
+@pytest.mark.parametrize("entry", ["connected_components", "Components"])
+@pytest.mark.parametrize("limit", [None, 0], ids=["limitNone", "limit0"])
+def test_cc_path_matrix(spark, caplog, limit, entry, case):
+    """Both CC paths, reached through both entry points, give the union-find
+    answer over the kept non-self-loop edges: ``driver_edge_limit=None``
+    takes the driver CC at this size, ``0`` the distributed rounds (an
+    empty edge set is answered on the driver either way)."""
+    import logging
+    import math
+
+    rows = _CC_CASES[case]
+    kept = [(a, b) for a, b, t in rows if t >= 0.5 or math.isnan(t)]
+    expected = connected_components_driver([(a, b) for a, b in kept if a != b])
+    path = "driver" if limit is None or not kept else "distributed"
+    if entry == "connected_components":
+        df = spark.createDataFrame(kept, "src long, dst long")
+        got = connected_components(df, driver_edge_limit=limit)
+        assert hasattr(got, "_mb_local_pdf") == (path == "driver")
+        if expected:
+            plan = got._jdf.queryExecution().logical().toString()
+            assert plan.startswith("LocalRelation") == (path == "driver")
+        assert {r["id"]: r["component"] for r in got.collect()} == expected
+        return
+    edges = spark.createDataFrame(rows, "left_id long, right_id long, score float")
+    with caplog.at_level(logging.INFO, logger="matchbox_spark.plans.resolvers"):
+        out = Components(
+            thresholds={"m": 0.5}, driver_edge_limit=limit
+        ).compute_clusters({"m": edges})
+    assert [m for m in caplog.messages if m.startswith("Components:")] == [
+        f"Components: auto → {path} union-find"
     ]
-    edges = [(a, b) for a, b in edges if a != b]
-    expected = connected_components_driver(edges)
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components(df, strategy="distributed").collect()
-    }
-    assert got == expected
-
-
-def test_distributed_cc_long_chain(spark):
-    # a path graph exercises the O(log n) contraction (worst case for naive
-    # propagation)
-    n = 256
-    df = spark.createDataFrame([(i, i + 1) for i in range(n)], "src long, dst long")
-    got = connected_components(df, strategy="distributed")
-    comps = got.select("component").distinct().collect()
-    assert len(comps) == 1 and comps[0]["component"] == 0
-    assert got.count() == n + 1
-
-
-def test_distributed_method_in_resolver(spark):
-    edges = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 3, 1.0), (10, 11, 1.0)],
-        "left_id long, right_id long, score float",
-    )
-    out = Components(method="distributed").compute_clusters({"m": edges})
-    assert _components_from_assignments(out) == {
-        frozenset({1, 2, 3}),
-        frozenset({10, 11}),
-    }
-
-
-@pytest.mark.parametrize("seed", [0, 1])
-def test_auto_cc_small_graph_takes_driver_path_and_matches(spark, seed):
-    rng = random.Random(seed)
-    edges = [
-        (rng.randrange(300), rng.randrange(300)) for _ in range(200)
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    expected = connected_components_driver(edges)
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"] for r in connected_components(df).collect()
-    }
-    assert got == expected
+    assert hasattr(out, "_mb_local_pdf") == (path == "driver")
+    # parent ids are dense 1..k, ordered by each component's minimum member
+    rank = {m: i + 1 for i, m in enumerate(sorted(set(expected.values())))}
+    got = {r["child_id"]: r["parent_id"] for r in out.collect()}
+    assert got == {node: rank[m] for node, m in expected.items()}
 
 
 def test_auto_cc_respects_explicit_edge_limit(spark):
     # limit below the edge count forces the distributed rounds; result is
     # identical either way
     df = spark.createDataFrame([(i, i + 1) for i in range(64)], "src long, dst long")
-    got = connected_components(df, driver_edge_limit=10, strategy="auto")
-    # limit=10 < 64 edges, but auto only escapes when count <= limit, so
+    got = connected_components(df, driver_edge_limit=10)
+    # limit=10 < 64 edges, and the driver path needs count <= limit, so
     # this ran the star rounds — same single component
     comps = got.select("component").distinct().collect()
     assert len(comps) == 1 and comps[0]["component"] == 0

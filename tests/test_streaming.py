@@ -334,7 +334,7 @@ def test_incremental_resolve_stream_matches_batch(spark, tmp_path):
         key_field="k",
         index_fields=["grp"],
         model=NaiveDeduper(id="id", unique_fields=["s_grp"]),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=str(tmp_path / "ckpt"),
         source_location=data_dir,
     )
@@ -399,7 +399,7 @@ def test_delta_link_bridging_record_merges_old_clusters(spark, tmp_path):
         key_field="k",
         index_fields=["a", "b"],
         model=_TwoPassDeduper(),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=str(tmp_path / "ckpt"),
         source_location=str(data_dir),
         blocking_fields=["s_a", "s_b"],
@@ -439,7 +439,7 @@ def _guarded_stream(entry, spark, src, cat, ckpt, max_files=None):
     return incremental_resolve_stream(
         stream, cat, "s", key_field="key", index_fields=["name"],
         model=NaiveDeduper(id="id", unique_fields=["s_name"]),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=ckpt,
         source_location=str(src / "*" / "*.parquet"),
     )

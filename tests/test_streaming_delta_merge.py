@@ -44,7 +44,7 @@ def _run_stream(spark, tmp_path, batches, schema, name, **kwargs):
         source_step="s",
         key_field="k",
         index_fields=[f.split()[0] for f in schema.split(", ")][1:],
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
         source_location=str(data_dir),
         **kwargs,
@@ -335,7 +335,7 @@ def test_resolve_cadence_with_finalize(spark, tmp_path):
     assert stale != expected  # trailing batch 4 not yet resolved
     finalize_resolve(
         spark, cat, "s", "k", ["g", "u"], model,
-        Components(method="auto"),
+        Components(),
         source_location=str(tmp_path / "data_cadence"),
     )
     assert _clusters(cat) == expected

@@ -70,7 +70,7 @@ def _run_stream(spark, tmp_path, name, **kwargs):
         key_field="k",
         index_fields=["text"],
         model=_model(),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
         source_location=str(data_dir),
         **kwargs,
@@ -185,7 +185,7 @@ def test_simhash_delta_matches_full_recompute(spark, tmp_path):
             model=SimHashDeduper(
                 id="id", text_field="s_text", bits=16, max_hamming=4
             ),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
             source_location=str(data_dir),
             **kwargs,
@@ -246,7 +246,7 @@ def test_embedding_delta_matches_full_recompute(spark, tmp_path):
                 id="id", vector_field="s_embedding",
                 threshold=0.80, bucket_dims=[0, 1, 2],
             ),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
             source_location=str(data_dir),
             **kwargs,
@@ -295,7 +295,7 @@ def test_serving_matcher_patches_under_block_key_stream(spark, tmp_path):
             key_field="k",
             index_fields=["text"],
             model=_model(),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=str(tmp_path / "ckpt_serve"),
             source_location=src,
             serving_matcher=matcher,
@@ -346,7 +346,7 @@ def test_stream_refuses_unresolved_auto_params(spark, tmp_path):
                 key_field="k",
                 index_fields=["text"],
                 model=model,
-                resolver_method=Components(method="auto"),
+                resolver_method=Components(),
                 checkpoint_dir=str(tmp_path / f"ckpt_{route}_{type(model).__name__}"),
                 source_location=data_dir,
                 auto_delta=route,

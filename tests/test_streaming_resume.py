@@ -100,7 +100,7 @@ def _start(spark, case, cat, tmp_path, name):
         key_field="k",
         index_fields=index_fields,
         model=model(),
-        resolver_method=Components(method="auto"),
+        resolver_method=Components(),
         checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
         source_location=str(data_dir),
         **options,

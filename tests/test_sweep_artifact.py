@@ -5,7 +5,9 @@ three-SF close sweep — it must never be committed red or partial. When
 present, the NEWEST sweep file must cover every current registry query
 at every SF it records, with fully green verdicts (same green predicate
 as the rotation ledger: all three matches true, no error — rows-only
-records allowed only for queries without an oracle).
+records allowed only for queries without an oracle). The newest forced
+sweep (``SWEEP_forced_*.json``, gates forced distributed) is held to the
+same predicate.
 """
 
 from __future__ import annotations
@@ -28,13 +30,20 @@ def _entry():
     return mod
 
 
-def _latest_sweep() -> Path | None:
-    files = sorted(REPO.glob("SWEEP_r*.json"))
+def _latest_sweep(pattern: str) -> Path | None:
+    files = sorted(REPO.glob(pattern))
     return files[-1] if files else None
 
 
 def test_latest_sweep_artifact_green_and_complete():
-    path = _latest_sweep()
+    _assert_green_and_complete(_latest_sweep("SWEEP_r*.json"))
+
+
+def test_latest_forced_sweep_artifact_green_and_complete():
+    _assert_green_and_complete(_latest_sweep("SWEEP_forced_*.json"))
+
+
+def _assert_green_and_complete(path: Path | None) -> None:
     if path is None:
         pytest.skip("no sweep artifact committed yet")
     data = json.loads(path.read_text())

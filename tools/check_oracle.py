@@ -4,11 +4,16 @@ Runs every ``queries()`` entry and its ``oracle_sql()`` side by side, compares
 row count, column names, and order-insensitive values (sorted columns, sorted
 rows, normalised floats). Usage::
 
-    python tools/check_oracle.py [sf_dir] [query ...]
+    python tools/check_oracle.py [--force GATE[,GATE]] [sf_dir] [query ...]
+
+``--force`` puts the named driver/distributed gates (``cc``, ``index``,
+``jaccard``, ``bpe``) on their distributed path for the whole run, so the
+oracles check each fallback.
 """
 
 from __future__ import annotations
 
+import importlib
 import math
 import sys
 import time
@@ -21,6 +26,27 @@ sys.path.insert(0, ".")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+# gate → the module bindings whose patched values put it on its distributed
+# path. The ``force_distributed`` test fixture reads the same table.
+FORCE_GATES = {
+    # incremental imports the name directly: patch both bindings
+    "cc": [
+        ("matchbox_spark.plans.resolvers", "_driver_cc_edge_limit", lambda spark: 0),
+        ("matchbox_spark.streaming.incremental", "_driver_cc_edge_limit", lambda spark: 0),
+    ],
+    "index": [("matchbox_spark.plans.catalog", "_INDEX_DRIVER_BYTES", 0)],
+    "jaccard": [("matchbox_spark.operators.dedup", "_JACCARD_BITSET_VOCAB", 0)],
+    "bpe": [("matchbox_spark.operators.tokenize", "_BPE_DRIVER_VOCAB", 0)],
+}
+
+
+def force_gates(gates, setattr=setattr) -> None:
+    """Force each named gate onto its distributed path, patching its
+    bindings with ``setattr(module, name, value)``."""
+    for gate in gates:
+        for mod, name, value in FORCE_GATES[gate]:
+            setattr(importlib.import_module(mod), name, value)
 
 
 def _normalise(df: pd.DataFrame) -> pd.DataFrame:
@@ -108,6 +134,10 @@ def main() -> int:
     if "--json" in args:
         i = args.index("--json")
         json_out = args[i + 1]
+        args = args[:i] + args[i + 2:]
+    if "--force" in args:
+        i = args.index("--force")
+        force_gates(args[i + 1].split(","))
         args = args[:i] + args[i + 2:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])

@@ -67,7 +67,7 @@ def main() -> int:
         ),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="auto"), model_inputs=["dedupe"])
+    dag.resolver("resolve", Components(), model_inputs=["dedupe"])
     t0 = time.time()
     dag.run()
     print(f"dag.run at {sf}: {time.time() - t0:.1f}s", flush=True)

@@ -112,7 +112,7 @@ def run_pipeline(spark, sf):
         ),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="auto"), model_inputs=["dedupe"])
+    dag.resolver("resolve", Components(), model_inputs=["dedupe"])
     dag.run()
     ids = unified_query(
         dag.catalog, dag.resolver_lineage("resolve"), ["cust"], level="key"

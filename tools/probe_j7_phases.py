@@ -77,7 +77,7 @@ def main() -> None:
             ),
             QueryConfig(sources=[src]),
         )
-        dag.resolver("resolve", Components(method="auto"), model_inputs=["dedupe"])
+        dag.resolver("resolve", Components(), model_inputs=["dedupe"])
         t_run = time.time()
         dag.run()
         MARKS.append(("dag.run TOTAL", time.time() - t_run))

@@ -105,7 +105,7 @@ def hub_main() -> int:
 
     t0 = time.time()
     with StorageMonitor(spark) as mon:
-        cc = connected_components(graph, strategy="distributed").localCheckpoint(
+        cc = connected_components(graph, driver_edge_limit=0).localCheckpoint(
             eager=True
         )
     elapsed = time.time() - t0
@@ -202,7 +202,7 @@ def main() -> int:
 
     t0 = time.time()
     with StorageMonitor(spark) as mon:
-        cc = connected_components(graph, strategy="distributed").localCheckpoint(
+        cc = connected_components(graph, driver_edge_limit=0).localCheckpoint(
             eager=True
         )
     elapsed = time.time() - t0

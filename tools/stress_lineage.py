@@ -76,7 +76,7 @@ def main() -> int:
                 combine_type="set_agg" if prev_lineage else "concat",
             ),
         )
-        dag.resolver(f"r{i}", Components(method="auto"), [f"m{i}"])
+        dag.resolver(f"r{i}", Components(), [f"m{i}"])
         prev_lineage = dag.resolver_lineage(f"r{i}")
     dag.run()
     t_run = time.time() - t0

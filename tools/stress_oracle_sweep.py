@@ -15,10 +15,16 @@ where each verdict carries the driver's CORRECTNESS field shape
 err), so a judge can diff the full three-SF close sweep against the
 driver's sampled ``CORRECTNESS_r{N}.json`` without re-running anything.
 
+``--force GATE[,GATE]`` passes through to ``check_oracle.py``: every query
+runs with those gates on their distributed path (the forced sweep,
+committed as ``SWEEP_forced_<gates>_r{N}.json``).
+
 Usage:
     python tools/stress_oracle_sweep.py /root/testdata/sf0.01
     python tools/stress_oracle_sweep.py /root/testdata/sf0.01 /root/testdata/sf0.1
     python tools/stress_oracle_sweep.py --json SWEEP_r13.json \\
+        /root/testdata/sf0.001 /root/testdata/sf0.01 /root/testdata/sf0.1
+    python tools/stress_oracle_sweep.py --force cc --json SWEEP_forced_cc_r16.json \\
         /root/testdata/sf0.001 /root/testdata/sf0.01 /root/testdata/sf0.1
 """
 
@@ -32,12 +38,16 @@ import tempfile
 import time
 
 
-def main(sf_dirs: list[str], json_out: str | None = None) -> int:
+def main(
+    sf_dirs: list[str], json_out: str | None = None, force: str | None = None
+) -> int:
     bad = 0
     combined: dict[str, dict] = {}
     for sf in sf_dirs:
         t0 = time.monotonic()
         cmd = [sys.executable, "tools/check_oracle.py"]
+        if force:
+            cmd += ["--force", force]
         tmp = None
         if json_out:
             fd, tmp = tempfile.mkstemp(suffix=".json")
@@ -81,10 +91,13 @@ def main(sf_dirs: list[str], json_out: str | None = None) -> int:
 
 if __name__ == "__main__":
     argv = sys.argv[1:]
-    out = None
-    if "--json" in argv:
-        i = argv.index("--json")
-        out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2:]
+    opts = {}
+    for flag in ("--json", "--force"):
+        if flag in argv:
+            i = argv.index(flag)
+            opts[flag] = argv[i + 1]
+            argv = argv[:i] + argv[i + 2:]
     dirs = [a for a in argv if not a.startswith("-")]
-    raise SystemExit(main(dirs or ["/root/testdata/sf0.01"], out))
+    raise SystemExit(
+        main(dirs or ["/root/testdata/sf0.01"], opts.get("--json"), opts.get("--force"))
+    )

@@ -99,7 +99,7 @@ def main() -> int:
     )
     dag.resolver(
         "resolve",
-        Components(method="distributed"),
+        Components(driver_edge_limit=0),
         model_inputs=["dedupe"],
     )
 

@@ -93,7 +93,7 @@ def main(n_batches: int = 24, groups: int = 100, rows_per_group: int = 10) -> in
                 key_field="k",
                 index_fields=["a", "b"],
                 model=TwoPassDeduper(),
-                resolver_method=Components(method="auto"),
+                resolver_method=Components(),
                 checkpoint_dir=ckpt,
                 source_location=src,
                 blocking_fields=["s_a", "s_b"],

@@ -82,7 +82,7 @@ def main() -> int:
         NaiveDeduper(id="id", unique_fields=["d_grp"]),
         QueryConfig(sources=[src]),
     )
-    dag.resolver("resolve", Components(method="auto"), ["dedupe"])
+    dag.resolver("resolve", Components(), ["dedupe"])
     t0 = time.time()
     dag.run()
     print(f"pipeline over {n} keys ({hot_pct}% on one leaf): "
@@ -141,7 +141,7 @@ def main() -> int:
         "dedupe", NaiveDeduper(id="id", unique_fields=["d_grp"]),
         QueryConfig(sources=[src2]),
     )
-    dag2.resolver("resolve", Components(method="auto"), ["dedupe"])
+    dag2.resolver("resolve", Components(), ["dedupe"])
     dag2.run()
     t0 = time.time()
     unified_query(

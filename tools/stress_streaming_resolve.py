@@ -112,7 +112,7 @@ def main(n_batches: int = 24, groups: int = 400, rows_per_group: int = 20) -> in
             key_field="k",
             index_fields=["a", "b"],
             model=TwoPassDeduper(),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=ckpt,
             source_location=src,
             blocking_fields=["s_a", "s_b"],
@@ -243,7 +243,7 @@ def main_lsh(
                 num_perm=4 * n_bands, bands=n_bands,
                 shingle_n=2, threshold=0.7,
             ),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=ckpt,
             source_location=src,
         )
@@ -378,7 +378,7 @@ def main_embedding(
                 id="id", vector_field="s_embedding",
                 threshold=0.95, bucket_dims=list(range(16)),
             ),
-            resolver_method=Components(method="auto"),
+            resolver_method=Components(),
             checkpoint_dir=ckpt,
             source_location=src,
         )
