@@ -51,6 +51,7 @@ from matchbox_spark.functions.hashing import (
     row_hash_expr,
     unordered_stats_aggs,
 )
+from matchbox_spark.schemas import local_frame
 
 
 def _is_local_plan(df: DataFrame) -> bool:
@@ -652,16 +653,17 @@ class Catalog:
 
     def _local_df(self, columns: dict, schema: str) -> DataFrame:
         """createDataFrame for driver-resident columns, Arrow-batched via
-        pandas: that lands as a LocalRelation with a REAL size estimate,
-        while a row list lands as an RDD scan whose unknown size estimate
-        forces sort-merge plans onto every downstream retrieval join. The
+        pandas (:func:`local_frame`): that lands as a LocalRelation with a
+        REAL size estimate, empty or not, while a row list lands as an RDD
+        scan whose unknown size estimate forces sort-merge plans onto every
+        downstream retrieval join. The
         frame is pre-tagged driver-resident so ``_tier`` merges never pay
         the JVM plan probe (optimization r14 — the probe ran
         analysis+optimization per part, ~0.1-0.2 s each on streaming
         micro-batches)."""
         import pandas as pd
 
-        df = self.spark.createDataFrame(pd.DataFrame(columns), schema)
+        df = local_frame(self.spark, pd.DataFrame(columns), schema)
         df._mb_driver_resident = True
         return df
 

@@ -10,6 +10,7 @@ fingerprint-gated catalog insert (H6) — no HTTP/S3/Celery.
 from __future__ import annotations
 
 import logging
+import threading
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,8 +18,14 @@ from pyspark.sql import functions as F
 
 from matchbox_spark.operators.dedupers import Deduper
 from matchbox_spark.operators.linkers import Linker
+from matchbox_spark.plans import catalog as catalog_mod
 from matchbox_spark.plans.catalog import Catalog
-from matchbox_spark.plans.query import QueryConfig, match_key, query_data
+from matchbox_spark.plans.query import (
+    QueryConfig,
+    lookup_answer,
+    match_key,
+    query_data,
+)
 from matchbox_spark.plans.resolvers import ResolverMethod
 from matchbox_spark.sources.source import SourceConfig
 
@@ -540,12 +547,13 @@ class DAG:
         )
 
     def matcher(self, resolver: str, sources: list[str]) -> "Matcher":
-        """§3.3 interactive serving: materialise the resolved projection ONCE;
-        every subsequent lookup is two filters on cached state — latency is
-        independent of pipeline size and cannot re-trigger inserts/CC."""
-        proj = self.materialize_lookup(resolver, sources).persist()
-        proj.count()  # force materialisation now, not on first lookup
-        return Matcher(proj)
+        """§3.3 interactive serving: materialise the resolved projection ONCE
+        (persist and count it now, not on the first lookup) and index it on
+        the driver when it fits the catalog's driver budget. A lookup is
+        then a dict probe and a list read — zero Spark jobs — and cannot
+        re-trigger inserts/CC; over the budget it is two filters on the
+        cached projection (:func:`match_key`)."""
+        return Matcher(self.materialize_lookup(resolver, sources).persist())
 
     def materialize_lookup(
         self, resolver: str, sources: list[str], path: str | None = None
@@ -593,15 +601,114 @@ class DAG:
         return "\n".join(lines)
 
 
+def _row_count(df: DataFrame) -> int:
+    """Rows of ``df`` in one job: an RDD count has no exchange stage."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _index_cap(df: DataFrame) -> int:
+    """Rows of ``df`` a driver lookup index may hold: the catalog mirrors'
+    budget, sized per row as ``Catalog.mirror`` sizes a table. Read at call
+    time, so the ``index`` gate's patched 0 forces the Spark path."""
+    row_bytes = 8 + df._jdf.schema().defaultSize()
+    return catalog_mod._INDEX_DRIVER_BYTES // row_bytes
+
+
+class _LookupIndex:
+    """Driver copy of a projection's ``(id, source, key)`` rows for lookups:
+    ``root`` maps ``(source, key)`` to its root id — the smallest when the
+    key sits under several roots, which ``shared`` then lists — and
+    ``members`` maps a root id to its ``(source, key)`` rows. Memory is
+    linear in the rows (no key holds a member list, so a hub costs its own
+    rows), and a lookup costs one probe plus its answer."""
+
+    def __init__(self, pdf):
+        self.root: dict[tuple, int] = {}
+        self.shared: dict[tuple, set[int]] = {}
+        self.members: dict[int, list[tuple]] = {}
+        self.rows = 0
+        self._add(pdf)
+
+    def _add(self, pdf) -> None:
+        keys = zip(pdf["source"].tolist(), pdf["key"].tolist())
+        for r, sk in zip(pdf["id"].tolist(), keys):
+            self.members.setdefault(r, []).append(sk)
+            old = self.root.get(sk)
+            if old is None:
+                self.root[sk] = r
+            elif old != r:
+                self.shared.setdefault(sk, {old}).add(r)
+                self.root[sk] = min(old, r)
+        self.rows += len(pdf)
+
+    def replace(self, pdf) -> None:
+        """Drop every row whose ``(source, key)`` appears in ``pdf``, then
+        add ``pdf``'s rows: the Spark refresh's anti-join and union, in
+        O(rows of the roots involved)."""
+        fresh = set(zip(pdf["source"].tolist(), pdf["key"].tolist()))
+        stale: set[int] = set()
+        for sk in fresh:
+            if sk in self.root:
+                stale |= self.shared.pop(sk, {self.root[sk]})
+                del self.root[sk]
+        for r in stale:
+            kept = [sk for sk in self.members[r] if sk not in fresh]
+            self.rows -= len(self.members[r]) - len(kept)
+            if kept:
+                self.members[r] = kept
+            else:
+                del self.members[r]
+        self._add(pdf)
+
+    def lookup(self, key: str, source: str, targets: list[str]):
+        root = self.root.get((source, key))
+        members = () if root is None else self.members[root]
+        return lookup_answer(root, members, source, targets)
+
+    def __eq__(self, other) -> bool:
+        def state(ix):
+            rows = {r: sorted(m) for r, m in ix.members.items()}
+            return ix.root, ix.shared, rows, ix.rows
+
+        return isinstance(other, _LookupIndex) and state(self) == state(other)
+
+
 class Matcher:
-    """Point-lookup server over a materialised id↔key projection."""
+    """Point-lookup server over a materialised id↔key projection.
+
+    Lookups come from a driver index of the projection (:class:`_LookupIndex`,
+    zero Spark jobs) while its rows fit :func:`_index_cap`; otherwise, and
+    whenever a refresh would outgrow it, from the cached projection through
+    :func:`match_key` (two jobs, no shuffle). Both answer through
+    :func:`lookup_answer`, so the two paths cannot drift. A refresh
+    patches the index in place under a lock that lookups also take, so a
+    lookup sees the index before or after a patch, never during one."""
 
     def __init__(self, projection=None):
         self.projection = projection
+        self.index: _LookupIndex | None = None
+        self._lock = threading.Lock()
+        if projection is not None:
+            self._reindex(_row_count(projection))
+
+    def _reindex(self, rows: int | None = None) -> None:
+        """Index the projection with one collect when it fits (``rows``
+        None: count it first); else drop the index."""
+        cap = _index_cap(self.projection)
+        if cap > 0 and rows is None:
+            rows = _row_count(self.projection)
+        self.index = (
+            _LookupIndex(self.projection.select("id", "source", "key").toPandas())
+            if cap > 0 and rows <= cap
+            else None
+        )
 
     def lookup(self, key: str, source: str, targets: list[str]):
         if self.projection is None:
             raise ValueError("Matcher has no materialised projection yet")
+        with self._lock:
+            if self.index is not None:
+                return self.index.lookup(key, source, targets)
         # catalog=None: lookups provably cannot rebuild pipeline state
         return match_key(
             None, key, source, targets, [], projection=self.projection
@@ -619,21 +726,22 @@ class Matcher:
         clusters owning a touched key (O(changed)), drops the cached rows
         those memberships supersede with one broadcast anti-join (a single
         pass over cached state, no shuffle), and swaps the projection
-        atomically. Lookup latency stays flat in accumulated-state size;
-        the pipeline is never recomputed. ``touched_keys=None`` (or a
-        first call on an empty matcher) falls back to a full
-        re-materialisation — the correct-but-O(state) path, also what a
-        FULL-mode stream (scores drift as data accumulates) must use.
-        ``localCheckpoint`` truncates the refresh chain's lineage so 24
-        batches deep the cached table does not drag a 24-union plan.
+        atomically. The driver index applies the same patch from one
+        collect of those fresh rows, and is dropped (lookups fall back to
+        the projection) when it would outgrow its cap. Lookup latency stays
+        flat in accumulated-state size; the pipeline is never recomputed.
+        ``touched_keys=None`` (or a first call on an empty matcher) falls
+        back to a full re-materialisation and re-index — the
+        correct-but-O(state) path, also what a FULL-mode stream (scores
+        drift as data accumulates) must use. ``localCheckpoint`` truncates
+        the refresh chain's lineage so 24 batches deep the cached table
+        does not drag a 24-union plan.
         """
         from pyspark.sql import functions as F
 
         if self.projection is None or touched_keys is None:
-            fresh = projection_plan.localCheckpoint(eager=True)
-            old, self.projection = self.projection, fresh
-            if old is not None:
-                old.unpersist()
+            self._swap(projection_plan.localCheckpoint(eager=True))
+            self._reindex()
             return
         new_roots = (
             projection_plan.join(
@@ -650,10 +758,25 @@ class Matcher:
             ["source", "key"],
             "left_anti",
         )
-        refreshed = keep.unionByName(fresh).localCheckpoint(eager=True)
-        old, self.projection = self.projection, refreshed
-        old.unpersist()
+        self._swap(keep.unionByName(fresh).localCheckpoint(eager=True))
+        if self.index is not None:
+            self._patch(fresh.select("id", "source", "key").toPandas())
+
+    def _patch(self, pdf) -> None:
+        """Replace the index rows of ``pdf``'s keys with ``pdf``'s rows, or
+        drop the index when that outgrows its cap."""
+        cap = _index_cap(self.projection)
+        with self._lock:
+            self.index.replace(pdf)
+            if self.index.rows > cap:
+                self.index = None
+
+    def _swap(self, projection) -> None:
+        old, self.projection = self.projection, projection
+        if old is not None:
+            old.unpersist()
 
     def close(self) -> None:
+        self.index = None
         if self.projection is not None:
             self.projection.unpersist()

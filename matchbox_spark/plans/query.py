@@ -17,8 +17,8 @@ server/postgresql/utils/query.py:36-345, client/queries.py:135-320):
   ``id``/``leaf_id`` pass through, unlisted columns drop. Expressions are
   Spark SQL; when sqlglot is installed, DuckDB-dialect expressions transpile
   (the reference stores DuckDB SQL — same dialect-bridging move it makes).
-- **J11 match**: key → root (limit 1), then filter the full projection to
-  that root and group keys per source.
+- **J11 match**: key → root (the smallest, when a key has several), then
+  filter the full projection to that root and group keys per source.
 """
 
 from __future__ import annotations
@@ -394,6 +394,28 @@ class Match:
     target_keys: set[str]
 
 
+def lookup_answer(
+    root_id, members, source: str, targets: list[str]
+) -> list[Match]:
+    """The ``Match`` list of one lookup: ``root_id`` is the key's root (None
+    when the key is absent) and ``members`` that root's ``(source, key)``
+    rows, duplicates allowed. The driver index and the Spark path both
+    answer through here."""
+    by_source: dict[str, set[str]] = {}
+    for src, k in members:
+        by_source.setdefault(src, set()).add(k)
+    return [
+        Match(
+            cluster=None if root_id is None else int(root_id),
+            source=source,
+            source_keys=by_source.get(source, set()),
+            target=t,
+            target_keys=by_source.get(t, set()),
+        )
+        for t in targets
+    ]
+
+
 def match_key(
     catalog: Catalog | None,
     key: str,
@@ -404,44 +426,36 @@ def match_key(
 ) -> list[Match]:
     """J11/§3.3: which keys in each target share the given key's entity?
 
-    Pass ``projection`` (a materialised ``unified_query`` result — see
-    ``DAG.matcher`` / ``DAG.materialize_lookup``) to serve the lookup as two
-    filters on precomputed state; ``catalog`` may then be None, which is the
-    proof that no pipeline recompute can be triggered. Without it the
-    projection plan is built from the catalog per call (fine for one-off
-    lookups; wrong shape for interactive serving).
+    The Spark lookup path: one collect of the key's root ids, then (when the
+    key is present) one collect of the smallest root's rows — two jobs with
+    no shuffle on a materialised projection. Pass ``projection`` (a
+    ``unified_query`` result, e.g. ``DAG.materialize_lookup``'s) to serve
+    the lookup from it; ``catalog`` may then be None, which is the proof
+    that no pipeline recompute can be triggered. Without it the projection
+    plan is built from the catalog per call (fine for one-off lookups;
+    wrong shape for interactive serving — ``DAG.matcher`` answers those
+    from a driver index when the projection fits).
+
+    A key under several roots answers its smallest root.
     """
     if projection is None:
         projection = unified_query(
             catalog, resolvers, [source] + list(targets), level="key"
         )
-    target_cluster = (
+    # every matching row, not a limit: a limit scans a many-partition
+    # projection in growing rounds, one job each
+    roots = (
         projection.where((F.col("source") == source) & (F.col("key") == key))
         .select("id")
-        .limit(1)
         .collect()
     )
-    if not target_cluster:
-        return [
-            Match(None, source, set(), t, set()) for t in targets
-        ]
-    root_id = target_cluster[0]["id"]
+    if not roots:
+        return lookup_answer(None, (), source, targets)
+    root_id = min(r["id"] for r in roots)
+    # the answer is built as sets: a distinct would only add a shuffle
     members = (
         projection.where(F.col("id") == F.lit(root_id))
         .select("source", "key")
-        .distinct()
         .collect()
     )
-    by_source: dict[str, set[str]] = {}
-    for r in members:
-        by_source.setdefault(r["source"], set()).add(r["key"])
-    return [
-        Match(
-            cluster=int(root_id),
-            source=source,
-            source_keys=by_source.get(source, set()),
-            target=t,
-            target_keys=by_source.get(t, set()),
-        )
-        for t in targets
-    ]
+    return lookup_answer(root_id, members, source, targets)

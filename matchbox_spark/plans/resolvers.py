@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matchbox_spark.functions.indexing import dense_index
-from matchbox_spark.schemas import SCHEMA_CLUSTERS, conform
+from matchbox_spark.schemas import SCHEMA_CLUSTERS, conform, local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -272,24 +272,41 @@ def connected_components(
     driver_edge_limit: int | None = None,
 ) -> DataFrame:
     """Connected components: returns ``(id, component)`` — component = min
-    member id. The one place that picks the driver or distributed CC.
+    member id.
 
     ``edges`` needs columns ``src``/``dst`` (long). A self-loop yields no
     component, and nodes appearing only as isolated vertices must be
     unioned in by the caller (an edge list cannot carry them).
+
+    The path is :func:`_cc_labels`'s. A driver result is a bare
+    ``LocalRelation`` (``<empty>`` when there are no labels) carrying its
+    pandas copy as ``_mb_local_pdf``.
+    """
+    lab = _cc_labels(edges, driver_edge_limit, max_iter)
+    if isinstance(lab, DataFrame):
+        return lab
+    out = local_frame(edges.sparkSession, lab, "id long, component long")
+    out._mb_local_pdf = lab
+    return out
+
+
+def _cc_labels(
+    edges: DataFrame, driver_edge_limit: int | None, max_iter: int = 50
+):
+    """The one place that picks the driver or distributed CC: the driver
+    labels as a pandas ``(id, component)`` frame, or the distributed
+    labels as a Spark frame.
 
     An edge set of at most ``driver_edge_limit`` rows (None: the
     memory-derived cap; 0: always distributed) runs the exact driver CC
     (:func:`connected_components_numpy`). Its rows come from the frame's
     attached ``_mb_local_pdf`` copy when it has one (zero jobs), else from
     one bounded ``limit(limit + 1)`` collect that is both the size probe
-    and the driver collect. The driver result is a bare ``LocalRelation``
-    carrying its pandas copy as ``_mb_local_pdf``. Larger edge sets run
-    the large-star/small-star rounds (the 100 TB path).
+    and the driver collect. Larger edge sets run the large-star/small-star
+    rounds (the 100 TB path).
     """
-    spark = edges.sparkSession
     limit = (
-        _driver_cc_edge_limit(spark)
+        _driver_cc_edge_limit(edges.sparkSession)
         if driver_edge_limit is None
         else driver_edge_limit
     )
@@ -302,10 +319,7 @@ def connected_components(
         src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
         loop = src == dst
         nodes, comps = connected_components_numpy(src[~loop], dst[~loop])
-        lab = pd.DataFrame({"id": nodes, "component": comps})
-        out = spark.createDataFrame(lab, "id long, component long")
-        out._mb_local_pdf = lab
-        return out
+        return pd.DataFrame({"id": nodes, "component": comps})
 
     # initial materialisation keeps the default (memory-first) level: it
     # is ONE resident copy freed with `e` — only the LOOP's superseded
@@ -437,7 +451,7 @@ def add_resolver_method(cls: type) -> type:
 class ComponentsSettings:
     # per-model score thresholds; unset models default to 0.0
     thresholds: dict[str, float] = field(default_factory=dict)
-    # the only CC path setting: connected_components runs on the driver up
+    # the only CC path setting: the CC runs on the driver up
     # to this many unioned edges (None: the memory-derived cap; 0: always
     # distributed). Left out of the repr, so the resolver's fingerprint
     # does not depend on which path computed the same clusters
@@ -472,9 +486,10 @@ class Components(ResolverMethod):
     settings_class = ComponentsSettings
 
     def compute_clusters(self, model_edges: Mapping[str, DataFrame]) -> DataFrame:
-        """Threshold each model's edges, union them, and cluster them with
-        :func:`connected_components` (which picks the driver or distributed
-        path); then rank the components into dense parent ids 1..k."""
+        """Threshold each model's edges, union them, and cluster them on
+        the path :func:`_cc_labels` picks (a driver result stays pandas, with
+        no Spark frame of its labels); then rank the components into dense
+        parent ids 1..k."""
         import numpy as np
         import pandas as pd
 
@@ -496,7 +511,7 @@ class Components(ResolverMethod):
         # Driver-resident shortcut (optimization r13): when every model's
         # edge frame already lives on the driver (the streaming delta-link
         # collects each batch's bounded edge set), threshold and union in
-        # pandas too, so connected_components runs no probe job. The
+        # pandas too, so the CC fork runs no probe job. The
         # float32 scores cast to float64 before comparing, exactly Spark's
         # promotion for `float >= double-literal`, so the kept set is
         # identical; Spark SQL orders NaN above every double, so a
@@ -519,29 +534,27 @@ class Components(ResolverMethod):
                     )
             unioned._mb_local_pdf = pd.concat(cols, ignore_index=True)
 
-        labels = connected_components(
-            unioned, driver_edge_limit=s.driver_edge_limit
-        )
-        lab = getattr(labels, "_mb_local_pdf", None)
+        labels = _cc_labels(unioned, s.driver_edge_limit)
+        driver = not isinstance(labels, DataFrame)
         logger.info(
             "Components: auto → %s union-find",
-            "distributed" if lab is None else "driver",
+            "driver" if driver else "distributed",
         )
-        if lab is not None:
+        if driver:
             # driver result: dense parent-id ranking in numpy (sorted
             # components → 1..k) and one Arrow upload of the assignments.
             # The pandas copy rides along, empty or not: the catalog's
             # local insert reads it instead of re-collecting the plan
-            _, rank = np.unique(lab["component"].to_numpy(), return_inverse=True)
+            _, rank = np.unique(labels["component"].to_numpy(), return_inverse=True)
             local = pd.DataFrame(
                 {
                     "parent_id": (rank + 1).astype("int64"),
-                    "child_id": lab["id"].to_numpy(),
+                    "child_id": labels["id"].to_numpy(),
                 }
             )
             assignments = conform(
-                unioned.sparkSession.createDataFrame(
-                    local, "parent_id long, child_id long"
+                local_frame(
+                    unioned.sparkSession, local, "parent_id long, child_id long"
                 ),
                 SCHEMA_CLUSTERS,
             )

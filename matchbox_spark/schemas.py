@@ -79,3 +79,16 @@ def conform(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
+
+
+def local_frame(spark, pdf, schema: str) -> DataFrame:
+    """The pandas frame ``pdf`` uploaded as a ``LocalRelation`` with the
+    DDL ``schema``. An empty pandas frame would plan a ``LogicalRDD``, whose
+    size is unknown and which no plan probe reads as driver-resident; an
+    empty Arrow table of the schema plans ``LocalRelation <empty>``."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    empty = to_arrow_schema(T.StructType.fromDDL(schema)).empty_table()
+    return spark.createDataFrame(empty, schema)

@@ -69,6 +69,7 @@ from matchbox_spark.plans.resolvers import (
     _driver_cc_edge_limit,
     _free_checkpoint,
 )
+from matchbox_spark.schemas import local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -138,10 +139,11 @@ def _start_stream(
 
 
 def _local_frame(spark, schema: str, *columns) -> DataFrame:
-    """A LocalRelation over ``columns`` (one sequence per field of the
-    ``"name type, ..."`` ``schema``) that carries its pandas frame as
-    ``_mb_local_pdf`` — the catalog's driver twins and the CC pandas
-    shortcut read it without a Spark job."""
+    """A LocalRelation (``<empty>`` when there are no rows) over
+    ``columns`` (one sequence per field of the ``"name type, ..."``
+    ``schema``) that carries its pandas frame as ``_mb_local_pdf`` — the
+    catalog's driver twins and the CC pandas shortcut read it without a
+    Spark job."""
     import pandas as pd
 
     fields = [f.split() for f in schema.split(", ")]
@@ -151,7 +153,7 @@ def _local_frame(spark, schema: str, *columns) -> DataFrame:
             for (name, kind), col in zip(fields, columns)
         }
     )
-    df = spark.createDataFrame(pdf, schema)
+    df = local_frame(spark, pdf, schema)
     df._mb_local_pdf = pdf
     return df
 

@@ -34,7 +34,8 @@ def force_distributed(monkeypatch):
     """Force named driver/distributed gates onto their distributed path for
     the rest of the test: ``force_distributed("index", "cc")``. Gates:
     ``cc`` (driver connected components), ``index`` (catalog source-index
-    kernel), ``jaccard`` (bitset Jaccard) and ``bpe`` (driver BPE twin).
+    kernel, driver mirrors and the Matcher's lookup index), ``jaccard``
+    (bitset Jaccard) and ``bpe`` (driver BPE twin).
     The gate table is ``tools/check_oracle.py``'s, which its ``--force``
     flag applies to the oracle sweep."""
     from tools.check_oracle import force_gates

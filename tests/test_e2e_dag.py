@@ -228,26 +228,55 @@ def test_drop_step_allows_reinsert(spark, crn_parquet):
     cat.insert_model_edges("dedupe_crn", edges)
     assert cat.model_edges.where("step = 'dedupe_crn'").count() == 1
 
-def test_matcher_serves_lookups_without_catalog(spark, crn_parquet):
+@pytest.mark.parametrize("path", ["driver_index", "spark"])
+def test_matcher_serves_lookups_without_catalog(
+    spark, tmp_path, force_distributed, path
+):
     """§3.3 interactive path: the Matcher materialises the projection once;
     lookups run with catalog=None — structurally incapable of re-triggering
-    pipeline recompute — and agree with the per-call path."""
-    dag = _build_dag(spark, crn_parquet)
+    pipeline recompute — and agree with the per-call path, on the driver
+    index and on the cached projection (the forced ``index`` gate), for
+    every key, an absent key, a 40-row hub and a key whose two rows differ
+    in content. (A key under two roots cannot come out of this pipeline;
+    ``test_matcher_index_fails_closed_past_its_budget`` pins that case.)"""
+    if path == "spark":
+        force_distributed("index")
+    rows = []
+    for e in range(10):
+        for v, suffix in enumerate(["", " Limited", " UK", " Company"]):
+            rows.append((f"k{e}_{v}", f"Company {e}{suffix}", f"crn-{e:03d}"))
+    rows += [(f"hub_{i}", f"Hub {i}", "crn-hub") for i in range(40)]
+    rows.append(("k3_0", "Company 7 Trading", "crn-007"))
+    location = str(tmp_path / "serving.parquet")
+    spark.createDataFrame(
+        rows, "key string, company_name string, crn string"
+    ).write.parquet(location)
+    dag = _build_dag(spark, location)
     dag.run()
 
     m = dag.matcher("resolve_crn", ["crn"])
     try:
-        got = m.lookup("k3_0", "crn", ["crn"])
-        assert got[0].target_keys == {"k3_0", "k3_1", "k3_2", "k3_3"}
-        # agrees with the catalog-backed path
-        ref = dag.lookup_key(
-            key="k3_0", source="crn", targets=["crn"], resolver="resolve_crn"
-        )
-        assert got[0].cluster == ref[0].cluster
-        assert got[0].target_keys == ref[0].target_keys
+        assert (m.index is not None) == (path == "driver_index")
+        got = m.lookup("k0_1", "crn", ["crn"])
+        assert got[0].target_keys == {"k0_0", "k0_1", "k0_2", "k0_3"}
+        for key in sorted({r[0] for r in rows}) + ["nope"]:
+            ref = dag.lookup_key(
+                key=key, source="crn", targets=["crn"], resolver="resolve_crn"
+            )
+            assert m.lookup(key, "crn", ["crn"]) == ref, key
+        hub = m.lookup("hub_7", "crn", ["crn"])[0]
+        assert hub.target_keys == {f"hub_{i}" for i in range(40)}
         # missing key behaves identically
         miss = m.lookup("nope", "crn", ["crn"])
         assert miss[0].cluster is None and miss[0].target_keys == set()
+        # the duplicated key has two leaves, and the dedupe's key-level
+        # join gives both leaves both rows' crns: entities 3 and 7 merge
+        dup = m.projection.where(F.col("key") == "k3_0").collect()
+        assert len({r["leaf_id"] for r in dup}) == 2
+        assert len({r["id"] for r in dup}) == 1
+        assert m.lookup("k3_0", "crn", ["crn"])[0].target_keys == {
+            f"k{e}_{v}" for e in (3, 7) for v in range(4)
+        }
     finally:
         m.close()
 

@@ -300,14 +300,16 @@ def test_overlapping_hash_delta_insert_local_matches_distributed(
     assert local_state == dist_state
 
 
-def _job_counter(spark, monkeypatch, names):
-    """Run every call of the named ``Catalog`` methods under its own job
-    group. Returns a function giving, per method, the number of Spark jobs
-    each call submitted (in call order)."""
+def _job_counter(spark, monkeypatch, names, owner=None):
+    """Run every call of the named methods of ``owner`` (default
+    ``Catalog``) under its own job group. Returns a function giving, per
+    method, the number of Spark jobs each call submitted (in call order);
+    its ``groups`` attribute holds each call's job group."""
     import uuid
 
     from matchbox_spark.plans.catalog import Catalog
 
+    owner = Catalog if owner is None else owner
     sc = spark.sparkContext
     props = (
         "spark.jobGroup.id",
@@ -317,7 +319,7 @@ def _job_counter(spark, monkeypatch, names):
     groups = {n: [] for n in names}
     for name in names:
 
-        def wrapper(self, *args, _fn=getattr(Catalog, name), _name=name, **kw):
+        def wrapper(self, *args, _fn=getattr(owner, name), _name=name, **kw):
             group = f"jobcount-{uuid.uuid4().hex}"
             # a streaming batch runs on the query's thread, which carries
             # the query's own job group: restore it, do not clear it
@@ -330,7 +332,7 @@ def _job_counter(spark, monkeypatch, names):
                     sc.setLocalProperty(p, v)
                 groups[_name].append(group)
 
-        monkeypatch.setattr(Catalog, name, wrapper)
+        monkeypatch.setattr(owner, name, wrapper)
 
     def counts():
         # job starts reach the status store through the async listener bus
@@ -341,6 +343,7 @@ def _job_counter(spark, monkeypatch, names):
             for n, gs in groups.items()
         }
 
+    counts.groups = groups
     return counts
 
 
@@ -378,11 +381,54 @@ def test_driver_insert_job_counts(spark, monkeypatch):
     }
 
 
+@pytest.mark.parametrize("path", ["driver_index", "spark"])
+def test_matcher_lookup_job_counts(spark, monkeypatch, force_distributed, path):
+    """Jobs per ``Matcher.lookup``: none on the driver index; on the forced
+    Spark path two for a present key (its root ids, then its root's rows)
+    and one for an absent key, each a single stage — no shuffle."""
+    from matchbox_spark.plans.dag import Matcher
+
+    if path == "spark":
+        force_distributed("index")
+    # 8 partitions and no shuffle in the lineage: every stage is the lookup's
+    proj = spark.range(0, 400, 1, 8).selectExpr(
+        "id div 4 AS id",
+        "id AS leaf_id",
+        "CAST(id AS string) AS key",
+        "'s' AS source",
+    )
+    m = Matcher(proj.persist())
+    counts = _job_counter(spark, monkeypatch, ["lookup"], owner=Matcher)
+    try:
+        assert (m.index is not None) == (path == "driver_index")
+        for key in ("0", "399", "nope"):
+            m.lookup(key, "s", ["s"])
+        assert m.lookup("399", "s", ["s"])[0].target_keys == {
+            "396", "397", "398", "399"
+        }
+        want = [0, 0, 0, 0] if path == "driver_index" else [2, 2, 1, 2]
+        assert counts()["lookup"] == want
+        tracker = spark.sparkContext.statusTracker()
+        for group in counts.groups["lookup"]:
+            for job in tracker.getJobIdsForGroup(group):
+                assert len(tracker.getJobInfo(job).stageIds) == 1
+    finally:
+        m.close()
+
+
 def _delta_stream_catalog(spark, tmp_path, name):
     """st7's shape in miniature: 3 micro-batches through the delta-link
     loop (index delta → blocked superset → model → edge delta → star
     union → CC → claim merge), including a cross-batch merge so the
-    tombstone path fires."""
+    tombstone path fires.
+
+    The file source orders a backlog by modification time, and files that
+    share one come in directory-listing order, so the batches are given
+    strictly increasing mtimes in list order; the stream's source log must
+    then show one file per batch, in that order."""
+    import json
+    import os
+    import time
     from matchbox_spark.operators.dedupers import NaiveDeduper
     from matchbox_spark.plans.catalog import Catalog
     from matchbox_spark.plans.resolvers import Components
@@ -396,10 +442,17 @@ def _delta_stream_catalog(spark, tmp_path, name):
     ]
     data_dir = tmp_path / f"data_{name}"
     data_dir.mkdir()
+    files: list[str] = []
     for rows in batches:
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(str(data_dir))
+        files += sorted(
+            {p.name for p in data_dir.glob("*.parquet")} - set(files)
+        )
+    t0 = time.time() - len(files)
+    for i, f in enumerate(files):
+        os.utime(data_dir / f, (t0 + i, t0 + i))
     cat = Catalog(spark)
     stream = (
         spark.readStream.schema(schema)
@@ -418,6 +471,16 @@ def _delta_stream_catalog(spark, tmp_path, name):
         source_location=str(data_dir),
     )
     q.awaitTermination(600)
+    log = tmp_path / f"ckpt_{name}" / "sources" / "0"
+    per_batch = [
+        [
+            os.path.basename(json.loads(line)["path"])
+            for line in (log / str(b)).read_text().splitlines()[1:]
+        ]
+        for b in range(len(files))
+    ]
+    assert per_batch == [[f] for f in files]
+    assert not (log / str(len(files))).exists()
     return cat
 
 

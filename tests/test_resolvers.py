@@ -101,9 +101,8 @@ def test_cc_path_matrix(spark, caplog, limit, entry, case):
         df = spark.createDataFrame(kept, "src long, dst long")
         got = connected_components(df, driver_edge_limit=limit)
         assert hasattr(got, "_mb_local_pdf") == (path == "driver")
-        if expected:
-            plan = got._jdf.queryExecution().logical().toString()
-            assert plan.startswith("LocalRelation") == (path == "driver")
+        plan = got._jdf.queryExecution().logical().toString()
+        assert plan.startswith("LocalRelation") == (path == "driver")
         assert {r["id"]: r["component"] for r in got.collect()} == expected
         return
     edges = spark.createDataFrame(rows, "left_id long, right_id long, score float")

@@ -501,7 +501,12 @@ def test_matcher_refresh_patches_merged_clusters(spark):
     refresh, and the patched projection must equal the plan exactly."""
     import pytest
 
-    from matchbox_spark.plans.dag import Matcher
+    from matchbox_spark.plans.dag import Matcher, _LookupIndex
+
+    def assert_index_exact():
+        # the patched driver index equals one rebuilt from the projection
+        rows = m.projection.select("id", "source", "key").toPandas()
+        assert m.index == _LookupIndex(rows)
 
     m = Matcher()
     with pytest.raises(ValueError):
@@ -512,6 +517,7 @@ def test_matcher_refresh_patches_merged_clusters(spark):
         "id long, source string, key string",
     )
     m.refresh(v0)  # first call: full materialise
+    assert_index_exact()
     assert m.lookup("1", "s", ["s"])[0].target_keys == {"1", "2"}
 
     # batch ingests key 9 which bridges clusters 10 and 20 → merged root 10
@@ -530,10 +536,103 @@ def test_matcher_refresh_patches_merged_clusters(spark):
             "id long, source string, key string",
         )
     )
+    assert_index_exact()
     touched = spark.createDataFrame([("s", "9")], "source string, key string")
     m.refresh(v1, touched)
+    assert_index_exact()
     assert m.lookup("3", "s", ["s"])[0].target_keys == {"1", "2", "3", "9"}
     assert m.lookup("7", "s", ["s"])[0].target_keys == {"7"}
     got = {(r["id"], r["key"]) for r in m.projection.collect()}
     assert got == {(10, "1"), (10, "2"), (10, "3"), (10, "9"), (99, "7")}
+    m.close()
+
+
+def test_matcher_index_fails_closed_past_its_budget(spark, monkeypatch):
+    """A refresh that would grow the driver index past the catalog's driver
+    budget drops it, and lookups then answer from the projection exactly
+    as the index would. A key under two roots answers the smaller."""
+    from matchbox_spark.plans import catalog as catalog_mod
+    from matchbox_spark.plans.dag import Matcher
+
+    schema = "id long, source string, key string"
+    v0 = spark.createDataFrame(
+        [(10, "s", "1"), (10, "s", "2"), (20, "s", "3")], schema
+    )
+    # key 9 joins root 10; key 3 now also sits under root 5
+    v1 = spark.createDataFrame(
+        [(10, "s", "1"), (10, "s", "2"), (10, "s", "9"), (20, "s", "3"),
+         (5, "s", "3")],
+        schema,
+    )
+    touched = spark.createDataFrame([("s", "9"), ("s", "3")], "source string, key string")
+    row_bytes = 8 + v0._jdf.schema().defaultSize()
+    matchers = []
+    for budget in (None, 4 * row_bytes):  # None: the default budget
+        if budget is not None:
+            monkeypatch.setattr(catalog_mod, "_INDEX_DRIVER_BYTES", budget)
+        m = Matcher()
+        m.refresh(v0)
+        assert m.index is not None and m.index.rows == 3
+        m.refresh(v1, touched)
+        matchers.append(m)
+    indexed, fallback = matchers
+    assert indexed.index.rows == 5 and indexed.index.shared == {("s", "3"): {5, 20}}
+    assert fallback.index is None
+    for key in ("1", "2", "3", "9", "nope"):
+        assert fallback.lookup(key, "s", ["s"]) == indexed.lookup(key, "s", ["s"])
+    assert indexed.lookup("3", "s", ["s"])[0].cluster == 5
+    assert indexed.lookup("9", "s", ["s"])[0].target_keys == {"1", "2", "9"}
+    for m in matchers:
+        m.close()
+
+
+def test_matcher_lookups_never_see_a_half_patched_index(spark):
+    """Lookups on other threads see the driver index before or after a
+    refresh's patch, never during one: with key ``a`` moving between two
+    clusters, every lookup answers one of them whole."""
+    import sys
+    import threading
+    import time
+
+    import pandas as pd
+
+    from matchbox_spark.plans.dag import Matcher
+
+    proj = spark.createDataFrame(
+        [(1, "s", "a"), (1, "s", "b")], "id long, source string, key string"
+    )
+    m = Matcher(proj.persist())
+    states = [
+        pd.DataFrame({"id": [1, 1], "source": ["s"] * 2, "key": ["a", "b"]}),
+        pd.DataFrame({"id": [2, 2, 2], "source": ["s"] * 3, "key": ["a", "b", "c"]}),
+    ]
+    whole = {(1, frozenset("ab")), (2, frozenset("abc"))}
+    torn = []
+    stop = threading.Event()
+
+    def read():
+        while not stop.is_set():
+            got = m.lookup("a", "s", ["s"])[0]
+            if (got.cluster, frozenset(got.target_keys)) not in whole:
+                torn.append(got)
+                return
+
+    readers = [threading.Thread(target=read) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in readers:
+            t.start()
+        deadline, patches = time.monotonic() + 2, 0
+        while time.monotonic() < deadline:
+            patches += 1
+            m._patch(states[patches % 2])
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(30)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers)
+    assert patches > 10 and m.index is not None
+    assert torn == []
     m.close()

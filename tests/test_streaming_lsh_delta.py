@@ -272,7 +272,7 @@ def test_serving_matcher_patches_under_block_key_stream(spark, tmp_path):
     invariant (merges only enter through batch rows): after the bridge
     batch, a point lookup serves the fully-merged membership and the
     incrementally-patched projection equals a fresh re-materialisation."""
-    from matchbox_spark.plans.dag import Matcher
+    from matchbox_spark.plans.dag import Matcher, _LookupIndex
 
     data_dir = tmp_path / "data_serve"
     data_dir.mkdir()
@@ -301,6 +301,9 @@ def test_serving_matcher_patches_under_block_key_stream(spark, tmp_path):
             serving_matcher=matcher,
         )
         q.awaitTermination(600)
+        # the patched driver index equals one rebuilt from the projection
+        rows = matcher.projection.select("id", "source", "key").toPandas()
+        assert matcher.index == _LookupIndex(rows)
 
     got = matcher.lookup("1", "s", ["s"])[0]
     assert got.target_keys == {"1", "2", "3", "4", "5"}
