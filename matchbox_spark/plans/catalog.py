@@ -118,6 +118,52 @@ def _pack_pairs(left, right) -> np.ndarray | None:
     return (l64.astype(np.uint64) << np.uint64(32)) | r64.astype(np.uint64)
 
 
+class _ClusterCopy:
+    """The driver copy of ``clusters``, in both directions: ``hashes[i]`` is
+    the hash of id ``i`` (ids are dense from 1, so a list indexed by id;
+    slot 0 and any hole hold None) and ``ids`` maps a hash to its id. A
+    probe by hash is then one dict lookup, not a scan of the table."""
+
+    __slots__ = ("hashes", "ids")
+
+    def __init__(self, rows: list[tuple[int, bytes]]):
+        top = max((i for i, _ in rows), default=0)
+        self.hashes: list[bytes | None] = [None] * (top + 1)
+        for i, h in rows:
+            self.hashes[i] = bytes(h)
+        self.ids = {h: i for i, h in enumerate(self.hashes) if h is not None}
+
+    def hash_of(self, cid: int) -> bytes | None:
+        """The hash of id ``cid``; None when the table has no such id."""
+        return self.hashes[cid] if 0 < cid < len(self.hashes) else None
+
+    def add(self, first: int, hashes: list[bytes]) -> None:
+        """Record ``hashes`` under the ids ``first, first + 1, ...``, which
+        lie above every id held."""
+        self.hashes.extend([None] * (first - len(self.hashes)))
+        self.hashes.extend(hashes)
+        self.ids.update(zip(hashes, range(first, first + len(hashes))))
+
+
+def _group_index_rows(pdf):
+    """``groupBy("hash").agg(sort_array(collect_list("key")).alias("keys"),
+    first(c) ...)`` over the collected hashed rows ``pdf`` (columns
+    ``hash``, ``key`` and any others), on the driver. As in Spark: null
+    keys drop out, a hash whose keys are all null keeps an empty list, keys
+    sort in string order (code point order, which is UTF-8 byte order),
+    and each other column takes its first row's value, null or not (so not
+    pandas' ``first``, which skips nulls). Returns one row per hash, with
+    the hash named ``cluster_hash``."""
+    pdf["hash"] = [bytes(h) for h in pdf["hash"]]
+    keyed = pdf.loc[pdf["key"].notna(), ["hash", "key"]]
+    lists = keyed.sort_values("key", kind="stable").groupby("hash", sort=False)[
+        "key"
+    ].agg(list)
+    out = pdf.drop_duplicates("hash").drop(columns="key").reset_index(drop=True)
+    out["keys"] = [k if isinstance(k, list) else [] for k in out["hash"].map(lists)]
+    return out.rename(columns={"hash": "cluster_hash"})
+
+
 def _streaming_meta(kind: str) -> dict:
     """Metadata of a streaming step: perpetually amendable, so never
     fingerprint-gated."""
@@ -695,7 +741,8 @@ class Catalog:
         kernel updates the copy in place and puts it back right after its
         own append.
 
-        Copies: ``clusters`` cluster_id → cluster_hash; ``contains`` root →
+        Copies: ``clusters`` a :class:`_ClusterCopy` (cluster_id ↔
+        cluster_hash); ``contains`` root →
         sorted leaf tuple; ``cluster_keys`` source → {(cluster_id, key)};
         ``resolver_clusters`` step → {cluster_id} as the view shows them
         (appends minus tombstones), with an entry for every resolver step;
@@ -742,7 +789,7 @@ class Catalog:
         rows = list(zip(*cols))
         out: dict = {}
         if name == "clusters":
-            return {i: bytes(h) for i, h in rows}
+            return _ClusterCopy(rows)
         if name == "contains":
             for root, leaf in sorted(rows):
                 out.setdefault(root, []).append(leaf)
@@ -836,36 +883,37 @@ class Catalog:
         self._max_id += int(self._last_assigned_n)
 
     def _cluster_ids_local(self, hashes: Iterable[bytes]) -> dict[bytes, int]:
-        """Insert-if-absent by hash against the complete clusters mirror
-        (a mirror miss IS a table miss): ``hash → cluster_id`` for every
-        hash. New hashes get dense ids in unsigned byte order of the hash —
-        what ``dense_index`` over digest-prefix buckets and per-bucket
+        """Insert-if-absent by hash against the complete clusters copy (a
+        copy miss IS a table miss), one dict probe per hash. New hashes get
+        dense ids in unsigned byte order of the hash — what
+        ``dense_index`` over digest-prefix buckets and per-bucket
         BinaryType windows gives the distributed paths. Their rows append
-        to ``clusters`` as one LocalRelation (no job) and extend the
-        mirror, which the caller got from :meth:`mirror`."""
-        cmirror = self._mirrors["clusters"]
-        want = set(hashes)
-        id_of = {h: i for i, h in cmirror.items() if h in want}
-        new = sorted(want.difference(id_of))
+        to ``clusters`` as one LocalRelation (no job) and extend the copy,
+        which the caller got from :meth:`mirror`. Returns the copy's
+        ``hash → cluster_id`` map, which then holds every hash of
+        ``hashes``; callers only read it."""
+        copy = self._mirrors["clusters"]
+        new = sorted({h for h in hashes if h not in copy.ids})
         if new:
-            minted = range(self._max_id + 1, self._max_id + 1 + len(new))
+            first = self._max_id + 1
             self._append(
                 "clusters",
                 self._local_df(
                     {
-                        "cluster_id": np.asarray(minted, dtype="int64"),
+                        "cluster_id": np.arange(
+                            first, first + len(new), dtype="int64"
+                        ),
                         "cluster_hash": new,
                     },
                     _CLUSTERS,
                 ),
                 materialised=True,
             )
-            cmirror.update(zip(minted, new))
-            self._mirrors["clusters"] = cmirror
-            id_of.update(zip(new, minted))
+            copy.add(first, new)
+            self._mirrors["clusters"] = copy
             self._max_id += len(new)
             self._clusters_empty = False
-        return id_of
+        return copy.ids
 
     def _fingerprint_gate(self, step: str, fingerprint: bytes) -> bool:
         """H6: True → skip (identical data already inserted); False → proceed."""
@@ -1044,8 +1092,7 @@ class Catalog:
         assignment checkpoint, keys checkpoint — under AQE even the "lazy"
         assignment checkpoint executes its window's shuffle stages, one
         more serial stage round per source step, the j7 serial-action
-        floor). The insert-if-absent anti-join and the keys→cluster-id
-        join are lookups in the complete clusters mirror.
+        floor). The insert itself is :meth:`_index_apply_local`.
 
         - Bulk mode (:meth:`insert_source_index`) fingerprint-gates the
           step and refuses a step that already has rows (the re-sync
@@ -1054,40 +1101,17 @@ class Catalog:
           signed hashes is the distributed per-bucket
           ``unordered_stats_aggs`` fold (associative; one global group is
           one valid grouping).
-        - Merge mode (:meth:`insert_source_index_delta`) is not gated and
-          anti-joins each ``(cluster_id, key)`` pair against the step's
-          keys mirror, so a replayed batch appends nothing.
+        - Merge mode (:meth:`insert_source_index_delta`) is not gated.
 
-        Byte-identical outcome to the distributed branches: ids from
-        :meth:`_cluster_ids_local`, keys deduplicated per array in
-        first-occurrence order (``array_distinct``). The appends are
-        LocalRelations (no jobs), which also lets every downstream join
-        against ``clusters``/``cluster_keys`` broadcast.
-
-        Returns None, having done nothing, when the optimizer's size
-        estimate for ``index`` exceeds :data:`_INDEX_DRIVER_BYTES` (256 MB)
-        — the estimate is read driver-side, so the decision costs no job
-        and a 100 TB index never collects — or when :meth:`mirror` has no
-        copy of a table it needs (``clusters``; ``cluster_keys`` in merge
-        mode).
-        Otherwise returns the collected index as pandas, with its
-        ``cluster_id`` column unless the fingerprint gate skipped the step;
-        in merge mode the extra columns of ``index`` (e.g. per-hash
+        Returns None, having done nothing, when :meth:`_index_fits` refuses
+        ``index``. Otherwise returns the collected index as pandas, with
+        its ``cluster_id`` column unless the fingerprint gate skipped the
+        step; in merge mode the extra columns of ``index`` (e.g. per-hash
         blocking values) ride along."""
         if not merge and self._step_has_rows("cluster_keys", "source", step):
             return None
-        try:
-            est = int(
-                str(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:  # noqa: BLE001 — estimation only; general path
+        if not self._index_fits(index, merge):
             return None
-        need = ("clusters", "cluster_keys") if merge else ("clusters",)
-        if est > _INDEX_DRIVER_BYTES or self.mirror(*need) is None:
-            return None
-        # bulk mode only appends keys it holds: it keeps a copy that exists
-        kcopy = self.mirror("cluster_keys", rebuild=merge)
-
         rest = [c for c in index.columns if c != "hash"] if merge else ["keys"]
         index = index.select(F.col("hash").alias("cluster_hash"), *rest)
         if merge:
@@ -1103,7 +1127,39 @@ class Catalog:
             if self._fingerprint_gate(step, fingerprint):
                 return pdf
             meta = {"type": "source", "fingerprint": hash_to_base64(fingerprint)}
+        return self._index_apply_local(step, pdf, meta, merge)
 
+    def _index_fits(self, index: DataFrame, merge: bool) -> bool:
+        """The driver index kernels' gate, decided with no job: the
+        optimizer's size estimate for ``index`` must fit
+        :data:`_INDEX_DRIVER_BYTES` (read driver-side, so a 100 TB index
+        never collects), and :meth:`mirror` must give a copy of every table
+        the kernel needs (``clusters``; ``cluster_keys`` in merge mode)."""
+        try:
+            est = int(
+                str(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            )
+        except Exception:  # noqa: BLE001 — estimation only; general path
+            return False
+        need = ("clusters", "cluster_keys") if merge else ("clusters",)
+        return est <= _INDEX_DRIVER_BYTES and self.mirror(*need) is not None
+
+    def _index_apply_local(self, step: str, pdf, meta: dict, merge: bool):
+        """Insert the collected index ``pdf`` (``cluster_hash``, ``keys``,
+        any other columns) under ``step`` with ``meta``, on the table
+        copies :meth:`_index_fits` checked: the insert-if-absent anti-join
+        and the keys → cluster-id join are lookups in the clusters copy. In
+        merge mode each ``(cluster_id, key)`` pair is also anti-joined
+        against the step's keys copy, so a replayed batch appends nothing.
+
+        Byte-identical outcome to the distributed branches: ids from
+        :meth:`_cluster_ids_local`, keys deduplicated per array in
+        first-occurrence order (``array_distinct``). The appends are
+        LocalRelations (no jobs), which also lets every downstream join
+        against ``clusters``/``cluster_keys`` broadcast. Returns ``pdf``
+        with its assigned ``cluster_id`` column."""
+        # bulk mode only appends keys it holds: it keeps a copy that exists
+        kcopy = self.mirror("cluster_keys", rebuild=merge)
         hash_bytes = [bytes(b) for b in pdf["cluster_hash"]]
         id_of = self._cluster_ids_local(hash_bytes)
         seen = kcopy[0].setdefault(step, set()) if merge else set()
@@ -1137,20 +1193,37 @@ class Catalog:
         pdf["cluster_id"] = [id_of[h] for h in hash_bytes]
         return pdf
 
-    def insert_source_index_delta_mapped(self, step: str, index: DataFrame):
+    def insert_source_index_delta_mapped(self, step: str, rows: DataFrame):
         """Driver-local delta index insert that RETURNS the batch mapping.
 
-        Runs :meth:`_index_insert_local` in merge mode and hands back the
-        collected batch index as a pandas frame with its assigned
-        ``cluster_id`` column (extra columns on ``index`` — e.g. per-hash
-        blocking values — ride along). The streaming delta-pair path
-        (optimization r14) consumes the mapping to maintain its driver
-        block map without any further jobs. Returns None whenever the
-        kernel cannot run (no table copy / over-budget delta); the caller
-        must then fall back to :meth:`insert_source_index_delta`, which
-        re-checks the cheap gates and takes the distributed branch.
+        ``rows`` is a micro-batch's UN-grouped hashed rows: ``hash``,
+        ``key`` and any further columns (e.g. per-hash blocking values).
+        After the :meth:`_index_fits` gate, ONE Arrow collect of ``rows``
+        is the call's only Spark job, with no exchange:
+        :func:`_group_index_rows` groups it on the driver to exactly what
+        ``groupBy("hash")`` with ``sort_array(collect_list("key"))`` and
+        ``first`` of every other column gives, and
+        :meth:`_index_apply_local` inserts it in merge mode. Returns the
+        grouped batch as a pandas frame with its assigned ``cluster_id``
+        column; the streaming delta-pair path (optimization r14) consumes
+        it to maintain its driver block map without any further jobs. An
+        empty batch returns an empty frame before any mutation (no step
+        registered), so the collect doubles as the stream's emptiness
+        check. Returns None, having collected and inserted nothing,
+        whenever the gate refuses (no table copy / over-budget delta); the
+        caller must then group the batch and fall back to
+        :meth:`insert_source_index_delta`, which re-checks the gate and
+        takes the distributed branch.
         """
-        return self._index_insert_local(step, index, merge=True)
+        if not self._index_fits(rows, merge=True):
+            return None
+        pdf = rows.toPandas()
+        if pdf.empty:
+            pdf = pdf.rename(columns={"hash": "cluster_hash", "key": "keys"})
+            return pdf.assign(cluster_id=[])
+        return self._index_apply_local(
+            step, _group_index_rows(pdf), _streaming_meta("source"), merge=True
+        )
 
     def insert_source_index_delta(self, step: str, index: DataFrame) -> None:
         """Streaming/merge insert: append a source-index DELTA under ``step``.
@@ -1596,7 +1669,7 @@ class Catalog:
         Returns the batch's sorted ``(root, leaf)`` rows, root != leaf,
         pre-existing roots included."""
         kmirror = self._mirrors["contains"]
-        cmirror = self._mirrors["clusters"]
+        ccopy = self._mirrors["clusters"]
         parents: dict[int, set[int]] = {}
         for p, c in zip(apdf["parent_id"].tolist(), apdf["child_id"].tolist()):
             parents.setdefault(int(p), set()).add(int(c))
@@ -1606,7 +1679,7 @@ class Catalog:
         }
         parent_hash = {}
         for p, leaves in expanded.items():
-            member = [cmirror[c] for c in leaves if c in cmirror]
+            member = [h for h in map(ccopy.hash_of, leaves) if h is not None]
             if member:
                 parent_hash[p] = hash_cluster_leaves(member)
         watermark = self._max_id

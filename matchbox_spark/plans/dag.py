@@ -758,7 +758,13 @@ class Matcher:
             ["source", "key"],
             "left_anti",
         )
-        self._swap(keep.unionByName(fresh).localCheckpoint(eager=True))
+        # the union adds fresh's partitions to keep's: coalesce back (a
+        # narrow dependency, no shuffle), or every refresh would widen the
+        # projection that the Spark lookup path scans in full
+        parts = self.projection._jdf.rdd().getNumPartitions()
+        self._swap(
+            keep.unionByName(fresh).coalesce(parts).localCheckpoint(eager=True)
+        )
         if self.index is not None:
             self._patch(fresh.select("id", "source", "key").toPandas())
 

@@ -47,6 +47,13 @@ stars) → claim merge (``merge_resolver_clusters_delta``) → free the
 batch-local checkpoints. ``full`` replaces edges + tail with one model +
 resolver rebuild.
 
+Skipping an empty batch costs one ``isEmpty`` job per batch, except on the
+``pairs`` route of a run that witnessed batch 0. There the index phase
+hands the batch's un-grouped hashed rows to the catalog's one-collect
+kernel (grouped on the driver, no exchange), and an empty collect ends the
+batch, so a non-empty batch costs that one Spark job in all; every later
+phase runs on driver copies.
+
 Checkpoint/state coupling: the streaming checkpoint is durable but a
 ``Catalog(spark)`` without a path is not. Resuming a checkpoint against a
 catalog that is missing the earlier batches' state would silently resolve
@@ -58,7 +65,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -112,19 +119,24 @@ def _start_stream(
     body,
     checkpoint_dir: str,
     available_now: bool = True,
+    reads_empty=lambda: False,
 ) -> StreamingQuery:
     """Start ``stream`` with ``body(batch, batch_id, from_start)`` run on
     every NON-EMPTY micro-batch, after the checkpoint guard.
 
     ``from_start`` says whether this run witnessed batch 0; a run that did
     not is a resumed checkpoint, checked against ``step``'s catalog state
-    before its first non-empty batch runs."""
+    before its first non-empty batch runs. Emptiness costs one
+    ``isEmpty`` job per batch, except on a run that witnessed batch 0 while
+    ``reads_empty()`` says the body reads it from its own collect; such a
+    body must then return at once on an empty batch. The guard only runs
+    on a resumed run, so it never sees an empty batch either way."""
     run = {"from_start": False}
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         if batch_id == 0:
             run["from_start"] = True
-        if batch.isEmpty():
+        if not (run["from_start"] and reads_empty()) and batch.isEmpty():
             return
         if not run["from_start"]:
             _guard_checkpoint_state(catalog, step, batch_id)
@@ -168,39 +180,37 @@ def _index_batch(
     catalog: Catalog,
     step: str,
     batch: DataFrame,
+    h1: Column,
     key_field: str,
-    index_fields: list[str],
     value_fields: list[str] | None = None,
 ):
-    """H1-hash a batch, group to a content index, merge append-only (U6).
+    """H1-hash a batch (``h1``: the stream's hash Column, built once per
+    stream), merge it append-only (U6) into the catalog's content index.
 
-    With ``value_fields`` (the ``pairs`` route) the per-hash FIRST of each
-    named field rides the same collect, string-cast for stable driver-side
-    equality — legal because the fields are part of the hashed content
-    (the route gates ``value_fields ⊆ index_fields``), so they are constant
-    within a hash group. Returns the catalog's mapped batch index (a pandas
-    frame with assigned ``cluster_id``) in that mode, or None when the
-    driver twin cannot run — the caller must then re-call without
-    ``value_fields`` (nothing was inserted)."""
-    cols = [
-        row_hash_expr(batch.schema, sorted(index_fields)).alias("hash"),
-        F.col(key_field).cast("string").alias("key"),
-    ]
+    With ``value_fields`` (the ``pairs`` route) the hashed rows, each
+    named field string-cast for stable driver-side equality, go to the
+    catalog's one-collect kernel, which groups them on the driver; each
+    hash keeps its first row's values — legal because the fields are part
+    of the hashed content (the route gates ``value_fields ⊆
+    index_fields``), so they are constant within a hash group. Returns the
+    catalog's mapped batch index (a pandas frame with assigned
+    ``cluster_id``, empty for an empty batch) in that mode, or None when
+    the driver kernel cannot run — the caller must then re-call without
+    ``value_fields`` (nothing was collected or inserted). Without
+    ``value_fields`` the batch groups in Spark and takes the grouped delta
+    insert."""
+    cols = [h1.alias("hash"), F.col(key_field).cast("string").alias("key")]
     if value_fields:
         cols += [
             F.col(f).cast("string").alias(f"_bv_{i}")
             for i, f in enumerate(value_fields)
         ]
-    hashed = batch.select(*cols)
-    aggs = [F.sort_array(F.collect_list("key")).alias("keys")]
-    if value_fields:
-        aggs += [
-            F.first(f"_bv_{i}").alias(f"_bv_{i}")
-            for i in range(len(value_fields))
-        ]
-    index = hashed.groupBy("hash").agg(*aggs)
-    if value_fields:
-        return catalog.insert_source_index_delta_mapped(step, index)
+        return catalog.insert_source_index_delta_mapped(step, batch.select(*cols))
+    index = (
+        batch.select(*cols)
+        .groupBy("hash")
+        .agg(F.sort_array(F.collect_list("key")).alias("keys"))
+    )
     catalog.insert_source_index_delta(step, index)
     return None
 
@@ -222,8 +232,10 @@ def incremental_index_stream(
     Per-batch state cost is O(batch); accumulated state is never rewritten.
     """
 
+    h1 = row_hash_expr(stream.schema, sorted(index_fields))
+
     def _index(batch: DataFrame, batch_id: int, from_start: bool) -> None:
-        _index_batch(catalog, step, batch, key_field, index_fields)
+        _index_batch(catalog, step, batch, h1, key_field)
 
     return _start_stream(
         stream, catalog, step, _index, checkpoint_dir, trigger_available_now
@@ -400,6 +412,7 @@ def _delta_pair_batch(bidx, contract: dict, pmap: dict, spark):
     blocks: dict = pmap["blocks"]
     cap = contract["cap"]
     ids = bidx["cluster_id"].tolist()
+    keys = bidx["keys"].tolist()
     valcols = [bidx[f"_bv_{i}"].tolist() for i in range(len(contract["raw"]))]
 
     # phase 1 — no mutation: the batch's new member ids per block, pair
@@ -407,6 +420,10 @@ def _delta_pair_batch(bidx, contract: dict, pmap: dict, spark):
     add: dict[tuple, set] = {}
     touched: set = set()
     for j, cid in enumerate(ids):
+        if not len(keys[j]):
+            # every key null: the model's data (rows joined on their key)
+            # holds no row of this cluster yet, so it is no member
+            continue
         vals = tuple(col[j] for col in valcols)
         if any(v is None for v in vals):
             continue  # NaiveDeduper's na.drop: a null field never pairs
@@ -509,15 +526,14 @@ def _field_edges(model, data, batch, blocking_fields, source_step):
     return edges, epdf, leaves, (data,)
 
 
-def _block_key_edges(catalog, model, model_step, data, batch, index_fields):
+def _block_key_edges(catalog, model, model_step, data, batch, h1):
     """The ``keys`` route's edges: the batch's block keys — O(batch) to
     compute, a pure function of batch content, so replay-safe — select the
     accumulated leaves the model could touch via one semi-join on the
-    persisted key index. Returns ``(edges, edges_pdf, leaves, frames)``."""
+    persisted key index (``h1``: the stream's hash Column). Returns
+    ``(edges, edges_pdf, leaves, frames)``."""
     id_col = getattr(getattr(model, "settings", None), "id", None) or "id"
-    batch_hashes = batch.select(
-        row_hash_expr(batch.schema, sorted(index_fields)).alias("cluster_hash")
-    ).distinct()
+    batch_hashes = batch.select(h1.alias("cluster_hash")).distinct()
     batch_leaf_ids = (
         catalog.clusters.join(batch_hashes, "cluster_hash", "left_semi")
         .select(F.col("cluster_id").alias(id_col))
@@ -867,6 +883,7 @@ def incremental_resolve_stream(
     if resolve_cadence < 1:
         raise ValueError("resolve_cadence must be >= 1")
     pmap = {"blocks": {}, "rows": 0}  # the pairs route's driver block map
+    h1 = row_hash_expr(stream.schema, sorted(index_fields))
 
     def _resolve(batch: DataFrame, batch_id: int, from_start: bool) -> None:
         nonlocal route
@@ -874,16 +891,16 @@ def incremental_resolve_stream(
         fallbacks0 = catalog._ckpt_fallbacks
         bidx = None
         if route == "pairs" and from_start:
+            # _start_stream skipped isEmpty: the index collect reads it
             bidx = _index_batch(
-                catalog,
-                source_step,
-                batch,
-                key_field,
-                index_fields,
-                value_fields=contract["raw"],
+                catalog, source_step, batch, h1, key_field, contract["raw"]
             )
+            if bidx is None and batch.isEmpty():
+                return  # the kernel refused before collecting
+            if bidx is not None and bidx.empty:
+                return
         if bidx is None:
-            _index_batch(catalog, source_step, batch, key_field, index_fields)
+            _index_batch(catalog, source_step, batch, h1, key_field)
         if route == "full" and batch_id % resolve_cadence:
             return  # cadenced index-only batch: serving keeps the last resolve
         routed = None
@@ -908,7 +925,7 @@ def incremental_resolve_stream(
                 routed = _field_edges(model, data, batch, blocking_fields, source_step)
             else:
                 routed = _block_key_edges(
-                    catalog, model, f"{source_step}_model", data, batch, index_fields
+                    catalog, model, f"{source_step}_model", data, batch, h1
                 )
         if routed is not None:
             _delta_tail(
@@ -917,4 +934,11 @@ def incremental_resolve_stream(
         touched = None if route == "full" else batch
         _refresh_serving(serving_matcher, catalog, source_step, key_field, touched)
 
-    return _start_stream(stream, catalog, source_step, _resolve, checkpoint_dir)
+    return _start_stream(
+        stream,
+        catalog,
+        source_step,
+        _resolve,
+        checkpoint_dir,
+        reads_empty=lambda: route == "pairs",
+    )

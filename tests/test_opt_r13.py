@@ -206,9 +206,16 @@ def test_contains_mirror_matches_table(spark, sf_dir):
     for r in cat.contains.collect():
         table.setdefault(r["root"], []).append(r["leaf"])
     assert mirror == {k: tuple(sorted(v)) for k, v in table.items()}
-    cmirror = cat._mirrors["clusters"]
+    _assert_cluster_copy(cat)
+
+
+def _assert_cluster_copy(cat, copy=None):
+    """The clusters copy (default: the catalog's) agrees with the table in
+    both directions."""
+    copy = cat._mirrors["clusters"] if copy is None else copy
     rows = {r["cluster_id"]: bytes(r["cluster_hash"]) for r in cat.clusters.collect()}
-    assert cmirror == rows
+    assert {i: h for i, h in enumerate(copy.hashes) if h is not None} == rows
+    assert copy.ids == {h: i for i, h in rows.items()}
 
 
 def _hash_index(spark, rows):
@@ -254,6 +261,31 @@ def _overlap_catalogs(spark, delta=False):
     if delta:
         cat.insert_source_index_delta("srcC", _hash_index(spark, _OVERLAP_DELTA))
     return cat
+
+
+def test_cluster_copy_matches_table_both_directions(spark):
+    """The clusters copy's id → hash list and hash → id map both agree
+    with the ``clusters`` table after a bulk, a delta and a hierarchy
+    insert, each of which mints ids on the copy."""
+    import hashlib
+
+    import pandas as pd
+
+    cat = _overlap_catalogs(spark)
+    _assert_cluster_copy(cat)
+    cat.insert_source_index_delta("srcC", _hash_index(spark, _OVERLAP_DELTA))
+    _assert_cluster_copy(cat)
+    ids = sorted(cat._mirrors["clusters"].ids.values())
+    assert ids == [1, 2, 3, 4, 5]
+    apdf = pd.DataFrame({"parent_id": [1, 1, 2, 2, 2], "child_id": ids})
+    assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
+    assigns._mb_local_pdf = apdf  # as the driver union-find attaches it
+    cat.insert_resolver_clusters(
+        "res", assigns, fingerprint=hashlib.sha256(b"res").digest()
+    )
+    assert cat._mirrors["contains"]  # the hierarchy insert stayed driver-side
+    _assert_cluster_copy(cat)
+    assert len(cat._mirrors["clusters"].ids) == 7
 
 
 def test_overlapping_hash_insert_local_matches_distributed(
@@ -365,9 +397,8 @@ def test_driver_insert_job_counts(spark, monkeypatch):
         ],
     )
     cat = _overlap_catalogs(spark, delta=True)
-    apdf = pd.DataFrame(
-        {"parent_id": [1, 1, 2, 2, 2], "child_id": sorted(cat._mirrors["clusters"])}
-    )
+    ids = sorted(cat._mirrors["clusters"].ids.values())
+    apdf = pd.DataFrame({"parent_id": [1, 1, 2, 2, 2], "child_id": ids})
     assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
     assigns._mb_local_pdf = apdf  # as the driver union-find attaches it
     cat.insert_resolver_clusters(
@@ -416,11 +447,13 @@ def test_matcher_lookup_job_counts(spark, monkeypatch, force_distributed, path):
         m.close()
 
 
-def _delta_stream_catalog(spark, tmp_path, name):
+def _delta_stream_catalog(spark, tmp_path, name, batches=None):
     """st7's shape in miniature: 3 micro-batches through the delta-link
     loop (index delta → blocked superset → model → edge delta → star
     union → CC → claim merge), including a cross-batch merge so the
-    tombstone path fires.
+    tombstone path fires. ``batches`` replaces the rows of the 3 batches
+    (``k long, a string, u string``; one file per batch, an empty list
+    writing a zero-row file).
 
     The file source orders a backlog by modification time, and files that
     share one come in directory-listing order, so the batches are given
@@ -435,7 +468,7 @@ def _delta_stream_catalog(spark, tmp_path, name):
     from matchbox_spark.streaming.incremental import incremental_resolve_stream
 
     schema = "k long, a string, u string"
-    batches = [
+    batches = batches or [
         [(1, "A1", "u1"), (2, "A1", "u2"), (10, "Z1", "u10")],
         [(3, "A2", "u3"), (4, "A2", "u4"), (11, "Z1", "u11")],
         [(5, "A1", "u5"), (6, "A2", "u6")],
@@ -535,9 +568,9 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
 
 def test_streaming_delta_insert_job_counts(spark, tmp_path, monkeypatch):
     """Jobs per micro-batch of the streaming catalog inserts in the 3-batch
-    delta-link loop: two for the batch-index collect (its groupBy runs as
-    a shuffle-map job plus the collect job under adaptive execution) and
-    none for the edge and claim merges, which stay on the mirrors."""
+    delta-link loop: one for the batch-index collect (the hashed rows are
+    grouped on the driver, so no shuffle-map job) and none for the edge
+    and claim merges, which stay on the mirrors."""
     counts = _job_counter(
         spark,
         monkeypatch,
@@ -553,10 +586,94 @@ def test_streaming_delta_insert_job_counts(spark, tmp_path, monkeypatch):
     assert cat._mirrors.get("resolver_clusters") is not None
     assert counts() == {
         "insert_source_index_delta": [],
-        "insert_source_index_delta_mapped": [2, 2, 2],
+        "insert_source_index_delta_mapped": [1, 1, 1],
         "insert_model_edges_delta": [0, 0, 0],
         "merge_resolver_clusters_delta": [0, 0, 0],
     }
+
+
+def test_streaming_pairs_kernel_edge_rows_match_distributed(
+    spark, tmp_path, force_distributed
+):
+    """The pairs route's one-collect kernel groups the hashed rows on the
+    driver as Spark's ``groupBy("hash")`` would: a null key drops out of
+    its group, a group whose keys are all null keeps no key, a duplicate
+    row's key lands once, and a null blocking value never pairs. The
+    catalog it reaches equals the distributed index path's."""
+    batches = [
+        [
+            (1, "A1", "u1"),
+            (None, "A1", "u1"),  # null key beside a keyed row of its hash
+            (2, "A1", "u2"),
+            (2, "A1", "u2"),  # duplicate row: one key
+            (None, "B1", "u9"),  # a hash whose keys are all null
+            (3, None, "u3"),  # null blocking value
+        ],
+        [(4, "A1", "u4"), (5, None, "u5"), (None, "B1", "u9"), (8, "B1", "u8")],
+        [(6, "A2", "u6"), (7, "A2", "u7"), (9, "B1", "u9")],
+    ]
+    local = _delta_stream_catalog(spark, tmp_path, "kernel", batches)
+    assert local._mirrors.get("cluster_keys") is not None  # kernel stayed live
+    local_state = _catalog_state(local)
+    keys = sorted(k for _, s, k in local_state["cluster_keys"] if s == "s")
+    assert keys == ["1", "2", "3", "4", "5", "6", "7", "8", "9"]
+
+    force_distributed("index")
+    dist = _delta_stream_catalog(spark, tmp_path, "kernel_dist", batches)
+    assert dist._mirrors.get("clusters") is None  # loop went distributed
+    assert local_state == _catalog_state(dist)
+
+
+def test_streaming_pairs_empty_batch_runs_one_job(spark, tmp_path, monkeypatch):
+    """An empty micro-batch in mid-stream on the pairs route costs the
+    index collect alone — no ``isEmpty`` job — and changes neither the
+    catalog's tables nor its steps."""
+    import matchbox_spark.streaming.incremental as inc
+    from matchbox_spark.plans.catalog import Catalog
+
+    class _Snap:
+        def take(self, cat):
+            return _catalog_state(cat), dict(cat.steps)
+
+    counts = _job_counter(
+        spark,
+        monkeypatch,
+        ["insert_source_index_delta_mapped", "insert_model_edges_delta"],
+    )
+    # snapshots run under their own job groups, outside the counted calls
+    snap_jobs = _job_counter(spark, monkeypatch, ["take"], owner=_Snap)
+    counted = Catalog.insert_source_index_delta_mapped
+    before = []
+
+    def snapshot(self, *args, **kw):
+        before.append(_Snap().take(self))
+        return counted(self, *args, **kw)
+
+    monkeypatch.setattr(Catalog, "insert_source_index_delta_mapped", snapshot)
+    queries = []
+    start = inc._start_stream
+
+    def started(*args, **kw):
+        queries.append(start(*args, **kw))
+        return queries[-1]
+
+    monkeypatch.setattr(inc, "_start_stream", started)
+    batches = [
+        [(1, "A1", "u1"), (2, "A1", "u2")],
+        [],
+        [(3, "A1", "u3"), (4, "A2", "u4")],
+    ]
+    cat = _delta_stream_catalog(spark, tmp_path, "empty", batches)
+    got = counts()
+    assert got["insert_source_index_delta_mapped"] == [1, 1, 1]
+    # the empty batch returned right after its collect
+    assert got["insert_model_edges_delta"] == [0, 0]
+    # outside the counted calls the drain ran nothing: no isEmpty job
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobIdsForGroup(str(queries[0].runId))) == 0
+    assert before[1] == before[2]
+    assert len(snap_jobs()["take"]) == 3
+    assert sorted(cat.steps) == ["s", "s_model", "s_resolve"]
 
 
 def test_resolver_assignments_mirror_path_matches_join(
@@ -665,9 +782,7 @@ def _assert_mirrors_match_tables(cat):
     clusters, contains, keys, claims, edges = cat.mirror(
         "clusters", "contains", "cluster_keys", "resolver_clusters", "model_edges"
     )
-    assert clusters == {
-        r["cluster_id"]: bytes(r["cluster_hash"]) for r in cat.clusters.collect()
-    }
+    _assert_cluster_copy(cat, clusters)
     leaves = {}
     for r in cat.contains.collect():
         leaves.setdefault(r["root"], []).append(r["leaf"])

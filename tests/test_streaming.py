@@ -547,6 +547,73 @@ def test_matcher_refresh_patches_merged_clusters(spark):
     m.close()
 
 
+def test_matcher_touched_refreshes_keep_partition_count(
+    spark, tmp_path, monkeypatch, force_distributed
+):
+    """A touched refresh coalesces the patched projection back to its
+    partition count: without it each refresh adds the fresh rows'
+    partitions, and the Spark lookup path (forced here, as for a
+    projection over the driver budget) scans every one. Six touched
+    refreshes leave the count as the first, full one set it, and the
+    projection still equals a fresh ``unified_query``."""
+    from matchbox_spark.operators.dedupers import NaiveDeduper
+    from matchbox_spark.plans.dag import Matcher
+    from matchbox_spark.plans.query import unified_query
+    from matchbox_spark.plans.resolvers import Components
+    from matchbox_spark.streaming.incremental import incremental_resolve_stream
+
+    force_distributed("index")
+    src = tmp_path / "in"
+    src.mkdir()
+    schema = "k long, a string, u string"
+    for b in range(7):
+        rows = [(10 * b + i, f"A{i % 2}", f"u{b}_{i}") for i in range(4)]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+    parts = []
+    refresh = Matcher.refresh
+
+    def counted(self, plan, touched=None):
+        refresh(self, plan, touched)
+        parts.append(self.projection._jdf.rdd().getNumPartitions())
+
+    monkeypatch.setattr(Matcher, "refresh", counted)
+    cat = Catalog(spark)
+    m = Matcher()
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    q = incremental_resolve_stream(
+        stream,
+        cat,
+        "s",
+        key_field="k",
+        index_fields=["a", "u"],
+        model=NaiveDeduper(id="id", unique_fields=["s_a"]),
+        resolver_method=Components(),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        source_location=str(src),
+        serving_matcher=m,
+    )
+    assert q.awaitTermination(600)
+    assert q.exception() is None
+    assert m.index is None  # lookups take the Spark path
+    # the first refresh finds no projection and materialises it in full
+    assert len(parts) == 7 and len(set(parts)) == 1, parts
+    fresh = unified_query(cat, ["s_resolve"], ["s"], level="key")
+    cols = ("id", "source", "key")
+    assert sorted(m.projection.select(*cols).collect()) == sorted(
+        fresh.select(*cols).collect()
+    )
+    assert m.lookup("0", "s", ["s"])[0].target_keys == {
+        str(10 * b + i) for b in range(7) for i in (0, 2)
+    }
+    m.close()
+
+
 def test_matcher_index_fails_closed_past_its_budget(spark, monkeypatch):
     """A refresh that would grow the driver index past the catalog's driver
     budget drops it, and lookups then answer from the projection exactly

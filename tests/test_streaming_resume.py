@@ -55,7 +55,7 @@ def _naive():
 CASES = {
     "pairs": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _naive, {},
-        "insert_source_index_delta_mapped", 9,
+        "insert_source_index_delta_mapped", 3,
     ),
     "fields": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _TwoFieldOrDeduper, {},
