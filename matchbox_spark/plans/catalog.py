@@ -21,6 +21,8 @@ order, no global window, no Python round-trip. State tables are
 **append-oriented**: each table is a union of immutable delta frames, each
 delta materialised once at O(delta) cost (never an O(total-state) rewrite
 per mutation — the write-ahead-log shape that survives 100 TB of state).
+The driver kernels append pandas *driver runs*, which reach Spark only
+when a read needs them (``Catalog._read``).
 Deltas compact into one checkpoint past a width threshold so plan width
 stays bounded; rewrite paths (drop/replace a step) are the rare exception
 and pay one lazy full-table filter. Temporary caches used inside an insert
@@ -38,6 +40,7 @@ import uuid
 from typing import Iterable
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,34 +72,6 @@ def _is_local_plan(df: DataFrame) -> bool:
         )
     except Exception:  # noqa: BLE001 — detection only; fall to general path
         return False
-
-
-def _is_driver_resident(df: DataFrame) -> bool:
-    """Whether every LEAF of ``df``'s optimized plan is a LocalRelation —
-    i.e. the frame is pure driver-resident data (possibly unioned), with no
-    cluster compute in its lineage. Unlike :func:`_is_local_plan` this
-    accepts Union trees: Spark does not collapse Union(LocalRelation, …)
-    into one LocalRelation, but such a tree still has nothing to
-    checkpoint-truncate and keeps an exact size estimate.
-
-    The JVM probe triggers analysis+optimization of the frame's plan —
-    ~0.1-0.2 s on the union trees the catalog's tiered parts grow into
-    (measured on st7's per-batch appends, r14) — so the verdict is CACHED
-    on the DataFrame object and ``_tier`` propagates it across merges;
-    each frame pays the probe at most once."""
-    cached = getattr(df, "_mb_driver_resident", None)
-    if cached is not None:
-        return cached
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        out = all(
-            leaves.apply(i).getClass().getSimpleName() == "LocalRelation"
-            for i in range(leaves.size())
-        )
-    except Exception:  # noqa: BLE001 — detection only; fall to general path
-        out = False
-    df._mb_driver_resident = out
-    return out
 
 
 # Byte budget for the driver catalog kernels: checked against the optimizer's
@@ -145,6 +120,26 @@ class _ClusterCopy:
         self.ids.update(zip(hashes, range(first, first + len(hashes))))
 
 
+class _DriverRun:
+    """A run of a catalog table held on the driver: its rows as the pandas
+    frame ``pdf`` (columns of the DDL ``schema``) and, once a Spark read
+    needed them, their one upload ``df``, a LocalRelation. A LocalRelation
+    has an exact size estimate (downstream joins can broadcast it) and at
+    most ``defaultParallelism`` partitions."""
+
+    __slots__ = ("pdf", "schema", "df")
+
+    def __init__(self, pdf, schema: str):
+        self.pdf = pdf
+        self.schema = schema
+        self.df: DataFrame | None = None
+
+    def upload(self, spark) -> DataFrame:
+        if self.df is None:
+            self.df = local_frame(spark, self.pdf, self.schema)
+        return self.df
+
+
 def _group_index_rows(pdf):
     """``groupBy("hash").agg(sort_array(collect_list("key")).alias("keys"),
     first(c) ...)`` over the collected hashed rows ``pdf`` (columns
@@ -180,6 +175,8 @@ _CONTAINS = "root long, leaf long"
 _EDGES = "step string, left_id long, right_id long, score float"
 _RESOLVER = "step string, cluster_id long"
 _BLOCK_KEYS = "step string, block_key long, leaf_id long"
+_PAIRS = "left_id long, right_id long, score float"
+_ASSIGN = "parent_id long, child_id long"
 
 
 class FingerprintMismatchError(RuntimeError):
@@ -213,8 +210,9 @@ class Catalog:
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
         self.path = path
-        # each table = union of delta frames (append-oriented state)
-        self._parts: dict[str, list[DataFrame]] = {n: [] for n in _SCHEMAS}
+        # each table = union of runs (append-oriented state): Spark frames
+        # and driver runs (see _append)
+        self._parts: dict[str, list] = {n: [] for n in _SCHEMAS}
         # parallel tiering weights for _append's binary-counter compaction
         self._part_weights: dict[str, list[int]] = {n: [] for n in _SCHEMAS}
         self._empty_tables: dict[str, DataFrame] = {}
@@ -241,7 +239,7 @@ class Catalog:
         # a recomputed root in O(touched) appends instead of an O(total
         # claims) rewrite per micro-batch; folded into the base table every
         # _COMPACT_WIDTH retirements
-        self._rc_tombstones: list[DataFrame] = []
+        self._rc_tombstones: list = []
         self._rc_tomb_weights: list[int] = []
         self._loaded_from_disk = False
         self._snapshot_id = 0  # last persisted snapshot number (format 2)
@@ -256,6 +254,8 @@ class Catalog:
     # -- table views ---------------------------------------------------------
 
     def _table(self, name: str) -> DataFrame:
+        """The one Spark read of table ``name``: the union of its runs (see
+        :meth:`_read`)."""
         parts = self._parts[name]
         if not parts:
             # memoised: a fresh createDataFrame per access would mint new
@@ -266,9 +266,31 @@ class Catalog:
                     [], _SCHEMAS[name]
                 )
             return self._empty_tables[name]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        return self._read(parts, self._sync_weights(name))
+
+    def _read(self, runs: list, weights: list[int]) -> DataFrame:
+        """The union of ``runs`` as one Spark frame. Driver runs not yet
+        uploaded (appended since the last read) first concatenate into ONE
+        run, which re-enters the tiering at their summed weight and replaces
+        them in ``runs``; then each driver run uploads once and keeps its
+        upload. So a read after appends costs one upload, and repeated reads
+        share attribute ids, as the empty-table memo above needs."""
+        pending = [
+            i for i, r in enumerate(runs) if isinstance(r, _DriverRun) and r.df is None
+        ]
+        if pending:
+            chunk = pd.concat([runs[i].pdf for i in pending], ignore_index=True)
+            weight = sum(weights[i] for i in pending)
+            schema = runs[pending[0]].schema
+            for i in reversed(pending):
+                del runs[i], weights[i]
+            self._tier(runs, weights, _DriverRun(chunk, schema), weight)
+        frames = [
+            r.upload(self.spark) if isinstance(r, _DriverRun) else r for r in runs
+        ]
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
         return out
 
     @property
@@ -304,9 +326,7 @@ class Catalog:
         base = self._table("resolver_clusters")
         if not self._rc_tombstones:
             return base
-        tomb = self._rc_tombstones[0]
-        for t in self._rc_tombstones[1:]:
-            tomb = tomb.unionByName(t)
+        tomb = self._read(self._rc_tombstones, self._rc_tomb_weights)
         # tombstones are O(touched roots per batch × compaction width) —
         # always broadcast-small next to the claim table
         return base.join(
@@ -616,29 +636,32 @@ class Catalog:
             w[:] = [1 << 30] * len(self._parts[name])
         return w
 
-    def _append(self, name: str, delta: DataFrame, materialised: bool = False) -> None:
+    def _append(self, name: str, delta, materialised: bool = False) -> None:
         """Append one immutable delta; amortised O(delta · log n), never an
         O(total state) spike on one unlucky mutation.
 
-        ``materialised=True`` marks a delta the caller already checkpointed;
-        otherwise it is lazily checkpointed — the truncation folds into the
-        first downstream action instead of forcing a serial job per mutation.
+        A pandas ``delta`` is a *driver run*: stored as it is, with no
+        upload, union or plan probe. It reaches Spark only when a read
+        needs it (:meth:`_read`), so a driver kernel that appends on every
+        micro-batch while nothing reads the table uploads nothing. A Spark
+        ``delta`` is lazily checkpointed unless ``materialised=True`` (the
+        caller already checkpointed it) or it plans as a LocalRelation —
+        the truncation folds into the first downstream action instead of
+        forcing a serial job per mutation.
 
-        Compaction is LSM-style binary-counter tiering (round 10): merge
-        the two most-recent runs while they share a weight class, so a run
-        of total size s is rewritten O(log s) times over its life and no
-        single append folds the whole table — the old fold-everything-
-        past-_COMPACT_WIDTH policy made exactly one streaming micro-batch
-        pay O(accumulated state), the measured compaction spike in the
-        embedding delta-link ramp. Plan width stays ≤ log2(deltas) + the
-        compacted base, under the old _COMPACT_WIDTH bound in practice
-        (the bound remains as a backstop for pathological weight states).
+        Compaction is LSM-style binary-counter tiering (:meth:`_tier`), so a
+        run of total size s is rewritten O(log s) times over its life and no
+        single append folds the whole table. Plan width stays ≤ log2(deltas)
+        + the compacted base, under _COMPACT_WIDTH in practice (the bound
+        remains as a backstop for pathological weight states).
         """
         if self._mirrors.get(name) is not None:
             del self._mirrors[name]  # stale; a refusal stands, appends only grow
-        if not materialised and not _is_driver_resident(delta):
-            # driver-resident deltas have no lineage worth truncating, and
-            # checkpointing would throw away their exact size estimate
+        if isinstance(delta, pd.DataFrame):
+            delta = _DriverRun(delta, _SCHEMAS[name])
+        elif not materialised and not _is_local_plan(delta):
+            # a LocalRelation has no lineage worth truncating, and
+            # checkpointing would throw away its exact size estimate
             delta = self._ckpt(delta, eager=False)
         parts = self._parts[name]
         weights = self._sync_weights(name)
@@ -647,34 +670,36 @@ class Catalog:
             self._parts[name] = [self._ckpt(self._table(name), eager=False)]
             self._part_weights[name] = [1 << 30]
 
-    def _tier(
-        self, frames: list[DataFrame], weights: list[int], delta: DataFrame
-    ) -> None:
-        """Binary-counter carry: push ``delta`` at weight 1, then merge the
-        two most-recent runs while they share a weight class. Shared by
-        ``_append`` and the resolver-tombstone overlay — one copy of the
-        carry rule, so a policy change cannot silently diverge."""
-        frames.append(delta)
-        weights.append(1)
+    def _tier(self, runs: list, weights: list[int], delta, weight: int = 1) -> None:
+        """Binary-counter carry: push ``delta`` at ``weight``, then merge
+        the two most-recent runs while they share a weight class. Shared by
+        ``_append``, :meth:`_read` and the resolver-tombstone overlay — one
+        copy of the carry rule, so a policy change cannot silently diverge.
+
+        Two driver runs merge into one pandas chunk, which uploads as ONE
+        LocalRelation when read: a driver run never holds more than
+        ``defaultParallelism`` partitions, so a table's partitions stay
+        O(runs). Any other pair unions (a driver run uploads first) under a
+        lazy checkpoint."""
+        runs.append(delta)
+        weights.append(weight)
         while (
             len(weights) >= 2
             and weights[-1].bit_length() == weights[-2].bit_length()
         ):
             w2, w1 = weights.pop(), weights.pop()
-            p2, p1 = frames.pop(), frames.pop()
-            merged = p1.unionByName(p2)
-            # keep driver-resident runs un-checkpointed (r13): a union of
-            # LocalRelations has no lineage to truncate, and checkpointing
-            # would demote it to an RDD scan whose UNKNOWN size estimate
-            # forces sort-merge joins onto every downstream retrieval plan
-            if _is_driver_resident(p1) and _is_driver_resident(p2):
-                # a union of driver-resident runs is driver-resident;
-                # propagating the verdict saves the JVM plan probe when
-                # this merged run itself merges later (r14)
-                merged._mb_driver_resident = True
+            p2, p1 = runs.pop(), runs.pop()
+            if isinstance(p1, _DriverRun) and isinstance(p2, _DriverRun):
+                merged = _DriverRun(
+                    pd.concat([p1.pdf, p2.pdf], ignore_index=True), p1.schema
+                )
             else:
-                merged = self._ckpt(merged, eager=False)
-            frames.append(merged)
+                p1, p2 = (
+                    p.upload(self.spark) if isinstance(p, _DriverRun) else p
+                    for p in (p1, p2)
+                )
+                merged = self._ckpt(p1.unionByName(p2), eager=False)
+            runs.append(merged)
             weights.append(w1 + w2)
 
     def _commit(self, name: str, df: DataFrame) -> None:
@@ -697,30 +722,20 @@ class Catalog:
         return self._loaded_from_disk or step in self._step_rows[table]
 
 
-    def _local_df(self, columns: dict, schema: str) -> DataFrame:
-        """createDataFrame for driver-resident columns, Arrow-batched via
-        pandas (:func:`local_frame`): that lands as a LocalRelation with a
-        REAL size estimate, empty or not, while a row list lands as an RDD
-        scan whose unknown size estimate forces sort-merge plans onto every
-        downstream retrieval join. The
-        frame is pre-tagged driver-resident so ``_tier`` merges never pay
-        the JVM plan probe (optimization r14 — the probe ran
-        analysis+optimization per part, ~0.1-0.2 s each on streaming
-        micro-batches)."""
-        import pandas as pd
+    def _spark_frame(self, frame, schema: str) -> DataFrame:
+        """``frame`` as a Spark frame: a pandas frame (a driver branch's
+        input that a distributed branch must take) uploads as a
+        LocalRelation with the DDL ``schema``."""
+        if isinstance(frame, pd.DataFrame):
+            return local_frame(self.spark, frame, schema)
+        return frame
 
-        df = local_frame(self.spark, pd.DataFrame(columns), schema)
-        df._mb_driver_resident = True
-        return df
-
-    def _claims_df(self, step: str, ids: list[int]) -> DataFrame:
-        """Driver-resident ``resolver_clusters`` rows: ``ids`` under ``step``."""
-        return self._local_df(
-            {
-                "step": [step] * len(ids),
-                "cluster_id": np.asarray(ids, dtype="int64"),
-            },
-            _RESOLVER,
+    @staticmethod
+    def _claims_df(step: str, ids: list[int]):
+        """``resolver_clusters`` rows ``ids`` under ``step``, as a driver
+        run."""
+        return pd.DataFrame(
+            {"step": [step] * len(ids), "cluster_id": np.asarray(ids, dtype="int64")}
         )
 
     def mirror(self, *names: str, rebuild: bool = True) -> tuple | None:
@@ -739,7 +754,10 @@ class Catalog:
         ``rebuild=False`` builds only copies that cost no job (tables known
         empty): for kernels that merely append rows they hold. Such a
         kernel updates the copy in place and puts it back right after its
-        own append.
+        own append. The driver kernels append driver runs and keep the
+        copies current, so on their path no copy is rebuilt and no run is
+        uploaded; a rebuild reads the table like any Spark reader, which
+        uploads its pending driver runs first (:meth:`_read`).
 
         Copies: ``clusters`` a :class:`_ClusterCopy` (cluster_id ↔
         cluster_hash); ``contains`` root →
@@ -760,11 +778,12 @@ class Catalog:
                 rows[n] = self._max_id if n == "clusters" else 0 if empty else None
         if not rebuild and any(r != 0 for r in rows.values()):
             return None
-        frames = {
+        frames = {  # a table known empty needs no read
             n: self.resolver_clusters if n == "resolver_clusters" else self._table(n)
             for n in rows
+            if rows[n] != 0
         }
-        for n in sorted(rows, key=lambda n: rows[n] is None):  # free sizes first
+        for n in sorted(frames, key=lambda n: rows[n] is None):  # free sizes first
             if rows[n] is None:  # one job: an RDD count has no exchange stage
                 rows[n] = frames[n]._jdf.queryExecution().toRdd().count()
             row_bytes = 8 + frames[n]._jdf.schema().defaultSize()
@@ -888,7 +907,7 @@ class Catalog:
         dense ids in unsigned byte order of the hash — what
         ``dense_index`` over digest-prefix buckets and per-bucket
         BinaryType windows gives the distributed paths. Their rows append
-        to ``clusters`` as one LocalRelation (no job) and extend the copy,
+        to ``clusters`` as one driver run (no job) and extend the copy,
         which the caller got from :meth:`mirror`. Returns the copy's
         ``hash → cluster_id`` map, which then holds every hash of
         ``hashes``; callers only read it."""
@@ -898,16 +917,12 @@ class Catalog:
             first = self._max_id + 1
             self._append(
                 "clusters",
-                self._local_df(
+                pd.DataFrame(
                     {
-                        "cluster_id": np.arange(
-                            first, first + len(new), dtype="int64"
-                        ),
+                        "cluster_id": np.arange(first, first + len(new), dtype="int64"),
                         "cluster_hash": new,
-                    },
-                    _CLUSTERS,
+                    }
                 ),
-                materialised=True,
             )
             copy.add(first, new)
             self._mirrors["clusters"] = copy
@@ -1155,8 +1170,9 @@ class Catalog:
         Byte-identical outcome to the distributed branches: ids from
         :meth:`_cluster_ids_local`, keys deduplicated per array in
         first-occurrence order (``array_distinct``). The appends are
-        LocalRelations (no jobs), which also lets every downstream join
-        against ``clusters``/``cluster_keys`` broadcast. Returns ``pdf``
+        driver runs (no job, no upload); the next read uploads them as a
+        LocalRelation, which lets downstream joins against
+        ``clusters``/``cluster_keys`` broadcast. Returns ``pdf``
         with its assigned ``cluster_id`` column."""
         # bulk mode only appends keys it holds: it keeps a copy that exists
         kcopy = self.mirror("cluster_keys", rebuild=merge)
@@ -1174,15 +1190,13 @@ class Catalog:
         if key_ids:
             self._append(
                 "cluster_keys",
-                self._local_df(
+                pd.DataFrame(
                     {
                         "cluster_id": np.asarray(key_ids, dtype="int64"),
                         "source": step,
                         "key": key_vals,
-                    },
-                    _KEYS,
+                    }
                 ),
-                materialised=True,
             )
         if kcopy is not None:  # the step's pairs grew by the appended rows
             seen.update(zip(key_ids, key_vals))
@@ -1280,7 +1294,7 @@ class Catalog:
         self._step_rows["cluster_keys"].add(step)
         self.steps[step] = _streaming_meta("source")
 
-    def insert_model_edges_delta(self, step: str, edges: DataFrame) -> None:
+    def insert_model_edges_delta(self, step: str, edges) -> None:
         """Streaming/merge insert: append new scored edges under ``step``.
 
         Only pairs not already recorded for the step are appended (anti-join
@@ -1289,26 +1303,26 @@ class Catalog:
         deterministic, so a re-derived pair carries the same score as the
         stored one. Idempotent under batch replay.
 
-        Driver fast path (optimization r13): when the edges are already
-        driver-resident (the streaming delta-link collects each batch's
-        edge set under the CC driver budget anyway) and :meth:`mirror` has
-        a copy of ``model_edges``, the pair anti-join is one vectorized
-        search of the step's sorted pair keys and the append a
-        LocalRelation — zero extra jobs. The copy is capped by the same
+        ``edges`` (``left_id``, ``right_id``, ``score``) is a pandas frame
+        on the driver branch or a Spark frame on the distributed one. Driver
+        branch (optimization r13): pandas edges (the streaming delta-link
+        collects each batch's edge set under the CC driver budget anyway)
+        and a :meth:`mirror` copy of ``model_edges`` make the pair anti-join
+        one vectorized search of the step's sorted pair keys and the append
+        a driver run — zero jobs, no upload. The copy is capped by the same
         budget and holds ids below 2^32; a step outgrowing the cap or a
         batch with a larger id refuses the copy BEFORE mutating, so this
         batch and later ones take the distributed branch below until the
         table can shrink.
         """
-        epdf = getattr(edges, "_mb_local_pdf", None)
-        got = None if epdf is None else self.mirror("model_edges")
+        got = self.mirror("model_edges") if isinstance(edges, pd.DataFrame) else None
         if got is not None:
             from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
 
             emirror = got[0]
             acc = emirror.get(step)
             n_acc = 0 if acc is None else len(acc)
-            pairs = _pack_pairs(epdf["left_id"], epdf["right_id"])
+            pairs = _pack_pairs(edges["left_id"], edges["right_id"])
             if pairs is None or n_acc + len(pairs) > _driver_cc_edge_limit(self.spark):
                 self._mirrors["model_edges"] = None  # refused: 64-bit id or over cap
             else:
@@ -1318,17 +1332,16 @@ class Catalog:
                 else:
                     keep = np.arange(len(pairs))
                 if len(keep):
-                    sub = epdf.iloc[keep]
-                    delta = self._local_df(
+                    sub = edges.iloc[keep]
+                    delta = pd.DataFrame(
                         {
                             "step": [step] * len(keep),
                             "left_id": sub["left_id"].astype("int64").values,
                             "right_id": sub["right_id"].astype("int64").values,
                             "score": sub["score"].astype("float32").values,
-                        },
-                        _EDGES,
+                        }
                     )
-                    self._append("model_edges", delta, materialised=True)
+                    self._append("model_edges", delta)
                     # merge the sorted delta into the sorted copy in one
                     # O(acc + delta) pass: np.unique(concatenate) re-sorted
                     # the FULL accumulated edge array every micro-batch
@@ -1343,7 +1356,7 @@ class Catalog:
                 self._step_rows["model_edges"].add(step)
                 self.steps[step] = _streaming_meta("model")
                 return
-        tagged = edges.select(
+        tagged = self._spark_frame(edges, _PAIRS).select(
             F.lit(step).alias("step"), "left_id", "right_id", "score"
         )
         if self._step_has_rows("model_edges", "step", step):
@@ -1452,7 +1465,7 @@ class Catalog:
         }
 
     def insert_resolver_clusters(
-        self, step: str, assignments: DataFrame, fingerprint: bytes | None = None
+        self, step: str, assignments, fingerprint: bytes | None = None
     ) -> None:
         """Insert resolver output ``(parent_id, child_id)`` as hierarchy rows.
 
@@ -1461,8 +1474,9 @@ class Catalog:
         hashes; new clusters insert-if-absent; ``contains`` and
         ``resolver_clusters`` rows land last (insert.py:333-511).
 
-        Driver path: when the resolver's auto probe already ran union-find
-        on the driver (``assignments`` is a LocalRelation), the fingerprint
+        Driver path: when the resolver's driver CC already put the
+        assignments on the driver (``assignments`` is pandas, or a Spark
+        LocalRelation, whose ``collect`` runs no job), the fingerprint
         is precomputed and :meth:`mirror` has copies of ``clusters`` and
         ``contains`` (rebuilt if they fit its budget),
         :meth:`_hierarchy_insert_local` content-addresses with ZERO Spark
@@ -1473,40 +1487,43 @@ class Catalog:
         catalog's budget. :meth:`_hierarchy_insert` stays the general case.
         """
         self._release_assign_temp()  # deferred from a prior lazy assignment
-        apdf = getattr(assignments, "_mb_local_pdf", None)
         local = fingerprint is not None and (
-            apdf is not None or _is_local_plan(assignments)
+            isinstance(assignments, pd.DataFrame) or _is_local_plan(assignments)
         )
-        if not local:
-            # caches (not checkpoints): reused by several derivations below,
-            # then explicitly unpersisted once the deltas are materialised
-            assignments = assignments.persist()
-        if fingerprint is None:
-            # membership-hash canonicalisation (H4) without the global sort:
-            # per-parent sorted member list hashed, then order-invariant fold
-            canon = (
-                assignments.groupBy("parent_id")
-                .agg(F.sort_array(F.collect_set("child_id")).alias("m"))
-                .select(F.col("m").cast("array<string>").alias("members"))
-            )
-            fingerprint = hash_table_unordered(canon)
-        try:
-            skip = self._fingerprint_gate(step, fingerprint)
-        except FingerprintMismatchError:
-            assignments.unpersist()
-            raise
-        if skip:
-            assignments.unpersist()
-            return
-        # the copies rebuild only for a step the gate lets through
-        if local and self.mirror("clusters", "contains") is None:
-            local, assignments = False, assignments.persist()
         if local:
-            if apdf is None:
-                apdf = assignments.toPandas()  # LocalRelation: Arrow, driver-side
-            claims = sorted({r for r, _ in self._hierarchy_insert_local(apdf)})
+            if self._fingerprint_gate(step, fingerprint):
+                return
+            # the copies rebuild only for a step the gate lets through
+            local = self.mirror("clusters", "contains") is not None
+        if local:
+            if isinstance(assignments, DataFrame):
+                assignments = pd.DataFrame(
+                    assignments.collect(), columns=["parent_id", "child_id"]
+                )
+            claims = sorted({r for r, _ in self._hierarchy_insert_local(assignments)})
             rc = self._claims_df(step, claims)
         else:
+            # caches (not checkpoints): reused by several derivations below,
+            # then explicitly unpersisted once the deltas are materialised
+            assignments = self._spark_frame(assignments, _ASSIGN).persist()
+            if fingerprint is None:
+                # membership-hash canonicalisation (H4) without the global
+                # sort: per-parent sorted member list hashed, then
+                # order-invariant fold
+                canon = (
+                    assignments.groupBy("parent_id")
+                    .agg(F.sort_array(F.collect_set("child_id")).alias("m"))
+                    .select(F.col("m").cast("array<string>").alias("members"))
+                )
+                fingerprint = hash_table_unordered(canon)
+            try:
+                skip = self._fingerprint_gate(step, fingerprint)
+            except FingerprintMismatchError:
+                assignments.unpersist()
+                raise
+            if skip:
+                assignments.unpersist()
+                return
             rc = (
                 self._hierarchy_insert(assignments)
                 .select(F.lit(step).alias("step"), F.col("root").alias("cluster_id"))
@@ -1516,10 +1533,12 @@ class Catalog:
         rccopy = self.mirror("resolver_clusters", rebuild=False) if local else None
         if self._step_has_rows("resolver_clusters", "step", step):
             self._commit_resolver_clusters(
-                self.resolver_clusters.where(F.col("step") != step).unionByName(rc)
+                self.resolver_clusters.where(F.col("step") != step).unionByName(
+                    self._spark_frame(rc, _RESOLVER)
+                )
             )
         elif not local or claims:
-            self._append("resolver_clusters", rc, materialised=local)
+            self._append("resolver_clusters", rc)
         if rccopy is not None:
             # the step's claims are exactly ``claims`` — an all-singleton
             # step registers an empty set, so resolver_assignments stays on
@@ -1655,7 +1674,7 @@ class Catalog:
         assignments the driver union-find produced (``apdf``: pandas
         ``parent_id, child_id``):
         ZERO Spark jobs where the distributed core runs its expansion, hash
-        and anti-join stages. The appends are LocalRelations.
+        and anti-join stages. The appends are driver runs.
 
         Byte-identical outcome to the distributed core: G4 expansion (a
         child that is a prior root expands to its contains leaves; a
@@ -1700,9 +1719,7 @@ class Catalog:
         if contains_rows:
             rows = np.asarray(contains_rows, dtype="int64")
             self._append(
-                "contains",
-                self._local_df({"root": rows[:, 0], "leaf": rows[:, 1]}, _CONTAINS),
-                materialised=True,
+                "contains", pd.DataFrame({"root": rows[:, 0], "leaf": rows[:, 1]})
             )
             # the rows are sorted, so each root's leaves are too
             per_root: dict[int, list[int]] = {}
@@ -1716,8 +1733,8 @@ class Catalog:
     def merge_resolver_clusters_delta(
         self,
         step: str,
-        assignments: DataFrame,
-        candidate_roots: DataFrame | None = None,
+        assignments,
+        candidate_roots=None,
     ) -> None:
         """Streaming partial resolver refresh: O(touched), never O(state).
 
@@ -1740,22 +1757,26 @@ class Catalog:
         never re-form as a claim. Idempotent under batch replay: re-derived
         claims anti-join to nothing and re-derived tombstones are
         duplicates the anti-join ignores.
+
+        Driver branch (optimization r13): pandas assignments (and candidate
+        roots, when given) from the driver CC, plus the table copies, which
+        hold what the distributed branch's three eager checkpoints per
+        micro-batch re-derive — ZERO Spark jobs, same outcome. Otherwise
+        both inputs go to the distributed branch as Spark frames.
         """
-        apdf = getattr(assignments, "_mb_local_pdf", None)
-        rpdf = getattr(candidate_roots, "_mb_local_pdf", None)
-        # driver path (optimization r13): with the driver CC escape the
-        # assignments and candidate roots are already on the driver, and the
-        # table copies hold what the distributed path's three eager
-        # checkpoints per micro-batch re-derive — ZERO Spark jobs, same outcome
         got = None
-        if apdf is not None and (candidate_roots is None or rpdf is not None):
+        if isinstance(assignments, pd.DataFrame) and not isinstance(
+            candidate_roots, DataFrame
+        ):
             got = self.mirror("clusters", "contains", "resolver_clusters")
         local = got is not None
         rcmirror = got[2] if local else None
         if local:
-            quiet = apdf.empty
+            quiet = assignments.empty
         else:
-            assignments = assignments.persist()
+            assignments = self._spark_frame(assignments, _ASSIGN).persist()
+            if candidate_roots is not None:
+                candidate_roots = self._spark_frame(candidate_roots, "root_id long")
             quiet = assignments.isEmpty()
             if quiet:
                 assignments.unpersist()
@@ -1776,20 +1797,17 @@ class Catalog:
         if local:
             # the claim copy tracks the VIEW (appends minus tombstones),
             # so the claim anti-join and the retirement are set algebra
-            formed = {r for r, _ in self._hierarchy_insert_local(apdf)}
+            formed = {r for r, _ in self._hierarchy_insert_local(assignments)}
             stepset = rcmirror.setdefault(step, set())
             new_claims = sorted(formed - stepset)
             if new_claims:
-                self._append(
-                    "resolver_clusters",
-                    self._claims_df(step, new_claims),
-                    materialised=True,
-                )
+                self._append("resolver_clusters", self._claims_df(step, new_claims))
                 stepset.update(new_claims)
-            if rpdf is not None:
-                gone = sorted({int(r) for r in rpdf["root_id"].tolist()} - formed)
+            if candidate_roots is not None:
+                roots = {int(r) for r in candidate_roots["root_id"].tolist()}
+                gone = sorted(roots - formed)
                 if gone:
-                    retired = self._claims_df(step, gone)
+                    retired = _DriverRun(self._claims_df(step, gone), _RESOLVER)
                     stepset.difference_update(gone)
         else:
             batch_contains = self._hierarchy_insert(assignments)

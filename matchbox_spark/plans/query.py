@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from matchbox_spark.plans.catalog import Catalog
+from matchbox_spark.schemas import local_frame
 from matchbox_spark.sources.source import SourceConfig
 
 try:  # optional
@@ -103,11 +104,9 @@ def resolver_assignments(catalog: Catalog, resolver_step: str) -> DataFrame:
                     "root_id": pd.array(roots, dtype="int64"),
                 }
             )
-            out = catalog.spark.createDataFrame(
-                pdf, "leaf_id long, root_id long"
-            )
-            out._mb_local_pdf = pdf
-            return out
+            # local_frame: an empty map still plans a LocalRelation, whose
+            # exact size lets the retrieval join broadcast it
+            return local_frame(catalog.spark, pdf, "leaf_id long, root_id long")
     rc = catalog.resolver_clusters.where(F.col("step") == resolver_step)
     # bind the property ONCE: each access builds a new DataFrame, and a
     # join condition mixing attribute instances from two accesses fails

@@ -28,7 +28,9 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 from typing import Hashable, Iterable, Mapping, TypeVar
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from matchbox_spark.functions.indexing import dense_index
@@ -279,47 +281,41 @@ def connected_components(
     unioned in by the caller (an edge list cannot carry them).
 
     The path is :func:`_cc_labels`'s. A driver result is a bare
-    ``LocalRelation`` (``<empty>`` when there are no labels) carrying its
-    pandas copy as ``_mb_local_pdf``.
+    ``LocalRelation`` (``<empty>`` when there are no labels).
     """
     lab = _cc_labels(edges, driver_edge_limit, max_iter)
     if isinstance(lab, DataFrame):
         return lab
-    out = local_frame(edges.sparkSession, lab, "id long, component long")
-    out._mb_local_pdf = lab
-    return out
+    return local_frame(edges.sparkSession, lab, "id long, component long")
 
 
-def _cc_labels(
-    edges: DataFrame, driver_edge_limit: int | None, max_iter: int = 50
-):
+def _cc_labels(edges, driver_edge_limit: int | None, max_iter: int = 50):
     """The one place that picks the driver or distributed CC: the driver
     labels as a pandas ``(id, component)`` frame, or the distributed
     labels as a Spark frame.
 
-    An edge set of at most ``driver_edge_limit`` rows (None: the
-    memory-derived cap; 0: always distributed) runs the exact driver CC
-    (:func:`connected_components_numpy`). Its rows come from the frame's
-    attached ``_mb_local_pdf`` copy when it has one (zero jobs), else from
-    one bounded ``limit(limit + 1)`` collect that is both the size probe
-    and the driver collect. Larger edge sets run the large-star/small-star
-    rounds (the 100 TB path).
+    ``edges`` (``src``, ``dst``) is a pandas or a Spark frame. An edge set
+    of at most ``driver_edge_limit`` rows (None: the memory-derived cap; 0:
+    always distributed) runs the exact driver CC
+    (:func:`connected_components_numpy`). Pandas edges are read as they
+    are (zero jobs); a Spark frame's rows come from one bounded
+    ``limit(limit + 1)`` collect that is both the size probe and the driver
+    collect. Larger edge sets run the large-star/small-star rounds (the
+    100 TB path), pandas edges uploaded first.
     """
+    local = isinstance(edges, pd.DataFrame)
+    spark = SparkSession.active() if local else edges.sparkSession
     limit = (
-        _driver_cc_edge_limit(edges.sparkSession)
-        if driver_edge_limit is None
-        else driver_edge_limit
+        _driver_cc_edge_limit(spark) if driver_edge_limit is None else driver_edge_limit
     )
-    pdf = getattr(edges, "_mb_local_pdf", None)
-    if pdf is None:
-        pdf = edges.select("src", "dst").limit(limit + 1).toPandas()
+    pdf = edges if local else edges.select("src", "dst").limit(limit + 1).toPandas()
     if len(pdf) <= limit:
-        import pandas as pd
-
         src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
         loop = src == dst
         nodes, comps = connected_components_numpy(src[~loop], dst[~loop])
         return pd.DataFrame({"id": nodes, "component": comps})
+    if local:
+        edges = local_frame(spark, pdf[["src", "dst"]], "src long, dst long")
 
     # initial materialisation keeps the default (memory-first) level: it
     # is ONE resident copy freed with `e` — only the LOOP's superseded
@@ -382,10 +378,6 @@ def connected_components_numpy(src, dst):
     Returns ``(nodes, labels)`` numpy arrays: ``labels[i]`` is the min
     member id of ``nodes[i]``'s component.
     """
-    import numpy as np
-
-    import pandas as pd
-
     src = np.asarray(src, dtype=np.int64)
     dst = np.asarray(dst, dtype=np.int64)
     if len(src) == 0:
@@ -487,53 +479,44 @@ class Components(ResolverMethod):
 
     def compute_clusters(self, model_edges: Mapping[str, DataFrame]) -> DataFrame:
         """Threshold each model's edges, union them, and cluster them on
-        the path :func:`_cc_labels` picks (a driver result stays pandas, with
-        no Spark frame of its labels); then rank the components into dense
-        parent ids 1..k."""
-        import numpy as np
-        import pandas as pd
+        the path :func:`_cc_labels` picks; then rank the components into
+        dense parent ids 1..k.
 
+        When every model's edges are pandas frames (the streaming
+        delta-link holds each batch's bounded edge set on the driver),
+        threshold and union run in pandas, so the CC fork runs no probe
+        job, and a driver CC returns the assignments as pandas too. With
+        Spark inputs the result is a Spark frame: a LocalRelation on the
+        driver path."""
         s = self.settings
         s.validate_inputs(model_edges.keys())
-
-        unioned: DataFrame | None = None
-        for name, edges in model_edges.items():
-            t = s.thresholds.get(name, 0.0)
-            e = edges.where(F.col("score") >= F.lit(float(t))).select(
-                F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-            )
-            unioned = e if unioned is None else unioned.union(e)
-        if unioned is None:
+        if not model_edges:
             raise ValueError("no model edges given")
+        local = all(isinstance(e, pd.DataFrame) for e in model_edges.values())
+        if local:
+            # the float32 scores cast to float64 before comparing, exactly
+            # Spark's promotion for `float >= double-literal`, so the kept
+            # set is identical; Spark SQL orders NaN above every double, so
+            # a NaN-scored edge passes `score >= t` and is kept explicitly
+            empty = np.empty(0, np.int64)
+            cols = [pd.DataFrame({"src": empty, "dst": empty})]
+            for name, p in model_edges.items():
+                sc = p["score"].to_numpy().astype("float64")
+                m = (sc >= float(s.thresholds.get(name, 0.0))) | np.isnan(sc)
+                src, dst = p["left_id"].to_numpy()[m], p["right_id"].to_numpy()[m]
+                cols.append(pd.DataFrame({"src": src, "dst": dst}))
+            unioned = pd.concat(cols, ignore_index=True)
+        else:
+            unioned = None
+            for name, edges in model_edges.items():
+                t = s.thresholds.get(name, 0.0)
+                e = edges.where(F.col("score") >= F.lit(float(t))).select(
+                    F.col("left_id").alias("src"), F.col("right_id").alias("dst")
+                )
+                unioned = e if unioned is None else unioned.union(e)
         # no persist/checkpoint here: the probe reads the (already
         # materialised upstream) edges once, and the distributed path
         # materialises its own working set immediately.
-        # Driver-resident shortcut (optimization r13): when every model's
-        # edge frame already lives on the driver (the streaming delta-link
-        # collects each batch's bounded edge set), threshold and union in
-        # pandas too, so the CC fork runs no probe job. The
-        # float32 scores cast to float64 before comparing, exactly Spark's
-        # promotion for `float >= double-literal`, so the kept set is
-        # identical; Spark SQL orders NaN above every double, so a
-        # NaN-scored edge passes `score >= t` and is kept explicitly.
-        if all(hasattr(e, "_mb_local_pdf") for e in model_edges.values()):
-            empty = np.empty(0, np.int64)
-            cols = [pd.DataFrame({"src": empty, "dst": empty})]
-            for name, edges in model_edges.items():
-                p = edges._mb_local_pdf
-                if len(p):
-                    sc = p["score"].to_numpy().astype("float64")
-                    m = (sc >= float(s.thresholds.get(name, 0.0))) | np.isnan(sc)
-                    cols.append(
-                        pd.DataFrame(
-                            {
-                                "src": p["left_id"].to_numpy()[m],
-                                "dst": p["right_id"].to_numpy()[m],
-                            }
-                        )
-                    )
-            unioned._mb_local_pdf = pd.concat(cols, ignore_index=True)
-
         labels = _cc_labels(unioned, s.driver_edge_limit)
         driver = not isinstance(labels, DataFrame)
         logger.info(
@@ -541,25 +524,20 @@ class Components(ResolverMethod):
             "driver" if driver else "distributed",
         )
         if driver:
-            # driver result: dense parent-id ranking in numpy (sorted
-            # components → 1..k) and one Arrow upload of the assignments.
-            # The pandas copy rides along, empty or not: the catalog's
-            # local insert reads it instead of re-collecting the plan
+            # dense parent-id ranking in numpy (sorted components → 1..k)
             _, rank = np.unique(labels["component"].to_numpy(), return_inverse=True)
-            local = pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     "parent_id": (rank + 1).astype("int64"),
                     "child_id": labels["id"].to_numpy(),
                 }
             )
-            assignments = conform(
-                local_frame(
-                    unioned.sparkSession, local, "parent_id long, child_id long"
-                ),
+            if local:
+                return out
+            return conform(
+                local_frame(unioned.sparkSession, out, "parent_id long, child_id long"),
                 SCHEMA_CLUSTERS,
             )
-            assignments._mb_local_pdf = local
-            return assignments
 
         # dense deterministic parent ids 1..k ordered by component minimum —
         # distributed zip-with-index (range partition + per-partition row

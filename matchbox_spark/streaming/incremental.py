@@ -54,6 +54,16 @@ kernel (grouped on the driver, no exchange), and an empty collect ends the
 batch, so a non-empty batch costs that one Spark job in all; every later
 phase runs on driver copies.
 
+On the driver path the phases hand each other pandas frames, not Spark
+frames: the batch index, the route's edges and leaves, the star edges and
+touched roots, the CC's assignments. Each catalog kernel takes pandas on
+its driver branch and a Spark frame on its distributed one, and appends
+its rows as pandas *driver runs*, which reach Spark only when something
+reads the table (a serving refresh, the ``fields`` route's source join, a
+retrieval). So a ``pairs`` batch with no serving matcher uploads nothing
+to Spark. A phase whose input went distributed gets Spark frames, a
+pandas input uploaded as a LocalRelation at that boundary.
+
 Checkpoint/state coupling: the streaming checkpoint is durable but a
 ``Catalog(spark)`` without a path is not. Resuming a checkpoint against a
 catalog that is missing the earlier batches' state would silently resolve
@@ -65,6 +75,8 @@ from __future__ import annotations
 
 import logging
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -81,7 +93,6 @@ from matchbox_spark.schemas import local_frame
 logger = logging.getLogger(__name__)
 
 _EDGES = "left_id long, right_id long, score float"
-_PANDAS_DTYPES = {"long": "int64", "float": "float32"}
 
 
 def _guard_checkpoint_state(catalog: Catalog, step: str, batch_id: int) -> None:
@@ -150,24 +161,16 @@ def _start_stream(
     return writer.start()
 
 
-def _local_frame(spark, schema: str, *columns) -> DataFrame:
-    """A LocalRelation (``<empty>`` when there are no rows) over
-    ``columns`` (one sequence per field of the ``"name type, ..."``
-    ``schema``) that carries its pandas frame as ``_mb_local_pdf`` — the
-    catalog's driver twins and the CC pandas shortcut read it without a
-    Spark job."""
-    import pandas as pd
-
-    fields = [f.split() for f in schema.split(", ")]
-    pdf = pd.DataFrame(
+def _edges_pdf(lefts, rights, score: float) -> pd.DataFrame:
+    """Scored edges as the pandas frame the catalog's driver branches and
+    the CC take: ``left_id``/``right_id`` int64, ``score`` float32."""
+    return pd.DataFrame(
         {
-            name: pd.array(col, dtype=_PANDAS_DTYPES[kind])
-            for (name, kind), col in zip(fields, columns)
+            "left_id": np.asarray(lefts, dtype="int64"),
+            "right_id": np.asarray(rights, dtype="int64"),
+            "score": np.full(len(lefts), score, dtype="float32"),
         }
     )
-    df = local_frame(spark, pdf, schema)
-    df._mb_local_pdf = pdf
-    return df
 
 
 def _raw_fields(source_step: str, fields: list[str]) -> list[str]:
@@ -242,26 +245,25 @@ def incremental_index_stream(
     )
 
 
-def _touched_star_edges(
-    catalog: Catalog, resolver_step: str, batch_leaves: DataFrame
-) -> tuple[DataFrame | None, DataFrame | None]:
+def _touched_star_edges(catalog: Catalog, resolver_step: str, batch_leaves):
     """Star edges for ONLY the prior components a batch can change.
 
-    ``batch_leaves`` (one ``leaf_id`` column) is the leaf-id set of the
-    batch's blocked superset — the only rows a block-local model can link
-    this batch, hence the only leaves through which an existing component
-    can gain an edge. Components intersecting that set compress to one
-    ``(min_leaf, leaf)`` star edge per member; everything else is neither
-    read into the CC nor rewritten. Returns ``(star_edges,
-    touched_root_ids)`` — the roots are eagerly materialised (they are the
-    retirement candidates after the merge) — or ``(None, None)`` before the
-    step first exists.
+    ``batch_leaves`` (one ``leaf_id`` column, pandas or Spark) is the
+    leaf-id set of the batch's blocked superset — the only rows a
+    block-local model can link this batch, hence the only leaves through
+    which an existing component can gain an edge. Components intersecting
+    that set compress to one ``(min_leaf, leaf)`` star edge per member;
+    everything else is neither read into the CC nor rewritten. Returns
+    ``(star_edges, touched_root_ids)`` — pandas frames on the driver path,
+    Spark frames (the roots eagerly materialised: they are the retirement
+    candidates after the merge) on the distributed one — or ``(None,
+    None)`` before the step first exists.
 
     Per-batch cost: on the driver path (the catalog's claim and contains
-    copies) no Spark job beyond the bounded leaf collect (none when the
-    caller attaches the leaves), but Python work proportional to the
-    claims and contains — every claimed root of the step is sorted and its
-    leaves scanned each batch. On the distributed path, one semi-join over
+    copies) no Spark job beyond the bounded leaf collect (none for pandas
+    leaves), but Python work proportional to the claims and contains —
+    every claimed root of the step is sorted and its leaves scanned each
+    batch. On the distributed path, one semi-join over
     the assignment map plus O(touched members) star rows.
     """
     if resolver_step not in catalog.steps:
@@ -273,27 +275,25 @@ def _touched_star_edges(
     # collect of the batch-leaf ids (the same size-adaptive budget the CC
     # escape uses; an over-budget blocked superset falls through to the
     # distributed semi-joins) replaces the touched-roots checkpoint job,
-    # and the stars + roots upload as LocalRelations that the catalog's
-    # merge twin consumes without further jobs. Same semantics row for
-    # row: touched = claimed roots whose leaf set intersects the batch
-    # leaves; stars = (min leaf, other leaf) per touched root. The copies
-    # are asked for with clusters, as the merge that follows asks: a
-    # refused clusters copy then keeps both distributed, instead of
-    # rebuilding the claims and contains here every batch.
+    # and the stars + roots stay pandas for the CC and the catalog's merge
+    # twin. Same semantics row for row: touched = claimed roots whose leaf
+    # set intersects the batch leaves; stars = (min leaf, other leaf) per
+    # touched root. The copies are asked for with clusters, as the merge
+    # that follows asks: a refused clusters copy then keeps both
+    # distributed, instead of rebuilding the claims and contains here
+    # every batch.
     copies = catalog.mirror("clusters", "contains", "resolver_clusters")
     if copies is not None:
         _, kmirror, rcmirror = copies
-        spark = batch_leaves.sparkSession
-        limit = _driver_cc_edge_limit(spark)
+        limit = _driver_cc_edge_limit(catalog.spark)
         # count-then-collect, not limit(n+1).toPandas(): the limit probe
         # funnels through CollectLimitExec's single partition and converts
         # single-threaded (~3x slower at ~900k rows — same measurement as
         # _collect_edges_if_small); every route passes frames derived
         # from eagerly-checkpointed batch state, so the count is one cheap
         # job and the collect stays a parallel Arrow transfer. The pairs
-        # route already holds the leaves driver-side and attaches them as
-        # _mb_local_pdf — zero jobs then.
-        pdf = getattr(batch_leaves, "_mb_local_pdf", None)
+        # route already holds the leaves as pandas — zero jobs then.
+        pdf = batch_leaves if isinstance(batch_leaves, pd.DataFrame) else None
         if pdf is None and batch_leaves.count() <= limit:
             pdf = batch_leaves.toPandas()
         if pdf is not None and len(pdf) <= limit:
@@ -309,11 +309,13 @@ def _touched_star_edges(
                     others = [leaf for leaf in leaves if leaf != rep]
                     lefts.extend([rep] * len(others))
                     rights.extend(others)
-            stars = _local_frame(spark, _EDGES, lefts, rights, [1.0] * len(lefts))
-            return stars, _local_frame(spark, "root_id long", troots)
+            roots = pd.DataFrame({"root_id": np.asarray(troots, dtype="int64")})
+            return _edges_pdf(lefts, rights, 1.0), roots
 
     from matchbox_spark.plans.query import resolver_assignments
 
+    if isinstance(batch_leaves, pd.DataFrame):
+        batch_leaves = local_frame(catalog.spark, batch_leaves, "leaf_id long")
     prev = resolver_assignments(catalog, resolver_step)
     # no broadcast hints on either semi-join: batch_leaves is the BLOCKED
     # SUPERSET of the batch (a hot blocking value — boilerplate default —
@@ -404,9 +406,10 @@ def _delta_pair_batch(bidx, contract: dict, pmap: dict, spark):
     the map stops emitting at the same boundary.
 
     Budget: pairs emitted this batch and total mapped members both bound
-    by the CC driver edge limit. Returns ``(edges, edges_pdf, leaves,
-    frames)`` for the delta tail, or None BEFORE any mutation when a batch
-    would blow the budget — the caller then retires the map to ``fields``.
+    by the CC driver edge limit. Returns ``(edges, leaves, frames)`` for
+    the delta tail, all on the driver (pandas; no frames to free), or None
+    BEFORE any mutation when a batch would blow the budget — the caller
+    then retires the map to ``fields``.
     """
     limit = _driver_cc_edge_limit(spark)
     blocks: dict = pmap["blocks"]
@@ -467,22 +470,18 @@ def _delta_pair_batch(bidx, contract: dict, pmap: dict, spark):
         s.update(pend)
     pmap["rows"] += n_new_members
 
-    edges = _local_frame(
-        spark, _EDGES, lefts, rights, [contract["score"]] * len(lefts)
-    )
     leaf_set: set = set()
     for vals in touched:
         leaf_set.update(blocks.get(vals) or ())
-    leaves = _local_frame(spark, "leaf_id long", sorted(leaf_set))
-    edges._mb_driver_resident = leaves._mb_driver_resident = True
-    return edges, edges._mb_local_pdf, leaves, ()
+    leaves = pd.DataFrame({"leaf_id": np.asarray(sorted(leaf_set), dtype="int64")})
+    return _edges_pdf(lefts, rights, contract["score"]), leaves, ()
 
 
 def _field_edges(model, data, batch, blocking_fields, source_step):
     """The ``fields`` route's edges: the model over accumulated rows sharing
     ANY blocking value with the batch (OR semantics — a conservative
     superset, correct for both tuple-blocked and multi-pass per-field
-    models). Returns ``(edges, edges_pdf, leaves, frames)``."""
+    models). Returns ``(edges, leaves, frames)``."""
     raw = _raw_fields(source_step, blocking_fields)
     # one collect_set job + an OR-of-isin filter (optimization r13)
     # instead of per-field distinct + broadcast-semi-join + union +
@@ -521,9 +520,9 @@ def _field_edges(model, data, batch, blocking_fields, source_step):
     # per-field filter over the accumulated index (the dominant per-batch
     # scan)
     data = data.localCheckpoint(eager=True)
-    edges, epdf = _collect_edges_if_small(model.dedupe(data))
+    edges, ckpt = _collect_edges_if_small(model.dedupe(data))
     leaves = data.select(F.col("id").alias("leaf_id")).distinct()
-    return edges, epdf, leaves, (data,)
+    return edges, leaves, (data, ckpt)
 
 
 def _block_key_edges(catalog, model, model_step, data, batch, h1):
@@ -531,7 +530,7 @@ def _block_key_edges(catalog, model, model_step, data, batch, h1):
     compute, a pure function of batch content, so replay-safe — select the
     accumulated leaves the model could touch via one semi-join on the
     persisted key index (``h1``: the stream's hash Column). Returns
-    ``(edges, edges_pdf, leaves, frames)``."""
+    ``(edges, leaves, frames)``."""
     id_col = getattr(getattr(model, "settings", None), "id", None) or "id"
     batch_hashes = batch.select(h1.alias("cluster_hash")).distinct()
     batch_leaf_ids = (
@@ -559,9 +558,9 @@ def _block_key_edges(catalog, model, model_step, data, batch, h1):
     data = data.join(
         touched_leaves.select(F.col("leaf_id").alias(id_col)), id_col, "left_semi"
     ).localCheckpoint(eager=True)
-    edges, epdf = _collect_edges_if_small(model.dedupe(data))
-    frames = (batch_leaf_ids, batch_rows, batch_keys, touched_leaves, data)
-    return edges, epdf, touched_leaves, frames
+    edges, ckpt = _collect_edges_if_small(model.dedupe(data))
+    frames = (batch_leaf_ids, batch_rows, batch_keys, touched_leaves, data, ckpt)
+    return edges, touched_leaves, frames
 
 
 def _collect_edges_if_small(edges: DataFrame):
@@ -571,49 +570,40 @@ def _collect_edges_if_small(edges: DataFrame):
     times — eager checkpoint, edge-delta anti-join, driver-CC probe
     collect. When the edge schema is the canonical ``(left_id long,
     right_id long, score float)`` and the row count fits the SAME driver
-    budget the CC escape uses, collect ONCE and hand the driver-resident
-    frame to all three consumers (the catalog's edge-delta twin, the star
-    union, the CC pandas shortcut) — a LocalRelation needs no checkpoint
-    and costs no further jobs. Over-budget or non-canonical edges keep
-    the eager-checkpoint shape unchanged. Returns ``(frame, pdf | None)``.
+    budget the CC escape uses, collect ONCE and hand the pandas frame to
+    all three consumers (the catalog's edge-delta twin, the star union,
+    the CC) — no further jobs. Over-budget or non-canonical edges keep the
+    eager-checkpoint shape unchanged. Returns ``(edges, checkpoint)``: the
+    edges as pandas or as the checkpoint itself, and the batch-local
+    checkpoint to free.
     """
-    spark = edges.sparkSession
     ckpt = edges.localCheckpoint(eager=True)
     fields = ckpt.schema.fields
     if [f.name for f in fields] != ["left_id", "right_id", "score"] or [
         f.dataType.simpleString() for f in fields
     ] != ["bigint", "bigint", "float"]:
-        return ckpt, None
+        return ckpt, ckpt
     # count over the just-materialised blocks is one cheap job, and the
     # full collect stays a PARALLEL Arrow transfer — a limit(n+1).toPandas
     # probe would funnel through CollectLimitExec's single partition and
     # convert single-threaded (measured ~3x slower at 900k edges)
-    if ckpt.count() > _driver_cc_edge_limit(spark):
-        return ckpt, None
-    pdf = ckpt.toPandas()
-    ckpt._mb_local_pdf = pdf
-    return ckpt, pdf
+    if ckpt.count() > _driver_cc_edge_limit(edges.sparkSession):
+        return ckpt, ckpt
+    return ckpt.toPandas(), ckpt
 
 
-def _attach_cc_pdf(cc_edges, epdf, stars):
-    """Mark the (new edges ∪ stars) union driver-resident when both parts
-    are — the CC pandas shortcut then skips its probe job. The attached
-    frame holds exactly the union's rows, so a distributed fallback (over
-    the plan) and the shortcut (over the pandas) see the same edge set."""
-    if epdf is None:
-        return cc_edges
+def _edge_union(spark, edges, stars):
+    """The CC input, new edges ∪ stars: pandas when both are, else a Spark
+    union (a pandas side uploaded first)."""
     if stars is None:
-        cc_edges._mb_local_pdf = epdf
-        return cc_edges
-    spdf = getattr(stars, "_mb_local_pdf", None)
-    if spdf is None:
-        return cc_edges
-    import pandas as pd
-
-    cc_edges._mb_local_pdf = (
-        pd.concat([epdf, spdf], ignore_index=True) if len(spdf) else epdf
+        return edges
+    if isinstance(edges, pd.DataFrame) and isinstance(stars, pd.DataFrame):
+        return pd.concat([edges, stars], ignore_index=True)
+    edges, stars = (
+        local_frame(spark, f, _EDGES) if isinstance(f, pd.DataFrame) else f
+        for f in (edges, stars)
     )
-    return cc_edges
+    return edges.unionByName(stars)
 
 
 def _delta_tail(
@@ -625,20 +615,19 @@ def _delta_tail(
     batch_id: int,
 ) -> None:
     """The delta routes' shared tail for one batch. ``routed`` is the
-    route's ``(edges, edges_pdf, leaves, frames)``: append the edges, star
-    the prior components holding one of ``leaves``, run CC over (edges ∪
-    stars), merge the claims, then free the batch-local checkpoints
-    (``frames``, the edges and the touched roots)."""
-    edges, epdf, leaves, frames = routed
+    route's ``(edges, leaves, frames)``, pandas or Spark: append the edges,
+    star the prior components holding one of ``leaves``, run CC over
+    (edges ∪ stars), merge the claims, then free the batch-local
+    checkpoints (``frames`` and the touched roots). On the driver path
+    every hand-off is a pandas frame, so no phase uploads to Spark."""
+    edges, leaves, frames = routed
     model_step = f"{source_step}_model"
     resolver_step = f"{source_step}_resolve"
     catalog.insert_model_edges_delta(model_step, edges)
     # only components holding a leaf the model could touch this batch are
     # starred, recomputed, and (if merged away) retired
     stars, touched_roots = _touched_star_edges(catalog, resolver_step, leaves)
-    cc_edges = _attach_cc_pdf(
-        edges if stars is None else edges.unionByName(stars), epdf, stars
-    )
+    cc_edges = _edge_union(catalog.spark, edges, stars)
     assignments = resolver_method.compute_clusters({model_step: cc_edges})
     catalog.merge_resolver_clusters_delta(
         resolver_step, assignments, candidate_roots=touched_roots
@@ -653,7 +642,7 @@ def _delta_tail(
     # and freeing them would truncate lineage unrecoverably, so the frees
     # are deferred to driver GC — and said so, or a long-running stream's
     # lingering blocks look like the pre-r10 leak instead of this skip.
-    local = [f for f in (*frames, edges, touched_roots) if f is not None]
+    local = [f for f in (*frames, touched_roots) if isinstance(f, DataFrame)]
     if catalog._ckpt_fallbacks == fallbacks0:
         for frame in local:
             _free_checkpoint(frame)

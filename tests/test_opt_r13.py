@@ -277,11 +277,10 @@ def test_cluster_copy_matches_table_both_directions(spark):
     _assert_cluster_copy(cat)
     ids = sorted(cat._mirrors["clusters"].ids.values())
     assert ids == [1, 2, 3, 4, 5]
+    # pandas, as the driver union-find hands it on
     apdf = pd.DataFrame({"parent_id": [1, 1, 2, 2, 2], "child_id": ids})
-    assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
-    assigns._mb_local_pdf = apdf  # as the driver union-find attaches it
     cat.insert_resolver_clusters(
-        "res", assigns, fingerprint=hashlib.sha256(b"res").digest()
+        "res", apdf, fingerprint=hashlib.sha256(b"res").digest()
     )
     assert cat._mirrors["contains"]  # the hierarchy insert stayed driver-side
     _assert_cluster_copy(cat)
@@ -398,11 +397,10 @@ def test_driver_insert_job_counts(spark, monkeypatch):
     )
     cat = _overlap_catalogs(spark, delta=True)
     ids = sorted(cat._mirrors["clusters"].ids.values())
+    # pandas, as the driver union-find hands it on
     apdf = pd.DataFrame({"parent_id": [1, 1, 2, 2, 2], "child_id": ids})
-    assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
-    assigns._mb_local_pdf = apdf  # as the driver union-find attaches it
     cat.insert_resolver_clusters(
-        "res", assigns, fingerprint=hashlib.sha256(b"res").digest()
+        "res", apdf, fingerprint=hashlib.sha256(b"res").digest()
     )
     assert cat._mirrors["contains"]  # the resolver insert stayed driver-side
     assert counts() == {
@@ -822,21 +820,18 @@ def test_healed_mirrors_match_tables(spark, tmp_path, healed):
     _assert_mirrors_match_tables(cat)
 
 
-def _local_edges(spark, rows):
-    """Driver-resident scored edges, as the streaming delta-link hands them
-    to ``insert_model_edges_delta``."""
+def _local_edges(rows):
+    """Pandas scored edges, as the streaming delta-link hands them to
+    ``insert_model_edges_delta``."""
     import pandas as pd
 
-    pdf = pd.DataFrame(
+    return pd.DataFrame(
         {
             "left_id": pd.array([r[0] for r in rows], dtype="int64"),
             "right_id": pd.array([r[1] for r in rows], dtype="int64"),
             "score": pd.array([1.0] * len(rows), dtype="float32"),
         }
     )
-    df = spark.createDataFrame(pdf, "left_id long, right_id long, score float")
-    df._mb_local_pdf = pdf
-    return df
 
 
 def test_over_budget_table_is_size_checked_once(
@@ -861,7 +856,7 @@ def test_over_budget_table_is_size_checked_once(
         "s", _hash_index(spark, [(f"h{i}", [f"k{i}"]) for i in range(200)])
     )
     cat.insert_model_edges_delta(
-        "m", _local_edges(spark, [(i, i + 1) for i in range(1, 151)])
+        "m", _local_edges([(i, i + 1) for i in range(1, 151)])
     )
     cat.save()
 
@@ -874,12 +869,10 @@ def test_over_budget_table_is_size_checked_once(
             apdf = pd.DataFrame(
                 {"parent_id": [1, 1], "child_id": [2 * b + 1, 2 * b + 2]}
             )
-            assigns = spark.createDataFrame(apdf, "parent_id long, child_id long")
-            assigns._mb_local_pdf = apdf
             cat.insert_resolver_clusters(
-                f"r{b}", assigns, fingerprint=hashlib.sha256(bytes([b])).digest()
+                f"r{b}", apdf, fingerprint=hashlib.sha256(bytes([b])).digest()
             )
-            cat.insert_model_edges_delta("m", _local_edges(spark, [(b, 300 + b)]))
+            cat.insert_model_edges_delta("m", _local_edges([(b, 300 + b)]))
         return cat
 
     # the size checks run inside mirror(), under its own job group

@@ -100,18 +100,13 @@ def test_edge_mirror_packed_matches_structured(spark, tmp_path):
     cat = Catalog(spark)
 
     def edges(rows):
-        pdf = pd.DataFrame(
+        return pd.DataFrame(
             {
                 "left_id": pd.array([r[0] for r in rows], dtype="int64"),
                 "right_id": pd.array([r[1] for r in rows], dtype="int64"),
                 "score": pd.array([1.0] * len(rows), dtype="float32"),
             }
         )
-        df = spark.createDataFrame(
-            pdf, "left_id long, right_id long, score float"
-        )
-        df._mb_local_pdf = pdf
-        return df
 
     cat.insert_model_edges_delta("m", edges([(1, 2), (3, 4)]))
     acc = cat._mirrors["model_edges"]["m"]

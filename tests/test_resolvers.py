@@ -83,13 +83,16 @@ _CC_CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(_CC_CASES))
-@pytest.mark.parametrize("entry", ["connected_components", "Components"])
+@pytest.mark.parametrize(
+    "entry", ["connected_components", "Components", "Components_pandas"]
+)
 @pytest.mark.parametrize("limit", [None, 0], ids=["limitNone", "limit0"])
 def test_cc_path_matrix(spark, caplog, limit, entry, case):
     """Both CC paths, reached through both entry points, give the union-find
     answer over the kept non-self-loop edges: ``driver_edge_limit=None``
     takes the driver CC at this size, ``0`` the distributed rounds (an
-    empty edge set is answered on the driver either way)."""
+    empty edge set is answered on the driver either way). A driver result
+    is a LocalRelation, or pandas when ``Components`` was given pandas."""
     import logging
     import math
 
@@ -100,12 +103,13 @@ def test_cc_path_matrix(spark, caplog, limit, entry, case):
     if entry == "connected_components":
         df = spark.createDataFrame(kept, "src long, dst long")
         got = connected_components(df, driver_edge_limit=limit)
-        assert hasattr(got, "_mb_local_pdf") == (path == "driver")
         plan = got._jdf.queryExecution().logical().toString()
         assert plan.startswith("LocalRelation") == (path == "driver")
         assert {r["id"]: r["component"] for r in got.collect()} == expected
         return
     edges = spark.createDataFrame(rows, "left_id long, right_id long, score float")
+    if entry == "Components_pandas":
+        edges = edges.toPandas()
     with caplog.at_level(logging.INFO, logger="matchbox_spark.plans.resolvers"):
         out = Components(
             thresholds={"m": 0.5}, driver_edge_limit=limit
@@ -113,7 +117,14 @@ def test_cc_path_matrix(spark, caplog, limit, entry, case):
     assert [m for m in caplog.messages if m.startswith("Components:")] == [
         f"Components: auto → {path} union-find"
     ]
-    assert hasattr(out, "_mb_local_pdf") == (path == "driver")
+    if entry == "Components_pandas" and path == "driver":
+        import pandas as pd
+
+        assert isinstance(out, pd.DataFrame)
+        out = spark.createDataFrame(out, "parent_id long, child_id long")
+    else:
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation") == (path == "driver")
     # parent ids are dense 1..k, ordered by each component's minimum member
     rank = {m: i + 1 for i, m in enumerate(sorted(set(expected.values())))}
     got = {r["child_id"]: r["parent_id"] for r in out.collect()}

@@ -1,12 +1,13 @@
-"""Crash-resume and per-drain Spark-job pins for ``incremental_resolve_stream``.
+"""Crash-resume and per-drain Spark-job and upload pins for
+``incremental_resolve_stream``.
 
 Each case drains a 3-batch stream twice. The first drain runs
 uninterrupted and is the reference. The second fails right after one
 catalog call on batch 1 and restarts with the same ``Catalog`` and
 checkpoint; the fingerprint-gated, idempotent catalog inserts must make its
-terminal catalog equal the reference. The reference drain also pins the
-Spark jobs the whole drain submits under the query's run-id job group, one
-count per route.
+terminal catalog equal the reference. The reference drain also pins, per
+route, the Spark jobs the whole drain submits under the query's run-id job
+group and its uploads of driver data (``createDataFrame`` calls).
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ from test_opt_r13 import _catalog_state
 from test_streaming_lsh_delta import BATCHES as LSH_BATCHES
 from test_streaming_lsh_delta import SCHEMA as LSH_SCHEMA
 from test_streaming_lsh_delta import _model as _minhash_model
+
+from pyspark.sql import SparkSession
 
 from matchbox_spark.operators.dedupers import NaiveDeduper
 from matchbox_spark.plans.catalog import Catalog
@@ -51,36 +54,36 @@ def _naive():
 
 
 # case → (batches, schema, index fields, model factory, stream options,
-#         the catalog call batch 1 crashes right after, jobs per drain)
+#         the catalog call batch 1 crashes right after, jobs per drain,
+#         uploads per drain)
 CASES = {
     "pairs": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _naive, {},
-        "insert_source_index_delta_mapped", 3,
+        "insert_source_index_delta_mapped", 3, 0,
     ),
     "fields": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _TwoFieldOrDeduper, {},
-        "insert_model_edges_delta", 55,
+        "insert_model_edges_delta", 55, 3,
     ),
     "keys": (
         LSH_BATCHES, LSH_SCHEMA, ["text"], _minhash_model, {},
-        "insert_block_keys_delta", 106,
+        "insert_block_keys_delta", 106, 6,
     ),
     "full": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _naive, {"auto_delta": False},
-        "insert_model_edges", 24,
+        "insert_model_edges", 24, 11,
     ),
     "cadenced": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _naive,
         {"auto_delta": False, "resolve_cadence": 2},
-        "insert_source_index_delta", 19,
+        "insert_source_index_delta", 19, 8,
     ),
 }
 
 
-def _start(spark, case, cat, tmp_path, name):
-    """Start the case's stream over its batch files (written on first use,
-    one file per trigger) with the checkpoint ``ckpt_{name}``."""
-    batches, schema, index_fields, model, options, _, _ = CASES[case]
+def _write_batches(spark, case, tmp_path, name):
+    """The case's batch files, one per trigger, written on first use."""
+    batches, schema = CASES[case][:2]
     data_dir = tmp_path / f"data_{name}"
     if not data_dir.exists():
         data_dir.mkdir()
@@ -88,6 +91,14 @@ def _start(spark, case, cat, tmp_path, name):
             spark.createDataFrame(rows, schema).coalesce(1).write.mode(
                 "append"
             ).parquet(str(data_dir))
+    return data_dir
+
+
+def _start(spark, case, cat, tmp_path, name):
+    """Start the case's stream over its batch files with the checkpoint
+    ``ckpt_{name}``."""
+    _, schema, index_fields, model, options = CASES[case][:5]
+    data_dir = _write_batches(spark, case, tmp_path, name)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -123,25 +134,10 @@ def _crash_after_second_call(monkeypatch, name):
     monkeypatch.setattr(Catalog, name, wrapper)
 
 
-@pytest.mark.parametrize("case", list(CASES))
-def test_crash_resume_matches_uninterrupted_drain(
-    spark, tmp_path, monkeypatch, case
-):
-    """A batch-1 crash right after one catalog call, resumed from the same
-    checkpoint and catalog, ends in the uninterrupted drain's catalog; the
-    uninterrupted drain submits its route's pinned number of Spark jobs."""
-    sc = spark.sparkContext
-    ref = Catalog(spark)
-    q = _start(spark, case, ref, tmp_path, "ref")
-    q.awaitTermination(600)
-    assert q.exception() is None
-    # the stream runs every batch under its run id's job group; job starts
-    # reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
-    want = _catalog_state(ref)
-
-    crash_after = CASES[case][5]
+def _crash_and_resume(spark, tmp_path, monkeypatch, case, crash_after):
+    """The case's drain crashed after batch 1's call of ``crash_after``,
+    then resumed from the same checkpoint and catalog; returns the
+    catalog."""
     _crash_after_second_call(monkeypatch, crash_after)
     cat = Catalog(spark)
     q = _start(spark, case, cat, tmp_path, "crash")
@@ -150,5 +146,63 @@ def test_crash_resume_matches_uninterrupted_drain(
     q = _start(spark, case, cat, tmp_path, "crash")
     q.awaitTermination(600)
     assert q.exception() is None
+    return cat
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_crash_resume_matches_uninterrupted_drain(
+    spark, tmp_path, monkeypatch, case
+):
+    """A batch-1 crash right after one catalog call, resumed from the same
+    checkpoint and catalog, ends in the uninterrupted drain's catalog; the
+    uninterrupted drain submits its route's pinned number of Spark jobs
+    and uploads its pinned number of driver frames."""
+    sc = spark.sparkContext
+    _write_batches(spark, case, tmp_path, "ref")
+    uploads = []
+    create = SparkSession.createDataFrame
+
+    def counted(self, *args, **kw):
+        uploads.append(1)
+        return create(self, *args, **kw)
+
+    ref = Catalog(spark)
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", counted)
+        q = _start(spark, case, ref, tmp_path, "ref")
+        q.awaitTermination(600)
+    assert q.exception() is None
+    # the stream runs every batch under its run id's job group; job starts
+    # reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    want = _catalog_state(ref)
+
+    cat = _crash_and_resume(spark, tmp_path, monkeypatch, case, CASES[case][5])
     assert _catalog_state(cat) == want
-    assert jobs == CASES[case][6]
+    assert (jobs, len(uploads)) == CASES[case][6:]
+
+
+# the delta tail's calls, after which a crash leaves batch 1's index (and
+# its edges) in the catalog, as pending driver runs on the driver path;
+# ("fields", "insert_model_edges_delta") is the case above
+TAIL_CRASHES = [
+    ("pairs", "insert_model_edges_delta"),
+    ("pairs", "merge_resolver_clusters_delta"),
+    ("fields", "merge_resolver_clusters_delta"),
+]
+
+
+@pytest.mark.parametrize("case,crash_after", TAIL_CRASHES)
+def test_crash_in_delta_tail_resumes_to_uninterrupted_drain(
+    spark, tmp_path, monkeypatch, case, crash_after
+):
+    """A batch-1 crash after the edge insert or after the claim merge
+    resumes to the uninterrupted drain's catalog."""
+    ref = Catalog(spark)
+    q = _start(spark, case, ref, tmp_path, "ref")
+    q.awaitTermination(600)
+    assert q.exception() is None
+    want = _catalog_state(ref)
+    cat = _crash_and_resume(spark, tmp_path, monkeypatch, case, crash_after)
+    assert _catalog_state(cat) == want
