@@ -258,12 +258,13 @@ class Catalog:
         :meth:`_read`)."""
         parts = self._parts[name]
         if not parts:
-            # memoised: a fresh createDataFrame per access would mint new
-            # attribute ids each time, so callers that touch the property
-            # twice (e.g. a join built from two accesses) fail analysis
+            # memoised: a fresh upload per access would mint new attribute
+            # ids each time, so callers that touch the property twice (e.g.
+            # a join built from two accesses) fail analysis. An empty
+            # LocalRelation, so a join against it can still broadcast.
             if name not in self._empty_tables:
-                self._empty_tables[name] = self.spark.createDataFrame(
-                    [], _SCHEMAS[name]
+                self._empty_tables[name] = local_frame(
+                    self.spark, pd.DataFrame(), _SCHEMAS[name]
                 )
             return self._empty_tables[name]
         return self._read(parts, self._sync_weights(name))
@@ -976,7 +977,7 @@ class Catalog:
         """
         # index is groupBy-output (unique by hash) — no distinct needed
         self._release_assign_temp()  # deferred from a prior lazy assignment
-        if fingerprint is None and self._index_insert_local(step, index) is not None:
+        if fingerprint is None and self._index_insert_local(step, index):
             return
         if self._clusters_empty and fingerprint is None:
             # first insert into an empty catalog: every hash is new, so TWO
@@ -1026,16 +1027,9 @@ class Catalog:
                 assigned.select("cluster_id", "cluster_hash"),
                 materialised=True,
             )
-            # per-array dedup, not a global dropDuplicates shuffle: the
-            # index is unique by hash and cluster_id↔hash is 1:1, so a
-            # duplicate (cluster_id, key) pair can only come from WITHIN
-            # one hash-group's array (two fully-identical source rows) —
-            # array_distinct is equivalent and exchange-free
-            keys = assigned.select(
-                "cluster_id",
-                F.lit(step).alias("source"),
-                F.explode(F.array_distinct("keys")).alias("key"),
-            )
+            self._clusters_empty = False
+            self._bump_max_id(assigned)
+            keys = self._unnest_keys(assigned, step)
             keys_materialised = False  # shallow plan over the checkpoint;
             # _append's lazy checkpoint makes the dedup run once, not per read
         else:
@@ -1061,30 +1055,10 @@ class Catalog:
             if skip:
                 index.unpersist()
                 return
-            new = index.select("cluster_hash").join(
-                self.clusters, "cluster_hash", "left_anti"
-            )
-            assigned = self._ckpt(
-                self._assign_ids(new).select("cluster_id", "cluster_hash"),
-                eager=True,  # O(delta); lets the assignment temp free now
-            )
-            self._release_assign_temp()
-            self._append("clusters", assigned, materialised=True)
-            keys = self._ckpt(
-                # array_distinct not dropDuplicates — see the first-insert
-                # branch (index unique by hash ⇒ in-array dedup suffices)
-                index.join(self.clusters, "cluster_hash")
-                .select(
-                    "cluster_id",
-                    F.lit(step).alias("source"),
-                    F.explode(F.array_distinct("keys")).alias("key"),
-                ),
-                eager=True,  # materialise before the cached index is freed
-            )
+            # materialise before the cached index is freed
+            keys = self._ckpt(self._index_insert_spark(step, index), eager=True)
             index.unpersist()
             keys_materialised = True
-        self._clusters_empty = False
-        self._bump_max_id(assigned)
 
         if self._step_has_rows("cluster_keys", "source", step):
             # rare rewrite path: the step already holds rows (re-sync after
@@ -1101,71 +1075,96 @@ class Catalog:
             "fingerprint": hash_to_base64(fingerprint),
         }
 
-    def _index_insert_local(self, step: str, index: DataFrame, merge: bool = False):
-        """Driver twin of the source-index insert: ONE collect of the index
-        instead of the distributed branches' serial stage rounds (stats,
-        assignment checkpoint, keys checkpoint — under AQE even the "lazy"
-        assignment checkpoint executes its window's shuffle stages, one
-        more serial stage round per source step, the j7 serial-action
-        floor). The insert itself is :meth:`_index_apply_local`.
+    @staticmethod
+    def _unnest_keys(index: DataFrame, step: str) -> DataFrame:
+        """``cluster_keys`` rows of ``index`` (``cluster_id``, ``keys``)
+        under ``step``. Per-array dedup, not a global dropDuplicates
+        shuffle: the index is unique by hash and cluster_id↔hash is 1:1, so
+        a duplicate (cluster_id, key) pair can only come from WITHIN one
+        hash-group's array (two fully-identical source rows) —
+        array_distinct is equivalent and exchange-free."""
+        return index.select(
+            "cluster_id",
+            F.lit(step).alias("source"),
+            F.explode(F.array_distinct("keys")).alias("key"),
+        )
 
-        - Bulk mode (:meth:`insert_source_index`) fingerprint-gates the
-          step and refuses a step that already has rows (the re-sync
-          filter-rewrite stays distributed). The per-row xxhash64 stays
-          JVM-computed, so the fold of (n, Σ_h, ⊕_h) over the collected
-          signed hashes is the distributed per-bucket
-          ``unordered_stats_aggs`` fold (associative; one global group is
-          one valid grouping).
-        - Merge mode (:meth:`insert_source_index_delta`) is not gated.
+    def _index_insert_spark(self, step: str, index: DataFrame) -> DataFrame:
+        """The Spark body of both source-index inserts past their step
+        policy, over ``index`` (``cluster_hash``, ``keys``) that the caller
+        persisted: the hashes not yet in ``clusters`` (a ``left_anti``
+        join) get dense ids under one eager checkpoint, so the assignment
+        temp frees at once, and append to ``clusters``. Returns the plan of
+        the index's ``cluster_keys`` rows under ``step``; the caller
+        filters it by its policy, materialises it, then unpersists
+        ``index``."""
+        new = index.select("cluster_hash")
+        if not self._clusters_empty:
+            new = new.join(self.clusters, "cluster_hash", "left_anti")
+        assigned = self._ckpt(
+            self._assign_ids(new).select("cluster_id", "cluster_hash"),
+            eager=True,  # O(delta); lets the assignment temp free now
+        )
+        self._release_assign_temp()
+        self._append("clusters", assigned, materialised=True)
+        self._clusters_empty = False
+        self._bump_max_id(assigned)
+        return self._unnest_keys(index.join(self.clusters, "cluster_hash"), step)
 
-        Returns None, having done nothing, when :meth:`_index_fits` refuses
-        ``index``. Otherwise returns the collected index as pandas, with
-        its ``cluster_id`` column unless the fingerprint gate skipped the
-        step; in merge mode the extra columns of ``index`` (e.g. per-hash
-        blocking values) ride along."""
-        if not merge and self._step_has_rows("cluster_keys", "source", step):
-            return None
-        if not self._index_fits(index, merge):
-            return None
-        rest = [c for c in index.columns if c != "hash"] if merge else ["keys"]
-        index = index.select(F.col("hash").alias("cluster_hash"), *rest)
-        if merge:
-            pdf = index.toPandas()
-            meta = _streaming_meta("source")
-        else:
-            h = row_hash_expr(index.schema, ["cluster_hash", "keys"], "xxhash64")
-            pdf = index.withColumn("_h", h).toPandas()
-            hs = pdf.pop("_h").to_numpy(dtype="int64")
-            fingerprint = fold_unordered_stats(
-                [{"n": len(hs), "s": sum(hs.tolist()), "x": np.bitwise_xor.reduce(hs)}]
-            )
-            if self._fingerprint_gate(step, fingerprint):
-                return pdf
+    def _index_insert_local(self, step: str, index: DataFrame) -> bool:
+        """Driver twin of :meth:`insert_source_index`: ONE collect of the
+        index instead of the distributed branches' serial stage rounds
+        (stats, assignment checkpoint, keys checkpoint — under AQE even the
+        "lazy" assignment checkpoint executes its window's shuffle stages,
+        one more serial stage round per source step, the j7 serial-action
+        floor). The step is fingerprint-gated, and a step that already has
+        rows is refused (the re-sync filter-rewrite stays distributed). The
+        per-row xxhash64 stays JVM-computed, so the fold of (n, Σ_h, ⊕_h)
+        over the collected signed hashes is the distributed per-bucket
+        ``unordered_stats_aggs`` fold (associative; one global group is one
+        valid grouping). The insert itself is :meth:`_index_apply_local`.
+
+        Returns False, having done nothing, when the step has rows or
+        :meth:`_index_fits` refuses ``index``; True otherwise."""
+        if self._step_has_rows("cluster_keys", "source", step):
+            return False
+        if not self._index_fits(index, "clusters"):
+            return False
+        index = index.select(F.col("hash").alias("cluster_hash"), "keys")
+        h = row_hash_expr(index.schema, ["cluster_hash", "keys"], "xxhash64")
+        pdf = index.withColumn("_h", h).toPandas()
+        hs = pdf.pop("_h").to_numpy(dtype="int64")
+        fingerprint = fold_unordered_stats(
+            [{"n": len(hs), "s": sum(hs.tolist()), "x": np.bitwise_xor.reduce(hs)}]
+        )
+        if not self._fingerprint_gate(step, fingerprint):
             meta = {"type": "source", "fingerprint": hash_to_base64(fingerprint)}
-        return self._index_apply_local(step, pdf, meta, merge)
+            self._index_apply_local(step, pdf, meta)
+        return True
 
-    def _index_fits(self, index: DataFrame, merge: bool) -> bool:
+    def _index_fits(self, index: DataFrame, *tables: str) -> bool:
         """The driver index kernels' gate, decided with no job: the
         optimizer's size estimate for ``index`` must fit
         :data:`_INDEX_DRIVER_BYTES` (read driver-side, so a 100 TB index
-        never collects), and :meth:`mirror` must give a copy of every table
-        the kernel needs (``clusters``; ``cluster_keys`` in merge mode)."""
+        never collects), and :meth:`mirror` must give a copy of each of
+        ``tables``, the tables the kernel reads."""
         try:
             est = int(
                 str(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
             )
         except Exception:  # noqa: BLE001 — estimation only; general path
             return False
-        need = ("clusters", "cluster_keys") if merge else ("clusters",)
-        return est <= _INDEX_DRIVER_BYTES and self.mirror(*need) is not None
+        return est <= _INDEX_DRIVER_BYTES and self.mirror(*tables) is not None
 
-    def _index_apply_local(self, step: str, pdf, meta: dict, merge: bool):
+    def _index_apply_local(self, step: str, pdf, meta: dict):
         """Insert the collected index ``pdf`` (``cluster_hash``, ``keys``,
         any other columns) under ``step`` with ``meta``, on the table
         copies :meth:`_index_fits` checked: the insert-if-absent anti-join
-        and the keys → cluster-id join are lookups in the clusters copy. In
-        merge mode each ``(cluster_id, key)`` pair is also anti-joined
-        against the step's keys copy, so a replayed batch appends nothing.
+        and the keys → cluster-id join are lookups in the clusters copy,
+        and each ``(cluster_id, key)`` pair is anti-joined against the
+        step's pairs in the keys copy, so a replayed batch appends nothing.
+        A bulk insert, whose step has no rows, keeps that copy only when it
+        exists.
 
         Byte-identical outcome to the distributed branches: ids from
         :meth:`_cluster_ids_local`, keys deduplicated per array in
@@ -1174,11 +1173,10 @@ class Catalog:
         LocalRelation, which lets downstream joins against
         ``clusters``/``cluster_keys`` broadcast. Returns ``pdf``
         with its assigned ``cluster_id`` column."""
-        # bulk mode only appends keys it holds: it keeps a copy that exists
-        kcopy = self.mirror("cluster_keys", rebuild=merge)
+        kcopy = self.mirror("cluster_keys", rebuild=False)
         hash_bytes = [bytes(b) for b in pdf["cluster_hash"]]
         id_of = self._cluster_ids_local(hash_bytes)
-        seen = kcopy[0].setdefault(step, set()) if merge else set()
+        seen = kcopy[0].setdefault(step, set()) if kcopy is not None else set()
         key_ids: list[int] = []
         key_vals: list = []
         for hb, keys in zip(hash_bytes, pdf["keys"].tolist()):
@@ -1200,7 +1198,6 @@ class Catalog:
             )
         if kcopy is not None:  # the step's pairs grew by the appended rows
             seen.update(zip(key_ids, key_vals))
-            kcopy[0][step] = seen
             self._mirrors["cluster_keys"] = kcopy[0]
         self._step_rows["cluster_keys"].add(step)
         self.steps[step] = meta
@@ -1208,35 +1205,34 @@ class Catalog:
         return pdf
 
     def insert_source_index_delta_mapped(self, step: str, rows: DataFrame):
-        """Driver-local delta index insert that RETURNS the batch mapping.
+        """Merge a micro-batch's hashed rows into the source index under
+        ``step`` on the driver, and RETURN the batch mapping: the one merge
+        kernel of every streaming route and of
+        :meth:`insert_source_index_delta`'s driver branch.
 
-        ``rows`` is a micro-batch's UN-grouped hashed rows: ``hash``,
-        ``key`` and any further columns (e.g. per-hash blocking values).
-        After the :meth:`_index_fits` gate, ONE Arrow collect of ``rows``
-        is the call's only Spark job, with no exchange:
-        :func:`_group_index_rows` groups it on the driver to exactly what
-        ``groupBy("hash")`` with ``sort_array(collect_list("key"))`` and
-        ``first`` of every other column gives, and
-        :meth:`_index_apply_local` inserts it in merge mode. Returns the
+        ``rows`` is UN-grouped: ``hash``, ``key`` and any further columns
+        (e.g. per-hash blocking values). After the :meth:`_index_fits`
+        gate, ONE Arrow collect of ``rows`` is the call's only Spark job,
+        with no exchange: :func:`_group_index_rows` groups it on the driver
+        to exactly what ``groupBy("hash")`` with
+        ``sort_array(collect_list("key"))`` and ``first`` of every other
+        column gives, and :meth:`_index_apply_local` merges it. Returns the
         grouped batch as a pandas frame with its assigned ``cluster_id``
-        column; the streaming delta-pair path (optimization r14) consumes
-        it to maintain its driver block map without any further jobs. An
+        column, which the streaming routes read with no further job. An
         empty batch returns an empty frame before any mutation (no step
         registered), so the collect doubles as the stream's emptiness
-        check. Returns None, having collected and inserted nothing,
-        whenever the gate refuses (no table copy / over-budget delta); the
-        caller must then group the batch and fall back to
-        :meth:`insert_source_index_delta`, which re-checks the gate and
-        takes the distributed branch.
+        check. Returns None, having collected and inserted nothing, when
+        the gate refuses (no table copy / over-budget rows); the rows then
+        take :meth:`insert_source_index_delta`'s Spark branch.
         """
-        if not self._index_fits(rows, merge=True):
+        if not self._index_fits(rows, "clusters", "cluster_keys"):
             return None
         pdf = rows.toPandas()
         if pdf.empty:
             pdf = pdf.rename(columns={"hash": "cluster_hash", "key": "keys"})
             return pdf.assign(cluster_id=[])
         return self._index_apply_local(
-            step, _group_index_rows(pdf), _streaming_meta("source"), merge=True
+            step, _group_index_rows(pdf), _streaming_meta("source")
         )
 
     def insert_source_index_delta(self, step: str, index: DataFrame) -> None:
@@ -1252,36 +1248,23 @@ class Catalog:
         foreachBatch retry semantics compose with checkpointing to
         exactly-once state.
 
-        The step is not fingerprint-gated — a streaming step is perpetually
-        amendable; its metadata records ``streaming: True``.
+        The driver branch hands the index's rows, one per ``(hash, key)``
+        (``explode_outer``, so a hash with no key stays), to
+        :meth:`insert_source_index_delta_mapped`'s kernel. The step is not
+        fingerprint-gated — a streaming step is perpetually amendable; its
+        metadata records ``streaming: True``.
         """
-        if self._index_insert_local(step, index, merge=True) is not None:
+        rows = index.select("hash", F.explode_outer("keys").alias("key"))
+        if self.insert_source_index_delta_mapped(step, rows) is not None:
+            # an empty index registers the step too, as the Spark branch does
+            self.steps[step] = _streaming_meta("source")
             return
         index = index.select(
             F.col("hash").alias("cluster_hash"), F.col("keys")
         ).persist()
-        new = index.select("cluster_hash")
-        if not self._clusters_empty:
-            new = new.join(self.clusters, "cluster_hash", "left_anti")
-        assigned = self._ckpt(
-            self._assign_ids(new).select("cluster_id", "cluster_hash"),
-            eager=True,
-        )
-        self._release_assign_temp()
-        self._append("clusters", assigned, materialised=True)
-        self._clusters_empty = False
-        self._bump_max_id(assigned)
-
-        keys = (
-            # array_distinct not dropDuplicates — the delta index is unique
-            # by hash (groupBy output), so in-array dedup suffices
-            index.join(self.clusters, "cluster_hash")
-            .select(
-                "cluster_id",
-                F.lit(step).alias("source"),
-                F.explode(F.array_distinct("keys")).alias("key"),
-            )
-        )
+        # a null key drops out, as in the kernel's grouping; it could never
+        # anti-join away, so each replay would append it again
+        keys = self._index_insert_spark(step, index).where(F.col("key").isNotNull())
         if self._step_has_rows("cluster_keys", "source", step):
             keys = keys.join(
                 self.cluster_keys.where(F.col("source") == step),

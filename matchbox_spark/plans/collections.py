@@ -59,8 +59,13 @@ class DeletionNotConfirmedError(RuntimeError):
 _MUTATING = frozenset(
     {
         "insert_source_index",
+        "insert_source_index_delta",
+        "insert_source_index_delta_mapped",
         "insert_model_edges",
+        "insert_model_edges_delta",
+        "insert_block_keys_delta",
         "insert_resolver_clusters",
+        "merge_resolver_clusters_delta",
         "drop_step",
         "save",
         "_commit",

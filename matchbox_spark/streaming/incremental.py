@@ -22,8 +22,8 @@ appends; the accumulated ``clusters``/``cluster_keys`` tables are only
   (e.g. ``NaiveDeduper``) keeps a driver map ``tuple → member ids`` and
   emits exactly each batch's old×new ∪ new×new pairs (optimization r14).
   The map retires to ``fields`` for the rest of the run when it cannot stay
-  complete: a resumed run, prior catalog state, a dead index twin, or a
-  batch over the driver budget.
+  complete: a resumed run, prior catalog state, a batch the index kernel
+  refuses, or a batch over the driver budget.
 - ``fields`` — raw blocking fields (``blocking_fields`` or the model's
   ``delta_blocking_fields``): the model re-runs only over accumulated rows
   sharing a blocking value with the batch (delta-link).
@@ -36,23 +36,25 @@ appends; the accumulated ``clusters``/``cluster_keys`` tables are only
   rows (general-correct for non-monotone models; O(accumulated) per batch
   by design), optionally only on every ``resolve_cadence``-th batch.
 
-Every micro-batch runs the same phases: guard (skip an empty batch, refuse
-a resumed checkpoint against a step-less catalog) → index → edges for the
-route → delta tail → serving refresh. The delta tail is shared by the three
-delta routes: append the new edges (``insert_model_edges_delta``) → star
-edges for the prior components the batch can touch (one synthetic edge per
-member — O(touched), not O(past edges) — so a bridging record still merges
-clusters formed in earlier batches) → connected components over (edges ∪
-stars) → claim merge (``merge_resolver_clusters_delta``) → free the
-batch-local checkpoints. ``full`` replaces edges + tail with one model +
-resolver rebuild.
+Every micro-batch runs the same phases: guard (on a resumed run only: skip
+an empty batch, refuse a resumed checkpoint against a step-less catalog) →
+index → edges for the route → delta tail → serving refresh. The delta tail
+is shared by the three delta routes: append the new edges
+(``insert_model_edges_delta``) → star edges for the prior components the
+batch can touch (one synthetic edge per member — O(touched), not O(past
+edges) — so a bridging record still merges clusters formed in earlier
+batches) → connected components over (edges ∪ stars) → claim merge
+(``merge_resolver_clusters_delta``) → free the batch-local checkpoints.
+``full`` replaces edges + tail with one model + resolver rebuild.
 
-Skipping an empty batch costs one ``isEmpty`` job per batch, except on the
-``pairs`` route of a run that witnessed batch 0. There the index phase
-hands the batch's un-grouped hashed rows to the catalog's one-collect
-kernel (grouped on the driver, no exchange), and an empty collect ends the
-batch, so a non-empty batch costs that one Spark job in all; every later
-phase runs on driver copies.
+Every route indexes a batch through the catalog's one merge kernel
+(``insert_source_index_delta_mapped``): one Arrow collect of the batch's
+un-grouped hashed rows, grouped on the driver with no exchange. An empty
+collect ends the batch, so an empty batch costs that one Spark job, and so
+does a whole non-empty ``pairs`` batch: every later phase runs on driver
+copies. Only when the kernel refuses (no table copy, or a batch over the
+driver budget) does a batch pay an ``isEmpty`` job and group in Spark for
+the distributed insert.
 
 On the driver path the phases hand each other pandas frames, not Spark
 frames: the batch index, the route's edges and leaves, the star edges and
@@ -130,26 +132,24 @@ def _start_stream(
     body,
     checkpoint_dir: str,
     available_now: bool = True,
-    reads_empty=lambda: False,
 ) -> StreamingQuery:
     """Start ``stream`` with ``body(batch, batch_id, from_start)`` run on
-    every NON-EMPTY micro-batch, after the checkpoint guard.
+    its micro-batches, after the checkpoint guard.
 
     ``from_start`` says whether this run witnessed batch 0; a run that did
-    not is a resumed checkpoint, checked against ``step``'s catalog state
-    before its first non-empty batch runs. Emptiness costs one
-    ``isEmpty`` job per batch, except on a run that witnessed batch 0 while
-    ``reads_empty()`` says the body reads it from its own collect; such a
-    body must then return at once on an empty batch. The guard only runs
-    on a resumed run, so it never sees an empty batch either way."""
+    not is a resumed checkpoint: each of its batches pays one ``isEmpty``
+    job, and its first non-empty one is checked against ``step``'s catalog
+    state, so the guard never sees an empty batch. On a run that witnessed
+    batch 0 every batch reaches ``body``, which reads emptiness from its
+    index collect and must return at once on an empty batch."""
     run = {"from_start": False}
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         if batch_id == 0:
             run["from_start"] = True
-        if not (run["from_start"] and reads_empty()) and batch.isEmpty():
-            return
         if not run["from_start"]:
+            if batch.isEmpty():
+                return
             _guard_checkpoint_state(catalog, step, batch_id)
         body(batch, batch_id, run["from_start"])
 
@@ -190,29 +190,30 @@ def _index_batch(
     """H1-hash a batch (``h1``: the stream's hash Column, built once per
     stream), merge it append-only (U6) into the catalog's content index.
 
-    With ``value_fields`` (the ``pairs`` route) the hashed rows, each
-    named field string-cast for stable driver-side equality, go to the
-    catalog's one-collect kernel, which groups them on the driver; each
-    hash keeps its first row's values — legal because the fields are part
-    of the hashed content (the route gates ``value_fields ⊆
-    index_fields``), so they are constant within a hash group. Returns the
-    catalog's mapped batch index (a pandas frame with assigned
-    ``cluster_id``, empty for an empty batch) in that mode, or None when
-    the driver kernel cannot run — the caller must then re-call without
-    ``value_fields`` (nothing was collected or inserted). Without
-    ``value_fields`` the batch groups in Spark and takes the grouped delta
-    insert."""
+    The batch's un-grouped hashed rows go to the catalog's one merge
+    kernel, which collects and groups them on the driver. With
+    ``value_fields`` (the ``pairs`` route) each named field rides along,
+    string-cast for stable driver-side equality; each hash keeps its first
+    row's values — legal because the fields are part of the hashed content
+    (the route gates ``value_fields ⊆ index_fields``), so they are
+    constant within a hash group. Returns the batch mapping (a pandas frame
+    with assigned ``cluster_id``, empty for an empty batch), or None when
+    the kernel refused: the batch then groups in Spark for the distributed
+    delta insert, unless an ``isEmpty`` job finds it empty (an empty frame
+    is returned)."""
     cols = [h1.alias("hash"), F.col(key_field).cast("string").alias("key")]
-    if value_fields:
-        cols += [
-            F.col(f).cast("string").alias(f"_bv_{i}")
-            for i, f in enumerate(value_fields)
-        ]
-        return catalog.insert_source_index_delta_mapped(step, batch.select(*cols))
-    index = (
-        batch.select(*cols)
-        .groupBy("hash")
-        .agg(F.sort_array(F.collect_list("key")).alias("keys"))
+    cols += [
+        F.col(f).cast("string").alias(f"_bv_{i}")
+        for i, f in enumerate(value_fields or ())
+    ]
+    rows = batch.select(*cols)
+    bidx = catalog.insert_source_index_delta_mapped(step, rows)
+    if bidx is not None:
+        return bidx
+    if batch.isEmpty():
+        return pd.DataFrame()
+    index = rows.groupBy("hash").agg(
+        F.sort_array(F.collect_list("key")).alias("keys")
     )
     catalog.insert_source_index_delta(step, index)
     return None
@@ -525,19 +526,26 @@ def _field_edges(model, data, batch, blocking_fields, source_step):
     return edges, leaves, (data, ckpt)
 
 
-def _block_key_edges(catalog, model, model_step, data, batch, h1):
+def _block_key_edges(catalog, model, model_step, data, batch, h1, bidx):
     """The ``keys`` route's edges: the batch's block keys — O(batch) to
     compute, a pure function of batch content, so replay-safe — select the
     accumulated leaves the model could touch via one semi-join on the
-    persisted key index (``h1``: the stream's hash Column). Returns
-    ``(edges, leaves, frames)``."""
+    persisted key index. The batch's leaf ids are the ``cluster_id`` column
+    of its index mapping ``bidx``; when the index kernel refused (``bidx``
+    None) they come from a semi-join of ``clusters`` with the batch hashes
+    (``h1``: the stream's hash Column). Returns ``(edges, leaves,
+    frames)``."""
     id_col = getattr(getattr(model, "settings", None), "id", None) or "id"
-    batch_hashes = batch.select(h1.alias("cluster_hash")).distinct()
-    batch_leaf_ids = (
-        catalog.clusters.join(batch_hashes, "cluster_hash", "left_semi")
-        .select(F.col("cluster_id").alias(id_col))
-        .localCheckpoint(eager=True)
-    )
+    if bidx is not None:
+        ids = bidx[["cluster_id"]].rename(columns={"cluster_id": id_col})
+        batch_leaf_ids = local_frame(catalog.spark, ids, f"{id_col} long")
+    else:
+        batch_hashes = batch.select(h1.alias("cluster_hash")).distinct()
+        batch_leaf_ids = (
+            catalog.clusters.join(batch_hashes, "cluster_hash", "left_semi")
+            .select(F.col("cluster_id").alias(id_col))
+            .localCheckpoint(eager=True)
+        )
     batch_rows = data.join(batch_leaf_ids, id_col, "left_semi").localCheckpoint(
         eager=True
     )
@@ -876,33 +884,27 @@ def incremental_resolve_stream(
 
     def _resolve(batch: DataFrame, batch_id: int, from_start: bool) -> None:
         nonlocal route
+        if route == "pairs" and not from_start:
+            route = "fields"  # a resumed run cannot rebuild the map
         spark = batch.sparkSession
         fallbacks0 = catalog._ckpt_fallbacks
-        bidx = None
-        if route == "pairs" and from_start:
-            # _start_stream skipped isEmpty: the index collect reads it
-            bidx = _index_batch(
-                catalog, source_step, batch, h1, key_field, contract["raw"]
-            )
-            if bidx is None and batch.isEmpty():
-                return  # the kernel refused before collecting
-            if bidx is not None and bidx.empty:
-                return
-        if bidx is None:
-            _index_batch(catalog, source_step, batch, h1, key_field)
+        values = contract["raw"] if route == "pairs" else None
+        bidx = _index_batch(catalog, source_step, batch, h1, key_field, values)
+        if bidx is not None and bidx.empty:
+            return  # an empty batch
         if route == "full" and batch_id % resolve_cadence:
             return  # cadenced index-only batch: serving keeps the last resolve
         routed = None
-        if bidx is not None:
-            routed = _delta_pair_batch(bidx, contract, pmap, spark)
-        if routed is None and route == "pairs":
-            # the map misses rows from here on — a resumed run cannot
-            # rebuild it, the index twin could not run (no table copy /
-            # over budget) and left this batch out, or the batch was over
-            # the driver budget (found BEFORE any map mutation) — so it
-            # retires and this batch and the rest of the run take the
-            # fields route
-            route = "fields"
+        if route == "pairs":
+            if bidx is not None:
+                routed = _delta_pair_batch(bidx, contract, pmap, spark)
+            if routed is None:
+                # the map misses rows from here on — the index kernel
+                # refused (no table copy / over budget) and left this batch
+                # out, or the batch was over the driver budget (found
+                # BEFORE any map mutation) — so it retires and this batch
+                # and the rest of the run take the fields route
+                route = "fields"
         if routed is None:
             data = _source_data(
                 spark, catalog, source_step, key_field, index_fields, source_location
@@ -914,7 +916,7 @@ def incremental_resolve_stream(
                 routed = _field_edges(model, data, batch, blocking_fields, source_step)
             else:
                 routed = _block_key_edges(
-                    catalog, model, f"{source_step}_model", data, batch, h1
+                    catalog, model, f"{source_step}_model", data, batch, h1, bidx
                 )
         if routed is not None:
             _delta_tail(
@@ -923,11 +925,4 @@ def incremental_resolve_stream(
         touched = None if route == "full" else batch
         _refresh_serving(serving_matcher, catalog, source_step, key_field, touched)
 
-    return _start_stream(
-        stream,
-        catalog,
-        source_step,
-        _resolve,
-        checkpoint_dir,
-        reads_empty=lambda: route == "pairs",
-    )
+    return _start_stream(stream, catalog, source_step, _resolve, checkpoint_dir)

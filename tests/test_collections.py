@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from matchbox_spark.operators.dedupers import NaiveDeduper
+from matchbox_spark.plans.catalog import Catalog
 from matchbox_spark.plans.collections import (
     CollectionStore,
     DeletionNotConfirmedError,
@@ -114,6 +115,19 @@ def test_immutable_run_rejects_writes(spark, crn_parquet):
                 [], "left_id long, right_id long, score float"
             ),
         )
+    # every public mutator, found by name, is guarded: the guard raises
+    # before the call binds its arguments, so none need building
+    mutators = [
+        n
+        for n in dir(Catalog)
+        if n.startswith(("insert_", "merge_")) or n == "drop_step"
+    ]
+    assert "insert_source_index_delta" in mutators
+    steps = dict(run.catalog.steps)
+    for name in mutators:
+        with pytest.raises(RunNotWriteableError):
+            getattr(run.catalog, name)()
+    assert run.catalog.steps == steps
     # reads still flow
     assert run.catalog.cluster_keys.count() == 30
 

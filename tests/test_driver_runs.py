@@ -120,6 +120,22 @@ def test_all_singleton_step_assignments_plan_a_local_relation(spark):
     assert out.count() == 0
 
 
+def test_empty_table_reads_plan_a_local_relation(spark):
+    """A table with no rows reads as one memoised empty LocalRelation: its
+    size is known, so a join against it can broadcast, and two reads share
+    attribute ids, so a join built from both analyses."""
+    cat = Catalog(spark)
+    plan = cat.resolver_clusters._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    # each side's column comes from a separate read of its table
+    joined = cat.clusters.join(
+        cat.resolver_clusters,
+        cat.clusters["cluster_id"] == cat.resolver_clusters["cluster_id"],
+    )
+    assert joined.columns == ["cluster_id", "cluster_hash", "step", "cluster_id"]
+    assert joined.count() == 0
+
+
 def test_served_pairs_stream_keeps_partitions_to_runs(spark, tmp_path):
     """24 ``pairs`` batches with a serving ``Matcher``, so every batch reads
     the catalog: each table keeps at most ``defaultParallelism`` partitions

@@ -9,7 +9,8 @@
    the clusters mirror, resolver insert via the contains mirror with G4
    expansion) produce a byte-identical catalog to the distributed paths
    on the full multi-source stacked-resolver pipeline shape.
-4. The driver-path inserts submit a pinned number of Spark jobs per call.
+4. The driver-path inserts submit a pinned number of Spark jobs per call,
+   and the Spark source-index inserts at most a pinned number.
 5. The driver mirrors are a cache of their tables: after a distributed
    step or a reopen they rebuild (equal to their tables) and put the next
    driver-CC resolver insert back on the driver kernel; an over-budget
@@ -246,8 +247,8 @@ def _overlap_catalogs(spark, delta=False):
     hashes and only mint ids for the new one — the rev-lookup branch of
     the mirror path that distinct-field pipelines never exercise. With
     ``delta``, a third step streams :data:`_OVERLAP_DELTA` through
-    ``insert_source_index_delta`` (merge mode: reuse across steps, mint
-    for the rest)."""
+    ``insert_source_index_delta`` (a merge: reuse across steps, mint for
+    the rest)."""
     from matchbox_spark.plans.catalog import Catalog
 
     cat = Catalog(spark)
@@ -331,6 +332,29 @@ def test_overlapping_hash_delta_insert_local_matches_distributed(
     assert local_state == dist_state
 
 
+def test_delta_insert_null_key_and_empty_index_match_distributed(
+    spark, force_distributed
+):
+    """A merge insert drops a null key on both paths (on the Spark path it
+    could never anti-join away, so each replay appended it again), and an
+    empty index registers its step on both."""
+
+    def run():
+        cat = _overlap_catalogs(spark)
+        idx = _hash_index(spark, [("h1", ["c1", None]), ("h6", [None])])
+        cat.insert_source_index_delta("srcC", idx)
+        cat.insert_source_index_delta("srcC", idx)  # a replay
+        cat.insert_source_index_delta("srcD", _hash_index(spark, []))
+        return _catalog_state(cat)
+
+    local = run()
+    assert sorted(k for _, s, k in local["cluster_keys"] if s == "srcC") == ["c1"]
+    assert len(local["clusters"]) == 5  # h6 is minted with no key
+    assert "srcD" in local["steps"]
+    force_distributed("index")
+    assert run() == local
+
+
 def _job_counter(spark, monkeypatch, names, owner=None):
     """Run every call of the named methods of ``owner`` (default
     ``Catalog``) under its own job group. Returns a function giving, per
@@ -380,7 +404,7 @@ def _job_counter(spark, monkeypatch, names, owner=None):
 
 def test_driver_insert_job_counts(spark, monkeypatch):
     """Jobs per call of the driver-path inserts on live mirrors: one
-    collect per source-index insert (bulk or merge mode) and none for a
+    collect per source-index insert (bulk or merge) and none for a
     resolver insert whose assignments the driver union-find produced."""
     import hashlib
 
@@ -408,6 +432,27 @@ def test_driver_insert_job_counts(spark, monkeypatch):
         "insert_source_index_delta": [1],
         "insert_resolver_clusters": [0],
     }
+
+
+def test_spark_index_insert_job_counts(spark, monkeypatch, force_distributed):
+    """At most a pinned number of jobs per call of the Spark source-index
+    inserts, which every over-budget or forced source insert takes: the
+    bulk insert on an empty catalog (its first-insert branch) and on a
+    non-empty one, then the merge insert of a new step and its replay."""
+    force_distributed("index")
+    counts = _job_counter(
+        spark, monkeypatch, ["insert_source_index", "insert_source_index_delta"]
+    )
+    cat = _overlap_catalogs(spark, delta=True)
+    cat.insert_source_index_delta("srcC", _hash_index(spark, _OVERLAP_DELTA))
+    assert cat._mirrors.get("clusters") is None  # every insert went to Spark
+    # a call's count can vary by one job from run to run, before the shared
+    # Spark body as after it (the replay read 12 jobs in 2 of 20 runs, else
+    # 11), so this pins the most each call may submit
+    most = {"insert_source_index": [5, 14], "insert_source_index_delta": [12, 12]}
+    got = counts()
+    assert {n: len(c) for n, c in got.items()} == {n: 2 for n in most}
+    assert all(c <= m for n in most for c, m in zip(got[n], most[n])), got
 
 
 @pytest.mark.parametrize("path", ["driver_index", "spark"])
@@ -519,7 +564,7 @@ def test_streaming_delta_twins_byte_identical_to_distributed(
     spark, tmp_path, force_distributed
 ):
     """The r13 driver twins for the streaming delta inserts
-    (_index_insert_local in merge mode, insert_model_edges_delta's mirror
+    (the one-collect index merge kernel, insert_model_edges_delta's mirror
     path, merge_resolver_clusters_delta over _hierarchy_insert_local, the
     driver star edges and the pandas CC shortcut) produce a byte-identical
     catalog to the distributed loop they replace."""
@@ -620,58 +665,6 @@ def test_streaming_pairs_kernel_edge_rows_match_distributed(
     dist = _delta_stream_catalog(spark, tmp_path, "kernel_dist", batches)
     assert dist._mirrors.get("clusters") is None  # loop went distributed
     assert local_state == _catalog_state(dist)
-
-
-def test_streaming_pairs_empty_batch_runs_one_job(spark, tmp_path, monkeypatch):
-    """An empty micro-batch in mid-stream on the pairs route costs the
-    index collect alone — no ``isEmpty`` job — and changes neither the
-    catalog's tables nor its steps."""
-    import matchbox_spark.streaming.incremental as inc
-    from matchbox_spark.plans.catalog import Catalog
-
-    class _Snap:
-        def take(self, cat):
-            return _catalog_state(cat), dict(cat.steps)
-
-    counts = _job_counter(
-        spark,
-        monkeypatch,
-        ["insert_source_index_delta_mapped", "insert_model_edges_delta"],
-    )
-    # snapshots run under their own job groups, outside the counted calls
-    snap_jobs = _job_counter(spark, monkeypatch, ["take"], owner=_Snap)
-    counted = Catalog.insert_source_index_delta_mapped
-    before = []
-
-    def snapshot(self, *args, **kw):
-        before.append(_Snap().take(self))
-        return counted(self, *args, **kw)
-
-    monkeypatch.setattr(Catalog, "insert_source_index_delta_mapped", snapshot)
-    queries = []
-    start = inc._start_stream
-
-    def started(*args, **kw):
-        queries.append(start(*args, **kw))
-        return queries[-1]
-
-    monkeypatch.setattr(inc, "_start_stream", started)
-    batches = [
-        [(1, "A1", "u1"), (2, "A1", "u2")],
-        [],
-        [(3, "A1", "u3"), (4, "A2", "u4")],
-    ]
-    cat = _delta_stream_catalog(spark, tmp_path, "empty", batches)
-    got = counts()
-    assert got["insert_source_index_delta_mapped"] == [1, 1, 1]
-    # the empty batch returned right after its collect
-    assert got["insert_model_edges_delta"] == [0, 0]
-    # outside the counted calls the drain ran nothing: no isEmpty job
-    tracker = spark.sparkContext.statusTracker()
-    assert len(tracker.getJobIdsForGroup(str(queries[0].runId))) == 0
-    assert before[1] == before[2]
-    assert len(snap_jobs()["take"]) == 3
-    assert sorted(cat.steps) == ["s", "s_model", "s_resolve"]
 
 
 def test_resolver_assignments_mirror_path_matches_join(

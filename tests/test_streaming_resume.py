@@ -7,13 +7,15 @@ catalog call on batch 1 and restarts with the same ``Catalog`` and
 checkpoint; the fingerprint-gated, idempotent catalog inserts must make its
 terminal catalog equal the reference. The reference drain also pins, per
 route, the Spark jobs the whole drain submits under the query's run-id job
-group and its uploads of driver data (``createDataFrame`` calls).
+group and its uploads of driver data (``createDataFrame`` calls). Each
+route's reference drain runs once per module and serves every case of the
+route.
 """
 
 from __future__ import annotations
 
 import pytest
-from test_opt_r13 import _catalog_state
+from test_opt_r13 import _catalog_state, _job_counter
 from test_streaming_lsh_delta import BATCHES as LSH_BATCHES
 from test_streaming_lsh_delta import SCHEMA as LSH_SCHEMA
 from test_streaming_lsh_delta import _model as _minhash_model
@@ -63,27 +65,70 @@ CASES = {
     ),
     "fields": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _TwoFieldOrDeduper, {},
-        "insert_model_edges_delta", 55, 3,
+        "insert_model_edges_delta", 49, 3,
     ),
     "keys": (
         LSH_BATCHES, LSH_SCHEMA, ["text"], _minhash_model, {},
-        "insert_block_keys_delta", 106, 6,
+        "insert_block_keys_delta", 91, 6,
     ),
     "full": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _naive, {"auto_delta": False},
-        "insert_model_edges", 24, 11,
+        "insert_model_edges", 18, 11,
     ),
     "cadenced": (
         AU_BATCHES, AU_SCHEMA, ["a", "u"], _naive,
         {"auto_delta": False, "resolve_cadence": 2},
-        "insert_source_index_delta", 19, 8,
+        "insert_source_index_delta_mapped", 13, 8,
     ),
 }
 
 
-def _write_batches(spark, case, tmp_path, name):
-    """The case's batch files, one per trigger, written on first use."""
-    batches, schema = CASES[case][:2]
+@pytest.fixture(scope="module")
+def reference(spark, tmp_path_factory):
+    """``reference(case)``: the case's uninterrupted drain as ``(catalog
+    state, Spark jobs, uploads)``, drained on the first call only."""
+    cache = {}
+
+    def get(case):
+        if case not in cache:
+            cache[case] = _reference_drain(
+                spark, case, tmp_path_factory.mktemp(f"ref_{case}")
+            )
+        return cache[case]
+
+    return get
+
+
+def _reference_drain(spark, case, tmp_path):
+    """Drain the case uninterrupted; count the Spark jobs it submits and
+    its uploads of driver data."""
+    sc = spark.sparkContext
+    _write_batches(spark, case, tmp_path, "ref")
+    uploads = []
+    create = SparkSession.createDataFrame
+
+    def counted(self, *args, **kw):
+        uploads.append(1)
+        return create(self, *args, **kw)
+
+    ref = Catalog(spark)
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", counted)
+        q = _start(spark, case, ref, tmp_path, "ref")
+        q.awaitTermination(600)
+    assert q.exception() is None
+    # the stream runs every batch under its run id's job group; job starts
+    # reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    return _catalog_state(ref), jobs, len(uploads)
+
+
+def _write_batches(spark, case, tmp_path, name, batches=None):
+    """The case's batch files (or ``batches``, in the case's schema), one
+    per trigger, written on first use."""
+    schema = CASES[case][1]
+    batches = batches or CASES[case][0]
     data_dir = tmp_path / f"data_{name}"
     if not data_dir.exists():
         data_dir.mkdir()
@@ -94,11 +139,11 @@ def _write_batches(spark, case, tmp_path, name):
     return data_dir
 
 
-def _start(spark, case, cat, tmp_path, name):
+def _start(spark, case, cat, tmp_path, name, batches=None):
     """Start the case's stream over its batch files with the checkpoint
     ``ckpt_{name}``."""
     _, schema, index_fields, model, options = CASES[case][:5]
-    data_dir = _write_batches(spark, case, tmp_path, name)
+    data_dir = _write_batches(spark, case, tmp_path, name, batches)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -151,36 +196,16 @@ def _crash_and_resume(spark, tmp_path, monkeypatch, case, crash_after):
 
 @pytest.mark.parametrize("case", list(CASES))
 def test_crash_resume_matches_uninterrupted_drain(
-    spark, tmp_path, monkeypatch, case
+    spark, tmp_path, monkeypatch, reference, case
 ):
     """A batch-1 crash right after one catalog call, resumed from the same
     checkpoint and catalog, ends in the uninterrupted drain's catalog; the
     uninterrupted drain submits its route's pinned number of Spark jobs
     and uploads its pinned number of driver frames."""
-    sc = spark.sparkContext
-    _write_batches(spark, case, tmp_path, "ref")
-    uploads = []
-    create = SparkSession.createDataFrame
-
-    def counted(self, *args, **kw):
-        uploads.append(1)
-        return create(self, *args, **kw)
-
-    ref = Catalog(spark)
-    with monkeypatch.context() as m:
-        m.setattr(SparkSession, "createDataFrame", counted)
-        q = _start(spark, case, ref, tmp_path, "ref")
-        q.awaitTermination(600)
-    assert q.exception() is None
-    # the stream runs every batch under its run id's job group; job starts
-    # reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
-    want = _catalog_state(ref)
-
+    want, jobs, uploads = reference(case)
     cat = _crash_and_resume(spark, tmp_path, monkeypatch, case, CASES[case][5])
     assert _catalog_state(cat) == want
-    assert (jobs, len(uploads)) == CASES[case][6:]
+    assert (jobs, uploads) == CASES[case][6:]
 
 
 # the delta tail's calls, after which a crash leaves batch 1's index (and
@@ -195,14 +220,63 @@ TAIL_CRASHES = [
 
 @pytest.mark.parametrize("case,crash_after", TAIL_CRASHES)
 def test_crash_in_delta_tail_resumes_to_uninterrupted_drain(
-    spark, tmp_path, monkeypatch, case, crash_after
+    spark, tmp_path, monkeypatch, reference, case, crash_after
 ):
     """A batch-1 crash after the edge insert or after the claim merge
     resumes to the uninterrupted drain's catalog."""
-    ref = Catalog(spark)
-    q = _start(spark, case, ref, tmp_path, "ref")
-    q.awaitTermination(600)
-    assert q.exception() is None
-    want = _catalog_state(ref)
+    want = reference(case)[0]
     cat = _crash_and_resume(spark, tmp_path, monkeypatch, case, crash_after)
     assert _catalog_state(cat) == want
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_empty_batch_runs_one_job(spark, tmp_path, monkeypatch, case):
+    """An empty file in mid-stream costs every route one Spark job, the
+    index collect, with no ``isEmpty`` job, and changes neither the
+    catalog's tables nor its steps. On the ``pairs`` route a non-empty
+    batch costs that one job too."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    # these calls run under their own job groups, outside the batches'
+    # counts below
+    calls = _job_counter(
+        spark,
+        monkeypatch,
+        ["insert_source_index_delta_mapped", "insert_model_edges_delta"],
+    )
+    sc = spark.sparkContext
+    batches = CASES[case][0]
+    cat = Catalog(spark)
+    jobs = {}
+    snaps = []
+    start = DataStreamWriter.foreachBatch
+
+    def counted(self, func):
+        def run(batch, batch_id):
+            # the batch runs under its query's job group; the snapshots run
+            # outside the counted window
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            snaps.append((_catalog_state(cat), dict(cat.steps)))
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            before = set(sc.statusTracker().getJobIdsForGroup(group))
+            func(batch, batch_id)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            after = set(sc.statusTracker().getJobIdsForGroup(group))
+            jobs[batch_id] = len(after - before)
+
+        return start(self, run)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", counted)
+    q = _start(spark, case, cat, tmp_path, "empty", [batches[0], [], batches[2]])
+    q.awaitTermination(600)
+    assert q.exception() is None
+    collects = calls()["insert_source_index_delta_mapped"]
+    assert len(collects) == 3 and collects[1] == 1
+    assert sorted(jobs) == [0, 1, 2]
+    assert jobs[1] == 0  # the collect was the empty batch's only job
+    assert snaps[1] == snaps[2]  # and it mutated nothing
+    assert sorted(cat.steps) == ["s", "s_model", "s_resolve"]
+    if case == "pairs":
+        assert collects == [1, 1, 1] and jobs == {0: 0, 1: 0, 2: 0}
+        # the empty batch returned before the edge insert
+        assert calls()["insert_model_edges_delta"] == [0, 0]
