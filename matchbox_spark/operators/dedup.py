@@ -4,12 +4,16 @@ These extend the engine beyond the reference's record-matching surface with
 the dedup family a 100 TB text/embedding corpus needs (BASELINE.json north
 star). Every operator is a relational composition — shuffles only on shingle
 / band / bucket keys, no UDFs, no driver loops — so the same plan runs on
-1000 executors:
+1000 executors. The one exception is n-gram Jaccard's driver placement: a
+corpus whose shingle rows and candidate pairs fit the driver budget is
+collected once and joined by a numpy kernel on the driver, and a larger
+one takes the relational paths:
 
 - **exact**: hash-groupBy on normalised content (one shuffle on a 32-byte
   hash).
-- **n-gram Jaccard**: inverted shingle index self-join → pair intersection
-  counts → |A∩B| / (|A|+|B|−|A∩B|).
+- **n-gram Jaccard**: prefix-filtered candidates verified exactly on the
+  driver, or an inverted shingle index self-join (or shingle bitmasks) →
+  pair intersection counts → |A∩B| / (|A|+|B|−|A∩B|).
 - **MinHash + LSH**: per-shingle seeded hashes → min per permutation →
   banded signature keys → candidates share a band (sub-quadratic); optional
   exact-Jaccard verification of candidates.
@@ -28,6 +32,10 @@ from __future__ import annotations
 import logging
 import math
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +46,10 @@ from matchbox_spark.functions.text import (
 )
 from matchbox_spark.functions.numeric import ieee_round6
 from matchbox_spark.functions.vectors import cosine_expr, sign_bucket_expr
+from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
+from matchbox_spark.schemas import local_frame
+
+logger = logging.getLogger(__name__)
 
 # Universal-hash MinHash: 30-bit prime modulus keeps every product within
 # int64 under ANSI overflow checks; per-permutation affine constants derive
@@ -116,53 +128,241 @@ def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
     )
 
 
-# Distinct-shingle cap for the bitset Jaccard path; 0 forces the posting path.
+# Distinct-shingle cap for the bitset Jaccard path; 0 turns that path off.
 _JACCARD_BITSET_VOCAB = 4096
 
+# The driver prefix kernel's temporaries: booleans in one block's
+# (docs × vocabulary) indicator or (docs × docs) candidate bitmap, and
+# elements in one chunk of an index array.
+_BLOCK_CELLS = 1 << 20
+_CHUNK = 1 << 16
 
-def _bitset_jaccard(spark, sh, threshold, max_shingle_freq, cores):
-    """Bitmask-intersection Jaccard (see ngram_jaccard_pairs) — returns
-    None when the gates say the posting path is the right shape."""
+
+def _runs(weights, size):
+    """Cut consecutive items into runs of about ``size`` total weight, as
+    ``(lo, hi)`` item bounds: a run starts at the first item whose
+    cumulative start reaches the next multiple of ``size``, so it weighs
+    less than ``size`` plus its last item."""
+    start = np.cumsum(weights) - weights
+    if not len(start):
+        return []
+    cuts = np.unique(np.searchsorted(start, np.arange(0, start[-1] + 1, size)))
+    cuts = np.append(cuts, len(start))
+    return zip(cuts[:-1].tolist(), cuts[1:].tolist())
+
+
+def _expand(counts):
+    """For items with ``counts`` partners each: every (item, k) with
+    0 ≤ k < count, as two flat arrays."""
+    item = np.repeat(np.arange(len(counts), dtype=np.int32), counts)
+    start = (np.cumsum(counts) - counts).astype(np.int32)
+    return item, np.arange(len(item), dtype=np.int32) - np.repeat(start, counts)
+
+
+def _prefix_jaccard(doc, code, nv, threshold, max_shingle_freq, limit):
+    """Exact Jaccard pairs of the ``(doc, shingle code)`` rows by a prefix
+    filter and a numpy verify (Xiao et al., *Efficient Similarity Joins
+    for Near Duplicate Detection*, WWW 2008).
+
+    Shingles rank by ascending corpus frequency; a doc's prefix is its
+    |x| − α + 1 rarest shingles, α the least overlap that can pass the
+    verify's own float test α / |x| ≥ t. A pair at Jaccard ≥ t shares its
+    rarest common shingle inside both prefixes, so the pairs that share a
+    prefix shingle are every candidate. Their count with repeats, the
+    candidate bound Σ g(g−1)/2 over the prefix groups, is taken before
+    any pair is built. Returns ``(bound, pairs)``: ``pairs`` is None when
+    the bound exceeds ``limit``, else the arrays ``(doc_a, doc_b, inter,
+    sz_a, sz_b)`` of the pairs that pass, doc_a < doc_b.
+
+    Verification runs over blocks of a-docs: a (block × V) indicator of
+    their shingle sets answers each candidate's b-side probes by gather,
+    and a (block × docs) bitmap holds the block's candidates once however
+    many prefix shingles a pair shares. Beyond a few arrays of one entry
+    per row, no temporary outgrows ``_BLOCK_CELLS`` booleans or about
+    ``_CHUNK`` elements, and no array holds every candidate."""
+    t = float(threshold)
+    empty = np.empty(0, np.int64)
+    if not len(doc) or not t <= 1.0:  # above 1 (or NaN) no pair passes
+        return 0, (empty,) * 5
+    ids, d = np.unique(doc, return_inverse=True)
+    nd = len(ids)
+    # (doc, shingle) as a set, then shingles renumbered by ascending
+    # frequency (ties by code) and rows sorted by (doc, rank)
+    key = np.unique(d.astype(np.int64) * nv + code)
+    d, c = key // nv, key % nv
+    f = np.bincount(c, minlength=nv)
+    if max_shingle_freq is not None:
+        keep = f[c] <= max_shingle_freq
+        d, c = d[keep], c[keep]
+    rank = np.empty(nv, np.int64)
+    rank[np.argsort(f, kind="stable")] = np.arange(nv)
+    key = np.sort(d * nv + rank[c])
+    d, r = (key // nv).astype(np.int32), (key % nv).astype(np.int32)
+    del key, c
+    sz = np.bincount(d, minlength=nd).astype(np.int32)
+    off = np.concatenate(([0], np.cumsum(sz, dtype=np.int64)))
+    # α from the float test itself: a float ceil(t·|x|) can overshoot
+    # (ceil(0.7 · 10) = 8) and drop a pair at exactly J = t
+    n = np.maximum(sz, 1)
+    alpha = np.maximum(np.ceil(t * n) - 2, 1)
+    for _ in range(4):
+        alpha += alpha / n < t
+    plen = np.where(sz > 0, sz - alpha + 1, 0).astype(np.int64)
+
+    pe = np.flatnonzero(np.arange(len(d)) - off[d] < plen[d])
+    pdoc, prk = d[pe], r[pe]
+    g = np.bincount(prk, minlength=nv)
+    bound = int((g * (g - 1) // 2).sum())
+    if bound > limit:
+        return bound, None
+    # prefix postings, docs ascending inside each; an entry's partners are
+    # the docs after it in its posting
+    order = np.argsort(prk, kind="stable")
+    post = pdoc[order]
+    first = np.empty(len(order), np.int64)
+    first[order] = np.arange(1, len(order) + 1)
+    npart = np.concatenate(([0], np.cumsum(g)))[prk + 1] - first
+    eoff = np.concatenate(([0], np.cumsum(plen)))
+
+    out = []
+    block = max(1, _BLOCK_CELLS // max(nv, nd))
+    for a0 in range(0, nd, block):
+        a1 = min(a0 + block, nd)
+        e0, e1 = eoff[a0], eoff[a1]
+        if not npart[e0:e1].any():
+            continue
+        mark = np.zeros((a1 - a0, nd), bool)
+        for lo, hi in _runs(npart[e0:e1], _CHUNK):
+            e, k = _expand(npart[e0 + lo:e0 + hi])
+            e += e0 + lo
+            mark[pdoc[e] - a0, post[first[e] + k]] = True
+        ind = np.zeros((a1 - a0, nv), bool)
+        ind[d[off[a0]:off[a1]] - a0, r[off[a0]:off[a1]]] = True
+        for lo, hi in _runs(mark.sum(1), _CHUNK):
+            al, b = np.nonzero(mark[lo:hi])
+            al += lo
+            sa, sb = sz[a0 + al], sz[b]
+            # length filter: J ≤ min/max, and the float division is monotone
+            keep = np.minimum(sa, sb) / np.maximum(sa, sb) >= t
+            al, b, sa, sb = al[keep], b[keep], sa[keep], sb[keep]
+            for clo, chi in _runs(sb, _CHUNK):
+                ca, cb, csa, csb = al[clo:chi], b[clo:chi], sa[clo:chi], sb[clo:chi]
+                p, k = _expand(csb)
+                hit = ind[ca[p], r[off[cb][p] + k]]
+                inter = np.bincount(p, weights=hit, minlength=len(cb))
+                ok = inter / (csa + csb - inter) >= t
+                out.append((a0 + ca[ok], cb[ok], inter[ok], csa[ok], csb[ok]))
+    if not out:
+        return bound, (empty,) * 5
+    a, b, inter, sa, sb = (np.concatenate(x) for x in zip(*out))
+    return bound, (ids[a], ids[b], *(x.astype(np.int64) for x in (inter, sa, sb)))
+
+
+def _jaccard_rows(inter: DataFrame, threshold: float) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` from ``(doc_a, doc_b, inter, sz_a,
+    sz_b)``: every placement's Jaccard, threshold and 6-place rounding."""
+    return (
+        inter.withColumn(
+            "jaccard",
+            F.col("inter")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+        )
+        .where(F.col("jaccard") >= F.lit(float(threshold)))
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
+def _driver_jaccard(spark, sh, threshold, max_shingle_freq):
+    """The driver placement: one bounded Arrow collect of the ``(doc, sh)``
+    rows, which is both the size probe and the data, then
+    :func:`_prefix_jaccard`. Returns ``(pairs, gate, counts)``: ``pairs``
+    is None when the rows or the candidate bound exceed the driver budget
+    (the CC fork's ``_driver_cc_edge_limit``); ``gate`` names the inputs
+    against the budget; ``counts`` carries the bitset gate's inputs when
+    the rows are in hand."""
+    limit = _driver_cc_edge_limit(spark)
+    tbl = sh.limit(limit + 1).toArrow()
+    if tbl.num_rows > limit:
+        return None, f"rows {tbl.num_rows} > {limit}", None
+    # the system allocator hands the encoder's hash table back for the
+    # kernel's numpy arrays to reuse; Arrow's default pool would keep it
+    sh_codes = pc.dictionary_encode(
+        tbl.column("sh"), memory_pool=pa.system_memory_pool()
+    )
+    vocab = (
+        sh_codes.chunk(0).dictionary if sh_codes.num_chunks else pa.array([], pa.string())
+    )
+    code = np.concatenate(
+        [np.empty(0, np.int32)] + [ch.indices.to_numpy() for ch in sh_codes.chunks]
+    )
+    docs = tbl.column("doc")
+    known = pc.is_valid(docs).to_numpy(zero_copy_only=False)
+    bound, pairs = _prefix_jaccard(
+        docs.drop_null().to_numpy(), code[known], len(vocab),
+        threshold, max_shingle_freq, limit,
+    )
+    gate = f"rows {tbl.num_rows}, candidate bound {bound}"
+    if pairs is None:
+        counts = (vocab, np.bincount(code, minlength=len(vocab)),
+                  pc.count_distinct(docs, mode="all").as_py())
+        return None, f"{gate} > {limit}", counts
+    pdf = pd.DataFrame(dict(zip(("doc_a", "doc_b", "inter", "sz_a", "sz_b"), pairs)))
+    schema = "doc_a long, doc_b long, inter long, sz_a long, sz_b long"
+    out = _jaccard_rows(local_frame(spark, pdf, schema), threshold)
+    return out, f"{gate} ≤ {limit}", None
+
+
+def _bitset_jaccard(spark, sh, threshold, max_shingle_freq, cores, counts=None):
+    """Bitmask-intersection Jaccard (see ngram_jaccard_pairs). Returns
+    ``(pairs, gate)``, ``pairs`` None when the gates say the posting path
+    is the right shape. ``counts`` is ``(vocabulary, frequencies, doc
+    count)`` from rows the caller holds; without it two probe jobs take
+    them."""
     cap = _JACCARD_BITSET_VOCAB
     if cap <= 0:
-        return None
-    vc_rows = (
-        sh.groupBy("sh")
-        .agg(F.count("*").alias("f"))
-        .limit(cap + 1)
-        .collect()
-    )
-    if len(vc_rows) > cap:
-        return None
+        return None, "bitset vocabulary cap 0"
+    if counts is None:
+        vc_rows = (
+            sh.groupBy("sh")
+            .agg(F.count("*").alias("f"))
+            .limit(cap + 1)
+            .collect()
+        )
+        vocab = pa.array([r["sh"] for r in vc_rows], pa.string())
+        freq = [int(r["f"]) for r in vc_rows]
+        n_docs = None
+    else:
+        vocab, freq, n_docs = counts
+    if len(vocab) > cap:
+        return None, f"vocabulary {len(vocab)} > {cap}"
     # surviving vocabulary (the freq cap drops stop-shingles exactly like
     # the posting path's posts filter — a dropped shingle contributes to
     # neither intersections nor sizes)
-    vocab = sorted(
-        r["sh"]
-        for r in vc_rows
-        if max_shingle_freq is None or int(r["f"]) <= max_shingle_freq
-    )
-    if not vocab:
+    kept = [
+        (s, int(f)) for s, f in zip(vocab.to_pylist(), freq)
+        if max_shingle_freq is None or f <= max_shingle_freq
+    ]
+    if not kept:
         # no shingle survives: no doc can pair (posting path: empty too)
         return spark.createDataFrame(
             [], "doc_a long, doc_b long, jaccard double"
-        )
-    fanout = sum(
-        int(r["f"]) * (int(r["f"]) - 1) // 2
-        for r in vc_rows
-        if max_shingle_freq is None or int(r["f"]) <= max_shingle_freq
-    )
-    n_docs = sh.select("doc").distinct().count()
+        ), f"vocabulary {len(vocab)}, none within the frequency cap"
+    vocab = sorted(s for s, _ in kept)
+    fanout = sum(f * (f - 1) // 2 for _, f in kept)
+    if n_docs is None:
+        n_docs = sh.select("doc").distinct().count()
     nv = len(vocab)
     w = (nv + 63) // 64
     # cost model: a cross pair costs ~w word-ops of codegen popcount; a
     # posting-expansion row costs roughly one shuffled+aggregated row
     # (~8 word-ops-equivalent, conservative). A sparse or very wide-mask
     # corpus stays on the posting path.
-    if n_docs * (n_docs - 1) // 2 * w > 8 * max(fanout, 1):
-        return None
+    cross = n_docs * (n_docs - 1) // 2 * w
+    gate = f"vocabulary {len(freq)} ≤ {cap}, cross pairs × words {cross}"
+    if cross > 8 * max(fanout, 1):
+        return None, f"{gate} > 8 × fan-out {fanout}"
+    gate = f"{gate} ≤ 8 × fan-out {fanout}"
 
-    import pandas as pd
     mapping = spark.createDataFrame(
         pd.DataFrame({"sh": vocab, "_i": range(nv)}), "sh string, _i int"
     )
@@ -183,14 +383,14 @@ def _bitset_jaccard(spark, sh, threshold, max_shingle_freq, cores):
     a = masks.select(
         F.col("doc").alias("doc_a"),
         F.col("m").alias("ma"),
-        F.col("sz").alias("sza"),
+        F.col("sz").alias("sz_a"),
     )
     if a.rdd.getNumPartitions() < cores:
         a = a.repartition(cores)
     b = masks.select(
         F.col("doc").alias("doc_b"),
         F.col("m").alias("mb"),
-        F.col("sz").alias("szb"),
+        F.col("sz").alias("sz_b"),
     )
     inter_terms = "+".join(
         f"bit_count(get(ma, {i}) & get(mb, {i}))" for i in range(w)
@@ -199,18 +399,12 @@ def _bitset_jaccard(spark, sh, threshold, max_shingle_freq, cores):
     # ABOVE the join instead of letting predicate pushdown fold it (and
     # the jaccard filter) into the BNLJ condition (the d5 lesson, §4.4)
     inter = F.when(F.spark_partition_id() >= 0, F.expr(f"({inter_terms})"))
-    return (
+    pairs = (
         a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sza", "szb", inter.alias("inter"))
+        .select("doc_a", "doc_b", "sz_a", "sz_b", inter.alias("inter"))
         .where(F.col("inter") >= 1)
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("sza") + F.col("szb") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
+    return _jaccard_rows(pairs, threshold), gate
 
 
 def ngram_jaccard_pairs(
@@ -221,76 +415,73 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """Pairs with shingle-set Jaccard ≥ threshold.
+    """Pairs ``(doc_a, doc_b, jaccard)``, doc_a < doc_b, with word
+    ``n``-gram shingle-set Jaccard ≥ threshold, rounded to 6 places.
 
-    Inverted-index POSTING LISTS, not a literal self-join: pairs only form
-    on shared shingles, so cost is Σ freq(shingle)² — not |docs|². The
-    former a⋈b equi-join on the shingle string computed the shingle
-    explosion twice, shuffled it twice on wide string keys, and paid a
-    separate frequency aggregate for ``max_shingle_freq``; grouping each
-    shingle's sorted doc list once and emitting in-list combinations
-    (the codegen'd posexplode/tail-slice of the dedupers) produces the
-    identical per-pair intersection counts with ONE shingle-keyed
-    shuffle, and the posting-list length IS the shingle frequency
-    (measured 50 → 27 s on the sf0.1 2-gram corpus, equal output).
+    ``max_shingle_freq`` drops ubiquitous shingles (stop-shingles, those in
+    more docs than the cap) from both intersections and sizes, to bound the
+    worst-case blow-up at corpus scale; a dropped shingle can only lower
+    recall for pairs already sharing many other shingles.
 
-    ``max_shingle_freq`` drops ubiquitous shingles (stop-shingles) to
-    bound the worst-case blow-up at corpus scale; a dropped shingle can
-    only lower recall for pairs already sharing many other shingles. The
-    skew class is unchanged: a hot shingle's combinations expand inside
-    its own posting task, exactly the rows the former join emitted in
-    that shingle's partition — the freq cap is the guard in both shapes.
+    Three placements give the same rows; the first whose gate admits the
+    corpus runs, and one INFO line names it with its gate inputs:
 
-    Spread pairs (optimization r13, guide §2.5 — the explode side of
-    input skew, which AQE cannot see): the posting table is one row per
-    DISTINCT shingle, so its byte size never reflects the quadratic pair
-    fan-out it feeds — AQE coalesces the posting exchange by those tiny
-    bytes (~1 partition on a dense-vocabulary corpus), which then runs the
-    entire Σ freq² expansion AND the partial count aggregate on one core
-    (measured: 14.4 of d2's 17.1 s at sf0.1 in that single task). So
-    the expansion splits between its two generators: the
-    per-position tail slices compute map-side, round-robin-repartition
-    across the session's cores, and explode after the exchange — a
-    length-L posting's L·(L−1)/2 pairs now spread over L tasks, so even a
-    corpus-wide hot shingle parallelises (positional splitting of a hot
-    key, guide §2.5 — AQE skew handling applies only to joins). Pair
-    counts are invariant to row placement, so output is identical. Cost
-    at any scale: one extra exchange carrying exactly the tail arrays —
-    the same elements the count exchange already moves — i.e. ≤1× the
-    operator's existing shuffle volume, bounded by ``max_shingle_freq``
-    like the fan-out itself.
+    - **driver prefix**: one bounded ``limit(L + 1)`` Arrow collect of the
+      ``(doc, shingle)`` rows, which is both the size probe and the data,
+      then :func:`_prefix_jaccard`'s prefix filter and exact numpy verify.
+      The answer is a ``LocalRelation``, so downstream reads run no job
+      for it. L is the CC fork's memory-derived driver budget
+      (``_driver_cc_edge_limit``); it bounds the collected rows and the
+      candidate bound, which is known before any pair is built.
+    - **bitset** (dense vocabularies): each doc's shingle set is a
+      fixed-width bitmask of ⌈|V|/64⌉ longs, and intersections are codegen
+      popcounts over an id-ordered pair join instead of the posting
+      expansion's Σ freq² rows through a shuffle and a pair-keyed count
+      (at sf0.1's 931-shingle corpus: 36.5M expansion rows → 12.5M cross
+      pairs × 15 longs, ~3× faster). It runs when the vocabulary fits
+      ``_JACCARD_BITSET_VOCAB`` and the cross pairs × mask words are at
+      most 8× the posting fan-out. Its inputs come from the driver
+      placement's rows when that placement refused on its candidate bound,
+      else from two probe jobs (a vocabulary aggregate bounded at cap + 1
+      rows, and a doc count).
+    - **posting**: inverted-index posting lists, not a literal self-join,
+      so cost is Σ freq(shingle)², not |docs|². Each shingle's sorted doc
+      list is grouped once (one shingle-keyed shuffle; the posting length
+      IS the shingle frequency) and in-list combinations are counted per
+      pair. AQE sizes the posting exchange by its bytes, one row per
+      shingle, which never reflects the quadratic fan-out it feeds, so the
+      expansion splits between its two generators: per-position tail
+      slices compute map-side, round-robin-repartition across the
+      session's cores, and explode after the exchange. A length-L
+      posting's L·(L−1)/2 pairs then spread over L tasks (positional
+      splitting of a hot key), at the cost of one extra exchange carrying
+      the tail arrays, bounded by ``max_shingle_freq`` like the fan-out.
+
+    All three apply one set of output expressions (:func:`_jaccard_rows`),
+    so the threshold test and the HALF_UP rounding are the same on every
+    path.
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     sh = _doc_shingles(df, id_col, text_col, n)
-
-    # Dense-vocabulary escape (optimization r14, guide §1.2 "the
-    # distributed algorithm"): when the DISTINCT shingle vocabulary is
-    # small (one driver-collected probe job bounded at cap+1 rows), each
-    # document's shingle set is a fixed-width BITMASK of ⌈|V|/64⌉ longs —
-    # intersections become codegen popcounts over an id-ordered pair join
-    # instead of the posting expansion's Σ freq² row fan-out through a
-    # shuffle + a pair-keyed count aggregate (measured at sf0.1's 931-
-    # shingle corpus: 36.5M expansion rows → 12.5M cross pairs × 15-long
-    # AND/popcount; interleaved warm A/B ~3× faster, identical output).
-    # Gates keep it honest at scale: the vocabulary must fit the cap
-    # (_JACCARD_BITSET_VOCAB) AND the cross-pair count × the mask width in 64-bit
-    # words must not exceed 8× the posting fan-out (a huge sparse corpus
-    # or a very wide mask keeps the posting path; both quantities derive
-    # from the same probe). The probe's cost is one linear aggregate —
-    # noise next to either quadratic term, and bounded by cap+1 collected
-    # rows.
-    out = _bitset_jaccard(spark, sh, threshold, max_shingle_freq, cores)
+    out, gate, counts = _driver_jaccard(spark, sh, threshold, max_shingle_freq)
     if out is not None:
+        logger.info("ngram_jaccard_pairs: auto → driver prefix (%s)", gate)
         return out
+    bits, bit_gate = _bitset_jaccard(
+        spark, sh, threshold, max_shingle_freq, cores, counts
+    )
+    path = "bitset" if bits is not None else "posting"
+    logger.info("ngram_jaccard_pairs: auto → %s (%s; %s)", path, gate, bit_gate)
+    if bits is not None:
+        return bits
     posts = sh.groupBy("sh").agg(
         F.sort_array(F.collect_list("doc")).alias("members")
     )
     if max_shingle_freq is None:
         sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     else:
-        # per-doc sizes count only SURVIVING shingles (the former shape
-        # filtered the edge list before sizing — jaccard denominators
+        # per-doc sizes count only SURVIVING shingles (jaccard denominators
         # must match); singleton shingles survive the cap and count
         posts = posts.where(F.size("members") <= max_shingle_freq)
         sizes = (
@@ -317,18 +508,11 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("lid").alias("doc_a"), F.col("rid").alias("doc_b"))
         .agg(F.count("*").alias("inter"))
     )
-    out = (
+    return _jaccard_rows(
         inter.join(sizes.withColumnsRenamed({"doc": "doc_a", "sz": "sz_a"}), "doc_a")
-        .join(sizes.withColumnsRenamed({"doc": "doc_b", "sz": "sz_b"}), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+        .join(sizes.withColumnsRenamed({"doc": "doc_b", "sz": "sz_b"}), "doc_b"),
+        threshold,
     )
-    return out
 
 
 def contamination_check(

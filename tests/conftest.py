@@ -35,7 +35,8 @@ def force_distributed(monkeypatch):
     the rest of the test: ``force_distributed("index", "cc")``. Gates:
     ``cc`` (driver connected components), ``index`` (catalog source-index
     kernel, driver mirrors and the Matcher's lookup index), ``jaccard``
-    (bitset Jaccard) and ``bpe`` (driver BPE twin).
+    (``ngram_jaccard_pairs``' driver prefix kernel and bitset path, so the
+    posting path runs) and ``bpe`` (driver BPE twin).
     The gate table is ``tools/check_oracle.py``'s, which its ``--force``
     flag applies to the oracle sweep."""
     from tools.check_oracle import force_gates

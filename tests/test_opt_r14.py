@@ -134,30 +134,6 @@ def test_edge_mirror_packed_matches_structured(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("cap", [None, 3])
-def test_bitset_jaccard_matches_posting_path(spark, force_distributed, cap):
-    """ngram_jaccard_pairs' r14 dense-vocabulary bitmask path must emit
-    exactly the posting path's rows — including under max_shingle_freq
-    (dropped stop-shingles leave both intersections and sizes)."""
-    from matchbox_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-    def run():
-        out = ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=2, threshold=0.3,
-            max_shingle_freq=cap,
-        )
-        return sorted(
-            (r["doc_a"], r["doc_b"], r["jaccard"]) for r in out.collect()
-        )
-
-    bitset = run()
-    force_distributed("jaccard")
-    posting = run()
-    assert bitset == posting
-
-
 def test_bpe_driver_twin_matches_distributed(spark, force_distributed):
     """bpe_train/bpe_encode's r14 driver twin must reproduce the parquet
     round-trip path row for row — merges (order, pairs, counts), the

@@ -37,7 +37,11 @@ FORCE_GATES = {
     ],
     # the catalog's driver kernels and mirrors, and the Matcher's lookup index
     "index": [("matchbox_spark.plans.catalog", "_INDEX_DRIVER_BYTES", 0)],
-    "jaccard": [("matchbox_spark.operators.dedup", "_JACCARD_BITSET_VOCAB", 0)],
+    # ngram_jaccard_pairs' driver prefix kernel, then its bitset path
+    "jaccard": [
+        ("matchbox_spark.operators.dedup", "_driver_cc_edge_limit", lambda spark: 0),
+        ("matchbox_spark.operators.dedup", "_JACCARD_BITSET_VOCAB", 0),
+    ],
     "bpe": [("matchbox_spark.operators.tokenize", "_BPE_DRIVER_VOCAB", 0)],
 }
 
