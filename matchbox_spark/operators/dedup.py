@@ -114,14 +114,15 @@ def exact_dedupe(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc, shingle) distinct — the inverted-index edge list.
+    """(doc, shingle) rows — the inverted-index edge list.
 
     Dedup happens INSIDE each row's shingle array (``array_distinct``
-    before the explode), not as a corpus-wide ``dropDuplicates`` exchange:
-    a (doc, shingle) duplicate can only come from within one document's
-    own shingle list, so the in-array dedup is set-identical and saves a
-    full shuffle of the exploded edge list (the same move
-    minhash_signatures documents)."""
+    before the explode), not as a corpus-wide ``dropDuplicates`` exchange,
+    which saves a full shuffle of the exploded edge list (the same move
+    minhash_signatures documents). The rows are distinct only while
+    ``id_col`` is unique: rows that share an id repeat their common
+    shingles, so a consumer that needs a doc's shingle set dedupes them
+    (``ngram_jaccard_pairs``' paths and ``minhash_dedupe_pairs`` do)."""
     return df.select(
         F.col(id_col).cast("long").alias("doc"),
         F.explode(F.array_distinct(word_shingles_expr(text_col, n))).alias("sh"),
@@ -475,20 +476,20 @@ def ngram_jaccard_pairs(
     logger.info("ngram_jaccard_pairs: auto → %s (%s; %s)", path, gate, bit_gate)
     if bits is not None:
         return bits
+    # a set per shingle: a repeated id is one doc whose shingles are the
+    # union of its rows', as on the other two paths
     posts = sh.groupBy("sh").agg(
-        F.sort_array(F.collect_list("doc")).alias("members")
+        F.sort_array(F.collect_set("doc")).alias("members")
     )
-    if max_shingle_freq is None:
-        sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
-    else:
-        # per-doc sizes count only SURVIVING shingles (jaccard denominators
-        # must match); singleton shingles survive the cap and count
+    if max_shingle_freq is not None:
         posts = posts.where(F.size("members") <= max_shingle_freq)
-        sizes = (
-            posts.select(F.explode("members").alias("doc"))
-            .groupBy("doc")
-            .agg(F.count("*").alias("sz"))
-        )
+    # per-doc sizes count only SURVIVING shingles (jaccard denominators
+    # must match); singleton shingles survive the cap and count
+    sizes = (
+        posts.select(F.explode("members").alias("doc"))
+        .groupBy("doc")
+        .agg(F.count("*").alias("sz"))
+    )
     big = posts.where(F.size("members") >= 2)
     expanded = (
         big.select("members", F.posexplode("members").alias("i", "lid"))

@@ -1459,7 +1459,8 @@ class Catalog:
 
         Driver path: when the resolver's driver CC already put the
         assignments on the driver (``assignments`` is pandas, or a Spark
-        LocalRelation, whose ``collect`` runs no job), the fingerprint
+        LocalRelation, whose ``collect`` runs no job; a distributed CC
+        whose rounds finished on the driver hands on the same), the fingerprint
         is precomputed and :meth:`mirror` has copies of ``clusters`` and
         ``contains`` (rebuilt if they fit its budget),
         :meth:`_hierarchy_insert_local` content-addresses with ZERO Spark

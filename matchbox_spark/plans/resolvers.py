@@ -11,7 +11,8 @@ Two interchangeable engines behind one ``ResolverMethod`` surface
   algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
   2014 — a public algorithm). O(log n) rounds, every round two shuffles,
   lineage cut with ``localCheckpoint`` so plans don't grow. This is the
-  100 TB path.
+  100 TB path. Once a round's edge set fits the driver budget, the driver
+  CC finishes it.
 
 ``connected_components`` alone picks between them, on the edge count
 against ``driver_edge_limit``. Both produce identical component *sets*;
@@ -280,19 +281,30 @@ def connected_components(
     component, and nodes appearing only as isolated vertices must be
     unioned in by the caller (an edge list cannot carry them).
 
-    The path is :func:`_cc_labels`'s. A driver result is a bare
+    The path is :func:`_cc_labels`'s. A driver result, whether the driver
+    CC ran from the start or finished the distributed rounds, is a bare
     ``LocalRelation`` (``<empty>`` when there are no labels).
     """
-    lab = _cc_labels(edges, driver_edge_limit, max_iter)
+    lab, _ = _cc_labels(edges, driver_edge_limit, max_iter)
     if isinstance(lab, DataFrame):
         return lab
     return local_frame(edges.sparkSession, lab, "id long, component long")
 
 
+def _driver_labels(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The exact driver CC of a pandas ``(src, dst)`` edge frame, self-loops
+    dropped, as pandas ``(id, component)`` labels."""
+    src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
+    loop = src == dst
+    nodes, comps = connected_components_numpy(src[~loop], dst[~loop])
+    return pd.DataFrame({"id": nodes, "component": comps})
+
+
 def _cc_labels(edges, driver_edge_limit: int | None, max_iter: int = 50):
-    """The one place that picks the driver or distributed CC: the driver
-    labels as a pandas ``(id, component)`` frame, or the distributed
-    labels as a Spark frame.
+    """The one place that picks the driver or distributed CC. Returns
+    ``(labels, path)``: the labels as a pandas ``(id, component)`` frame
+    when the driver CC produced them, else as a Spark frame; ``path``
+    names the path with its gate inputs, for the ``Components`` log line.
 
     ``edges`` (``src``, ``dst``) is a pandas or a Spark frame. An edge set
     of at most ``driver_edge_limit`` rows (None: the memory-derived cap; 0:
@@ -302,6 +314,16 @@ def _cc_labels(edges, driver_edge_limit: int | None, max_iter: int = 50):
     ``limit(limit + 1)`` collect that is both the size probe and the driver
     collect. Larger edge sets run the large-star/small-star rounds (the
     100 TB path), pandas edges uploaded first.
+
+    **Driver finish.** Every materialisation (the distinct, loop-free
+    input and each round) observes its edge count in its own job. Once
+    that count is at most the same budget (and the budget is not 0), the
+    rounds stop: that checkpoint is collected with one Arrow ``toPandas``,
+    freed, and its labels come from the driver CC, so the caller takes its
+    driver branch. This is exact: a star step keeps every node and every
+    component's connectivity (the final projection below relies on the
+    same), so any round's edge set has the input's min-member labels. The
+    driver holds at most ``limit`` edges, as on the driver path.
     """
     local = isinstance(edges, pd.DataFrame)
     spark = SparkSession.active() if local else edges.sparkSession
@@ -310,10 +332,8 @@ def _cc_labels(edges, driver_edge_limit: int | None, max_iter: int = 50):
     )
     pdf = edges if local else edges.select("src", "dst").limit(limit + 1).toPandas()
     if len(pdf) <= limit:
-        src, dst = pdf["src"].to_numpy(), pdf["dst"].to_numpy()
-        loop = src == dst
-        nodes, comps = connected_components_numpy(src[~loop], dst[~loop])
-        return pd.DataFrame({"id": nodes, "component": comps})
+        path = f"driver union-find ({len(pdf):,} edges ≤ {limit:,})"
+        return _driver_labels(pdf), path
     if local:
         edges = local_frame(spark, pdf[["src", "dst"]], "src long, dst long")
 
@@ -325,7 +345,13 @@ def _cc_labels(edges, driver_edge_limit: int | None, max_iter: int = 50):
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    for _ in range(max_iter):
+    cmp = ">" if sig[0] > limit else "≤"
+    path = f"distributed union-find ({sig[0]:,} edges {cmp} {limit:,}"
+    rounds, converged = 0, False
+    while not converged and not (limit and sig[0] <= limit):
+        if rounds == max_iter:
+            logger.warning("connected_components hit max_iter=%d", max_iter)
+            break
         # DISK_ONLY: round state is read exactly once (by the next
         # round) — memory-resident checkpoint blocks of superseded
         # rounds are pure heap pressure at large edge counts
@@ -338,17 +364,21 @@ def _cc_labels(edges, driver_edge_limit: int | None, max_iter: int = 50):
         # whatever the round count (only safe because e2 no longer
         # references e — _free_checkpoint no-ops on chained plans)
         _free_checkpoint(e)
-        e = e2
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        logger.warning("connected_components hit max_iter=%d", max_iter)
+        e, rounds = e2, rounds + 1
+        converged, sig = new_sig == sig, new_sig
+    ran = f"{rounds} round" + "s" * (rounds != 1)
+    if limit and sig[0] <= limit:
+        # driver finish: the checkpoint fits the budget, so collect and
+        # free it and label it exactly on the driver
+        pdf = e.toPandas()
+        _free_checkpoint(e)
+        path = f"{path}; driver finish after {ran} at {sig[0]:,} edges)"
+        return _driver_labels(pdf), path
 
     # Converged star graph: every node points at its component minimum.
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     roots = e.select(F.col("dst").alias("id"), F.col("dst").alias("component")).distinct()
-    return members.union(roots).distinct()
+    return members.union(roots).distinct(), f"{path}; {ran})"
 
 
 def connected_components_driver(edge_rows: Iterable[tuple[int, int]]) -> dict[int, int]:
@@ -443,10 +473,12 @@ def add_resolver_method(cls: type) -> type:
 class ComponentsSettings:
     # per-model score thresholds; unset models default to 0.0
     thresholds: dict[str, float] = field(default_factory=dict)
-    # the only CC path setting: the CC runs on the driver up
-    # to this many unioned edges (None: the memory-derived cap; 0: always
-    # distributed). Left out of the repr, so the resolver's fingerprint
-    # does not depend on which path computed the same clusters
+    # the only CC path setting: the CC runs on the driver up to this
+    # many unioned edges, and a distributed CC hands its rounds' edge set
+    # to the driver once it shrinks to this many (None: the memory-derived
+    # cap; 0: always distributed, every round). Left out of the repr, so
+    # the resolver's fingerprint does not depend on which path computed
+    # the same clusters
     driver_edge_limit: int | None = field(default=None, repr=False, compare=False)
 
     def validate_inputs(self, model_names: Iterable[str]) -> None:
@@ -487,7 +519,8 @@ class Components(ResolverMethod):
         threshold and union run in pandas, so the CC fork runs no probe
         job, and a driver CC returns the assignments as pandas too. With
         Spark inputs the result is a Spark frame: a LocalRelation on the
-        driver path."""
+        driver path, which also serves a distributed CC that finished on
+        the driver. One INFO line names the path and its gate inputs."""
         s = self.settings
         s.validate_inputs(model_edges.keys())
         if not model_edges:
@@ -517,12 +550,9 @@ class Components(ResolverMethod):
         # no persist/checkpoint here: the probe reads the (already
         # materialised upstream) edges once, and the distributed path
         # materialises its own working set immediately.
-        labels = _cc_labels(unioned, s.driver_edge_limit)
+        labels, path = _cc_labels(unioned, s.driver_edge_limit)
         driver = not isinstance(labels, DataFrame)
-        logger.info(
-            "Components: auto → %s union-find",
-            "driver" if driver else "distributed",
-        )
+        logger.info("Components: auto → %s", path)
         if driver:
             # dense parent-id ranking in numpy (sorted components → 1..k)
             _, rank = np.unique(labels["component"].to_numpy(), return_inverse=True)

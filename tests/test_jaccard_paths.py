@@ -223,3 +223,70 @@ def test_prefix_kernel_matches_brute_force(monkeypatch, seed):
             got = sorted(zip(*(x.tolist() for x in pairs)))
             assert got == _brute_force(doc, code, t, cap), (t, cap)
     assert DD._prefix_jaccard(doc, code.astype(np.int32), nv, 0.5, None, 0)[1] is None
+
+
+def _set_union_pairs(rows, n, t, cap=None):
+    """Brute force over ``(id, text)`` rows: an id's shingles are the union
+    of its rows' word n-gram sets, then every id pair's Jaccard, rounded
+    as the operator rounds, kept at ≥ t."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = {}
+    for i, text in rows:
+        toks = (text or "").lower().split()
+        grams = {" ".join(toks[k:k + n]) for k in range(len(toks) - n + 1)}
+        sets.setdefault(i, set()).update(grams)
+    if cap is not None:
+        freq = {}
+        for s in sets.values():
+            for g in s:
+                freq[g] = freq.get(g, 0) + 1
+        sets = {i: {g for g in s if freq[g] <= cap} for i, s in sets.items()}
+    out = []
+    ids = sorted(sets)
+    for k, a in enumerate(ids):
+        for b in ids[k + 1:]:
+            inter = len(sets[a] & sets[b])
+            j = inter / (len(sets[a]) + len(sets[b]) - inter) if inter else 0.0
+            if inter and j >= t:
+                q = Decimal(j).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+                out.append((a, b, float(q)))
+    return out
+
+
+# (id, text) rows whose ids repeat: with the same text (the posting path
+# once counted such an id twice in an intersection and read J = 2.0), and
+# with different texts, whose shingles the id holds as one set
+_REPEATED_IDS = {
+    "same_text": [(1, "a b c"), (1, "a b c"), (2, "a b c")],
+    "different_texts": [
+        (1, "a b c"), (1, "c d e"), (2, "a b c d e"), (2, "a b"),
+        (3, "c d e f"), (3, "c d e f"), (4, "x y"), (4, "a b c"),
+    ],
+}
+
+
+# the rows at t = 0.5, worked by hand: ids 1 and 2 both hold {a, b, c, d,
+# e} in "different_texts", and 3 shares {c, d, e} of {a, …, f} with each
+_REPEATED_WANT = {
+    "same_text": [(1, 2, 1.0)],
+    "different_texts": [(1, 2, 1.0), (1, 3, 0.5), (2, 3, 0.5)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REPEATED_IDS))
+@pytest.mark.parametrize("arm", ARMS)
+def test_jaccard_repeated_ids(spark, caplog, monkeypatch, force_distributed, arm, case):
+    """Rows sharing an id are one doc whose shingle set is the union of
+    theirs, on every path: no Jaccard above 1, and the rows equal a
+    brute-force set-union computation."""
+    rows = _REPEATED_IDS[case]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    _force(monkeypatch, force_distributed, arm)
+    for t in (0.3, 0.5):
+        got, line = _pairs(caplog, docs, 1, t)
+        assert f"→ {PATHS[None][arm]} (" in line, line
+        assert got == _set_union_pairs(rows, 1, t), (t, got)
+        assert all(j <= 1.0 for _, _, j in got)
+    assert _pairs(caplog, docs, 1, 0.5)[0] == _REPEATED_WANT[case]
+

@@ -455,6 +455,73 @@ def test_spark_index_insert_job_counts(spark, monkeypatch, force_distributed):
     assert all(c <= m for n in most for c, m in zip(got[n], most[n])), got
 
 
+def _company_dedupe_dag(spark, path, budget):
+    """er_batch's dedupe in miniature: 50 entities of 4 rows sharing a
+    crn and a hub of 60, so the pair model emits near-cliques (2,070
+    pairs), into a resolver with ``driver_edge_limit=budget``."""
+    import pandas as pd
+
+    from matchbox_spark.operators.dedupers import NaiveDeduper
+    from matchbox_spark.plans.dag import DAG
+    from matchbox_spark.plans.query import QueryConfig
+    from matchbox_spark.plans.resolvers import Components
+    from matchbox_spark.sources.source import SourceConfig
+
+    sizes = [4] * 50 + [60]
+    crn = [f"C{e:03d}" for e, k in enumerate(sizes) for _ in range(k)]
+    pd.DataFrame({
+        "key": [f"k{i}" for i in range(len(crn))],
+        "company_name": [f"{c} co {i}" for i, c in enumerate(crn)],
+        "crn": crn,
+    }).to_parquet(path)
+    dag = DAG(spark)
+    src = dag.source(SourceConfig(
+        name="crn", location=str(path), key_field="key",
+        index_fields=["company_name", "crn"],
+    )).config
+    dag.model("dedupe_crn", NaiveDeduper(id="id", unique_fields=["crn_crn"]),
+              QueryConfig(sources=[src]))
+    dag.resolver("resolve_crn", Components(driver_edge_limit=budget), ["dedupe_crn"])
+    return dag
+
+
+def test_finished_cc_job_counts(spark, monkeypatch, tmp_path, caplog):
+    """A distributed CC that one star round shrinks under its budget
+    finishes on the driver: the resolve submits at most 12 jobs and its
+    hierarchy insert none (the driver kernel). Budget 0 still runs every
+    round, the distributed ranking and the distributed insert, into the
+    same catalog."""
+    import logging
+
+    from matchbox_spark.plans.resolvers import Components
+
+    lines, jobs, states = {}, {}, {}
+    for budget in (1_000, 0):
+        cc = _job_counter(spark, monkeypatch, ["compute_clusters"], owner=Components)
+        ins = _job_counter(spark, monkeypatch, ["insert_resolver_clusters"])
+        dag = _company_dedupe_dag(spark, tmp_path / "crn.parquet", budget)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="matchbox_spark.plans.resolvers"):
+            dag.run()
+        (lines[budget],) = [m for m in caplog.messages if m.startswith("Components:")]
+        jobs[budget] = (cc()["compute_clusters"], ins()["insert_resolver_clusters"])
+        states[budget] = _catalog_state(dag.catalog)
+        monkeypatch.undo()
+    assert lines[1_000] == (
+        "Components: auto → distributed union-find (2,070 edges > 1,000;"
+        " driver finish after 1 round at 209 edges)"
+    ), lines
+    assert lines[0].startswith(
+        "Components: auto → distributed union-find (2,070 edges > 0; "
+    ) and "driver finish" not in lines[0], lines
+    (compute,), (insert,) = jobs[1_000]
+    assert compute <= 12 and insert == 0, jobs
+    (compute,), (insert,) = jobs[0]
+    assert compute > 12 and insert > 0, jobs
+    # the catalog stores no step's budget, and the hierarchy is the same
+    assert states[1_000] == states[0]
+
+
 @pytest.mark.parametrize("path", ["driver_index", "spark"])
 def test_matcher_lookup_job_counts(spark, monkeypatch, force_distributed, path):
     """Jobs per ``Matcher.lookup``: none on the driver index; on the forced

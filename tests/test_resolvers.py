@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import random
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -66,6 +67,52 @@ def _random_graph(seed):
     return [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
 
 
+def _hub_graph():
+    """ER's shape: two near-cliques, a hub with 50 spokes and a few
+    spoke-to-spoke edges, a chain bridging a clique to the hub, and
+    isolated pairs."""
+    rng = random.Random(5)
+    edges = [(a, b) for a in range(15) for b in range(a + 1, 15)]
+    edges += [
+        (a, b) for a in range(20, 32) for b in range(a + 1, 32) if rng.random() < 0.8
+    ]
+    edges += [(100, 100 + k) for k in range(1, 51)]
+    edges += [(100 + rng.randint(1, 50), 100 + rng.randint(1, 50)) for _ in range(10)]
+    edges += [(14, 40), (40, 41), (41, 42), (42, 100)]
+    edges += [(200 + 2 * k, 201 + 2 * k) for k in range(5)]
+    return edges
+
+
+def _star_round(edges):
+    """One large-star then small-star step over a set of ``(src, dst)``
+    edges, in plain Python: the reference for the rounds' edge counts."""
+    nbrs = defaultdict(set)
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    large = {(v, min(u, *ns)) for u, ns in nbrs.items() for v in ns if v > u}
+    oriented = {(max(a, b), min(a, b)) for a, b in large if a != b}
+    mins = {}
+    for a, b in oriented:
+        mins[a] = min(mins.get(a, b), b)
+    out = {(b, mins[a]) for a, b in oriented} | set(mins.items())
+    return {(a, b) for a, b in out if a != b}
+
+
+def _round_counts(edges):
+    """Edge counts of the distinct loop-free input and of each star round
+    until the edge set stops changing (the round that confirms it
+    included)."""
+    e = {(a, b) for a, b in edges if a != b}
+    counts = [len(e)]
+    while True:
+        nxt = _star_round(e)
+        counts.append(len(nxt))
+        if nxt == e:
+            return counts
+        e = nxt
+
+
 # (left, right, score) rows per input; edges scoring under 0.5 are dropped
 _CC_CASES = {
     **{
@@ -73,6 +120,7 @@ _CC_CASES = {
         for seed in range(3)
     },
     "chain256": [(i, i + 1, 0.9) for i in range(256)],
+    "hub": [(a, b, 0.9) for a, b in _hub_graph()],
     # node 5 has only a self-loop: it joins no component on either path
     "self_loop": [(1, 2, 0.9), (5, 5, 0.9), (3, 4, 0.9)],
     "duplicates": [(1, 2, 0.9), (2, 1, 0.9), (1, 2, 0.9), (3, 4, 0.9), (3, 4, 0.9)],
@@ -81,30 +129,86 @@ _CC_CASES = {
     "empty": [],
 }
 
+# (budget, case) arms: the two fixed budgets over every case, then budgets
+# named for where they fall against the case's round counts: "finish" at
+# the first round's count (under the input's), "below" one under every
+# round's, "initial" at the distinct loop-free input's count when the raw
+# rows exceed it
+_ARMS = [(a, c) for a in ("limitNone", "limit0") for c in sorted(_CC_CASES)] + [
+    ("finish", "hub"),
+    ("below", "hub"),
+    ("initial", "duplicates"),
+]
 
-@pytest.mark.parametrize("case", sorted(_CC_CASES))
+
+def _budget(arm, counts, limit_none):
+    return {
+        "limitNone": limit_none,
+        "limit0": 0,
+        "finish": counts[1],
+        "below": min(counts) - 1,
+        "initial": counts[0],
+    }[arm]
+
+
 @pytest.mark.parametrize(
-    "entry", ["connected_components", "Components", "Components_pandas"]
+    "arm,entry,case",
+    [
+        pytest.param(arm, entry, case, id=f"{arm}-{entry}-{case}")
+        for arm, case in _ARMS
+        for entry in ("connected_components", "Components", "Components_pandas")
+    ],
 )
-@pytest.mark.parametrize("limit", [None, 0], ids=["limitNone", "limit0"])
-def test_cc_path_matrix(spark, caplog, limit, entry, case):
-    """Both CC paths, reached through both entry points, give the union-find
-    answer over the kept non-self-loop edges: ``driver_edge_limit=None``
-    takes the driver CC at this size, ``0`` the distributed rounds (an
-    empty edge set is answered on the driver either way). A driver result
-    is a LocalRelation, or pandas when ``Components`` was given pandas."""
+def test_cc_path_matrix(spark, caplog, arm, entry, case):
+    """Every CC path, reached through both entry points, gives the
+    union-find answer over the kept non-self-loop edges, and one INFO line
+    names it with its gate inputs:
+
+    - ``driver_edge_limit=None`` takes the driver CC at this size;
+    - ``0`` runs every distributed round (an empty edge set is answered on
+      the driver either way);
+    - a budget the rounds reach finishes them on the driver, after the
+      first round or before any round when the raw rows held duplicates.
+
+    A driver result, finished or not, is a LocalRelation, or pandas when
+    ``Components`` was given pandas; parent ids are dense 1..k."""
     import logging
     import math
+
+    from matchbox_spark.plans.resolvers import _driver_cc_edge_limit
 
     rows = _CC_CASES[case]
     kept = [(a, b) for a, b, t in rows if t >= 0.5 or math.isnan(t)]
     expected = connected_components_driver([(a, b) for a, b in kept if a != b])
-    path = "driver" if limit is None or not kept else "distributed"
+    counts = _round_counts(kept)
+    limit = _budget(arm, counts, _driver_cc_edge_limit(spark))
+    if len(kept) <= limit:
+        line = f"driver union-find ({len(kept):,} edges ≤ {limit:,})"
+    else:
+        n0 = counts[0]
+        cmp = ">" if n0 > limit else "≤"
+        line = f"distributed union-find ({n0:,} edges {cmp} {limit:,}"
+        # the first materialisation whose count fits the (non-zero) budget
+        done = next((k for k, n in enumerate(counts) if limit and n <= limit), None)
+        if done is None:
+            ran = len(counts) - 1
+            line += f"; {ran} round{'s' * (ran != 1)})"
+        else:
+            line += (
+                f"; driver finish after {done} round{'s' * (done != 1)}"
+                f" at {counts[done]:,} edges)"
+            )
+    driver = "distributed union-find" not in line or "driver finish" in line
+    assert arm in ("limitNone", "limit0") or (
+        ("driver finish after 1 round" in line) == (arm == "finish")
+        and ("driver finish after 0 rounds" in line) == (arm == "initial")
+        and (not driver) == (arm == "below")
+    ), line
     if entry == "connected_components":
         df = spark.createDataFrame(kept, "src long, dst long")
         got = connected_components(df, driver_edge_limit=limit)
         plan = got._jdf.queryExecution().logical().toString()
-        assert plan.startswith("LocalRelation") == (path == "driver")
+        assert plan.startswith("LocalRelation") == driver
         assert {r["id"]: r["component"] for r in got.collect()} == expected
         return
     edges = spark.createDataFrame(rows, "left_id long, right_id long, score float")
@@ -115,20 +219,42 @@ def test_cc_path_matrix(spark, caplog, limit, entry, case):
             thresholds={"m": 0.5}, driver_edge_limit=limit
         ).compute_clusters({"m": edges})
     assert [m for m in caplog.messages if m.startswith("Components:")] == [
-        f"Components: auto → {path} union-find"
+        f"Components: auto → {line}"
     ]
-    if entry == "Components_pandas" and path == "driver":
+    if entry == "Components_pandas" and driver:
         import pandas as pd
 
         assert isinstance(out, pd.DataFrame)
         out = spark.createDataFrame(out, "parent_id long, child_id long")
     else:
         plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.startswith("LocalRelation") == (path == "driver")
+        assert plan.startswith("LocalRelation") == driver
     # parent ids are dense 1..k, ordered by each component's minimum member
     rank = {m: i + 1 for i, m in enumerate(sorted(set(expected.values())))}
     got = {r["child_id"]: r["parent_id"] for r in out.collect()}
     assert got == {node: rank[m] for node, m in expected.items()}
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_cc_driver_finish_matches_union_find(spark, seed):
+    """Seeded random graphs with isolated pairs, self-loops and duplicate
+    edges: a distributed CC that finishes on the driver after its first
+    round gives the dict union-find's labels."""
+    from matchbox_spark.plans.resolvers import _cc_labels
+
+    rng = random.Random(100 + seed)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
+    edges += [(1000 + 2 * k, 1001 + 2 * k) for k in range(20)]
+    edges += [(v, v) for v in rng.sample(range(2000), 15)]
+    edges += rng.sample(edges, 60)
+    rng.shuffle(edges)
+    counts = _round_counts(edges)
+    assert counts[1] < counts[0]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    labels, path = _cc_labels(df, counts[1])
+    assert path.endswith(f"driver finish after 1 round at {counts[1]:,} edges)"), path
+    got = dict(zip(labels["id"].tolist(), labels["component"].tolist()))
+    assert got == connected_components_driver([(a, b) for a, b in edges if a != b])
 
 
 def test_auto_cc_respects_explicit_edge_limit(spark):
@@ -162,7 +288,9 @@ def test_zero_driver_edge_limit_goes_distributed(spark, caplog):
     )
     with caplog.at_level(logging.INFO, logger="matchbox_spark.plans.resolvers"):
         out = Components(driver_edge_limit=0).compute_clusters({"m": scored})
-    assert "Components: auto → distributed union-find" in caplog.messages
+    assert caplog.messages == [
+        "Components: auto → distributed union-find (3 edges > 0; 2 rounds)"
+    ]
     assert _components_from_assignments(out) == {
         frozenset({1, 2, 3}),
         frozenset({10, 11}),
